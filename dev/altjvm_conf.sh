@@ -16,22 +16,15 @@ OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.la
 CP="$REPO/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 run_side() { # run_side <side> <conf> <round>
   local side=$1 conf=$2 round=$3
-  local only_env=()
   local line
-  if [ "$QUERIES" = "ALL" ]; then
-    line=$(SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+  # ALL leaves SPARK_GRAFT_BENCH_ONLY unset: the whole suite runs
+  line=$(
+    [ "$QUERIES" = "ALL" ] || export SPARK_GRAFT_BENCH_ONLY="$QUERIES"
+    SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
       SPARK_GRAFT_BENCH_RUNS=${SPARK_GRAFT_BENCH_RUNS:-3} SPARK_GRAFT_EXTRA_CONF="$conf" \
       java $OPENS -Xmx${SPARK_DRIVER_MEM:-48g} -Dspark.ui.enabled=false \
       -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Bench 2>/dev/null \
       | grep '"metric"')
-  else
-    line=$(SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-      SPARK_GRAFT_BENCH_RUNS=${SPARK_GRAFT_BENCH_RUNS:-3} SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
-      SPARK_GRAFT_EXTRA_CONF="$conf" \
-      java $OPENS -Xmx${SPARK_DRIVER_MEM:-48g} -Dspark.ui.enabled=false \
-      -Dspark.sql.session.timeZone=UTC -cp "$CP" graft.Bench 2>/dev/null \
-      | grep '"metric"')
-  fi
   if [ -z "$line" ]; then
     echo "{\"side\":\"$side\",\"conf\":\"$conf\",\"round\":$round,\"bench\":null,\"error\":\"no metric line\"}" >> "$OUT"
     echo "[altjvm-conf] round $round side $side FAILED" >&2

@@ -26,8 +26,11 @@ object SparkEntry {
     s
   }
 
-  /** Pipeline fixtures (FIXTURES.md shapes) shipped with the repo. */
-  private val fixtures = "/root/repo/src/test/resources/fixtures"
+  /** Pipeline fixtures (FIXTURES.md shapes) shipped with the repo,
+    * resolved against the working directory — the build's base directory
+    * under `sbt run` and the forked test JVM. */
+  private val fixtures =
+    java.nio.file.Paths.get("src/test/resources/fixtures").toAbsolutePath.toString
 
   // Money outputs stay DOUBLE end-to-end: quantize in the double domain,
   // sum as exact scaled integers, convert back with one deterministic
@@ -1209,9 +1212,10 @@ object SparkEntry {
         .orderBy("media_id")
     }),
 
-    // Many-files PO pipeline: per-file encodings (TIS-620 + UTF-8 in one
-    // glob), per-file header metadata via one aggregation (no driver cell
-    // reads), per-file positional column resolution, codegen CSV split.
+    // Many-files PO pipeline: one parallel pass per file — per-file
+    // encodings (TIS-620 + UTF-8 in one glob), then the per-file kernel
+    // (CSV split, header metadata, positional column resolution, header
+    // echo drop, trailing trim) in the task that decoded the file.
     "q62_po_many_files" -> ((s0, d) => {
       val s = prep(s0)
       graft.pipelines.Pipelines.poCsvMany(s, s"$fixtures/po_many/*.csv")

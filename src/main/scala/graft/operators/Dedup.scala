@@ -291,7 +291,8 @@ object Dedup {
     // PLUS the full groupBy exchange+aggregate once per side. The r13
     // revert killed a cache of the full `shared` posting table (docs-sized,
     // +0.7 s under suite pressure); freq is orders of magnitude smaller
-    // (distinct shared shingles, two fixed-width columns, SER level).
+    // (distinct shared shingles, two fixed-width columns, at the default
+    // MEMORY_AND_DISK level).
     val freq = graft.core.InternalCaches.persistTracked(
       posting.groupBy("g").agg(count(lit(1)).as("df"))
         .where(col("df") >= 2),

@@ -21,6 +21,7 @@ object RowFilters {
 
   private val totalPat =
     "(?i)(grand\\s*total|sub\\s*total|\\btotal\\b|รวมทั้งสิ้น|ยอดรวม|รวม)"
+  private val totalRegex = java.util.regex.Pattern.compile(totalPat)
 
   /** F2: printed total/summary rows — `total|grand total|sub total` plus Thai
     * `รวมทั้งสิ้น/ยอดรวม/รวม` anywhere in the row
@@ -40,6 +41,16 @@ object RowFilters {
   /** F3 over an array-of-cells column. */
   def isBlankRowArr(cells: Column): Column =
     forall(cells, c => trim(coalesce(c.cast("string"), lit(""))) === "")
+
+  /** [[isTotalRowArr]] over one row's cells inside a task — the per-file
+    * kernels' spelling. Same pattern, same `rlike` (find-anywhere) match. */
+  def isTotalCells(cells: Array[String]): Boolean =
+    cells.exists(c => c != null && totalRegex.matcher(c).find())
+
+  /** [[isBlankRowArr]] inside a task. Spark's `trim` strips only `' '`, so
+    * a tab or NBSP keeps a cell non-blank here too. */
+  def isBlankCells(cells: Array[String]): Boolean =
+    cells.forall(c => c == null || c.forall(_ == ' '))
 
   /** F7: noise-label rows (script_read_dbd_balance.py:42,226-229): label in a
     * fixed set or starting with `หน่วย|หมายเหตุ`. */

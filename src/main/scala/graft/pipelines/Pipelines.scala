@@ -1,11 +1,13 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.{Money, Numeric, OcrRepair, TextClean, ThaiDates}
 import graft.operators.{Dedup, Merge, Reshape, RowFilters, Validation}
+import graft.plans.CsvOps
 import graft.sources.Ingest
 
 /** End-to-end re-expressions of the reference's pipelines (SURVEY.md §7.1.5).
@@ -52,7 +54,8 @@ object Pipelines {
 
   def dbdFinancial(spark: SparkSession, jsonPath: String,
                    existing: DataFrame): DataFrame = {
-    val raw = Ingest.jsonPointer(spark, jsonPath, "/records")
+    val raw = Ingest.jsonPointer(spark, jsonPath, "/records",
+      Seq("tax_id", "fiscal_year", "item_th", "amount"))
     val tidy = raw.select(
       TextClean.normalizeTaxId(col("tax_id")).as("tax_id"),
       col("fiscal_year").cast("int").as("fiscal_year"),
@@ -69,7 +72,9 @@ object Pipelines {
     * header-row filter (P4) → validation split (F5/F6). Returns
     * (valid, rejects) — the bulk equivalent of per-row insert taxonomy. */
   def invoiceReport(spark: SparkSession, jsonPath: String): (DataFrame, DataFrame) = {
-    val raw = Ingest.jsonPointer(spark, jsonPath, "/records")
+    val headerLabels = Seq("Invoice No.", "Supplier Code", "Invoice Date",
+      "Invoice Received Date", "Related Document", "Amount", "Status")
+    val raw = Ingest.jsonPointer(spark, jsonPath, "/records", headerLabels)
     val renamed = raw.select(
       col("`Invoice No.`").as("invoice_no_raw"),
       col("`Supplier Code`").as("supplier_code"),
@@ -78,8 +83,6 @@ object Pipelines {
       col("`Related Document`").as("related_document"),
       col("`Amount`").as("amount_raw"),
       col("`Status`").as("status"))
-    val headerLabels = Seq("Invoice No.", "Supplier Code", "Invoice Date",
-      "Invoice Received Date", "Related Document", "Amount", "Status")
     val noHeader = renamed.where(!RowFilters.isHeaderRow(
       Seq(col("invoice_no_raw"), col("supplier_code"), col("status")),
       headerLabels, minHits = 2))
@@ -202,74 +205,78 @@ object Pipelines {
       .orderBy("page")
   }
 
+  /** The named PO columns, each the n-th occurrence of its header name in
+    * the file's own header row (the report repeats the amount header). */
+  private val poColumns: Seq[(String, Int)] = Seq(
+    "PO No." -> 1, "Supplier Code" -> 1, "Supplier Name" -> 1,
+    "Order Date" -> 1, "Send Date" -> 1, "Delivery Date" -> 1,
+    "Amount (PO Include VAT)" -> 1, "Amount (PO Include VAT)" -> 2)
+
+  /** The per-file PO kernel, run inside the task that decoded the file:
+    * CSV-split every line, take the metadata cells (buyer B2, report dates
+    * D4/F4) and the header row (line 4), resolve each named column to its
+    * position in THIS file's header (so files whose column order drifts
+    * still land correctly), drop header echoes (P4), then trim the trailing
+    * run of total/blank rows (F4) — junk rows mid-file are kept. Returns,
+    * per kept data row, its line index and its raw cells: the
+    * [[poColumns]] in order (null when the header lacks the name or the
+    * row is short), then buyer cell, report-from and report-to. */
+  private[graft] def poFileRows(lines: Array[String]): Array[(Int, Array[String])] = {
+    val grid = lines.map(CsvOps.splitFields(_, ','))
+    def at(cells: Array[String], pos: Int): String =
+      if (pos >= 0 && pos < cells.length) cells(pos) else null
+    def cell(row: Int, pos: Int): String =
+      if (row < grid.length) at(grid(row), pos) else null
+    val meta = Array(cell(1, 1), cell(3, 3), cell(3, 5))
+    val hdr = if (grid.length > 4) grid(4) else Array.empty[String]
+    val positions = poColumns.map { case (name, n) =>
+      hdr.indices.filter(hdr(_) == name).lift(n - 1).getOrElse(-1)
+    }.toArray
+    def named(cells: Array[String]): Array[String] = positions.map(at(cells, _))
+    // a data row repeating >= 2 of the first three header names is an echo
+    def isEcho(cells: Array[String]): Boolean =
+      (0 until 3).count(k => at(cells, positions(k)) == poColumns(k)._1) >= 2
+    val data = (5 until grid.length).filterNot(i => isEcho(grid(i)))
+    val lastGood = data.lastIndexWhere(i =>
+      !RowFilters.isTotalCells(grid(i)) && !RowFilters.isBlankCells(grid(i)))
+    data.take(lastGood + 1).map(i => (i, named(grid(i)) ++ meta)).toArray
+  }
+
+  private val poRawSchema = StructType(
+    StructField("source_file", StringType, nullable = false) +:
+      (poColumns.indices.map(k => s"c$k") ++ Seq("buyer_cell", "from_raw", "to_raw"))
+        .map(StructField(_, StringType)))
+
   /** The PO pipeline over MANY report files at once — the scale variant of
-    * [[poCsv]] (which mirrors the reference's one-file CLI and reads three
-    * metadata cells on the driver). Here nothing touches the driver
-    * per-file: encodings are detected inside each file's scan task, lines
-    * split with the codegen'd CSV kernel, per-file header metadata (buyer
-    * cell B2, report dates D4/F4, the header row itself) comes from ONE
-    * conditional aggregation, and each file's named columns are resolved
-    * positionally from its own header row — so files whose column order
-    * drifts still land correctly. One broadcast join stamps the metadata
-    * back onto that file's rows (J4). */
+    * [[poCsv]] (which mirrors the reference's one-file CLI). One parallel
+    * pass per file: [[Ingest.linesPerFile]] detects each file's encoding
+    * and decodes it in its own task, and [[poFileRows]] does all per-file
+    * work (CSV split, metadata cells, header positions, echo drop,
+    * trailing trim) in that same task, stamping the file's metadata on
+    * each of its rows (J4). Only the Column cleansers and the final sort
+    * run after it: no aggregation, join or window over the files. */
   def poCsvMany(spark: SparkSession, glob: String): DataFrame = {
-    import graft.plans.CsvExpressions
-    val grid = Ingest.csvLinesPerFileEncoding(spark, glob)
-      .withColumn("cells", CsvExpressions.splitCsvLine(col("line")))
-      .select(col("source_file"), col("line_no").as("row_idx"), col("cells"))
-
-    val meta = grid.groupBy("source_file").agg(
-        // try_element_at, not element_at: positional cells on RAGGED rows
-        // must read null past the row end under ANSI mode too — adopters
-        // run Spark 4's default ansi=true, where plain element_at throws
-        // (caught by dev/migration_smoke.sh's first run)
-        max(when(col("row_idx") === 1, try_element_at(col("cells"), lit(2)))).as("buyer_cell"),
-        max(when(col("row_idx") === 3, try_element_at(col("cells"), lit(4)))).as("from_raw"),
-        max(when(col("row_idx") === 3, try_element_at(col("cells"), lit(6)))).as("to_raw"),
-        max(when(col("row_idx") === 4, col("cells"))).as("hdr"))
-      .select(col("source_file"),
-        nullif(regexp_extract(col("buyer_cell"), "\\((\\d{10,20})\\)", 1), lit(""))
-          .as("buyer_code"),
-        trim(regexp_replace(col("buyer_cell"), "^.*?\\(\\d{10,20}\\)", ""))
-          .as("buyer_name"),
-        ThaiDates.parseUsDate(col("from_raw")).as("report_from"),
-        ThaiDates.parseUsDate(col("to_raw")).as("report_to"),
-        col("hdr"))
-
-    val data = grid.where(col("row_idx") > 4)
-      .join(broadcast(meta), Seq("source_file"))
-
-    // n-th occurrence of a named header in THIS file's header row → cell
-    def cellBy(name: String, n: Int = 1): Column = {
-      val positions = filter(
-        transform(col("hdr"), (c, i) => when(c === name, i + 1).otherwise(lit(0))),
-        p => p > 0)
-      val pos = try_element_at(positions, lit(n)) // ANSI-total: null when absent
-      when(pos.isNotNull, try_element_at(col("cells"), pos.cast("int")))
-    }
-
-    val headerEcho =
-      (when(cellBy("PO No.") === "PO No.", 1).otherwise(0) +
-        when(cellBy("Supplier Code") === "Supplier Code", 1).otherwise(0) +
-        when(cellBy("Supplier Name") === "Supplier Name", 1).otherwise(0)) >= 2
-    val junk = RowFilters.isTotalRowArr(col("cells")) ||
-      RowFilters.isBlankRowArr(col("cells"))
-
-    val trimmed = RowFilters.trimTrailing(
-      data.where(!headerEcho), col("source_file"), col("row_idx"), junk)
-
-    trimmed.select(
+    val raw = Ingest.linesPerFile(spark, glob).flatMap { r =>
+      val file = r.getString(0)
+      poFileRows(r.getSeq[String](2).toArray).iterator
+        .map { case (_, cells) => Row.fromSeq(file +: cells.toSeq) }
+    }(Encoders.row(poRawSchema))
+    def c(k: Int): Column = col(s"c$k")
+    val buyer = col("buyer_cell")
+    raw.select(
       col("source_file"),
-      cellBy("PO No.").as("po_no"),
-      cellBy("Supplier Code").as("supplier_code"),
-      TextClean.normWs(cellBy("Supplier Name")).as("supplier_name"),
-      ThaiDates.parseFlexibleDate(cellBy("Order Date")).as("order_date"),
-      ThaiDates.parseUsTimestamp(cellBy("Send Date")).as("send_ts"),
-      ThaiDates.parseFlexibleDate(cellBy("Delivery Date")).as("delivery_date"),
-      Money.parseAmountRobust(cellBy("Amount (PO Include VAT)")).as("amount_incl_vat"),
-      Money.parseAmountRobust(cellBy("Amount (PO Include VAT)", 2)).as("amount_incl_vat_2"),
-      col("buyer_code"), col("buyer_name"),
-      col("report_from"), col("report_to"))
+      c(0).as("po_no"),
+      c(1).as("supplier_code"),
+      TextClean.normWs(c(2)).as("supplier_name"),
+      ThaiDates.parseFlexibleDate(c(3)).as("order_date"),
+      ThaiDates.parseUsTimestamp(c(4)).as("send_ts"),
+      ThaiDates.parseFlexibleDate(c(5)).as("delivery_date"),
+      Money.parseAmountRobust(c(6)).as("amount_incl_vat"),
+      Money.parseAmountRobust(c(7)).as("amount_incl_vat_2"),
+      nullif(regexp_extract(buyer, "\\((\\d{10,20})\\)", 1), lit("")).as("buyer_code"),
+      trim(regexp_replace(buyer, "^.*?\\(\\d{10,20}\\)", "")).as("buyer_name"),
+      ThaiDates.parseUsDate(col("from_raw")).as("report_from"),
+      ThaiDates.parseUsDate(col("to_raw")).as("report_to"))
       .orderBy("po_no")
   }
 
@@ -353,7 +360,7 @@ object Pipelines {
     * every row (J4). */
   def poCsv(spark: SparkSession, csvPath: String): DataFrame =
     // the single-file CLI shape is the many-files kernel at glob size 1:
-    // same per-task encoding detect, same one-aggregation metadata, zero
-    // per-file driver jobs
+    // same per-task encoding detect and per-file kernel, zero per-file
+    // driver jobs
     poCsvMany(spark, csvPath).drop("source_file")
 }

@@ -18,9 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * tolerant readers the reference relies on). Always returns
   * fields.length == delims+1 (trailing empty fields preserved). */
 object CsvOps {
-  def splitLine(line: UTF8String, delim: Char): Array[UTF8String] = {
-    val s = line.toString
-    val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+  def splitLine(line: UTF8String, delim: Char): Array[UTF8String] =
+    splitFields(line.toString, delim).map(UTF8String.fromString)
+
+  /** [[splitLine]] over a JVM string — the per-file kernels' entry. */
+  def splitFields(s: String, delim: Char): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = new java.lang.StringBuilder
     var inQuotes = false
     var i = 0
@@ -34,12 +37,12 @@ object CsvOps {
         } else cur.append(c)
       } else {
         if (c == '"' && cur.length() == 0) inQuotes = true
-        else if (c == delim) { out += UTF8String.fromString(cur.toString); cur.setLength(0) }
+        else if (c == delim) { out += cur.toString; cur.setLength(0) }
         else cur.append(c)
       }
       i += 1
     }
-    out += UTF8String.fromString(cur.toString)
+    out += cur.toString
     out.toArray
   }
 }

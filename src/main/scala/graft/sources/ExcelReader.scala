@@ -273,8 +273,8 @@ object ExcelReader {
     * workbooks sharing a sheet name never cross-contaminate).
     *
     * Scale shape: per-sheet headers + emptiness come from ONE conditional
-    * aggregation over the grid (the `poCsvMany` pattern) — a single job
-    * for N workbooks × M sheets, not a driver job per sheet. */
+    * aggregation over the grid — a single job for N workbooks × M
+    * sheets, not a driver job per sheet. */
   def multiSheetUnion(spark: SparkSession, path: String,
                       headerIdx: Long = 0): DataFrame =
     multiSheetUnionWithRejects(spark, path, headerIdx)._1

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -89,10 +89,9 @@ object Ingest {
     * promotion (that happens grid-side).
     *
     * Thai charsets are outside Spark's CSV whitelist, so those files are
-    * decoded from raw bytes (`binaryFiles` — each file one task, parallel
-    * across files at scale) and parsed via `csv(Dataset[String])`; a
-    * BOM-carrying UTF-8 file takes the same path so the BOM strips
-    * (the utf-8-sig semantics). */
+    * decoded from raw bytes ([[linesPerFile]] with the probed charset) and
+    * parsed via `csv(Dataset[String])`; a BOM-carrying UTF-8 file takes the
+    * same path so the BOM strips (the utf-8-sig semantics). */
   def csvWithEncodingFallback(spark: SparkSession, path: String,
                               encodings: Seq[String] = defaultEncodings): DataFrame = {
     // session hadoop conf: credentials/settings for s3a/hdfs reach the probe
@@ -106,48 +105,58 @@ object Ingest {
         .csv(path)
     } else {
       import spark.implicits._
-      val lines = spark.sparkContext.binaryFiles(path)
-        .flatMap { case (_, pds) =>
-          stripBomChar(
-            new String(pds.toArray(), java.nio.charset.Charset.forName(enc)))
-            .split("\r?\n", -1).iterator
-        }
+      val lines = linesPerFile(spark, path, Seq(enc)).select(explode(col("lines"))).as[String]
       spark.read
         .option("header", "false")
         .option("inferSchema", "false")
-        .csv(spark.createDataset(lines))
+        .csv(lines)
     }
   }
 
-  /** S1 at scale — MANY files, each with its own unknown encoding: the
-    * probe and the decode both run inside the file's own `binaryFiles`
-    * task (first 64 KB picks the charset, the payload decodes in place) —
-    * no driver-side per-file work at all. Returns (source_file, encoding,
-    * line) so downstream keeps file lineage; feed the `line` column to
-    * `spark.read.csv(Dataset[String])` per the single-file reader. */
-  def csvLinesPerFileEncoding(spark: SparkSession, pathGlob: String,
-                              encodings: Seq[String] = defaultEncodings): DataFrame = {
-    val encs = encodings // avoid closing over `this`
-    val rows = spark.sparkContext.binaryFiles(pathGlob)
-      .flatMap { case (file, pds) =>
-        val bytes = pds.toArray()
-        val sample =
-          if (bytes.length <= 64 * 1024) bytes
-          else trimSplitTail(java.util.Arrays.copyOf(bytes, 64 * 1024))
-        val enc = detectEncodingFromBytes(sample, encs)
-        val text = new String(bytes, java.nio.charset.Charset.forName(enc))
-        // utf-8-sig semantics: a leading BOM never reaches the first cell
-        (if (text.nonEmpty && text.charAt(0) == '\uFEFF') text.substring(1)
-         else text)
-          .split("\r?\n", -1).iterator.zipWithIndex
-          .map { case (line, i) => Row(file, enc, i.toLong, line) }
-      }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("source_file", StringType, nullable = false),
-      StructField("encoding", StringType, nullable = false),
-      StructField("line_no", LongType, nullable = false),
-      StructField("line", StringType, nullable = true))))
+  /** Decode one whole file: the charset is probed from its first 64 KB,
+    * a leading BOM is dropped (utf-8-sig semantics: it never reaches the
+    * first cell) and the text is split into lines. Returns (encoding, lines). */
+  private def decodeLines(bytes: Array[Byte],
+                          encodings: Seq[String]): (String, Array[String]) = {
+    val sample =
+      if (bytes.length <= 64 * 1024) bytes
+      else trimSplitTail(java.util.Arrays.copyOf(bytes, 64 * 1024))
+    val enc = detectEncodingFromBytes(sample, encodings)
+    val text = stripBomChar(new String(bytes, java.nio.charset.Charset.forName(enc)))
+    (enc, text.split("\r?\n", -1))
   }
+
+  private val linesPerFileSchema = StructType(Seq(
+    StructField("source_file", StringType, nullable = false),
+    StructField("encoding", StringType, nullable = false),
+    StructField("lines", ArrayType(StringType), nullable = false)))
+
+  /** S1 at scale — MANY files, each with its own unknown encoding, one row
+    * per file: (source_file, encoding, lines). The probe and the decode run
+    * inside the task that reads the file, so nothing per-file touches the
+    * driver, and a per-file kernel sees its whole file in one row. Built on
+    * the `binaryFile` source, which packs files into partitions by
+    * `spark.sql.files.openCostInBytes` — small files spread over the cores
+    * instead of sharing one split. */
+  def linesPerFile(spark: SparkSession, pathGlob: String,
+                   encodings: Seq[String] = defaultEncodings): DataFrame = {
+    spark.read.format("binaryFile").load(pathGlob)
+      .select(col("path"), col("content"))
+      .map { r =>
+        val (enc, lines) = decodeLines(r.getAs[Array[Byte]](1), encodings)
+        Row(r.getString(0), enc, scala.collection.immutable.ArraySeq.unsafeWrapArray(lines))
+      }(Encoders.row(linesPerFileSchema))
+  }
+
+  /** [[linesPerFile]] one row per line: (source_file, encoding, line_no,
+    * line), line_no counting from 0 within the file. Feed the `line` column
+    * to `spark.read.csv(Dataset[String])` per the single-file reader. */
+  def csvLinesPerFileEncoding(spark: SparkSession, pathGlob: String,
+                              encodings: Seq[String] = defaultEncodings): DataFrame =
+    linesPerFile(spark, pathGlob, encodings)
+      .select(col("source_file"), col("encoding"),
+        posexplode(col("lines")).as(Seq("line_no", "line")))
+      .withColumn("line_no", col("line_no").cast(LongType))
 
   /** S10: streaming JSON scan with a JSON-pointer-style sub-array
     * (`/records`), as the importers do with JsonMachine
@@ -156,6 +165,20 @@ object Ingest {
   def jsonPointer(spark: SparkSession, path: String, pointer: String): DataFrame = {
     val field = pointer.stripPrefix("/")
     spark.read.option("multiLine", "true").json(path)
+      .select(explode(col(field)).as("r"))
+      .select(col("r.*"))
+  }
+
+  /** [[jsonPointer]] with a declared record schema: each of `fields` is read
+    * as a string — a JSON number comes through as its text — so no
+    * inference pass scans the files before the read. Fields absent from a
+    * record read null. */
+  def jsonPointer(spark: SparkSession, path: String, pointer: String,
+                  fields: Seq[String]): DataFrame = {
+    val field = pointer.stripPrefix("/")
+    val record = StructType(fields.map(StructField(_, StringType)))
+    spark.read.schema(StructType(Seq(StructField(field, ArrayType(record)))))
+      .option("multiLine", "true").json(path)
       .select(explode(col(field)).as("r"))
       .select(col("r.*"))
   }

@@ -8,8 +8,6 @@ import graft.sources.{ExcelReader, XlsReader}
   * scripts if the fixture contract changes). */
 class ExcelSpec extends SparkSpec {
 
-  private val fixtures = "/root/repo/src/test/resources/fixtures"
-
   test("parseWorkbook reads sheets, shared strings and numbers in order") {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$fixtures/supplier_sheets.xlsx"))

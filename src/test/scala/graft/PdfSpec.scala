@@ -7,8 +7,6 @@ import graft.sources.PdfReader
   * dev/make_pdf_fixture.py; re-run that script if the contract changes). */
 class PdfSpec extends SparkSpec {
 
-  private val fixtures = "/root/repo/src/test/resources/fixtures"
-
   private def bytesOf(name: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$fixtures/$name"))
 

@@ -6,8 +6,6 @@ import graft.sources.Ingest
 
 class PipelinesSpec extends SparkSpec {
 
-  val fixtures = "/root/repo/src/test/resources/fixtures"
-
   test("encoding detection picks TIS-620 for the Thai PO grid") {
     val enc = Ingest.detectEncoding(s"$fixtures/po_report.csv")
     // per-file distributed variant: mixed encodings in one glob, each file
@@ -77,6 +75,43 @@ class PipelinesSpec extends SparkSpec {
     assert(out.count() == 4)
     val y2021 = out.where(col("fiscal_year") === 2021).collect()(0)
     assert(y2021.getAs[Double]("total_revenue") == 1.0) // untouched
+  }
+
+  test("declared JSON schemas: numeric values read as their text, cleaned as before") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_json_num")
+    def write(name: String, records: String*): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p,
+        records.mkString("{\"records\": [\n", ",\n", "\n]}\n").getBytes("UTF-8"))
+      p.toString
+    }
+    def invoice(amount: String) =
+      s"""{"Invoice No.": "IV1O1", "Supplier Code": "72195", "Invoice Date": "01/07/2568",
+         |"Invoice Received Date": "2025-07-03 10:22:00", "Related Document": "PO:1013090869",
+         |"Amount": $amount, "Status": "PAID"}""".stripMargin
+    // every Amount a JSON number: an inferring reader typed the column double
+    val (valid, rejects) = Pipelines.invoiceReport(spark,
+      write("inv_num.json", invoice("1234.5"), invoice("-20"), invoice("0")))
+    assert(rejects.count() == 0)
+    assert(valid.select("invoice_no", "amount").as[(String, Double)].collect().toSeq ==
+      Seq(("IV101", 1234.5), ("IV101", -20.0), ("IV101", 0.0)))
+    val (validText, _) = Pipelines.invoiceReport(spark,
+      write("inv_text.json", invoice("\"1234.5\""), invoice("\"-20\""), invoice("\"0\"")))
+    assert(valid.collect().toSeq == validText.collect().toSeq)
+
+    def dbd(year: String, item: String, amount: String) =
+      s"""{"tax_id": "0105537086874", "fiscal_year": $year, "item_th": "$item", "amount": $amount}"""
+    val existing = Seq.empty[(String, Int, Option[Double], Option[Double], Option[Double])]
+      .toDF("tax_id", "fiscal_year", "total_revenue", "cost_of_goods_sold", "net_profit")
+    val fin = Pipelines.dbdFinancial(spark, write("dbd_num.json",
+      dbd("2022", "รายได้รวม", "1234.5"), dbd("2022", "ต้นทุนขาย", "600"),
+      dbd("2023", "กำไร(ขาดทุน)สุทธิ", "-7.25")), existing)
+    assert(fin.schema("fiscal_year").dataType.simpleString == "int")
+    val got = fin.orderBy("fiscal_year").as[(String, Int, Option[Double], Option[Double], Option[Double])]
+      .collect().toSeq
+    assert(got == Seq(("0105537086874", 2022, Some(1234.5), Some(600.0), None),
+      ("0105537086874", 2023, None, None, Some(-7.25))))
   }
 
   test("item map: exact, paren-stripped, contains fallback, unknown") {

@@ -33,8 +33,6 @@ object SinksSpec {
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fixtures = "/root/repo/src/test/resources/fixtures"
-
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_sink").toString
 

@@ -15,4 +15,9 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** The committed fixtures, resolved against the build's base directory
+    * (the forked test JVM's working directory). */
+  val fixtures: String =
+    java.nio.file.Paths.get("src/test/resources/fixtures").toAbsolutePath.toString
 }
