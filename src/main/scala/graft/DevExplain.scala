@@ -1,7 +1,7 @@
 package graft
 
 /** Dev utility: print `explain("formatted")` for the named SparkEntry
-  * queries at sf0.01 — the plan-audit loop PLANS.md documents.
+  * queries at sf0.001 — the plan-audit loop PLANS.md documents.
   * `sbt "runMain graft.DevExplain q147_resample_ffill ..."` */
 object DevExplain {
   def main(args: Array[String]): Unit = {

@@ -3223,7 +3223,7 @@ object SparkEntry {
             substring(sn, 5, 1), substring(sn, 7, 60))).as("nm"))
       val pairs = graft.operators.Linkage.linkPairsPrefixFilter(
         dirty, "rid", "nm", clean, "cid", "nm",
-        graft.operators.Linkage.wordShingleHashes(_, 3), threshold = 0.5)
+        graft.operators.Dedup.wordShingleHashes(_, 3), threshold = 0.5)
       graft.operators.Linkage.bestMatch(pairs).orderBy("left_id")
     }),
 

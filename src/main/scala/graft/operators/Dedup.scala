@@ -67,14 +67,32 @@ object Dedup {
   /** Exact content dedup: group by digest of normalized text, keep min(id).
     * One shuffle over (digest, id) pairs only. */
   def exactByDigest(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val keyed = df.withColumn("__digest",
-      md5(lower(regexp_replace(trim(col(textCol)), "\\s+", " "))))
+    val keyed = df.withColumn("__digest", md5(normalizedText(col(textCol))))
     firstPerKey(keyed, Seq("__digest"), idCol).drop("__digest")
   }
 
+  /** Trimmed, whitespace-collapsed, lowercased text: the one normal form
+    * the token, digest, fingerprint and char-gram operators start from. */
+  private[operators] def normalizedText(text: Column): Column =
+    lower(regexp_replace(trim(text), "\\s+", " "))
+
   /** Normalized word tokens of a text column. */
-  def tokens(text: Column): Column =
-    split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
+  def tokens(text: Column): Column = split(normalizedText(text), " ")
+
+  /** Distinct word n-gram shingles of a text column as a sorted hash
+    * array — the gram function for multi-word keys (addresses, titles,
+    * document snippets) and the word-shingle joins below. One codegen
+    * kernel pass over the token array: the HOF spelling (transform over
+    * [[shinglesFromTokens]]) re-evaluates the lambda-captured token
+    * expression once per shingle position after projection collapse —
+    * measured 20× slower on the sf0.1 documents table. Choose grams by
+    * what DISCRIMINATES: char grams ([[Linkage.charGramHashes]]) suit
+    * single-token keys with char-level noise; on a low-vocabulary corpus
+    * char grams are shared by everything (measured: 377 distinct 3-grams
+    * across 5k docs → quasi-all-pairs candidates) while word shingles
+    * stay rare (vocab^n universe). */
+  def wordShingleHashes(text: Column, n: Int): Column =
+    graft.plans.VectorExpressions.shingleHashes(tokens(text), n)
 
   /** Word n-gram shingles over a MATERIALIZED token-array column, as a
     * distinct array.
@@ -110,7 +128,7 @@ object Dedup {
     import graft.plans.VectorExpressions
     // both sketches come from one-pass kernels over the materialized token
     // array (the HOF spelling re-evaluates inlined inputs per element /
-    // per band reference — see jaccardPairsPrefixFilter)
+    // per band reference — see wordShingleHashes)
     val exploded = graft.core.ScanWidth.ensure(df)
       .select(col(idCol).as("id"), col(textCol).as("text"))
       .withColumn("toks", tokens(col("text")))
@@ -135,69 +153,148 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Exact n-gram Jaccard near-dup pairs over the WHOLE corpus via
-    * prefix-filter candidate generation (PPJoin family: Xiao et al.,
-    * "Efficient Similarity Joins for Near Duplicate Detection", WWW '08;
-    * Chaudhuri et al., ICDE '06).
+  // ---- prefix-filter similarity join core (PPJoin family: Xiao et al.,
+  // "Efficient Similarity Joins for Near Duplicate Detection", WWW '08;
+  // Chaudhuri et al., ICDE '06). jaccardPairsPrefixFilter (self-join),
+  // containmentPairs and Linkage.linkPairsPrefixFilter (bipartite) are
+  // built from these helpers. A join is complete only when every side
+  // ranks its grams by ONE global total order and cuts its prefix at the
+  // same length function — both live here, once. Each caller keeps its
+  // own persists: which frames have several consumers differs per caller.
+
+  /** (id, sh, sz): each row's distinct gram hashes as a sorted array (the
+    * `jaccardSorted` input shape) and its size; empty sets are dropped.
+    * Persisted under `scope`, as every caller reads it at least three
+    * times (postings, the df count via postings, the verify joins), so
+    * tokenization and hashing run once. MEMORY_AND_DISK: at corpus scale
+    * the hash arrays spill rather than evict-and-recompute. TRACKED: the
+    * joins return lazy frames, so there is no correct in-operator
+    * unpersist — long-lived sessions release via InternalCaches.release(). */
+  private[operators] def gramSets(df: DataFrame, idCol: String, textCol: String,
+                                  gramsOf: Column => Column,
+                                  scope: String): DataFrame =
+    df.select(col(idCol).as("id"), gramsOf(col(textCol)).as("sh"))
+      .select(col("id"), col("sh"), size(col("sh")).as("sz"))
+      .where(col("sz") > 0)
+      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = scope))
+
+  /** (id, sz, g): one row per gram of each set. The posting, frequency
+    * and rank exchanges carry these fixed-width triples only, never the
+    * arrays. */
+  private[operators] def postings(sets: DataFrame): DataFrame =
+    sets.select(col("id"), col("sz"), explode(col("sh")).as("g"))
+
+  /** (g, df): document frequency of every gram found in >= 2 postings
+    * over ALL of `posts` — for a bipartite join, both sides, or the two
+    * prefix computations would rank under divergent orders and a pair
+    * could keep its shared gram inside the prefix on one side only.
+    * df=1 grams are pruned: a gram in one set connects nothing, and most
+    * of a natural corpus's grams are unique, so the rank window sorts only
+    * the shared tail. Pruning entries ranked ahead of a true-prefix gram
+    * only lowers its rank, so the candidate set can only grow and the
+    * exact verify keeps the result identical. */
+  private[operators] def sharedFreq(posts: DataFrame*): DataFrame =
+    posts.map(_.select("g")).reduce(_ unionAll _)
+      .groupBy("g").agg(count(lit(1)).as("df"))
+      .where(col("df") >= 2)
+
+  /** (g, id, sz, rk, nsh): each set's shared grams ranked rarest-first in
+    * the global order (df asc, hash asc), cut at `prefixLen` (a Column
+    * over `sz`). rk is the rank among the set's shared grams and nsh their
+    * count; both feed the positional filter of [[jaccardJoin]] (Spark's
+    * column pruning drops the nsh window where no consumer reads it). */
+  private[operators] def rankedPrefix(post: DataFrame, freq: DataFrame,
+                                      prefixLen: Column): DataFrame =
+    post.join(freq, Seq("g"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("df"), col("g"))))
+      .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("id"))))
+      .where(col("rk") <= prefixLen)
+      .select(col("g"), col("id"), col("sz"), col("rk"), col("nsh"))
+
+  /** Jaccard prefix length |x| - floor(|x|·t/(1+t)) + 1. Completeness:
+    * the suffix |s_x| = |x| - prefLen(x) < t/(1+t)·|x| - 1 per side, and a
+    * pair with J >= t has overlap o >= t/(1+t)·(|a|+|b|) > |s_a| + |s_b|,
+    * so at least one common gram sits in BOTH prefixes and the pair
+    * surfaces from that posting bucket. */
+  private[operators] def jaccardPrefixLen(threshold: Double): Column =
+    col("sz") - floor(col("sz") * (threshold / (1.0 + threshold))) + 1
+
+  /** Candidate join + exact verify over two [[rankedPrefix]] tables cut
+    * at [[jaccardPrefixLen]]: (idA, idB, jaccard) for every pair passing
+    * `pairFilter` with Jaccard >= `threshold`. `setsA`/`setsB` are the
+    * [[gramSets]] the prefixes came from.
+    *
+    * Candidates share a prefix gram and pass two upper-bound prunes, so
+    * neither loses a true pair: the size ratio (J <= min/max size), and
+    * PPJoin's POSITIONAL filter — a match at shared-rank positions
+    * (rk_a, rk_b) bounds the overlap by 1 + min(remaining shared grams on
+    * either side), while J >= t needs overlap >= t/(1+t)·(sz_a+sz_b). The
+    * positional filter kills the quadratic pathology of the plain bucket
+    * join: a boilerplate gram shared by k short docs sits at the END of
+    * each prefix (highest df), its remaining-gram bound is tiny, and the
+    * k²/2 candidates it would emit die inside the join instead of flooding
+    * the verify exchange (measured at the sf10 decade: 55M candidates ->
+    * linear, see PLANS.md round 6). The 1e-9 slack keeps float rounding on
+    * the safe (over-keeping) side.
+    *
+    * The candidate id pairs are persisted under `scope` so the verify
+    * joins see a REAL size estimate: unestimated, the planner built its
+    * hash relations from the set side instead — broadcasting every set's
+    * full array twice per call (the candidate list is a bare id-pair
+    * table, orders of magnitude lighter at every scale). The arrays then
+    * cross exactly two exchanges (one hash join per pair side), never per
+    * candidate. The verify rounds BEFORE the threshold filter (6 dp, the
+    * SQL oracle's ROUND-then-filter order): a pair whose true Jaccard sits
+    * within 5e-7 below the threshold must round up INTO the result. */
+  private[operators] def jaccardJoin(rankedA: DataFrame, rankedB: DataFrame,
+                                     setsA: DataFrame, setsB: DataFrame,
+                                     idA: String, idB: String,
+                                     pairFilter: Column, threshold: Double,
+                                     scope: String): DataFrame = {
+    def side(ranked: DataFrame, id: String, s: String): DataFrame =
+      ranked.select(col("g"), col("id").as(id), col("sz").as(s"sz_$s"),
+        col("rk").as(s"rk_$s"), col("nsh").as(s"nsh_$s"))
+    val alpha = lit(threshold / (1.0 + threshold)) *
+      (col("sz_a") + col("sz_b")).cast("double")
+    val cand = side(rankedA, idA, "a").join(side(rankedB, idB, "b"), Seq("g"))
+      .where(pairFilter &&
+        least(col("sz_a"), col("sz_b")).cast("double") /
+          greatest(col("sz_a"), col("sz_b")) >= threshold &&
+        (lit(1.0) + least(col("nsh_a") - col("rk_a"),
+          col("nsh_b") - col("rk_b")).cast("double")) >= alpha - lit(1e-9))
+      .select(idA, idB).dropDuplicates(idA, idB)
+      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = scope))
+    cand.join(setsA.select(col("id").as(idA), col("sh").as("sh_a")), Seq(idA))
+      .join(setsB.select(col("id").as(idB), col("sh").as("sh_b")), Seq(idB))
+      .withColumn("jaccard", round(
+        graft.plans.VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
+      .where(col("jaccard") >= threshold)
+      .select(idA, idB, "jaccard")
+  }
+
+  /** Exact word n-gram Jaccard near-dup pairs over the WHOLE corpus:
+    * (id_a, id_b, jaccard) with id_a < id_b, via the prefix-filter self-
+    * join above.
     *
     * Unlike LSH banding this is COMPLETE — every pair with Jaccard >=
-    * `threshold` is found, no recall loss — yet still scale-safe: candidates
-    * come from an inverted index over each document's `prefLen` RAREST
-    * shingles (global document-frequency order), so bucket sizes are bounded
-    * by shingle frequency, never by coarse metadata blocks.
-    *
-    * Completeness: with every shingle set ordered by the same total order
-    * (df asc, hash asc) and suffix length |s_x| = |x| - prefLen(x) <
-    * t/(1+t)·|x| - 1 per side, a pair with J >= t has common overlap
-    * o >= t/(1+t)·(|a|+|b|) > |s_a| + |s_b|, so at least one common shingle
-    * sits in BOTH prefixes and the pair surfaces from that posting bucket.
-    *
-    * Shuffle accounting: postings/frequency/rank exchanges carry (hash, id,
-    * sz) triples only; the candidate dedup carries bare id pairs; the
-    * shingle arrays cross exactly two exchanges (one hash join per pair
-    * side) — never per-candidate, never per-band. */
+    * `threshold` is found, no recall loss — yet still scale-safe:
+    * candidates come from an inverted index over each document's RAREST
+    * shingles (global document-frequency order), so bucket sizes are
+    * bounded by shingle frequency, never by coarse metadata blocks. */
   def jaccardPairsPrefixFilter(df: DataFrame, idCol: String, textCol: String,
                                n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    // The shingle table feeds four consumers (postings, the df count, and
-    // both verify sides) — persist it so tokenization/shingling/hashing
-    // runs once, not once per consumer. MEMORY_AND_DISK: at corpus scale
-    // the hash arrays spill rather than evict-and-recompute. TRACKED:
-    // the result is lazy so there is no correct in-operator unpersist —
-    // long-lived sessions release via InternalCaches.release().
-    // shingleHashes is a one-pass codegen kernel: the HOF spelling
-    // (transform over shinglesFromTokens) re-evaluates the lambda-captured
-    // token expression once per shingle position after projection collapse
-    // — measured 20× slower on the sf0.1 documents table
-    val docs = graft.core.ScanWidth.ensure(df)
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("toks", tokens(col("text")))
-      .withColumn("sh", graft.plans.VectorExpressions.shingleHashes(col("toks"), n))
-      .select(col("id"), col("sh"), size(col("sh")).as("sz"))
-      .where(col("sz") > 0)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "dedup"))
-    // rarest-first prefix: global df per shingle hash, rank within doc.
-    // df=1 postings are pruned BEFORE the rank window — a shingle unique to
-    // one document can never form a candidate bucket, and most of a natural
-    // corpus's shingles are unique, so the window sorts only the shared-
-    // shingle tail. Completeness holds: pruning entries ranked ahead of a
-    // true-prefix shingle only DECREASES its rank, so everything in the
-    // true prefix still passes rk <= L (the candidate set can only grow,
-    // and exact verification keeps the final result identical).
-    val posting = docs.select(col("id"), col("sz"), explode(col("sh")).as("g"))
-    val freq = posting.groupBy("g").agg(count(lit(1)).as("df"))
-      .where(col("df") >= 2)
-    val prefFrac = threshold / (1.0 + threshold)
-    // rk = rank among the doc's SHARED shingles (df-ordered); nsh = how
-    // many shared shingles the doc has. Both feed the POSITIONAL filter
-    // below — PPJoin's second prune (Xiao et al., WWW '08).
-    // materialized ONCE: the self-join below reads `ranked` as BOTH sides,
-    // and Spark does not share common subtrees across self-join sides — the
-    // unpersisted spelling re-ran the whole chain (posting explode + the
-    // freq aggregation's second explode + the exchange/sort/windows) per
-    // side: 4 full shingle explodes per call, measured as ~75% of q94's
-    // runtime in the r13 phase rig. Prefix rows are (g, id, sz, rk, nsh)
-    // fixed-width longs — far smaller than the arrays the docs cache
+    val docs = gramSets(graft.core.ScanWidth.ensure(df), idCol, textCol,
+      wordShingleHashes(_, n), "dedup")
+    val posting = postings(docs)
+    // `ranked` is materialized ONCE: the self-join reads it as BOTH
+    // sides, and Spark does not share common subtrees across self-join
+    // sides — the unpersisted spelling re-ran the whole chain (posting
+    // explode + the freq aggregation's second explode + the
+    // exchange/sort/windows) per side: 4 full shingle explodes per call,
+    // measured as ~75% of q94's runtime in the r13 phase rig. Prefix rows
+    // are fixed-width longs — far smaller than the arrays the docs cache
     // already holds, so the cache trade is strictly better than the
     // recompute at any scale.
     // storage level stays the deserialized default (r14, measured): the
@@ -206,53 +303,10 @@ object Dedup {
     // no suite-pressure relief on untouched neighbors — SQL caches are
     // already compact columnar CachedBatches, so SER only adds a
     // serialize/deserialize pass (OPTIMIZATION_r14.md)
-    val ranked = posting.join(freq, Seq("g"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("g"))))
-      .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("id"))))
-      .where(col("rk") <= col("sz") - floor(col("sz") * prefFrac) + 1)
-      .select(col("g"), col("id"), col("sz"), col("rk"), col("nsh"))
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "dedup"))
-    val a = ranked.select(col("g"), col("id").as("id_a"), col("sz").as("sz_a"),
-      col("rk").as("rk_a"), col("nsh").as("nsh_a"))
-    val b = ranked.select(col("g"), col("id").as("id_b"), col("sz").as("sz_b"),
-      col("rk").as("rk_b"), col("nsh").as("nsh_b"))
-    // POSITIONAL filter: matching at shared-rank positions (rk_a, rk_b)
-    // bounds the overlap by 1 + min(remaining shared shingles on either
-    // side); J >= t needs overlap >= t/(1+t)·(sz_a+sz_b). An upper-bound
-    // argument — NO false negatives, so pairs-completeness holds — but it
-    // kills exactly the quadratic pathology the plain bucket join has: a
-    // boilerplate gram shared by k short docs sits at the END of each
-    // prefix (highest df), its remaining-shingle bound is tiny, and the
-    // k²/2 candidates it would emit die inside the join instead of
-    // flooding the verify exchange (measured at the sf10 decade: 55M
-    // candidates -> linear, see PLANS.md round 6). The 1e-9 slack keeps
-    // float rounding on the safe (over-keeping) side.
-    val alpha = lit(prefFrac) * (col("sz_a") + col("sz_b")).cast("double")
-    val cand = a.join(b, Seq("g"))
-      .where(col("id_a") < col("id_b") &&
-        least(col("sz_a"), col("sz_b")).cast("double") /
-          greatest(col("sz_a"), col("sz_b")) >= threshold &&
-        (lit(1.0) + least(col("nsh_a") - col("rk_a"),
-          col("nsh_b") - col("rk_b")).cast("double")) >= alpha - lit(1e-9))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-      // materialized so the verify joins see candidates with a REAL size
-      // estimate: unestimated, the planner built its hash relations from
-      // the docs side instead — broadcasting every document's full shingle
-      // array TWICE per call (the candidate list is a bare id-pair table,
-      // orders of magnitude lighter at every scale)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "dedup"))
-    // verify: re-join the sorted hash arrays by id, linear-merge Jaccard
-    val arrA = docs.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val arrB = docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    // round BEFORE the threshold filter (6dp, matching the SQL-oracle
-    // ROUND-then-filter order): a pair whose true jaccard sits within
-    // 5e-7 below the threshold must round up INTO the result set
-    cand.join(arrA, Seq("id_a")).join(arrB, Seq("id_b"))
-      .withColumn("jaccard", round(
-        graft.plans.VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val ranked = rankedPrefix(posting, sharedFreq(posting), jaccardPrefixLen(threshold))
+      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
+    jaccardJoin(ranked, ranked, docs, docs, "id_a", "id_b",
+      col("id_a") < col("id_b"), threshold, "dedup")
   }
 
   /** Asymmetric containment join: pairs (id_a, id_b) where doc A's
@@ -263,52 +317,37 @@ object Dedup {
     * article inclusion, and template-wrapping in a pretraining corpus
     * (Fröbe et al., SIGIR '21 CopyCat shape).
     *
-    * Candidate generation is the containment prefix filter: if
-    * |A∩B| ≥ τ|A| then among A's globally-ordered shingles one of the
-    * first |A| - ⌈τ|A|⌉ + 1 must also be in B — so only A's prefix
-    * probes the index, but (unlike the symmetric Jaccard join) the
-    * index side must carry EVERY shingle of B: containment admits no
-    * size-ratio pruning — a 10-shingle quote can sit inside a 10^6-
-    * shingle book. df≥2 pruning still applies to both sides (a shingle
-    * in one doc connects nothing). Exact verification recomputes
-    * |A∩B| on the sorted-distinct hash arrays; ROUND(6)-then-filter
-    * matches the SQL oracle's order. Returns (id_a, id_b, containment)
-    * — directional: both (A⊂B) and (B⊂A) can appear. */
+    * Candidate generation is the containment prefix filter on the shared
+    * core's sets, postings, df count and global rank: if |A∩B| ≥ τ|A|
+    * then among A's globally-ordered shingles one of the first
+    * |A| - ⌈τ|A|⌉ + 1 must also be in B — so only A's prefix probes the
+    * index, but (unlike the symmetric Jaccard join) the index side must
+    * carry EVERY shingle of B: containment admits no size-ratio pruning —
+    * a 10-shingle quote can sit inside a 10^6-shingle book. df≥2 pruning
+    * still applies to both sides (a shingle in one doc connects nothing).
+    * Exact verification recomputes |A∩B| on the sorted-distinct hash
+    * arrays; ROUND(6)-then-filter matches the SQL oracle's order. Returns
+    * (id_a, id_b, containment) — directional: both (A⊂B) and (B⊂A) can
+    * appear. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val docs = graft.core.ScanWidth.ensure(df)
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("toks", tokens(col("text")))
-      .withColumn("sh", graft.plans.VectorExpressions.shingleHashes(col("toks"), n))
-      .select(col("id"), col("sh"), size(col("sh")).as("sz"))
-      .where(col("sz") > 0)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "dedup"))
-    val posting = docs.select(col("id"), col("sz"), explode(col("sh")).as("g"))
-    // `freq` IS materialized (r14) — the (hash, long) aggregation output,
-    // exactly as Linkage.linkPairsPrefixFilter does: probe and index both
-    // consume `shared`, so the unpersisted plan re-ran the posting explode
-    // PLUS the full groupBy exchange+aggregate once per side. The r13
-    // revert killed a cache of the full `shared` posting table (docs-sized,
-    // +0.7 s under suite pressure); freq is orders of magnitude smaller
-    // (distinct shared shingles, two fixed-width columns, at the default
-    // MEMORY_AND_DISK level).
-    val freq = graft.core.InternalCaches.persistTracked(
-      posting.groupBy("g").agg(count(lit(1)).as("df"))
-        .where(col("df") >= 2),
-      scope = "dedup")
-    // the full `shared` posting table itself stays UNmaterialized (r13,
-    // measured: +0.1 s isolated / +0.7 s full-suite — cache build + suite
-    // memory pressure on a docs-sized frame; same §4 criterion)
-    val shared = posting.join(freq, Seq("g"))
-    // probe side: rarest-first prefix of length sz - ceil(τ·sz) + 1
-    val probe = shared
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("g"))))
-      .where(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
+    val docs = gramSets(graft.core.ScanWidth.ensure(df), idCol, textCol,
+      wordShingleHashes(_, n), "dedup")
+    val posting = postings(docs)
+    // `freq` IS materialized (r14): probe and index both join it, so the
+    // unpersisted plan re-ran the posting explode PLUS the full groupBy
+    // exchange+aggregate once per side. freq is a (hash, long) table of
+    // distinct shared shingles, orders of magnitude below the posting
+    // table, whose own cache the r13 round reverted (measured: +0.1 s
+    // isolated / +0.7 s full-suite — cache build + suite memory pressure
+    // on a docs-sized frame), so the probe/index `shared` join stays lazy.
+    val freq = sharedFreq(posting)
+      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
+    val probe = rankedPrefix(posting, freq, col("sz") - ceil(col("sz") * threshold) + 1)
       .select(col("g"), col("id").as("id_a"))
     // index side: all shared shingles (no prefix — see Scaladoc)
-    val index = shared.select(col("g"), col("id").as("id_b"))
+    val index = posting.join(freq, Seq("g")).select(col("g"), col("id").as("id_b"))
     val cand = probe.join(index, Seq("g"))
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
@@ -345,12 +384,9 @@ object Dedup {
     * of 20 covers diameters beyond any real corpus. If the fixpoint is
     * STILL not reached at `maxIter`, the result would be silently wrong
     * (a dedup decision built on a partial labeling drops non-duplicates)
-    * — so this THROWS unless `failOnNonConvergence = false`, which logs
-    * and returns the partial labeling for diagnostics. Returns
-    * (id, component). */
+    * — so this THROWS. Returns (id, component). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20,
-                          failOnNonConvergence: Boolean = true): DataFrame = {
+                          maxIter: Int = 20): DataFrame = {
     // Lineage truncation is the load-bearing detail of this loop. Each
     // round's plan references the previous round's labels TWICE (once in
     // the neighbor-min join, once in the merge), so without a cut the
@@ -453,15 +489,12 @@ object Dedup {
       prevSum = curSum
       iter += 1
     }
-    if (converged) log.info(s"connectedComponents: converged after $iter rounds")
-    if (!converged) {
-      val msg = s"connectedComponents: label fixpoint NOT reached after " +
-        s"$maxIter rounds — the labeling is partial and any dedup decision " +
-        s"built on it would silently drop non-duplicates. Raise maxIter " +
-        s"(rounds needed ~ log2(component diameter))."
-      if (failOnNonConvergence) throw new IllegalStateException(msg)
-      else log.warn(msg)
-    }
+    if (!converged)
+      throw new IllegalStateException(s"connectedComponents: label fixpoint " +
+        s"NOT reached after $maxIter rounds — the labeling is partial and any " +
+        s"dedup decision built on it would silently drop non-duplicates. " +
+        s"Raise maxIter (rounds needed ~ log2(component diameter)).")
+    log.info(s"connectedComponents: converged after $iter rounds")
     labels
   }
 
@@ -907,16 +940,14 @@ object Dedup {
     * sum. Runs as a custom Catalyst expression — one loop over the tokens
     * instead of 64 interpreted array traversals. */
   def simhash64(text: Column): Column =
-    graft.plans.VectorExpressions.simhash64(
-      split(lower(regexp_replace(trim(text), "\\s+", " ")), " "))
+    graft.plans.VectorExpressions.simhash64(tokens(text))
 
   /** [[simhash64]] with the portable md5-derived token hash: every
     * fingerprint bit is recomputable from `md5(token)` hex in plain SQL, so
     * pair outputs are oracle-checkable end to end (the xxhash64 variant
     * stays the faster default). */
   def simhash64Portable(text: Column): Column =
-    graft.plans.VectorExpressions.simhash64Md5(
-      split(lower(regexp_replace(trim(text), "\\s+", " ")), " "))
+    graft.plans.VectorExpressions.simhash64Md5(tokens(text))
 
   /** Winnowing fingerprint of a text column (rolling k-gram hashes, window
     * minima — Schleimer et al. '03): a sorted array of selected hashes per

@@ -18,8 +18,10 @@ import org.apache.spark.sql.expressions.Window
   * equals the all-pairs result at the same threshold, so the oracle can
   * recompute it as a plain cross join at test scale.
   *
-  * Scale shape (identical to [[Dedup.jaccardPairsPrefixFilter]], but
-  * across two tables): candidate generation exchanges (gram-hash, id,
+  * Scale shape: the pair join is the prefix-filter core in [[Dedup]]
+  * (`gramSets` → `postings` → `sharedFreq` → `rankedPrefix` →
+  * `jaccardJoin`, also behind [[Dedup.jaccardPairsPrefixFilter]]), run
+  * across two tables: candidate generation exchanges (gram-hash, id,
   * size) triples only, bucket sizes are bounded by gram document
   * frequency (rarest-first prefixes), df=1 grams are pruned before the
   * rank window, and the gram arrays cross exactly one exchange per side
@@ -29,24 +31,12 @@ import org.apache.spark.sql.expressions.Window
   */
 object Linkage {
 
-  /** Distinct word n-gram shingles of a text column as a sorted hash
-    * array — the gram function for multi-word keys (addresses, titles,
-    * document snippets). Choose grams by what DISCRIMINATES: char grams
-    * suit single-token keys with char-level noise; on a low-vocabulary
-    * corpus char grams are shared by everything (measured: 377 distinct
-    * 3-grams across 5k docs → quasi-all-pairs candidates) while word
-    * shingles stay rare (vocab^n universe). */
-  def wordShingleHashes(s: Column, n: Int): Column = {
-    val toks = Dedup.tokens(s)
-    graft.plans.VectorExpressions.shingleHashes(toks, n)
-  }
-
   /** Distinct character n-grams of a whitespace-normalized, lowercased
     * string, as a SORTED array of portable 60-bit md5 hashes (the
     * jaccardSorted kernel input shape; same hash family as the sketches,
     * so any md5-capable engine reproduces the gram sets bit-for-bit). */
   def charGramHashes(s: Column, n: Int): Column = {
-    val norm = lower(regexp_replace(trim(s), "\\s+", " "))
+    val norm = Dedup.normalizedText(s)
     val cnt = greatest(length(norm) - (n - 1), lit(0))
     val grams = when(cnt < 1, array().cast("array<string>"))
       .otherwise(array_distinct(transform(sequence(lit(1), cnt),
@@ -56,83 +46,31 @@ object Linkage {
   }
 
   /** All (left_id, right_id, jaccard) pairs across two tables whose
-    * character-n-gram Jaccard is >= threshold — complete at the given
-    * threshold, never materializing the cross product.
-    *
-    * Prefix-filter completeness carries over from the self-join case
-    * unchanged: under one GLOBAL gram order (df asc, hash asc — computed
-    * over the union of both sides' postings), any pair with
-    * J(A,B) >= t has overlap >= t/(1+t) * (|A|+|B|), so A and B must
-    * share a gram inside each one's first |X| - floor(|X| * t/(1+t)) + 1
-    * grams. Pruning df=1 grams (present in one record total, so never
-    * shared) only shortens ranks, which keeps every true-prefix gram
-    * inside the bound — the candidate set can only grow, and the exact
-    * verify keeps the final result identical. */
+    * `gramsOf` Jaccard is >= threshold — complete at the given threshold,
+    * never materializing the cross product. Prefix-filter completeness
+    * carries over from the self-join unchanged, because the gram order
+    * is computed over the union of both sides' postings (see
+    * `Dedup.sharedFreq`). */
   def linkPairsPrefixFilter(left: DataFrame, leftId: String, leftText: String,
                             right: DataFrame, rightId: String, rightText: String,
                             gramsOf: Column => Column,
                             threshold: Double = 0.55): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    def side(df: DataFrame, id: String, text: String): DataFrame =
-      df.select(col(id).as("id"),
-          gramsOf(col(text)).as("sh"))
-        .select(col("id"), col("sh"), size(col("sh")).as("sz"))
-        .where(col("sz") > 0)
-        .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "linkage"))
-    val l = side(left, leftId, leftText)
-    val r = side(right, rightId, rightText)
-    // global df over BOTH sides' postings: the gram order must be one
-    // total order shared by the two prefix computations, or completeness
-    // breaks (a pair could rank its shared gram inside the prefix on one
-    // side and outside on the other under divergent orders)
-    val lPost = l.select(col("id"), col("sz"), explode(col("sh")).as("g"))
-    val rPost = r.select(col("id"), col("sz"), explode(col("sh")).as("g"))
+    val l = Dedup.gramSets(left, leftId, leftText, gramsOf, "linkage")
+    val r = Dedup.gramSets(right, rightId, rightText, gramsOf, "linkage")
+    val lPost = Dedup.postings(l)
+    val rPost = Dedup.postings(r)
     // materialized: BOTH prefix computations below consume `freq`, and an
     // unmaterialized plan re-ran the union of the two posting explodes per
     // consumer (4 explodes per call — the same self-join-sides miss the
     // r13 round measured in Dedup.jaccardPairsPrefixFilter). Shared-gram
     // counts are a (hash, long) table, tiny at any scale.
-    val freq = lPost.select("g").unionAll(rPost.select("g"))
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .where(col("df") >= 2)
+    val freq = Dedup.sharedFreq(lPost, rPost)
       .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "linkage"))
-    val prefFrac = threshold / (1.0 + threshold)
-    def prefix(post: DataFrame): DataFrame =
-      post.join(freq, Seq("g"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("id")).orderBy(col("df"), col("g"))))
-        .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("id"))))
-        .where(col("rk") <= col("sz") - floor(col("sz") * prefFrac) + 1)
-        .select(col("g"), col("id"), col("sz"), col("rk"), col("nsh"))
-    val a = prefix(lPost).select(col("g"), col("id").as("left_id"),
-      col("sz").as("sz_a"), col("rk").as("rk_a"), col("nsh").as("nsh_a"))
-    val b = prefix(rPost).select(col("g"), col("id").as("right_id"),
-      col("sz").as("sz_b"), col("rk").as("rk_b"), col("nsh").as("nsh_b"))
-    // POSITIONAL filter (PPJoin's second prune) — same upper-bound
-    // argument as Dedup.jaccardPairsPrefixFilter: a match at shared-rank
-    // (rk_a, rk_b) caps the overlap at 1 + min(remaining shared grams),
-    // so a boilerplate gram shared by k short names never floods the
-    // verify exchange with k·k' dead candidates. Completeness holds (a
-    // true pair's FIRST common gram always passes); 1e-9 over-keeps.
-    val alpha = lit(prefFrac) * (col("sz_a") + col("sz_b")).cast("double")
-    val cand = a.join(b, Seq("g"))
-      .where(least(col("sz_a"), col("sz_b")).cast("double") /
-        greatest(col("sz_a"), col("sz_b")) >= threshold &&
-        (lit(1.0) + least(col("nsh_a") - col("rk_a"),
-          col("nsh_b") - col("rk_b")).cast("double")) >= alpha - lit(1e-9))
-      .select("left_id", "right_id").dropDuplicates("left_id", "right_id")
-      // materialized so the verify joins see a REAL candidate-size estimate
-      // (unestimated, the planner hash-built from the document caches —
-      // every gram array broadcast twice; see Dedup.jaccardPairsPrefixFilter)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "linkage"))
-    // verify: sorted-hash-array linear-merge Jaccard; ROUND before the
-    // threshold filter, matching the SQL oracle's round-then-filter order
-    cand.join(l.select(col("id").as("left_id"), col("sh").as("sh_a")), Seq("left_id"))
-      .join(r.select(col("id").as("right_id"), col("sh").as("sh_b")), Seq("right_id"))
-      .withColumn("jaccard", round(
-        graft.plans.VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
-      .where(col("jaccard") >= threshold)
-      .select("left_id", "right_id", "jaccard")
+    val prefixLen = Dedup.jaccardPrefixLen(threshold)
+    Dedup.jaccardJoin(Dedup.rankedPrefix(lPost, freq, prefixLen),
+      Dedup.rankedPrefix(rPost, freq, prefixLen), l, r,
+      "left_id", "right_id", lit(true), threshold, "linkage")
   }
 
   /** The DECIDE step: best right-side match per left record (highest

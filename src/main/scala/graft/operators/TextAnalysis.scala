@@ -122,12 +122,12 @@ object TextAnalysis {
   /** Stable document fingerprint: md5 of case/whitespace-normalized text —
     * the exact-dedup key (content-defined; reorder-sensitive). */
   def fingerprint(text: Column): Column =
-    md5(lower(regexp_replace(trim(text), "\\s+", " ")))
+    md5(Dedup.normalizedText(text))
 
   /** 64-bit rolling-style content hash via xxhash64 of the normalized text —
     * cheaper join key than the md5 hex string (8 bytes vs 32). */
   def fingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
+    xxhash64(Dedup.normalizedText(text))
 
   /** Repetition/diversity profile (Gopher-family filters, Rae et al. 2021
     * §A1.1): [n_tokens, n_distinct, max token count, max bigram count] from

@@ -102,12 +102,6 @@ object Pipelines {
 
   // ----------------------------------------------------- RemittancePipeline
 
-  /** OCR page text → line stream → per-page header capture (J4) →
-    * transaction regex cascade (C36: strict-with-branch → no-branch) →
-    * branch/doc-ref normalization (C25/C26) → robust amounts (C12) →
-    * B.E. dates (C1) → cross-page dedup keeping first (U2).
-    * Returns (transactions, grandTotals) — totals kept for reconciliation
-    * (A2), never summed into the data. */
   /** Parse stage shared by `remittance` (deduped records) and
     * `remittanceReconcile` (pre-dedup sums): returns (transactions with
     * page/line order, per-page grand totals). */
@@ -171,8 +165,13 @@ object Pipelines {
     (tx0, totals)
   }
 
-  /** Full remittance pipeline: parse cascade + cross-page dedup keeping the
-    * first occurrence in (page, line) order (U2). */
+  /** Full remittance pipeline: OCR page text → line stream → per-page
+    * header capture (J4) → transaction regex cascade (C36: strict-with-
+    * branch → no-branch) → branch/doc-ref normalization (C25/C26) → robust
+    * amounts (C12) → B.E. dates (C1) → cross-page dedup keeping the first
+    * occurrence in (page, line) order (U2). Returns (transactions,
+    * grandTotals) — totals kept for reconciliation (A2), never summed into
+    * the data. */
   def remittance(spark: SparkSession, jsonPath: String): (DataFrame, DataFrame) = {
     val (tx0, totals) = remittanceParsed(spark, jsonPath)
     (remittanceDedup(tx0), totals)

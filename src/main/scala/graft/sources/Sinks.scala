@@ -35,14 +35,11 @@ object Sinks {
     * (only partitions present in `df` are replaced — the plain-Spark
     * equivalent of upserting into the year tables). */
   def writePartitionedByYear(df: DataFrame, path: String, yearCol: String): Unit =
-    df.sparkSession.conf.getOption("spark.sql.sources.partitionOverwriteMode") match {
-      case _ =>
-        df.write
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(yearCol)
-          .parquet(path)
-    }
+    df.write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(yearCol)
+      .parquet(path)
 
   /** K4 staged-commit variant: replace exactly the partitions present in
     * `df` via write-to-staging + per-partition atomic renames — no reliance

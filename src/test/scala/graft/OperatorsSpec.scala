@@ -229,10 +229,6 @@ class OperatorsSpec extends SparkSpec {
         Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 2).collect()
       }
       assert(e.getMessage.contains("NOT reached"))
-      // opt-out returns the partial labeling instead of throwing
-      val partial = Dedup.connectedComponents(chain, "id_a", "id_b",
-        maxIter = 2, failOnNonConvergence = false)
-      assert(partial.count() == 150L + 1)
     } finally spark.conf.unset("spark.graft.graphDriverMaxEdges")
   }
 
@@ -2049,6 +2045,21 @@ class OperatorsSpec extends SparkSpec {
       "jaccardPairsPrefixFilter's internal persist was not tracked")
     assert(InternalCaches.trackedCount("dedup") > 0,
       "the dedup family's persist must register under its own scope")
+    InternalCaches.release()
+    assert(InternalCaches.trackedCount == 0)
+    // the shared prefix-filter core persists under each caller's scope
+    Linkage.linkPairsPrefixFilter(docs, "doc_id", "text", docs, "doc_id", "text",
+      Dedup.wordShingleHashes(_, 3), 0.5).count()
+    assert(InternalCaches.trackedCount("linkage") > 0,
+      "linkPairsPrefixFilter's persists must register under scope 'linkage'")
+    assert(InternalCaches.trackedCount("dedup") == 0,
+      "linkPairsPrefixFilter must not register under scope 'dedup'")
+    InternalCaches.release()
+    Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.5).count()
+    assert(InternalCaches.trackedCount("dedup") > 0,
+      "containmentPairs's persists must register under scope 'dedup'")
+    assert(InternalCaches.trackedCount("linkage") == 0,
+      "containmentPairs must not register under scope 'linkage'")
     InternalCaches.release()
     assert(InternalCaches.trackedCount == 0)
   }

@@ -261,6 +261,9 @@ class PropertySpec extends SparkSpec {
     val word = Gen.listOfN(4, Gen.alphaLowerChar).map(_.mkString)
     val name = Gen.chooseNum(2, 6).flatMap(k =>
       Gen.listOfN(k, word).map(_.mkString(" ")))
+    val text = Gen.chooseNum(1, 14).flatMap(k =>
+      Gen.listOfN(k, Gen.oneOf("a", "b", "c", "d"))
+        .map(_.mkString(" ")))
     for (threshold <- Seq(0.3, 0.5, 0.8)) {
       val ls = Gen.listOfN(25, name).sample.getOrElse(Nil)
         .zipWithIndex.map { case (s, i) => (i.toLong, s) }
@@ -289,6 +292,46 @@ class PropertySpec extends SparkSpec {
       } yield (lid, rid)).toSet
       assert(got == want, s"t=$threshold: blocked ${got.size} != brute ${want.size}")
       assert(want.nonEmpty, s"t=$threshold: degenerate fixture, no pairs")
+
+      // the same prefix-filter core behind the word-shingle self-join and
+      // the containment join, on one random word corpus: a 4-word vocab
+      // (64 possible 3-shingles) shares grams across many docs, so ranks
+      // and prefixes matter, not just df=2 grams; exact copies,
+      // one-word extensions, wrapped copies and a fixed identical pair
+      // plant true pairs
+      val base = Gen.listOfN(30, text).sample.getOrElse(Nil)
+        .zipWithIndex.map { case (s, i) => (i.toLong, s) }
+      val docs = (base ++
+        base.take(3).map { case (i, s) => (100L + i, s) } ++
+        base.slice(3, 6).map { case (i, s) => (200L + i, s + " h") } ++
+        base.slice(6, 9).map { case (i, s) => (300L + i, s"a b $s c d") } ++
+        Seq((400L, "a b c d e f g h"), (401L, "a b c d e f g h")))
+        .toDF("id", "text")
+      val sets = docs.select(col("id"),
+          operators.Dedup.wordShingleHashes(col("text"), 3).as("g"))
+        .as[(Long, Seq[Long])].collect().map { case (i, g) => (i, g.toSet) }
+        .filter(_._2.nonEmpty)
+      def round6(x: Double): Double =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val jGot = operators.Dedup
+        .jaccardPairsPrefixFilter(docs, "id", "text", 3, threshold)
+        .as[(Long, Long, Double)].collect().toSet
+      val jWant = (for {
+        (a, ga) <- sets; (b, gb) <- sets if a < b
+        inter = ga.intersect(gb).size
+        j = round6(inter.toDouble / (ga.size + gb.size - inter)) if j >= threshold
+      } yield (a, b, j)).toSet
+      assert(jGot == jWant, s"t=$threshold: jaccard ${jGot.size} != brute ${jWant.size}")
+      assert(jWant.nonEmpty, s"t=$threshold: degenerate jaccard fixture")
+      val cGot = operators.Dedup
+        .containmentPairs(docs, "id", "text", 3, threshold)
+        .as[(Long, Long, Double)].collect().toSet
+      val cWant = (for {
+        (a, ga) <- sets; (b, gb) <- sets if a != b
+        c = round6(ga.intersect(gb).size.toDouble / ga.size) if c >= threshold
+      } yield (a, b, c)).toSet
+      assert(cGot == cWant, s"t=$threshold: containment ${cGot.size} != brute ${cWant.size}")
+      assert(cWant.nonEmpty, s"t=$threshold: degenerate containment fixture")
     }
   }
 
