@@ -5,15 +5,15 @@
 # fetch and cross-JVM broadcast, all invisible in local[N] where tasks
 # share the driver's heap. Correctness crossed the executor boundary in
 # dryrun leg 6 (counts identical, mid-CC SIGKILL survived); this is the
-# TIMING side of that axis. Results are a separate artifact — the gate
-# itself refuses to compare across masters (Bench records "master" and
-# the conf guard skips on a mismatch), because every wall embeds the
-# serialization delta.
+# TIMING side of that axis. Results are a separate artifact (Bench
+# records "master"): every wall embeds the serialization delta, so only
+# the paired local leg below is comparable. The master reaches Bench
+# through SPARK_GRAFT_EXTRA_CONF, which is applied after its defaults.
 #
 # usage: dev/cluster_bench.sh [sfDir] [out.jsonl] [q1,q2,...]
 set -u
 SFDIR=${1:-/root/testdata/sf0.1}
-OUT=${2:-CLUSTER_BENCH_r12.jsonl}
+OUT=${2:-evidence/CLUSTER_BENCH_r12.jsonl}
 # default set: the top-10 heavies of the round-11 driver bench medians
 QS=${3:-q76_neardup_components,q149_dedup_keep_best,q94_neardup_dedup,q192_kcore,q196_stream_psi_drift,q186_stream_histogram_quantiles,q160_stream_full_outer_join,q181_item_cooccurrence,q153_bigram_nll,q185_rrf_fusion}
 
@@ -30,7 +30,7 @@ run_leg() { # run_leg <master-label> <master-string> <cpus>
   echo "[cluster_bench] leg $label" >&2
   local line
   line=$(SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$cpus" \
-    SPARK_GRAFT_MASTER="$master" SPARK_GRAFT_BENCH_ONLY="$QS" \
+    SPARK_GRAFT_EXTRA_CONF="spark.master=$master" SPARK_GRAFT_BENCH_ONLY="$QS" \
     SPARK_GRAFT_BENCH_RUNS=${SPARK_GRAFT_BENCH_RUNS:-3} \
     "$SUBMIT" --class graft.Bench --master "$master" \
       --driver-memory 16g \

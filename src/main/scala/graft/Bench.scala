@@ -1,737 +1,82 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds.
   *
-  * Noise model: one untimed warmup pass (JIT + codegen + file-index caches
-  * load once, as they would in any long-running service), then `RUNS`
-  * timed, cache-isolated samples per query with the median reported — and
-  * the samples are INTERLEAVED (whole-suite pass 1, then pass 2, then
-  * pass 3) rather than back-to-back. Back-to-back samples defeat the
-  * median against real interference: a host-load event lasting a few
-  * minutes covers all three consecutive samples of every query in its
-  * window, so a contiguous block of queries reads 2-10x slow (observed
-  * twice in round 4, different blocks each run). Interleaving puts a
-  * query's samples ~minutes apart, so one interference window can
-  * contaminate at most one sample per query and the median discards it.
-  * The 1-minute load average is stamped at start and after every pass so
-  * any remaining interference is visible in the artifact itself.
+  * One untimed warm-up pass (JIT, codegen and file-index caches load once,
+  * as they would in any long-running service), then
+  * SPARK_GRAFT_BENCH_RUNS timed passes, with every cache drained after
+  * each query. The passes are INTERLEAVED (whole suite, then the whole
+  * suite again) rather than back-to-back per query, so a burst of host
+  * load lasting a few minutes lands on at most one sample of each query.
+  * Each query reports the median of its samples (one-bad-sample armor)
+  * and the min (the least-contended sample). The 1-minute load average
+  * is stamped at start and after every pass.
   *
-  * Round-11 addendum: the artifact also records the per-query MIN
-  * (`queries_min`). The median defends against one bad sample, not a
-  * contended JVM — the driver's round-10 run inflated the heavy tail
-  * 2–4x across ALL THREE samples of each query, so its medians were
-  * useless for round-over-round deltas while the min (the least-contended
-  * sample) is the contention-robust statistic. The compare gate prefers
-  * min when both artifacts carry it. */
+  * Settings: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_EXTRA_CONF (see [[DriverSession.build]]),
+  * SPARK_GRAFT_BENCH_ONLY=q29,q53 (prefix match: time just those queries)
+  * and SPARK_GRAFT_BENCH_RUNS (timed passes, default 3). */
 object Bench {
-  // SPARK_GRAFT_BENCH_RUNS overrides for long scale runs (sf1+), where
-  // per-query seconds are large enough that the median-of-3 noise armor
-  // costs more wall-clock than the interference it guards against
-  private val Runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map { v =>
-    try v.trim.toInt catch { case _: NumberFormatException =>
-      System.err.println(s"SPARK_GRAFT_BENCH_RUNS='$v' is not an integer"); sys.exit(2)
-    }
-  }.getOrElse(3)
-
-  /** Drift adjudication for the compare gate — pure so the arithmetic is
-    * unit-testable (the round-9 verdict's blind spot: a median-of-query-
-    * ratios drift estimator ABSORBS a uniform code regression, because a
-    * change that slows the whole suite moves the median exactly like box
-    * weather does). The fix: a fixed pure-CPU canary runs inside every
-    * bench pass; its cur/prev ratio measures the BOX alone (same
-    * bytecode both runs, no I/O, no graft code), so it becomes the drift
-    * estimator when both artifacts carry it, and the median-query ratio
-    * demotes to a cross-check. The two disagreeing by >15% in the slow
-    * direction IS the uniform code regression the old gate couldn't see
-    * — surfaced as a non-empty warning the caller turns into exit 1.
-    *
-    * Returns (drift to adjust priors by, its source, optional warning).
-    * Fallbacks: no prior canary (older artifact / different canary
-    * generation) → median-query ratio as before; too few stable queries
-    * (<20) → canary alone, or 1.0. */
-  def driftEstimate(canaryCur: Option[Double], canaryPrev: Option[Double],
-                    queryRatios: Seq[Double]): (Double, String, Option[String]) = {
-    val medianRatio =
-      if (queryRatios.size >= 20) Some(queryRatios.sorted.apply(queryRatios.size / 2))
-      else None
-    val canaryRatio = for {
-      c <- canaryCur if c > 0
-      p <- canaryPrev if p > 0
-    } yield c / p
-    (canaryRatio, medianRatio) match {
-      case (Some(cr), Some(mr)) =>
-        val warn =
-          if (mr > cr * 1.15) Some(
-            f"median query ratio $mr%.3f exceeds box-only canary ratio $cr%.3f " +
-              "by >15%% — the suite slowed more than the box did: uniform " +
-              "CODE regression suspected (the case median-drift absorbs)")
-          else if (mr < cr / 1.15) None // suite uniformly FASTER than box: improvement, fine
-          else None
-        (cr, "canary", warn)
-      case (Some(cr), None) => (cr, "canary", None)
-      case (None, Some(mr)) => (mr, "median_query_ratio", None)
-      case (None, None)     => (1.0, "none", None)
-    }
-  }
-
-  /** Per-query regression findings vs a drift-adjusted prior — the
-    * round-over-round gate body, pure for BenchGateSpec. Flags a query
-    * when it regresses past BOTH bars (ratio AND absolute: sub-second
-    * queries jitter well past 1.5x on a shared host, so a flag also
-    * requires +0.5 s growth over the drift-adjusted prior), newly
-    * errors, or goes missing. Negative prior = the query was broken in
-    * the prior run: nothing sane to compare against, skip. */
-  def gateFindings(prev: Map[String, Double], cur: Map[String, Double],
-                   drift: Double, ratioBar: Double = 1.5,
-                   absBarSec: Double = 0.5): Seq[String] =
-    prev.toSeq.sortBy(_._1).flatMap { case (name, pv0) =>
-      if (pv0 < 0) None
-      else {
-        val pv = pv0 * drift
-        cur.get(name) match {
-          case None => Some(f"$name: MISSING (prev $pv0%.2f s)")
-          case Some(cv) if cv < 0 =>
-            Some(f"$name: ERROR (prev $pv0%.2f s, now failing)")
-          case Some(cv) if cv > pv * ratioBar && cv - pv > absBarSec =>
-            Some(f"$name: $pv0%.2f s -> $cv%.2f s (${cv / pv0}%.2fx raw, " +
-              f"${cv / pv}%.2fx drift-adjusted)")
-          case _ => None
-        }
-      }
+  /** Per-query (name, median, min) seconds over the timed samples, in the
+    * given order. A failed sample (-1) or a recorded error sets both to
+    * -1: a query that fails mid-bench is broken, not fast. */
+  def stats(samples: Seq[(String, Seq[Double])],
+            errors: collection.Set[String]): Seq[(String, Double, Double)] =
+    samples.map { case (name, ss) =>
+      if (ss.exists(_ < 0) || errors(name)) (name, -1.0, -1.0)
+      else { val s = ss.sorted; (name, s(s.size / 2), s.head) }
     }
 
-  /** Anchor leg: cumulative drift-adjusted suite total vs a PINNED
-    * artifact (the best committed run), catching slow creep the per-pair
-    * gate structurally cannot. Witness (round 10): raw totals crept
-    * 144.5 → 160.3 → 166.1 s across one night with every adjacent pair
-    * "clean" — each step sat under the per-pair bars, and the pairwise
-    * gate re-bases every round, so sub-bar creep compounds UNBOUNDED.
-    * This leg never re-bases: the sum over queries present and clean in
-    * both artifacts must stay within `bar` (wider than the per-pair bar
-    * — legitimate round-over-round wobble accumulates too) of the
-    * anchor's drift-adjusted total, with an absolute floor so a tiny
-    * common subset can't flag on noise. Pure for BenchGateSpec. */
-  def anchorFinding(anchor: Map[String, Double], cur: Map[String, Double],
-                    drift: Double, bar: Double = 1.25,
-                    absFloorSec: Double = 5.0, minQueries: Int = 20): Option[String] = {
-    val common = anchor.toSeq.collect {
-      case (n, av) if av >= 0 && cur.get(n).exists(_ >= 0) => (av, cur(n))
-    }
-    if (common.size < minQueries) None
-    else {
-      val at = common.map(_._1).sum
-      val ct = common.map(_._2).sum
-      val adj = at * drift
-      if (ct > adj * bar && ct - adj > absFloorSec)
-        Some(f"cumulative creep: suite total $ct%.1f s vs anchor $at%.1f s " +
-          f"over ${common.size} queries (${ct / at}%.2fx raw, " +
-          f"${ct / adj}%.2fx drift-adjusted > $bar%.2fx anchor bar)")
-      else None
-    }
-  }
-
-  /** Box-capacity estimate from canary samples: the MIN of the positive
-    * ones (see the sampling note at the call site — each sample is one
-    * task wave, so contention only ever inflates it; the smallest
-    * observation is the least-contaminated). None when nothing usable —
-    * callers fall back per their own policy. Pure for BenchGateSpec. */
-  def canaryStat(samples: Seq[Double]): Option[Double] = {
-    val good = samples.filter(_ > 0)
-    if (good.isEmpty) None else Some(good.min)
-  }
-
-  /** Weather check on the canary's OWN samples: when they spread more
-    * than `spreadBar` (max/min), severe host contention hit DURING the
-    * run, and canary normalization becomes asymmetric — contention
-    * inflates the per-query stats while the canary MIN finds the one
-    * quiet instant, so a weather-contaminated run reads as a CODE
-    * regression. Witness (driver round-11 run): canary samples
-    * [158.699, 2.716, 2.304, 1.933] — a 158.7 s sample is proof of a
-    * steal storm — yet min=1.933 vs anchor 2.381 declared the box 19%
-    * FASTER and converted a 1.04x raw suite total into a 1.28x
-    * "drift-adjusted" anchor failure. Returns the advisory note when the
-    * run is too stormy to normalize; None on a quiet run (or when fewer
-    * than 2 usable samples exist — nothing to spread). Pure for
-    * BenchGateSpec. */
-  def weatherAdvisory(samples: Seq[Double], spreadBar: Double = 3.0): Option[String] = {
-    val good = samples.filter(_ > 0)
-    if (good.size < 2) None
-    else {
-      val mn = good.min; val mx = good.max
-      if (mx > mn * spreadBar) Some(
-        f"canary samples spread ${mx / mn}%.1fx (min $mn%.3f s, max $mx%.3f s, " +
-          f"bar $spreadBar%.1fx) — severe host contention DURING this run. " +
-          "Contention inflates the per-query stats while the canary min finds " +
-          "the one quiet instant, so drift adjustment would misread weather as " +
-          "code: using RAW ratios, findings are ADVISORY (exit 0). Re-run on a " +
-          "quiet box to gate.")
-      else None
-    }
-  }
-
-  /** The full drift decision for one compare leg: weather guard first,
-    * then the canary/median estimate. Returns (drift, source, warning,
-    * advisory) — `advisory=true` means this run's canary brackets caught
-    * a storm, so findings computed from it must not fail the gate (the
-    * per-query numbers are as contaminated as the canary was). Pure for
-    * BenchGateSpec. */
-  def driftPolicy(curSamples: Seq[Double], canaryCur: Option[Double],
-                  canaryPrev: Option[Double], queryRatios: Seq[Double])
-      : (Double, String, Option[String], Boolean) =
-    weatherAdvisory(curSamples) match {
-      case Some(note) => (1.0, "raw_weather_advisory", Some(note), true)
-      case None =>
-        val (d, s, w) = driftEstimate(canaryCur, canaryPrev, queryRatios)
-        (d, s, w, false)
-    }
-
-  /** Cap on how far a FAST canary may shrink the priors (round 13).
-    *
-    * The weather guard (>3x spread) catches storms; the round-12 final
-    * run exposed the SUB-storm form of the same asymmetry: bracket
-    * spread 1.81x (quiet by the bar), canary min 1.814 vs the anchor's
-    * 2.381, so drift adjustment declared the anchor's box 24% slower
-    * and set a 110.7 s cumulative bar that no real run can meet — the
-    * best committed run on record (141.7 s min-total, raw 0.975x vs
-    * anchor) exited 1. The canary min is the LEAST-contended instant of
-    * a mixed hour while the per-query stats absorb the whole hour, so a
-    * fast canary's claim is structurally overstated; a SLOW canary has
-    * no such asymmetry (contention inflates canary and queries alike —
-    * round 10's legitimate 1.4x weather must keep normalizing fully).
-    * Hence the cap is one-sided: applied drift never drops below
-    * `fastCapFloor` (0.9 = at most a 10% faster-box claim), uncapped in
-    * the slow direction. Pure for BenchGateSpec. */
-  def appliedDrift(drift: Double, fastCapFloor: Double = 0.9): Double =
-    math.max(drift, fastCapFloor)
-
-  /** Raw-improvement override for the anchor leg (round 13, the second
-    * line of defense behind [[appliedDrift]]): when the raw cumulative
-    * total over the common subset is <= the anchor's AND the median
-    * per-query raw ratio is <= 1.0, every raw statistic reads
-    * improvement — a drift-adjusted regression verdict is then
-    * self-contradictory (it can only arise from the drift estimate
-    * itself, i.e. canary-min asymmetry, not from the queries). Returns
-    * the audit note when the override condition holds. With the default
-    * 0.9 drift cap and the 1.25x anchor bar this branch is provably
-    * unreachable (bar >= 1.125x anchor > any raw-<=1.0 run), so it
-    * exists to survive future retuning of either constant. Pure for
-    * BenchGateSpec. */
-  def rawImprovementNote(anchor: Map[String, Double], cur: Map[String, Double],
-                         minQueries: Int = 20): Option[String] = {
-    val common = anchor.toSeq.collect {
-      case (n, av) if av > 0 && cur.get(n).exists(_ >= 0) => (av, cur(n))
-    }
-    if (common.size < minQueries) None
-    else {
-      val at = common.map(_._1).sum
-      val ct = common.map(_._2).sum
-      val rr = common.map { case (a, c) => c / a }.sorted
-      val med = rr(rr.size / 2)
-      if (ct <= at && med <= 1.0) Some(
-        f"raw suite total $ct%.1f s <= anchor $at%.1f s (${ct / at}%.3fx) and " +
-          f"median per-query raw ratio $med%.3f <= 1.0 — every raw statistic " +
-          "reads improvement, so a drift-adjusted regression verdict is " +
-          "self-contradictory (canary-min asymmetry, not box truth)")
-      else None
-    }
-  }
-
-  /** Full anchor-leg verdict: drift cap first, then the raw-improvement
-    * override. Returns (gating finding, non-gating override note) — at
-    * most one is set. Pure for BenchGateSpec. */
-  def anchorVerdict(anchor: Map[String, Double], cur: Map[String, Double],
-                    drift: Double, fastCapFloor: Double = 0.9)
-      : (Option[String], Option[String]) =
-    anchorFinding(anchor, cur, appliedDrift(drift, fastCapFloor)) match {
-      case Some(f) => rawImprovementNote(anchor, cur) match {
-        case Some(n) => (None, Some(s"$f — OVERRIDDEN (not gating): $n"))
-        case None    => (Some(f), None)
-      }
-      case None => (None, None)
-    }
-
-  /** Whether a PRIOR artifact's canary is usable as the drift estimator
-    * (round 13, found live on the first post-fix full run): a prior
-    * whose own brackets carried a storm has a canary min inflated by an
-    * UNKNOWABLE factor — the r12 driver artifact's brackets were
-    * [80.9, 12.2, 6.08, 14.0], min 6.081 on a ~2.0 s box, so a quiet
-    * current run read as "box 3× faster", the fast-cap collided with
-    * the honest median ratio, and the uniform-regression cross-check
-    * fired on garbage. (The r11 storm's min 1.933 happened to catch a
-    * quiet instant — which case a given storm is can't be known, so a
-    * stormy prior demotes to the median-query estimator either way; the
-    * quiet-pinned ANCHOR leg remains the cumulative backstop, and the
-    * advisory-file redirect keeps future baselines quiet.) Pure for
-    * BenchGateSpec. */
-  def priorCanaryUsable(priorSamples: Seq[Double],
-                        priorAdvisoryFlag: Boolean): Boolean =
-    !priorAdvisoryFlag && weatherAdvisory(priorSamples).isEmpty
-
-  /** Anchor-corroboration override for the uniform-regression flag
-    * (found live on this round's second full run — the THIRD distinct
-    * gate wrong-verdict mode, and the mirror of the storm-demotion
-    * case just under its bar): the prior artifact's canary bracket
-    * read [2.878, 3.736, 2.474, 5.944] — spread 2.40×, below the 3×
-    * storm bar so `priorCanaryUsable` passed it, yet every sample was
-    * elevated (the bracket never caught a quiet instant, while the
-    * 15-minute interleaved suite's per-query MINS did). Its canary min
-    * then declared "box 46% faster", the honest median ratio 0.942
-    * disagreed by >15%, and the cross-check called a best-ever run a
-    * uniform code regression. The refutation is structural: the ANCHOR
-    * leg compares the same run against the quiet PINNED baseline, which
-    * is OLDER than the compare prior — any uniform code regression
-    * present now would show there at least as strongly. So when the
-    * compare leg's flag fires with no per-query findings and the anchor
-    * leg (non-advisory) reads a median ratio ≤ [[AnchorRefuteBar]], the
-    * flag is impossible evidence: print it, note the override, exit 0.
-    * A TRUE uniform regression reads high against BOTH priors and still
-    * gates. Pure for BenchGateSpec. */
-  val AnchorRefuteBar = 1.05
-  def uniformFlagRefutedByAnchor(compareWarn: Option[String],
-                                 compareFindings: Seq[String],
-                                 anchorMedianRatio: Option[Double],
-                                 anchorAdvisory: Boolean): Boolean =
-    compareWarn.nonEmpty && compareFindings.isEmpty && !anchorAdvisory &&
-      anchorMedianRatio.exists(r => r >= 0 && r <= AnchorRefuteBar)
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  /** One machine-readable gate-leg record for the persisted artifact
-    * (round 13: the driver's BENCH_r*.json tail-capture has truncated
-    * six rounds running, so the stdout verdict lines were the only gate
-    * record — now the full verdict lands INSIDE bench_full_last.json).
-    * Pure for BenchGateSpec. */
-  def legRecordJson(kind: String, vs: String, drift: Double, applied: Double,
-                    source: String, stat: String, medianRatio: Double,
-                    advisory: Boolean, findings: Seq[String],
-                    warn: Option[String], overrideNote: Option[String],
-                    passed: Boolean): String =
-    s"""{"kind":${jstr(kind)},"vs":${jstr(vs)},"drift":${f"$drift%.4f"},""" +
-      s""""applied_drift":${f"$applied%.4f"},"drift_source":${jstr(source)},""" +
-      s""""gate_stat":${jstr(stat)},"median_query_ratio":${f"$medianRatio%.4f"},""" +
-      s""""advisory":$advisory,"findings":[${findings.map(jstr).mkString(",")}],""" +
-      s""""warn":${warn.map(jstr).getOrElse("null")},""" +
-      s""""override_note":${overrideNote.map(jstr).getOrElse("null")},""" +
-      s""""passed":$passed}"""
-
-  /** The artifact's embedded gate object. Pure for BenchGateSpec. */
-  def gateJson(legs: Seq[String], exitBad: Boolean): String =
-    s"""{"legs":[${legs.mkString(",")}],"exit":${if (exitBad) 1 else 0}}"""
-
-  /** A prior bench artifact, as much of it as the gate can use. Old
-    * artifacts lack the newer fields; every consumer falls back
-    * explicitly (and loudly where it weakens the comparison). */
-  private case class Artifact(med: Map[String, Double],
-                              min: Option[Map[String, Double]],
-                              canary: Option[Double],
-                              canarySamples: Seq[Double],
-                              canaryKind: Option[String],
-                              cpus: Option[String],
-                              shuffle: Option[String],
-                              master: Option[String],
-                              weatherAdvisory: Boolean,
-                              sf: Option[String])
-
-  private def readArtifact(path: String): Artifact = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new java.io.File(path))
-    def qmap(key: String): Option[Map[String, Double]] =
-      Option(root.get(key)).map { n =>
-        val b = Map.newBuilder[String, Double]
-        n.properties().forEach(e => b += e.getKey -> e.getValue.asDouble())
-        b.result()
-      }
-    val med = qmap("queries").getOrElse {
-      System.err.println(
-        s"bench compare: $path has no 'queries' key — not a bench artifact")
-      sys.exit(2)
-    }
-    // prefer recomputing the canary stat from the RAW samples when the
-    // artifact carries them: run-1/run-2 round-11 artifacts recorded the
-    // (noisy) median as canary_sec, and re-reading their samples as the
-    // min keeps every artifact of one generation on one statistic
-    val samples = Option(root.get("canary_samples")).toSeq.flatMap { n =>
-      (0 until n.size()).map(i => n.get(i).asDouble())
-    }
-    Artifact(med, qmap("queries_min"),
-      canaryStat(samples)
-        .orElse(Option(root.get("canary_sec")).map(_.asDouble()).filter(_ > 0)),
-      samples,
-      Option(root.get("canary_kind")).map(_.asText()),
-      Option(root.get("cpus")).map(_.asText()),
-      Option(root.get("shuffle_partitions")).map(_.asText()),
-      Option(root.get("master")).map(_.asText()),
-      Option(root.get("weather_advisory")).exists(_.asBoolean()),
-      Option(root.get("sf")).map(_.asText()))
-  }
+  /** The metric value: the sum of the working queries' medians. A broken
+    * query (-1) drops out rather than subtracting from the total. */
+  def total(stats: Seq[(String, Double, Double)]): Double =
+    stats.map(_._2).filter(_ >= 0).sum
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle width defaults to core count (right at sf0.1); scale runs
-    // override it — partition count must grow with data volume, exactly
-    // as a cluster's would (see PLANS.md round 6: the sf10 second decade
-    // goes super-linear at 32 partitions from per-partition spill, and
-    // returns to linear when the width scales)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the round-12
-    // local-cluster leg runs the heavies across REAL executor JVMs
-    // (serialization + locality costs are invisible in local[N]); without
-    // the override the builder's master would silently defeat
-    // spark-submit's --master. SPARK_GRAFT_EXTRA_CONF mirrors Probes'
-    // (k=v;k=v) — local-cluster executors need
-    // spark.executor.extraClassPath to see the graft classes.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-    val spark = extraConf.foldLeft(
-        SparkSession.builder()
-          .master(master)
-          .config("spark.sql.shuffle.partitions", shuffle)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.ui.enabled", "false")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional isolation: SPARK_GRAFT_BENCH_ONLY=q29,q53 times just those
-    // queries (prefix match), for attributing a single query's cost
+    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse {
+        System.err.println(s"SPARK_GRAFT_BENCH_RUNS='$v' is not a positive integer"); sys.exit(2)
+      }
+    }.getOrElse(3)
+    val spark = DriverSession.build(cpus)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // drop blocks a query persisted but never released (operators can't
-    // unpersist what they return lazily) — without this, cached shingle /
-    // embedding tables pile up across the suite and the GC pressure lands
-    // on whichever queries run AFTER the heavy ones, making their timings
-    // unattributable
-    def clearCaches(): Unit = {
-      core.InternalCaches.release() // also drains the registry's strong refs
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val load0 = loadAvg()
-    // a throwing query must read as an ERROR in the artifact, never as a
-    // (fast) timing — round 4's events-schema breakage benched 7 exceptions
-    // as 0.06s "speedups". Failed samples record -1 and the message lands
-    // in an errors map; the warmup failure alone already marks the query.
+    // a throwing query must read as an ERROR, never as a (fast) timing:
+    // its sample records -1 and the message lands in the errors map
     val errors = scala.collection.mutable.Map.empty[String, String]
-    // SPARK_GRAFT_WARMUP_SF_DIR: run the warmup pass against a DIFFERENT
-    // copy of the data (the cold-cache protocol: warm JIT/codegen/
-    // classloading on a scratch copy, leave the measured dir's pages
-    // untouched, evict between samples outside this JVM). Defaults to
-    // the measured dir — the normal warm protocol is unchanged.
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_SF_DIR", sfDir)
-    ordered.foreach { case (name, fn) =>
-      try fn(spark, warmupDir).count()
-      catch { case t: Throwable =>
-        errors(name) = t.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-      }
-      clearCaches()
-    }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    // the box-speed canary (core.Canary): fixed pure-CPU codegen work, no
-    // I/O, no graft code, and — since round 11 — NO EXCHANGE, so its plan
-    // cannot move with spark.sql.shuffle.partitions (the round-10 width
-    // harness caught the old agg-based canary reading 3.3–5.8 s in the
-    // wide-512 arms vs 1.3–1.7 s narrow: the instrument followed the conf
-    // under test). Its cur/prev ratio across artifacts isolates box drift
-    // from code drift (see driftEstimate); comparable across runs at the
-    // same SPARK_GRAFT_CPUS and the same canary generation (canary_kind).
-    // SPARK_GRAFT_BENCH_CANARY=0 disables the canary entirely (canary_sec
-    // records -1, the gate falls back to the median estimator). For
-    // A/B-vs-OLD-code protocols: a side whose harness runs canaries pays
-    // their GC/alloc debris inside the same JVM as the timed queries,
-    // and the other side (pre-canary code) doesn't — turning it off makes
-    // the two harnesses shape-identical so the ratio measures the QUERIES.
-    val canaryOn = sys.env.get("SPARK_GRAFT_BENCH_CANARY").forall(_ != "0")
-    def canary(): Double = if (canaryOn) core.Canary.seconds(spark) else -1.0
-    canary() // JIT-warm the canary path itself off the record
-    val canarySamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val passLoads = (1 to Runs).map { _ =>
-      if (canaryOn) canarySamples += canary()
-      ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case t: Throwable =>
-            errors.getOrElseUpdate(name,
-              t.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200))
-            false
-          }
-        samples(name) ::= (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        clearCaches()
-      }
-      loadAvg()
+    def pass(timed: Boolean): Unit = ordered.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).count(); true }
+        catch { case t: Throwable =>
+          errors.getOrElseUpdate(name,
+            t.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200))
+          false
+        }
+      if (timed) samples(name) ::= (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      DriverSession.drain(spark)
     }
-    if (canaryOn) canarySamples += canary() // bracket the last pass too
-    // MIN of the bracketing samples, same argument as queries_min: each
-    // canary run is one 32-task wave, so a single GC pause lands directly
-    // on the wave max — the gate's first live same-code pair read
-    // medians 3.74 vs 3.03 s (false uniform-regression + anchor flags)
-    // while the mins read 2.03 vs 2.17, agreeing with the median-query
-    // ratio to three digits. The least-contended observation IS the
-    // box-capacity estimate.
-    val canarySec = canaryStat(canarySamples.toSeq).getOrElse(-1.0)
-    // any failed sample poisons BOTH stats to -1: a query that flakes
-    // mid-bench is not "measured", it is broken
-    def stat(pick: List[Double] => Double): Seq[(String, Double)] =
-      ordered.map { case (name, _) =>
-        val ss = samples(name)
-        name -> (if (ss.exists(_ < 0) || errors.contains(name)) -1.0 else pick(ss))
-      }
-    val results = stat(ss => ss.sorted.apply(Runs / 2))   // median: one-bad-sample armor
-    val resultsMin = stat(_.min)                          // min: contended-JVM armor
+    pass(timed = false)
+    val passLoads = (1 to runs).map { _ => pass(timed = true); loadAvg() }
+    val results = stats(ordered.map { case (n, _) => n -> samples(n) }, errors.keySet)
     def qjson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val good = results.filter(_._2 >= 0)
-    val total = if (good.nonEmpty) good.map(_._2).sum else 0.0
-    val loads = passLoads.mkString("[", ",", "]")
     val errJson = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val canaries = canarySamples.map(c => f"$c%.3f").mkString("[", ",", "]")
-    // the run's OWN weather verdict, stamped into the artifact: a stormy
-    // run's stats are inflated, so it must be self-describing (and, below,
-    // it is written to an _advisory file so it can never silently become
-    // the next quiet-compare baseline — ADVICE round 12)
-    val ownStorm = weatherAdvisory(canarySamples.toSeq)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(results)},"queries_min":${qjson(resultsMin)},"errors":$errJson,"n_errors":${errors.size},"sf":"$sfDir","runs_per_query":$Runs,"stat":"median","interleaved":true,"loadavg_start":$load0,"loadavg_pass_end":$loads,"canary_sec":${f"$canarySec%.3f"},"canary_samples":$canaries,"canary_kind":"${core.Canary.Kind}","cpus":"$cpus","shuffle_partitions":"$shuffle","master":"$master","weather_advisory":${ownStorm.nonEmpty}}"""
-    println(line)
-    // the driver captures only a log tail; persist the full line in-repo so
-    // round-over-round comparison never depends on tail-capture luck.
-    // Subset runs (BENCH_ONLY) skip the write — a 4-query debug run must
-    // not overwrite the full-suite artifact.
-    // Regression gates, two legs (both skipped on subset runs — every
-    // unrun query would read as MISSING):
-    //   --compare prev.json (or SPARK_GRAFT_BENCH_COMPARE): per-query vs
-    //     the PREVIOUS run — >1.5x drift-adjusted AND +0.5s, new errors,
-    //     missing queries, and the uniform-regression cross-check.
-    //   --anchor anchor.json (or SPARK_GRAFT_BENCH_ANCHOR; defaults to
-    //     dev/bench_anchor.json when that file exists): cumulative
-    //     drift-adjusted total vs a PINNED best run — the per-pair leg
-    //     re-bases every round, so sub-bar creep compounds unbounded
-    //     (round 10: 144.5→160.3→166.1 s, every pair clean); the anchor
-    //     leg never re-bases.
-    def pathArg(flag: String, env: String): Option[String] =
-      args.sliding(2).collectFirst { case Array(`flag`, p) => p }
-        .orElse(sys.env.get(env))
-    val fullRun = only.isEmpty
-    def skipNote(p: String): Boolean = {
-      if (!fullRun) System.err.println(
-        s"bench compare vs $p SKIPPED: subset run (SPARK_GRAFT_BENCH_ONLY)")
-      fullRun
-    }
-    val comparePath = pathArg("--compare", "SPARK_GRAFT_BENCH_COMPARE")
-      .filter(skipNote)
-    val anchorPath = pathArg("--anchor", "SPARK_GRAFT_BENCH_ANCHOR")
-      .orElse(Some("dev/bench_anchor.json").filter(p => new java.io.File(p).isFile))
-      .filter(skipNote)
-    // prior artifacts load BEFORE the new one is written, so comparing
-    // against bench_full_last.json itself (the natural workflow) works
-    val prevArt = comparePath.map(readArtifact)
-    val anchorArt = anchorPath.map(readArtifact)
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val master = spark.sparkContext.master
+    println(s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":${qjson(results.map(r => r._1 -> r._2))},"queries_min":${qjson(results.map(r => r._1 -> r._3))},"errors":$errJson,"n_errors":${errors.size},"sf":"$sfDir","runs_per_query":$runs,"stat":"median","interleaved":true,"loadavg_start":$load0,"loadavg_pass_end":${passLoads.mkString("[", ",", "]")},"cpus":"$cpus","shuffle_partitions":"$shuffle","master":"$master"}""")
     spark.stop()
-
-    val curMed = results.toMap
-    val curMin = resultsMin.toMap
-    val gateLegs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    /** Shared context of one compare leg after the conf guards, stat
-      * selection, and drift policy — the per-query and anchor legs
-      * consume it with their own findings logic. */
-    case class Leg(prevQ: Map[String, Double], curQ: Map[String, Double],
-                   drift: Double, applied: Double, source: String,
-                   warn: Option[String], advisory: Boolean, stat: String,
-                   medianRatio: Double)
-
-    /** Conf guards, weather guard, stat selection, drift. None = leg
-      * skipped (conf mismatch — recorded as such in the gate JSON). */
-    def legCtx(kind: String, path: String, prior: Artifact): Option[Leg] = {
-      // Seconds are comparable only at the same parallelism AND the same
-      // shuffle width: per-query walls embed both, so on a mismatch the
-      // canary ratio AND the median-query estimator are contaminated by
-      // the same delta — no normalization can rescue the comparison
-      // (ADVICE round 10). Skip the leg entirely, loudly: a gate that
-      // flags conf changes as regressions trains people to ignore it.
-      // (Artifacts before round 11 carry no shuffle_partitions; the
-      // workflow always ran width = cpus, so that is the assumed prior.)
-      val priorShuffle = prior.shuffle.orElse(prior.cpus)
-      // artifacts before round 12 carry no master; the workflow always
-      // ran local[cpus], so that is the assumed prior
-      val priorMaster = prior.master.getOrElse(s"local[${prior.cpus.getOrElse(cpus)}]")
-      // sf mismatch too (round 13): per-query seconds scale with the data
-      // volume, so a run at a different scale factor compares as pure
-      // garbage — every query reads as a huge "improvement" or "creep"
-      val confMismatch =
-        prior.cpus.exists(_ != cpus) || priorShuffle.exists(_ != shuffle) ||
-          priorMaster != master || prior.sf.exists(_ != sfDir)
-      if (confMismatch) {
-        System.err.println(
-          s"bench compare vs $path SKIPPED: prior ran at cpus=" +
-            s"${prior.cpus.getOrElse("?")}/shuffle=${priorShuffle.getOrElse("?")}" +
-            s"/master=$priorMaster/sf=${prior.sf.getOrElse("?")}, this run at " +
-            s"cpus=$cpus/shuffle=$shuffle" +
-            s"/master=$master/sf=$sfDir — per-query seconds " +
-            "embed the parallelism/width delta, so canary AND median-query " +
-            "drift estimates are equally contaminated; comparison would be " +
-            "advisory at best. Re-run at the prior conf to gate.")
-        gateLegs += s"""{"kind":${jstr(kind)},"vs":${jstr(path)},"skipped":"conf_mismatch","passed":true}"""
-        None
-      } else {
-        // prefer the contention-robust MIN when both artifacts carry it
-        // (round-11 artifacts do; the driver's r10 run inflated q76/q137/
-        // q141 2-4x across all three samples — a contended JVM defeats
-        // the median, not the min)
-        val (prevQ, curQ, gateStat) = prior.min match {
-          case Some(pm) => (pm, curMin, "min")
-          case None     => (prior.med, curMed, "median")
-        }
-        // the canary ratio is meaningful only within one canary
-        // generation: an old agg-based canary_sec against the round-11
-        // exchange-free one would read the implementation change as box
-        // drift. Kind mismatch → median estimator, loudly.
-        val kindMatch = prior.canaryKind.contains(core.Canary.Kind)
-        if (prior.canary.nonEmpty && !kindMatch) System.err.println(
-          s"bench compare: prior artifact's canary is generation " +
-            s"${prior.canaryKind.getOrElse("(pre-round-10 none / round-10 agg)")}, " +
-            s"this run is ${core.Canary.Kind} — canary seconds are not " +
-            "comparable across generations; using the median-query drift estimator")
-        // a storm in the PRIOR's own brackets makes its canary min
-        // untrustworthy by an unknowable factor — demote to the
-        // median-query estimator (see priorCanaryUsable)
-        val priorUsable = priorCanaryUsable(prior.canarySamples, prior.weatherAdvisory)
-        if (prior.canary.nonEmpty && kindMatch && !priorUsable)
-          System.err.println(s"bench compare: PRIOR artifact $path was " +
-            "weather-contaminated during its own canary brackets — its " +
-            "canary min is inflated by an unknowable factor, so it is " +
-            "DEMOTED as the drift source (median-query estimator instead; " +
-            "the uniform-regression cross-check needs a trustworthy canary " +
-            "and is off for this leg). Re-pin/compare from a quiet run.")
-        val prevCanary = prior.canary.filter(_ => kindMatch && priorUsable)
-        val ratios = prevQ.toSeq.flatMap { case (name, pv) =>
-          curQ.get(name).collect { case cv if pv >= 0.1 && cv >= 0 => cv / pv }
-        }
-        // weather guard FIRST (round-12): a storm during THIS run makes
-        // canary normalization read weather as code (driver r11: samples
-        // [158.7, 2.7, 2.3, 1.9] -> min 1.933 declared the box faster and
-        // a 1.04x raw total failed the anchor at 1.28x "adjusted")
-        val (drift, driftSource, driftWarn, advisory) =
-          driftPolicy(canarySamples.toSeq, Some(canarySec), prevCanary, ratios)
-        // the fast-direction cap (round 13, see appliedDrift): the drift
-        // ESTIMATE is recorded as measured; what the bars consume is the
-        // capped value, so a sub-storm fast canary can shrink the priors
-        // by at most 10%
-        val applied = appliedDrift(drift)
-        if (advisory) driftWarn.foreach(w =>
-          System.err.println(s"BENCH WEATHER ADVISORY vs $path: $w"))
-        // the PRIOR run's brackets can carry a storm too — its stats are
-        // then inflated and a regression could hide behind them. The
-        // anchor-pin policy (best committed quiet run) plus the round-13
-        // advisory-file redirect make this unexpected, so note it loudly
-        // but keep gating: a miss here errs toward false-pass, not
-        // false-fail.
-        if (!advisory && (prior.weatherAdvisory ||
-            weatherAdvisory(prior.canarySamples).nonEmpty))
-          System.err.println(s"bench compare: PRIOR artifact $path was " +
-            "itself weather-contaminated — its stats are inflated, " +
-            "so this comparison may UNDERSTATE regressions; re-pin from a " +
-            "quiet run.")
-        val medianRatio =
-          if (ratios.size >= 20) ratios.sorted.apply(ratios.size / 2) else -1.0
-        println(f"""{"bench_compare_drift":$drift%.4f,"applied_drift":$applied%.4f,"drift_source":"$driftSource","median_query_ratio":$medianRatio%.4f,"canary_sec":$canarySec%.3f,"prev_canary_sec":${prevCanary.getOrElse(-1.0)}%.3f,"n_ratio_queries":${ratios.size},"gate_stat":"$gateStat","advisory":$advisory,"vs":"$path"}""")
-        if (!advisory) driftWarn.foreach(w =>
-          System.err.println(s"BENCH UNIFORM-REGRESSION FLAG vs $path: $w"))
-        Some(Leg(prevQ, curQ, drift, applied, driftSource,
-          if (advisory) None else driftWarn, advisory, gateStat, medianRatio))
-      }
-    }
-
-    var exitBad = false
-    def record(kind: String, path: String, l: Leg, findings: Seq[String],
-               note: Option[String], passed: Boolean): Unit =
-      gateLegs += legRecordJson(kind, path, l.drift, l.applied, l.source,
-        l.stat, l.medianRatio, l.advisory, findings, l.warn, note, passed)
-    // build both legs BEFORE adjudicating the compare verdict: the
-    // uniform-regression flag's refutation needs the anchor leg's
-    // median ratio (see uniformFlagRefutedByAnchor)
-    val compareLegBuilt = prevArt.flatMap { prior =>
-      legCtx("compare", comparePath.get, prior).map((comparePath.get, _))
-    }
-    val anchorLegBuilt = anchorArt.flatMap { prior =>
-      legCtx("anchor", anchorPath.get, prior).map((anchorPath.get, _))
-    }
-    compareLegBuilt.foreach { case (path, l) =>
-      val names = gateFindings(l.prevQ, l.curQ, l.applied)
-      val refuted = uniformFlagRefutedByAnchor(l.warn, names,
-        anchorLegBuilt.map(_._2.medianRatio).filter(_ >= 0),
-        anchorLegBuilt.exists(_._2.advisory))
-      val note = if (refuted) Some(
-        "uniform-regression flag refuted by the anchor leg: median ratio " +
-          f"vs the quiet pinned anchor ≤ $AnchorRefuteBar%.2f — a uniform " +
-          "code regression would show there at least as strongly; the " +
-          "prior's canary bracket (sub-storm spread, never quiet) " +
-          "produced an unusable drift. Not gating.") else None
-      val fail = !l.advisory && (names.nonEmpty || (l.warn.nonEmpty && !refuted))
-      if (names.nonEmpty) {
-        val tag = if (l.advisory) " — ADVISORY (weather), not gating" else ""
-        System.err.println(s"BENCH REGRESSION vs $path (${names.size})$tag:")
-        names.foreach(n => System.err.println(s"  $n"))
-      } else if (l.warn.isEmpty || l.advisory)
-        println(s"bench compare vs $path: no regressions" +
-          (if (l.advisory) " (raw ratios; weather advisory above)" else ""))
-      note.foreach(n => System.err.println(
-        s"BENCH UNIFORM-REGRESSION OVERRIDE vs $path (not gating): $n"))
-      if (fail) exitBad = true
-      record("compare", path, l, names, note, !fail)
-    }
-    // the anchor leg's verdict is the 1.25x cumulative bar alone: the
-    // 15% uniform-regression cross-check (still PRINTED above for
-    // context) deliberately does not exit here — legitimate wobble
-    // accumulates against a pinned anchor, and exiting on it would
-    // silently tighten the documented ~25% bar to 15%
-    anchorLegBuilt.foreach { case (path, l) =>
-      val (finding, note) = anchorVerdict(l.prevQ, l.curQ, l.drift)
-      val fail = !l.advisory && finding.nonEmpty
-      finding.foreach { f =>
-        val tag = if (l.advisory) " — ADVISORY (weather), not gating" else ""
-        System.err.println(s"BENCH ANCHOR REGRESSION vs $path$tag:")
-        System.err.println(s"  $f")
-      }
-      note.foreach(n =>
-        System.err.println(s"BENCH ANCHOR OVERRIDE vs $path (not gating): $n"))
-      if (finding.isEmpty && note.isEmpty)
-        println(s"bench anchor vs $path: within the cumulative bar" +
-          (if (l.advisory) " (raw ratios; weather advisory above)" else ""))
-      if (fail) exitBad = true
-      record("anchor", path, l, finding.toSeq, note, !fail)
-    }
-    // persist the full artifact LAST so the gate verdict rides inside it
-    // (the driver's BENCH_r*.json tail-capture truncates; this file is the
-    // machine-readable record). A run whose own brackets were stormy goes
-    // to an _advisory file: its stats are inflated, and letting it become
-    // the next quiet-compare baseline would understate regressions for a
-    // whole round (ADVICE round 12).
-    if (fullRun) try {
-      val full = line.dropRight(1) +
-        s""","gate":${gateJson(gateLegs.toSeq, exitBad)}}"""
-      val outName =
-        if (ownStorm.nonEmpty) "bench_full_last_advisory.json"
-        else "bench_full_last.json"
-      ownStorm.foreach(_ => System.err.println(
-        "bench: this run's own canary brackets were stormy — artifact " +
-          s"written to $outName so it cannot become the next " +
-          "quiet-compare baseline"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outName), full.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-    if (exitBad) sys.exit(1)
   }
 }

@@ -101,7 +101,7 @@ object MakeScale {
     // group to the byte-range split holding its midpoint — so a
     // gram-dense operator whose work lives in the scan stage (q124's
     // literal-probe form) ran its whole corpus pass in ONE task while 18
-    // sibling splits sat empty (Probes stages: 19 tasks, wall 95 s =
+    // sibling splits sat empty (stage task metrics: 19 tasks, wall 95 s =
     // summed task time, concurrency 1.0). Spark cannot see row-group
     // boundaries at planning, so no session conf heals it; the layout
     // itself must be splittable. Target ~32 MB per output file

@@ -1,31 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_EXTRA_CONF (k=v;k=v), mirroring Bench/Probes — the
-    // round-13 standing ANSI leg runs the WHOLE suite end to end under
-    // spark.sql.ansi.enabled=true (dev/ansi_verify.sh): the Spark-4
-    // adopter default that unit-level totality specs can't fully cover,
-    // because composed query bodies may hit throwing casts/element_at
-    // paths no isolated Column function does.
-    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-    val spark = extraConf.foldLeft(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_EXTRA_CONF is applied by DriverSession.build: the
+    // standing ANSI leg (dev/ansi_verify.sh) runs the whole suite under
+    // spark.sql.ansi.enabled=true, because composed query bodies may hit
+    // throwing casts/element_at paths no isolated Column function does
+    val spark = DriverSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // dev-only subset runs: SPARK_GRAFT_VERIFY_ONLY=q77,q78 (unset → all)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
@@ -41,13 +25,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drain operator-internal persists after each query, mirroring
-      // Bench.clearCaches — one 205-query session otherwise accumulates
-      // every dedup/linkage cache and the heap pressure lands on whichever
-      // queries run late in the suite (r13 ADVICE)
-      graft.core.InternalCaches.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      DriverSession.drain(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,10 +2,11 @@ package graft.core
 
 /** DEPLOY.md's conf quick-reference as code — every value here restates
   * a measured clause from that playbook (PLANS rounds 6–9 artifacts:
-  * SKEW_sf1.jsonl, STREAM_sf10.jsonl, ROCKSDB_TUNE.jsonl, the q94 sf30
-  * partition-width campaign), so a user gets the measured settings from
-  * one call instead of reading 187 lines. Nothing here changes results
-  * — only where time and memory go.
+  * evidence/SKEW_sf1.jsonl, evidence/STREAM_sf10.jsonl,
+  * evidence/ROCKSDB_TUNE.jsonl, the q94 sf30 partition-width campaign),
+  * so a user gets the measured settings from one call instead of reading
+  * 187 lines. Nothing here changes results — only where time and memory
+  * go.
   *
   * Also runnable: `runMain graft.core.GraftConf <totalCores>
   * [largestShuffleGB] [maxStateGB] [executorHeapGB]` prints
@@ -27,7 +28,8 @@ object GraftConf {
     * AQE's 64 MB advisory and AQE coalesces DOWN), and scaled WITH the
     * data — AQE never splits ABOVE this value except for skew, so a
     * fixed width lets per-partition sorts deepen with every data step.
-    * The round-10 measurement (WIDTH_sf30.jsonl) bounds what this buys:
+    * The round-10 measurement (evidence/WIDTH_sf30.jsonl) bounds what
+    * this buys:
     * width is SPILL INSURANCE — once partitions outgrow the in-memory
     * sort budget the cliff is real, but below it extra width measured
     * as pure overhead (+21% shuffle bytes, ~1.1× wall at sf30), so the
@@ -69,7 +71,7 @@ object GraftConf {
       else if (maxStreamingStateBytes * 2 >= shape.executorHeapBytes) {
         // max state approaching heap: RocksDB drops heap residency ~3×
         // at a 1.12–1.46× tuned premium; the tuning (no per-put
-        // read-before-write) is the ROCKSDB_TUNE.jsonl preset
+        // read-before-write) is the evidence/ROCKSDB_TUNE.jsonl preset
         Map(
           "spark.graft.stateStore" -> "rocksdb",
           "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false") ++

@@ -73,7 +73,8 @@ object InternalCaches {
     tracked.addAll(keep)
   }
 
-  /** Release everything (the Bench/Probes drain pattern). */
+  /** Release everything (what `DriverSession.drain` runs after each
+    * driver query). */
   def release(): Unit = release(None)
 
   /** Release one operator family's internal caches only. */

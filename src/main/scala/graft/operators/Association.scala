@@ -25,10 +25,7 @@ object Association {
 
   /** The membership-build stage: (basket, item) rows → one row per
     * under-cap basket carrying its distinct-item array, checkpointed
-    * for its multiple consumers. Package-private and shared with the
-    * Probes q181 phase rig, so the probe always measures the exact
-    * pipeline the operator runs (round-13 ADVICE: the rig's inline copy
-    * of this stage would silently desynchronize on any operator change).
+    * for its multiple consumers.
     *
     * ONE exchange builds the whole universe: raw memberships group by
     * basket into a distinct-item array, and over-cap baskets drop. The
@@ -47,8 +44,8 @@ object Association {
     * memberships still yields an empty-array row and counts toward
     * n_baskets: it exists, it just holds no items). Null memberships
     * are feed noise, not items; pinned by OperatorsSpec. */
-  private[graft] def basketItems(df: DataFrame, basketCol: String,
-                                 itemCol: String, maxBasket: Int): DataFrame = {
+  private def basketItems(df: DataFrame, basketCol: String,
+                          itemCol: String, maxBasket: Int): DataFrame = {
     import org.apache.spark.sql.graftglue.ColumnGlue
     df.select(col(basketCol).as("b"), col(itemCol).as("i"))
       .groupBy("b")
@@ -62,9 +59,8 @@ object Association {
   /** The pair-generation stage over [[basketItems]] output: pairs
     * explode from each basket's own array — no self-join, no second
     * exchange of memberships; the only pair-shaped shuffle is the
-    * (ia, ib) aggregation itself (map-side partials apply). Shared with
-    * the Probes rig for the same reason as [[basketItems]]. */
-  private[graft] def pairSupports(sized: DataFrame, minSupport: Long): DataFrame =
+    * (ia, ib) aggregation itself (map-side partials apply). */
+  private def pairSupports(sized: DataFrame, minSupport: Long): DataFrame =
     sized
       .select(explode(col("__items")).as("ia"), col("__items"))
       .select(col("ia"), explode(col("__items")).as("ib"))
@@ -77,7 +73,7 @@ object Association {
     * pairs (a < b) seen in ≥ `minSupport` baskets with
     * lift = n_baskets·pairs/(cnt_a·cnt_b) — >1 = attraction.
     *
-    * The round-12 phase attribution (Probes q181) found the INPUT
+    * The round-12 phase attribution (q181) found the INPUT
     * BUILD, not the pair aggregation, was half the query: the old
     * spelling paid a (b,i)-dedup exchange + a groupBy(b) exchange + a
     * join back on b, where [[basketItems]] pays a single membership

@@ -273,25 +273,23 @@ object Quantiles {
     * value buffer); the group-sized median/MAD tables broadcast back;
     * the data crosses the group-key exchange twice (once per ranking
     * pass) and nothing else. */
-  /** [[madOutliers]] stage 1: money → exact half-cent integers. Package-
-    * private so the Probes phase rig times the operator's OWN stages
-    * rather than an inline re-spelling that could desynchronize. */
-  private[graft] def madCents(df: DataFrame, groupCol: String,
-                              valueCol: String): DataFrame =
+  /** [[madOutliers]] stage 1: money → exact half-cent integers. */
+  private def madCents(df: DataFrame, groupCol: String,
+                       valueCol: String): DataFrame =
     df.select(col(groupCol),
       (round(col(valueCol) * 100).cast("long") * 2).as("c2"))
 
   /** [[madOutliers]] stage 2: per-group exact median of c2, broadcast-
     * joined back, absolute deviations stamped. */
-  private[graft] def madDeviations(c2: DataFrame,
-                                   groupCol: String): DataFrame = {
+  private def madDeviations(c2: DataFrame,
+                            groupCol: String): DataFrame = {
     val med = exactGroupQuantiles(c2, groupCol, "c2", Seq(0.5), Seq("med2"))
     c2.join(broadcast(med), groupCol)
       .withColumn("dev2", abs(col("c2").cast("double") - col("med2")))
   }
 
   /** [[madOutliers]] stage 3: per-group exact median of the deviations. */
-  private[graft] def madScale(dev: DataFrame, groupCol: String): DataFrame =
+  private def madScale(dev: DataFrame, groupCol: String): DataFrame =
     exactGroupQuantiles(dev, groupCol, "dev2", Seq(0.5), Seq("mad2"))
 
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,

@@ -87,7 +87,7 @@ object EventsStream {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // spark.graft.streaming.maxFilesPerTrigger splits the backlog into
     // real micro-batches (AvailableNow honors source read limits) — the
-    // steady-state measurement mode StreamBench uses. Default (unset)
+    // steady-state mode of a live stream. Default (unset)
     // keeps the whole-backlog single batch the oracle queries run.
     // The events table exists in two layouts and each needs a different
     // source spelling: the driver testdata ships events.parquet as a
@@ -96,7 +96,7 @@ object EventsStream {
     // ship it as a DIRECTORY of part files (stream the directory ITSELF
     // — pathGlobFilter matches leaf-file NAMES, so filtering the parent
     // dir by "events.parquet" dropped every part-*.parquet and the
-    // stream read zero rows, found the first time StreamBench ran).
+    // stream read zero rows, found the first time a prepared dir ran).
     val evPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val isDir = evPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(evPath).isDirectory
@@ -667,7 +667,7 @@ object EventsStream {
     // sentinel — the sentinel is a finite-run convenience that is WRONG
     // under multi-batch triggers: its MemoryStream row lands in batch 1,
     // jumping the watermark past end-of-input so every later batch's
-    // events read as late and drop. Multi-batch runs (StreamBench, over
+    // events read as late and drop. Multi-batch runs (over
     // time-ordered files) advance the watermark naturally instead; the
     // cost is that trailing windows/sessions stay unemitted at shutdown,
     // exactly as on a live stream.

@@ -6,13 +6,11 @@ import org.apache.spark.SparkContext
   * `ColumnGlue`: lives in the org.apache.spark package tree solely to
   * satisfy the access qualifier; nothing in Spark is modified.
   *
-  * Why: measurement rigs that consume StreamingQueryListener events must
-  * not read their buffer until the async bus has delivered the tail —
-  * Probes.streamFloor used a fixed 500 ms sleep, which on a loaded host
-  * can drop the FINAL batch's progress event from the triggerExecution
-  * sum and overstate the very overhead the probe measures (round-13
-  * ADVICE). `waitUntilEmpty` is exact: it returns when every queued
-  * event has been dispatched to every listener. */
+  * Why: a listener's counters are complete only once the async bus has
+  * delivered the tail of the events it queued. `waitUntilEmpty` is exact
+  * where a fixed sleep is not: it returns when every queued event has
+  * been dispatched to every listener. Used by the benchmark's tracer
+  * (perfbench `Tracer.detach`) and by `PoKernelSpec`'s job counts. */
 object BusGlue {
   /** Block until the shared LiveListenerBus queue is fully dispatched,
     * or `timeoutMs` elapses (throws on timeout, like the internal API). */

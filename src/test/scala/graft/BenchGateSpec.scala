@@ -2,408 +2,53 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Bench.driftEstimate]] — the round-10 gate arithmetic. The prior
-  * gate's blind spot (round-9 verdict): drift = median per-query ratio
-  * absorbs a UNIFORM code regression, because slowing the whole suite
-  * moves the median exactly like box weather. The fix pairs a box-only
-  * pure-CPU canary (primary estimator) with the median-query ratio
-  * (cross-check); disagreement >15% in the slow direction is the
-  * uniform regression, surfaced as a warning → exit 1. Pure function,
-  * no Spark needed. */
+/** [[Bench.stats]] and [[Bench.total]] — the figures of the driver bench
+  * line that a regression check reads: median and min of the timed
+  * samples, the rule that a failed query reports -1 for both instead of a
+  * (fast) timing, and the total over the working queries. Pure, no Spark. */
 class BenchGateSpec extends AnyFunSuite {
 
-  private def ratios(r: Double, n: Int = 30): Seq[Double] = Seq.fill(n)(r)
+  private def one(samples: Seq[Double], errors: Set[String] = Set.empty) =
+    Bench.stats(Seq("q" -> samples), errors).head
 
-  test("box drift alone: canary and median agree, no warning, canary wins") {
-    // box 40% slower, suite 40% slower — weather, normalize it out
-    val (d, src, warn) = Bench.driftEstimate(Some(4.2), Some(3.0), ratios(1.4))
-    assert(math.abs(d - 1.4) < 1e-9)
-    assert(src == "canary")
-    assert(warn.isEmpty)
+  test("median of 3 samples is the middle one, whatever their order") {
+    assert(one(Seq(3.0, 1.0, 2.0))._2 == 2.0)
+    assert(one(Seq(9.5, 0.5, 1.5))._2 == 1.5)
   }
 
-  test("uniform CODE regression: suite slowed, box did not — flagged") {
-    // canary flat (box identical), every query 1.4x — the exact case the
-    // median-only gate normalized away as "drift"
-    val (d, src, warn) = Bench.driftEstimate(Some(3.0), Some(3.0), ratios(1.4))
-    assert(math.abs(d - 1.0) < 1e-9, "priors must be adjusted by BOX drift only")
-    assert(src == "canary")
-    assert(warn.nonEmpty, "a suite slowing 40% on a flat box is a code regression")
+  test("median and min of 1 sample are that sample") {
+    assert(one(Seq(4.25)) == (("q", 4.25, 4.25)))
   }
 
-  test("15% disagreement boundary: just-under passes, just-over flags") {
-    val under = Bench.driftEstimate(Some(3.0), Some(3.0), ratios(1.14))._3
-    val over = Bench.driftEstimate(Some(3.0), Some(3.0), ratios(1.16))._3
-    assert(under.isEmpty)
-    assert(over.nonEmpty)
+  test("min is the least sample") {
+    assert(one(Seq(2.0, 0.75, 1.25))._3 == 0.75)
+    assert(one(Seq(0.5, 7.0, 7.0))._3 == 0.5)
   }
 
-  test("uniform code IMPROVEMENT is not flagged") {
-    // suite 30% faster on a flat box: good news, gate stays quiet
-    val (d, _, warn) = Bench.driftEstimate(Some(3.0), Some(3.0), ratios(0.7))
-    assert(math.abs(d - 1.0) < 1e-9)
-    assert(warn.isEmpty)
+  test("one failed sample (-1) makes both stats -1 for that query only") {
+    val st = Bench.stats(Seq(
+      "q01" -> Seq(1.0, 2.0, 3.0),
+      "q02" -> Seq(1.0, -1.0, 3.0),
+      "q03" -> Seq(0.5, 0.25, 0.75)), Set.empty)
+    assert(st == Seq(("q01", 2.0, 1.0), ("q02", -1.0, -1.0), ("q03", 0.5, 0.25)))
   }
 
-  test("mixed regime: box 20% slower AND code 40% slower — flagged, box-adjusted") {
-    val (d, _, warn) = Bench.driftEstimate(Some(3.6), Some(3.0), ratios(1.2 * 1.4))
-    assert(math.abs(d - 1.2) < 1e-9)
-    assert(warn.nonEmpty)
-  }
-
-  test("pre-round-10 artifact (no prior canary): falls back to median ratio") {
-    val (d, src, warn) = Bench.driftEstimate(Some(3.0), None, ratios(1.3))
-    assert(math.abs(d - 1.3) < 1e-9)
-    assert(src == "median_query_ratio")
-    assert(warn.isEmpty) // nothing to cross-check against
-  }
-
-  test("too few stable queries (<20): canary alone, no cross-check") {
-    val (d, src, warn) = Bench.driftEstimate(Some(4.5), Some(3.0), ratios(9.9, n = 5))
-    assert(math.abs(d - 1.5) < 1e-9)
-    assert(src == "canary")
-    assert(warn.isEmpty)
-  }
-
-  test("no estimator at all: drift 1.0 (raw compare)") {
-    val (d, src, warn) = Bench.driftEstimate(None, None, Nil)
-    assert(d == 1.0 && src == "none" && warn.isEmpty)
-  }
-
-  test("non-positive canary samples are rejected, not divided by") {
-    val (d, src, _) = Bench.driftEstimate(Some(0.0), Some(3.0), ratios(1.1))
-    assert(src == "median_query_ratio" && math.abs(d - 1.1) < 1e-9)
-    val (d2, src2, _) = Bench.driftEstimate(Some(3.0), Some(-1.0), ratios(1.1))
-    assert(src2 == "median_query_ratio" && math.abs(d2 - 1.1) < 1e-9)
+  test("a recorded error makes both stats -1 for that query only") {
+    // the warm-up failed, the timed samples succeeded: still broken
+    val st = Bench.stats(Seq(
+      "q01" -> Seq(1.0, 2.0, 3.0),
+      "q02" -> Seq(1.0, 2.0, 3.0)), Set("q02"))
+    assert(st == Seq(("q01", 2.0, 1.0), ("q02", -1.0, -1.0)))
   }
 
   test("median is the statistic: one outlier query cannot move the estimate") {
-    val rs = ratios(1.0, 29) :+ 25.0 // one real (non-uniform) regression
-    val (d, _, warn) = Bench.driftEstimate(Some(3.0), Some(3.0), rs)
-    assert(math.abs(d - 1.0) < 1e-9)
-    assert(warn.isEmpty, "a single slow query is the per-query gate's job, not the drift flag's")
-  }
-
-  test("canaryStat is the MIN of positive samples (contention inflates, " +
-    "never deflates a one-wave canary)") {
-    // the gate's first live same-code pair: medians 3.74 vs 3.03 s made
-    // false flags; mins 2.03 vs 2.17 agreed with the median-query ratio
-    assert(Bench.canaryStat(Seq(4.011, 2.031, 3.736, 3.553)).contains(2.031))
-    assert(Bench.canaryStat(Seq(3.175, 2.512, 3.034, 2.169)).contains(2.169))
-    assert(Bench.canaryStat(Seq(-1.0, 0.0)).isEmpty, "disabled runs yield no stat")
-    assert(Bench.canaryStat(Nil).isEmpty)
-    assert(Bench.canaryStat(Seq(-1.0, 1.5)).contains(1.5), "negatives excluded, not min'd")
-  }
-
-  // ---- gateFindings: the per-query leg, extracted pure in round 11 ----
-
-  private def suite(n: Int, sec: Double): Map[String, Double] =
-    (1 to n).map(i => f"q$i%03d" -> sec).toMap
-
-  test("gateFindings: a real >1.5x +0.5s regression is flagged by name") {
-    val prev = suite(30, 2.0)
-    val cur = prev.updated("q007", 4.0)
-    val names = Bench.gateFindings(prev, cur, drift = 1.0)
-    assert(names.size == 1 && names.head.startsWith("q007:"))
-  }
-
-  test("gateFindings: drift-adjusted priors — box slowdown is not a regression") {
-    val prev = suite(30, 2.0)
-    val cur = suite(30, 2.8) // everything 1.4x, but the box is 1.4x slower
-    assert(Bench.gateFindings(prev, cur, drift = 1.4).isEmpty)
-  }
-
-  test("gateFindings: sub-second jitter under the absolute bar passes; " +
-    "errors and missing queries always flag") {
-    val prev = suite(30, 0.2)
-    val jitter = prev.map { case (k, _) => k -> 0.4 } // 2x but +0.2s only
-    assert(Bench.gateFindings(prev, jitter, 1.0).isEmpty)
-    val broken = prev.updated("q003", -1.0) - "q005"
-    val names = Bench.gateFindings(prev, broken, 1.0)
-    assert(names.exists(_.startsWith("q003: ERROR")))
-    assert(names.exists(_.startsWith("q005: MISSING")))
-  }
-
-  test("gateFindings: a query broken in the PRIOR run is skipped, not compared") {
-    val prev = suite(30, 2.0).updated("q001", -1.0)
-    val cur = suite(30, 2.0).updated("q001", 9.0) // was broken, now slow-but-working
-    assert(Bench.gateFindings(prev, cur, 1.0).isEmpty)
-  }
-
-  // ---- anchorFinding: the cumulative leg (round-10 witness: 144.5 ->
-  // 160.3 -> 166.1 s in one night, every adjacent pair clean) ----
-
-  test("anchor leg: 10%/round creep passes every pairwise gate but is " +
-    "caught cumulatively at the anchor") {
-    val anchor = suite(30, 2.0)
-    val r1 = suite(30, 2.0 * 1.10)
-    val r2 = suite(30, 2.0 * 1.21)
-    val r3 = suite(30, 2.0 * 1.331)
-    // each adjacent pair: 1.1x uniform — under the 1.5x per-query bar
-    // AND under the 1.15 uniform-regression cross-check
-    assert(Bench.gateFindings(anchor, r1, 1.0).isEmpty)
-    assert(Bench.gateFindings(r1, r2, 1.0).isEmpty)
-    assert(Bench.gateFindings(r2, r3, 1.0).isEmpty)
-    assert(Bench.driftEstimate(Some(3.0), Some(3.0), ratios(1.10))._3.isEmpty)
-    // the anchor never re-bases: round 3 sits 1.33x over it — flagged
-    assert(Bench.anchorFinding(anchor, r2, 1.0).isEmpty, "1.21x is inside the 1.25 bar")
-    assert(Bench.anchorFinding(anchor, r3, 1.0).nonEmpty, "1.33x must flag")
-  }
-
-  test("anchor leg: box drift is normalized out before the cumulative bar") {
-    val anchor = suite(30, 2.0)
-    val cur = suite(30, 2.0 * 1.3) // 1.3x raw, but the box is 1.3x slower
-    assert(Bench.anchorFinding(anchor, cur, drift = 1.3).isEmpty)
-    assert(Bench.anchorFinding(anchor, cur, drift = 1.0).nonEmpty)
-  }
-
-  test("anchor leg: absolute floor and minimum-subset guards") {
-    // a tiny common subset cannot flag on noise
-    assert(Bench.anchorFinding(suite(5, 2.0), suite(5, 9.0), 1.0).isEmpty)
-    // a 1.3x total that grows less than the absolute floor stays quiet
-    assert(Bench.anchorFinding(suite(30, 0.05), suite(30, 0.07), 1.0).isEmpty)
-  }
-
-  test("anchor leg: broken queries on either side drop out of the total") {
-    val anchor = suite(30, 2.0).updated("q001", -1.0)
-    val cur = suite(30, 2.0).updated("q001", 500.0) // broken at anchor: excluded
-      .updated("q002", -1.0) // broken now: excluded (the per-query leg flags it)
-    assert(Bench.anchorFinding(anchor, cur, 1.0).isEmpty)
-  }
-
-  // ---- weather guard (round 12): canary normalization is asymmetric
-  // under a storm — contention inflates the query stats while the canary
-  // MIN finds the one quiet instant, so a contaminated run reads as a
-  // code regression ----
-
-  // the driver's round-11 artifact, literally: one 158.7 s sample in a
-  // 4-sample bracket is proof of severe host steal DURING the run
-  private val r11DriverSamples = Seq(158.699, 2.716, 2.304, 1.933)
-
-  test("weatherAdvisory: the r11 driver storm is detected; a quiet bracket is not") {
-    assert(Bench.weatherAdvisory(r11DriverSamples).nonEmpty)
-    assert(Bench.weatherAdvisory(Seq(2.031, 2.3, 2.17, 2.5)).isEmpty)
-    // boundary: spread must EXCEED the bar
-    assert(Bench.weatherAdvisory(Seq(1.0, 3.0)).isEmpty, "exactly 3.0x is not over the bar")
-    assert(Bench.weatherAdvisory(Seq(1.0, 3.01)).nonEmpty)
-    // degenerate brackets: nothing to spread; disabled-canary -1s excluded
-    assert(Bench.weatherAdvisory(Seq(2.0)).isEmpty)
-    assert(Bench.weatherAdvisory(Nil).isEmpty)
-    assert(Bench.weatherAdvisory(Seq(-1.0, -1.0, 2.0)).isEmpty)
-  }
-
-  test("driftPolicy replays the r11 driver run: raw 1.04x advisory-pass, " +
-    "not the 1.28x drift-adjusted anchor fail") {
-    // the run that exited 1: canary min 1.933 vs anchor 2.381 declared
-    // the box 19% faster (drift 0.812) and adjudicated a 1.04x raw suite
-    // total as 1.28x > the 1.25x anchor bar
-    val anchorTotal = 145.3; val curTotal = 150.9; val n = 20
-    val anchor = suite(n, anchorTotal / n)
-    val cur = suite(n, curTotal / n)
-    val qratios = ratios(curTotal / anchorTotal)
-    // counterfactual (the round-11 behavior): canary-normalized drift
-    // converts the raw 1.04x into an anchor FAIL
-    val (oldDrift, _, _) = Bench.driftEstimate(Some(1.933), Some(2.381), qratios)
-    assert(math.abs(oldDrift - 1.933 / 2.381) < 1e-9)
-    assert(Bench.anchorFinding(anchor, cur, oldDrift).nonEmpty,
-      "without the weather guard this run fails the anchor leg")
-    // with the guard: the storm in the run's OWN brackets refuses the
-    // normalization — drift 1.0, advisory, and the raw 1.04x passes
-    val (d, src, note, advisory) =
-      Bench.driftPolicy(r11DriverSamples, Some(1.933), Some(2.381), qratios)
-    assert(d == 1.0 && src == "raw_weather_advisory" && advisory)
-    assert(note.exists(_.contains("ADVISORY")))
-    assert(Bench.anchorFinding(anchor, cur, d).isEmpty,
-      "raw 1.04x is comfortably inside the 1.25x anchor bar")
-  }
-
-  // ---- round 13: the SUB-storm false-fail (PLANS §14) — the round-12
-  // final run was the best committed run ever (141.7 s min-total, raw
-  // 0.975x vs the 145.3 s anchor) yet exited 1: bracket spread 1.81x sat
-  // under the 3x storm bar, so canary min 1.814 vs anchor 2.381 declared
-  // the box 24% slower and set a 110.7 s cumulative bar no real run can
-  // meet. Fix: applied drift is capped in the FAST direction (the canary
-  // min finds the quietest instant of a mixed hour while query stats
-  // absorb the whole hour — the asymmetry only ever overstates box
-  // speed), plus a raw-improvement override as the second line. ----
-
-  private val r12Anchor = 145.3
-  private val r12Cur = 141.7
-  private val r12Drift = 1.814 / 2.381 // 0.762: the false 24%-slower-box claim
-  // the run's bracket: spread 1.81x — max = min * 1.81, under the 3x bar
-  private val r12Samples = Seq(3.283, 1.814, 2.5, 2.9)
-
-  test("appliedDrift: fast-direction cap at 0.9, slow direction uncapped") {
-    assert(Bench.appliedDrift(r12Drift) == 0.9, "a 24% faster-box claim caps at 10%")
-    assert(Bench.appliedDrift(0.95) == 0.95, "inside the cap: applied as measured")
-    assert(Bench.appliedDrift(1.4) == 1.4,
-      "slow-direction weather (round 10's 1.4x) must keep normalizing fully")
-    assert(Bench.appliedDrift(1.0) == 1.0)
-  }
-
-  test("anchorVerdict replays the r12 final run (PLANS §14): raw 0.975x " +
-    "best-ever run passes instead of exiting 1") {
-    val n = 20
-    val anchor = suite(n, r12Anchor / n)
-    val cur = suite(n, r12Cur / n)
-    // the bracket is NOT a storm: the weather guard correctly stays quiet
-    // and the canary estimate flows through as measured
-    val (d, src, _, advisory) =
-      Bench.driftPolicy(r12Samples, Some(1.814), Some(2.381), ratios(0.975))
-    assert(!advisory && src == "canary" && math.abs(d - r12Drift) < 1e-9)
-    // counterfactual (the round-12 behavior): uncapped drift converts the
-    // raw 0.975x improvement into a cumulative "regression"
-    assert(Bench.anchorFinding(anchor, cur, d).nonEmpty,
-      "without the cap this run fails the anchor leg — the §14 false fail")
-    // with the cap: adjusted total 130.8 s, bar 163.5 s — clean pass
-    val (finding, note) = Bench.anchorVerdict(anchor, cur, d)
-    assert(finding.isEmpty, "the best committed run on record must not gate-fail")
-    assert(note.isEmpty, "the cap alone resolves it; the override never engages")
-  }
-
-  test("anchorVerdict: a TRUE regression (raw 1.3x) still fails, quiet or fast canary") {
-    val n = 20
-    val anchor = suite(n, r12Anchor / n)
-    val cur = suite(n, r12Anchor * 1.3 / n)
-    val (f1, n1) = Bench.anchorVerdict(anchor, cur, 1.0)
-    assert(f1.nonEmpty && n1.isEmpty, "quiet box: 1.3x > 1.25x bar")
-    val (f2, n2) = Bench.anchorVerdict(anchor, cur, r12Drift)
-    assert(f2.nonEmpty && n2.isEmpty,
-      "fast canary: applied 0.9 makes it 1.44x adjusted — still a fail, " +
-        "and the raw-improvement override must not rescue a raw 1.3x")
-  }
-
-  test("rawImprovementNote: fires only when BOTH raw statistics read improvement") {
-    val n = 20
-    val anchor = suite(n, r12Anchor / n)
-    assert(Bench.rawImprovementNote(anchor, suite(n, r12Cur / n)).nonEmpty,
-      "§14: total 0.975x, every query 0.975x — improvement by every raw stat")
-    assert(Bench.rawImprovementNote(anchor, suite(n, r12Anchor * 1.02 / n)).isEmpty,
-      "raw total above the anchor: no override")
-    // total <= anchor but the MEDIAN query regressed: one huge win hiding
-    // 19 small losses is not an improvement verdict
-    val skewed = suite(n, r12Anchor / n * 1.05).updated("q001", 0.01)
-    assert(Bench.rawImprovementNote(anchor, skewed).isEmpty)
-    // tiny common subset: no verdict either way
-    assert(Bench.rawImprovementNote(suite(5, 2.0), suite(5, 1.0)).isEmpty)
-  }
-
-  test("anchorVerdict: the override is the second line when the cap is retuned away") {
-    // with the cap disabled (floor 0.0) the §14 finding fires internally;
-    // the raw-improvement override converts it to a non-gating note
-    val n = 20
-    val anchor = suite(n, r12Anchor / n)
-    val cur = suite(n, r12Cur / n)
-    val (finding, note) = Bench.anchorVerdict(anchor, cur, r12Drift, fastCapFloor = 0.0)
-    assert(finding.isEmpty)
-    assert(note.exists(_.contains("OVERRIDDEN")))
-    assert(note.exists(_.contains("self-contradictory")))
-  }
-
-  // ---- round 13: the gate verdict is persisted INTO the artifact (the
-  // driver's BENCH_r*.json tail-capture has truncated six rounds running,
-  // so stdout lines were the only gate record) ----
-
-  test("legRecordJson/gateJson: machine-readable, parseable, fields present") {
-    val rec = Bench.legRecordJson("anchor", "dev/bench_anchor.json",
-      drift = r12Drift, applied = 0.9, source = "canary", stat = "min",
-      medianRatio = 0.975, advisory = false,
-      findings = Seq("""cumulative creep: suite total 148.7 s vs anchor"""),
-      warn = None, overrideNote = Some("raw \"improvement\" note"), passed = true)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.gateJson(Seq(rec), exitBad = false))
-    assert(root.get("exit").asInt() == 0)
-    val leg = root.get("legs").get(0)
-    assert(leg.get("kind").asText() == "anchor")
-    assert(leg.get("vs").asText() == "dev/bench_anchor.json")
-    assert(math.abs(leg.get("drift").asDouble() - r12Drift) < 1e-3)
-    assert(leg.get("applied_drift").asDouble() == 0.9)
-    assert(leg.get("gate_stat").asText() == "min")
-    assert(!leg.get("advisory").asBoolean())
-    assert(leg.get("findings").size() == 1)
-    assert(leg.get("warn").isNull)
-    assert(leg.get("override_note").asText().contains("improvement"),
-      "embedded quotes must be escaped, not corrupt the JSON")
-    assert(leg.get("passed").asBoolean())
-    // and a failing gate stamps exit 1
-    val bad = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.gateJson(Nil, exitBad = true))
-    assert(bad.get("exit").asInt() == 1)
-  }
-
-  // ---- round 13, found live on the round's first post-fix full run:
-  // the PRIOR artifact (the r12 driver run) was storm-contaminated, so
-  // its canary min (6.081 on a ~2.0 s box) made tonight's quiet 2.128
-  // read as "box 3x faster"; the fast-cap collided with the honest
-  // median ratio 1.133 (the box really was ~17% slower than the anchor
-  // evening) and the uniform-regression cross-check fired on garbage ----
-
-  test("a storm-contaminated PRIOR canary is demoted to the median estimator") {
-    val r12DriverPriorSamples = Seq(80.948, 12.225, 6.081, 14.012)
-    val tonightSamples = Seq(4.114, 2.128, 2.5, 2.833)
-    // the prior is unusable; tonight's own brackets are sub-storm quiet
-    assert(!Bench.priorCanaryUsable(r12DriverPriorSamples, priorAdvisoryFlag = false))
-    assert(Bench.priorCanaryUsable(tonightSamples, priorAdvisoryFlag = false))
-    // an artifact that STAMPED itself advisory is unusable even if its
-    // samples were lost to an older schema
-    assert(!Bench.priorCanaryUsable(Nil, priorAdvisoryFlag = true))
-    // counterfactual (the exit-1 this replays): canary drift 2.128/6.081
-    // = 0.35 vs median 1.133 — the cross-check fires on a garbage ratio
-    val (_, _, badWarn) =
-      Bench.driftEstimate(Some(2.128), Some(6.081), ratios(1.133))
-    assert(badWarn.nonEmpty, "the garbage prior canary produced the false flag")
-    // demoted: canary absent → median estimator, no cross-check, and the
-    // 1.133 box-slowdown normalizes the priors instead of flagging them
-    val (d, src, warn) = Bench.driftEstimate(Some(2.128), None, ratios(1.133))
-    assert(src == "median_query_ratio" && math.abs(d - 1.133) < 1e-9 && warn.isEmpty)
-  }
-
-  // ---- round 13 continuation, the THIRD wrong-verdict mode, found
-  // live: the prior (driver) artifact's bracket [2.878, 3.736, 2.474,
-  // 5.944] spread 2.40x — UNDER the 3x storm bar, so priorCanaryUsable
-  // passed it — yet every sample was elevated; its min declared "box
-  // 46% faster" (0.683) against an honest median ratio 0.942, and the
-  // cross-check called a 135.2 s best-equalling run a uniform code
-  // regression while the ANCHOR leg read 0.998 against the quiet pin ----
-
-  test("uniform-regression flag refuted by the anchor leg: the literal " +
-    "second-full-run numbers pass; a true regression still gates") {
-    val priorSamples = Seq(2.878, 3.736, 2.474, 5.944)
-    // sub-storm: the usability gate passes this bracket (that is the hole)
-    assert(Bench.priorCanaryUsable(priorSamples, priorAdvisoryFlag = false))
-    // the flag fires exactly as it did live (0.942 > 0.683 * 1.15)
-    val (_, _, warn) =
-      Bench.driftEstimate(Some(1.690), Some(2.474), ratios(0.9423))
-    assert(warn.nonEmpty, "replay must reproduce the live false flag")
-    // refutation: no per-query findings, anchor leg quiet at 0.998
-    assert(Bench.uniformFlagRefutedByAnchor(warn, Nil, Some(0.998),
-      anchorAdvisory = false))
-    // counterfactuals — every leg of the refutation is necessary:
-    // a TRUE uniform regression reads high against the anchor too
-    assert(!Bench.uniformFlagRefutedByAnchor(warn, Nil, Some(1.30),
-      anchorAdvisory = false))
-    // no anchor leg → nothing to corroborate with → still gates
-    assert(!Bench.uniformFlagRefutedByAnchor(warn, Nil, None,
-      anchorAdvisory = false))
-    // a stormy anchor leg cannot refute anything
-    assert(!Bench.uniformFlagRefutedByAnchor(warn, Nil, Some(0.998),
-      anchorAdvisory = true))
-    // per-query findings are their own evidence — no override
-    assert(!Bench.uniformFlagRefutedByAnchor(warn, Seq("q1: 1.0 -> 2.0"),
-      Some(0.998), anchorAdvisory = false))
-    // no flag → nothing to refute
-    assert(!Bench.uniformFlagRefutedByAnchor(None, Nil, Some(0.998),
-      anchorAdvisory = false))
-  }
-
-  test("driftPolicy on a quiet run defers to driftEstimate unchanged") {
-    val quiet = Seq(2.1, 2.3, 2.2, 2.4)
-    val (d, src, warn, advisory) =
-      Bench.driftPolicy(quiet, Some(4.2), Some(3.0), ratios(1.4))
-    assert(!advisory && src == "canary" && math.abs(d - 1.4) < 1e-9 && warn.isEmpty)
-    // and the uniform-regression cross-check still fires on a quiet box
-    val (_, _, warn2, adv2) =
-      Bench.driftPolicy(quiet, Some(3.0), Some(3.0), ratios(1.4))
-    assert(!adv2 && warn2.nonEmpty)
+    // a burst of host load lands on one run of one query: 25x on one pass
+    val quiet = (1 to 30).map(i => f"q$i%03d" -> Seq(1.0, 1.0, 1.0))
+    val burst = quiet.updated(6, "q007" -> Seq(1.0, 25.0, 1.0))
+    val st = Bench.stats(burst, Set.empty)
+    assert(st == Bench.stats(quiet, Set.empty))
+    assert(Bench.total(st) == 30.0)
+    // a broken query drops out of the total instead of subtracting 1
+    assert(Bench.total(Bench.stats(quiet, Set("q007"))) == 29.0)
   }
 }

@@ -2080,7 +2080,7 @@ class OperatorsSpec extends SparkSpec {
       "releasing scope 'dedup' must not evict scope 'graphs' mid-flight")
     assert(InternalCaches.trackedCount("dedup") == 0)
     assert(InternalCaches.trackedCount("graphs") == 1)
-    // the global drain still clears everything (Bench/Probes pattern)
+    // the global drain still clears everything (DriverSession.drain)
     InternalCaches.release()
     assert(b.storageLevel == StorageLevel.NONE)
     assert(InternalCaches.trackedCount == 0)

@@ -311,7 +311,7 @@ class StreamingSpec extends SparkSpec {
     Tables.events(spark, sfDir).repartitionByRange(5, col("ts"))
       .sortWithinPartitions("ts").write.parquet(out)
     // FileStreamSource consumes oldest-modTime-first: force mtimes into
-    // part order = time-range order (the StreamBench prepare protocol)
+    // part order = time-range order
     val parts = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val t0 = System.currentTimeMillis() - parts.length * 2000L
