@@ -3690,7 +3690,7 @@ object SparkEntry {
     // Partition-PRUNED read-back of the year-partitioned table: the
     // design the reference's table-per-year hack (gec_inv_2023/24/25
     // migrations) actually wants. lineitem lands partitioned by ship
-    // year (K4's dynamic-overwrite sink); the read filters ONE year and
+    // year (K4's staged partitioned commit); the read filters ONE year and
     // the scan's PartitionFilters prove whole directories are skipped —
     // directory-level pruning, not just row-group stats (PlanAuditSpec
     // asserts the plan; this row gates the VALUES that survive it).
@@ -3700,7 +3700,7 @@ object SparkEntry {
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         col("l_quantity"), col("l_extendedprice"), col("l_shipdate"),
         year(col("l_shipdate")).as("ship_year"))
-      graft.sources.Sinks.writePartitionedByYear(li, out, "ship_year")
+      graft.sources.Sinks.writePartitionedStaged(li, out, "ship_year")
       s.read.parquet(out).where(col("ship_year") === 1995)
         .groupBy(month(col("l_shipdate")).as("ship_month"))
         .agg(count(lit(1)).as("n_items"),

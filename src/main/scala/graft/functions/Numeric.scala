@@ -59,16 +59,4 @@ object Numeric {
     sum(round(c * pow).cast("long").cast(DecimalType(28, 0)))
       .cast("double") / pow
   }
-
-  /** DuckDB-SQL rendering of [[sumExactD]], for oracle parity. */
-  def sumExactSql(expr: String, scale: Int): String = {
-    val pow = "1" + ("0" * scale)
-    s"CAST(SUM(CAST(ROUND(($expr)*$pow) AS BIGINT)) AS DOUBLE)/$pow"
-  }
-
-  /** DuckDB-SQL rendering of [[quantizeD]]. */
-  def quantizeSqlD(expr: String, scale: Int): String = {
-    val pow = "1" + ("0" * scale)
-    s"ROUND(($expr)*$pow)/$pow"
-  }
 }

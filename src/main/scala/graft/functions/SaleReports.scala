@@ -81,14 +81,4 @@ object SaleReports {
       .otherwise(format_string("%04d-%02d-%02d", y,
         regexp_extract(s, re, 2).try_cast("int"), d.try_cast("int")))
   }
-
-  /** The full C33 header record, J4-style stampable onto every item row of
-    * the same report (`dataframe_to_enriched_rows`,
-    * pdf_ocr_sale_invoice_to_json.py:221-248). */
-  def headerMeta(text: Column): Column = struct(
-    topic(text).as("topic"),
-    startRoundDate(text).as("start_round_date"),
-    endRoundDate(text).as("end_round_date"),
-    supplierName(text).as("supplier_name"),
-    supplierNum(text).as("supplier_num"))
 }

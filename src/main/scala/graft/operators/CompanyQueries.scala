@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * At scale the financial tables are partitioned by `fiscal_year`
   * (replacing the reference's table-per-year scheme, SURVEY §4), so the
-  * range predicate prunes partitions and the tax_id filter rides min/max
-  * parquet stats down to row groups. */
+  * range predicate prunes partitions. The tax_id filter prunes nothing:
+  * the tables are written unclustered, so every row group's min/max
+  * spans most tax ids and a lookup scans whole year partitions. */
 object CompanyQueries {
 
   /** P3 `onlyCols` projection: exactly the listed columns, cast double,

@@ -214,19 +214,18 @@ object Merge {
     *      delete key — the q122 z-order/range-sort lever — victims
     *      cluster into few files). The exchange carries distinct file
     *      NAMES, bounded by file count.
-    *   2. REWRITE — read only the affected files, anti-join the victims,
-    *      write survivors to a dot-prefixed staging dir (invisible to
-    *      readers).
-    *   3. SWAP — move staged part-files in under unique names, THEN
-    *      delete the affected originals: all non-victim data stays
-    *      visible at every instant (a concurrent reader may transiently
-    *      double-count survivors of the swap — the documented trade for
-    *      running on plain parquet; a transactional table format makes
-    *      this step atomic).
+    *   2. REWRITE + SWAP — read only the affected files, anti-join the
+    *      victims and hand the survivors to
+    *      [[graft.sources.Sinks.swapFiles]]: staged in a dot-prefixed
+    *      dir, moved in under unique names, THEN the affected originals
+    *      are deleted. All non-victim data stays visible at every instant
+    *      (a concurrent reader may transiently double-count survivors of
+    *      the swap — the documented trade for running on plain parquet; a
+    *      transactional table format makes this step atomic).
     * A crash before the swap leaves the table unchanged (staging is
-    * dot-prefixed); a crash mid-swap is repaired by re-running the same
-    * delete — victims are gone from staged files, so the rewrite is
-    * idempotent.
+    * dot-prefixed). A crash mid-swap leaves the moved survivors next to
+    * their originals: re-running the same delete drops the victims, but
+    * the survivors it rewrites then sit in the table twice.
     *
     * Returns one stats row: (files_total, files_rewritten, rows_deleted,
     * rows_kept_rewritten). Victim sets ride as a plain semi/anti join —
@@ -251,17 +250,8 @@ object Merge {
     val kept = sub.join(vkeys, Seq(keyCol), "left_anti")
       .select(table.columns.map(col): _*)
     val subCount = sub.count()
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(target, s".delstage_$token")
-    kept.write.parquet(stage.toString)
-    val keptCount = spark.read.parquet(stage.toString).count()
-    // swap: add survivors first (unique names), then drop the originals
-    fs.listStatus(stage).filter(_.getPath.getName.startsWith("part-"))
-      .foreach { s =>
-        fs.rename(s.getPath, new Path(target, s"del_$token-${s.getPath.getName}"))
-      }
-    affected.foreach { f => fs.delete(new Path(new java.net.URI(f).getPath), false) }
-    fs.delete(stage, true)
+    val (_, keptCount) = graft.sources.Sinks.swapFiles(kept, path,
+      affected.toSeq.map(f => new Path(new java.net.URI(f).getPath)))
     Seq((filesTotal.toLong, affected.length.toLong, subCount - keptCount, keptCount))
       .toDF("files_total", "files_rewritten", "rows_deleted", "rows_kept_rewritten")
   }
@@ -272,10 +262,10 @@ object Merge {
     * task + one open per file. Compaction reads ONLY the files below
     * `smallBytes`, rewrites their union into ceil(bytes/targetBytes)
     * right-sized files (coalesce — a rebalance, no shuffle), and swaps
-    * them in staged (survivors added before originals drop, same
-    * visibility contract as [[targetedDelete]]). Files already at size
-    * are never touched — compaction cost tracks the SMALL fraction, not
-    * the table.
+    * them in through [[graft.sources.Sinks.swapFiles]] (survivors added
+    * before originals drop, same visibility contract as
+    * [[targetedDelete]]). Files already at size are never touched —
+    * compaction cost tracks the SMALL fraction, not the table.
     *
     * Returns one stats row: (files_before, files_compacted, files_added,
     * rows_moved). Idempotent: a second run finds nothing under the
@@ -296,17 +286,9 @@ object Merge {
     val totalBytes = small.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val sub = spark.read.parquet(small.map(_.getPath.toString).toIndexedSeq: _*)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(target, s".compact_$token")
-    sub.coalesce(nOut).write.parquet(stage.toString)
-    val moved = spark.read.parquet(stage.toString).count()
-    val staged = fs.listStatus(stage).filter(_.getPath.getName.startsWith("part-"))
-    staged.foreach { s =>
-      fs.rename(s.getPath, new Path(target, s"cmp_$token-${s.getPath.getName}"))
-    }
-    small.foreach(s => fs.delete(s.getPath, false))
-    fs.delete(stage, true)
-    Seq((dataFiles.length.toLong, small.length.toLong, staged.length.toLong, moved))
+    val (added, moved) = graft.sources.Sinks.swapFiles(sub.coalesce(nOut), path,
+      small.toSeq.map(_.getPath))
+    Seq((dataFiles.length.toLong, small.length.toLong, added.toLong, moved))
       .toDF("files_before", "files_compacted", "files_added", "rows_moved")
   }
 

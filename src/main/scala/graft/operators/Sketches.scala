@@ -95,14 +95,6 @@ object Sketches {
       .select((groupCols.map(col) :+ col("est_distinct")) ++ extraCols.map(col): _*)
   }
 
-  def hllEstimate(regs: DataFrame, groupCols: Seq[String]): DataFrame =
-    estimateFromGrouped(
-      regs.groupBy(groupCols.map(col): _*)
-        .agg(
-          sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${RemBits + 1} - rho)")).as("s_present"),
-          count(lit(1)).as("n_present")),
-      groupCols, Nil)
-
   /** Estimate + register digest from a register frame in ONE aggregation
     * pass — one scan, and safe on sources that cannot be self-joined
     * (e.g. a drained streaming memory table, whose View attributes fail

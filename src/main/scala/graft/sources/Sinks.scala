@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.io.IOException
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sinks (SURVEY.md §2.1 K-ops), re-expressed for a columnar lake.
@@ -8,7 +12,9 @@ import org.apache.spark.sql.functions._
   * The reference's MySQL tables become partitioned parquet: the
   * table-per-year scheme (gec_inv_2023/24/25) collapses into one table
   * partitioned by year (SURVEY §4), so year predicates prune directories
-  * and a MERGE rewrites only affected partitions. */
+  * and a MERGE rewrites only affected partitions. Every replace of live
+  * data goes through one staged swap: stage hidden, rename in, drop the
+  * old copy. */
 object Sinks {
 
   /** K1: JSON record-array sink → JSON-lines (the scalable spelling of the
@@ -30,79 +36,114 @@ object Sinks {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
 
-  /** K4/K5/K6 target: partitioned parquet table keyed by a year column.
-    * Dynamic partition overwrite = the bounded-rewrite MERGE target
-    * (only partitions present in `df` are replaced — the plain-Spark
-    * equivalent of upserting into the year tables). */
+  /** K4/K5/K6 target: partitioned parquet table keyed by a year column;
+    * [[writePartitionedStaged]] replaces the years present in `df`. */
   def writePartitionedByYear(df: DataFrame, path: String, yearCol: String): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(yearCol)
-      .parquet(path)
+    writePartitionedStaged(df, path, yearCol)
 
-  /** K4 staged-commit variant: replace exactly the partitions present in
-    * `df` via write-to-staging + per-partition atomic renames — no reliance
-    * on dynamic-overwrite's deferred deletion, and the live table stays
-    * readable at every instant (staging and backup directories start with
-    * '.', which parquet readers ignore).
+  /** K4 staged commit, the one publish path: replace exactly the
+    * partitions present in `df`, and the live table stays readable at
+    * every instant (staging and backup directories start with '.', which
+    * parquet readers ignore).
     *
     * Protocol, per affected partition P (df must carry P's FULL intended
     * content — for a MERGE, existing ∪ batch):
-    *   1. write df under `path/.staging_token/P` (a normal parquet job)
+    *   1. write df under `path/.staging_<uuid>/P` (one parquet job)
     *   2. rename live P → `.backup_P`
     *   3. rename staged P → live P
     *   4. delete `.backup_P`, then the staging dir
     * Each rename is a single atomic directory move. Crash anywhere leaves
-    * a recoverable state, and [[recoverStagedPartitions]] (run at the start
-    * of every write) repairs it: a `.backup_P` whose live P is missing is
-    * restored (the crash hit between 2 and 3 — the backup holds the only
-    * copy), any other backup/staging leftovers are stale and dropped. A
-    * replayed streaming batch then redoes the merge idempotently — keyed
-    * upsert makes replay convergent, so at-least-once delivery plus this
-    * commit yields an exactly-once-by-key table. */
-  def writePartitionedStaged(df: DataFrame, path: String, partCol: String,
-                             token: String = java.util.UUID.randomUUID().toString): Unit = {
-    import org.apache.hadoop.fs.Path
+    * a recoverable state, and [[recoverStaged]] (run at the start of every
+    * write) repairs it: a `.backup_P` whose live P is missing is restored
+    * (the crash hit between 2 and 3 — the backup holds the only copy),
+    * any other backup/staging leftovers are stale and dropped. A caller
+    * that reads the live table to build `df` runs [[recoverStaged]] before
+    * that read, or a partition caught between 2 and 3 is missing from its
+    * MERGE input. */
+  def writePartitionedStaged(df: DataFrame, path: String, partCol: String): Unit = {
     val target = new Path(path)
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    recoverStaged(df.sparkSession, path)
     fs.mkdirs(target)
-    recoverStagedPartitions(df.sparkSession, path)
-    val stage = new Path(target, s".staging_$token")
+    val stage = new Path(target, s".staging_${UUID.randomUUID()}")
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(stage.toString)
-    val parts = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.startsWith(partCol + "="))
-    parts.foreach { p =>
-      val dest = new Path(target, p.getName)
-      val backup = new Path(target, ".backup_" + p.getName)
-      if (fs.exists(dest)) fs.rename(dest, backup)
-      fs.rename(p, dest)
-      fs.delete(backup, true)
-    }
+    fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith(partCol + "="))
+      .foreach(p => swapIn(fs, p, new Path(target, p.getName)))
     fs.delete(stage, true)
   }
 
-  /** Crash repair for [[writePartitionedStaged]] — idempotent, safe to run
-    * any time: restores partitions whose only copy sits in a `.backup_`
-    * directory, then clears stale staging/backup leftovers. */
-  def recoverStagedPartitions(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(target)) return
-    fs.listStatus(target).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(".backup_")) {
-        val dest = new Path(target, n.stripPrefix(".backup_"))
-        if (!fs.exists(dest)) fs.rename(s.getPath, dest) // only surviving copy
-        else fs.delete(s.getPath, true)                  // superseded backup
-      }
-    }
-    fs.listStatus(target).foreach { s =>
-      if (s.getPath.getName.startsWith(".staging_")) fs.delete(s.getPath, true)
+  /** Whole-table staged commit: the same swap on the table directory
+    * itself, staged in the hidden sibling `.staging_<name>` and backed up
+    * as `.backup_<name>`, so between the two renames the table is absent
+    * and a caller that reads it to build `df` runs [[recoverStaged]]
+    * first. */
+  def writeStaged(df: DataFrame, path: String): Unit = {
+    val live = new Path(path)
+    recoverStaged(df.sparkSession, path)
+    val stage = sibling(live, ".staging_")
+    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    swapIn(live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), stage, live)
+  }
+
+  /** Crash repair for both staged commits — idempotent, safe to run any
+    * time: restores the table or partitions whose only copy sits in a
+    * `.backup_` directory, drops superseded backups, then clears stale
+    * staging leftovers. */
+  def recoverStaged(spark: SparkSession, path: String): Unit = {
+    val live = new Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    restoreOrDrop(fs, live)
+    fs.delete(sibling(live, ".staging_"), true)
+    if (fs.exists(live)) fs.listStatus(live).map(_.getPath).foreach { p =>
+      val n = p.getName
+      if (n.startsWith(".backup_")) restoreOrDrop(fs, new Path(live, n.stripPrefix(".backup_")))
+      else if (n.startsWith(".staging_")) fs.delete(p, true)
     }
   }
+
+  /** Add-then-drop file swap inside a flat parquet table: writes `df` to a
+    * hidden staging dir, moves its part files in under a fresh token
+    * prefix, then deletes the `replaced` files and the staging dir. Every
+    * surviving row stays visible at every instant; a reader between the
+    * add and the drop may count the moved rows twice (plain parquet has
+    * no atomic multi-file swap). Returns (files added, rows added). */
+  def swapFiles(df: DataFrame, path: String, replaced: Seq[Path]): (Int, Long) = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val token = UUID.randomUUID().toString.take(8)
+    val stage = new Path(target, s".staging_$token")
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n")).write.parquet(stage.toString)
+    val staged = fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
+    staged.foreach(p => move(fs, p, new Path(target, s"$token-${p.getName}")))
+    replaced.foreach(fs.delete(_, false))
+    fs.delete(stage, true)
+    (staged.length, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** The one directory swap: live → `.backup_`, staged → live, drop backup. */
+  private def swapIn(fs: FileSystem, staged: Path, live: Path): Unit = {
+    val backup = sibling(live, ".backup_")
+    if (fs.exists(live)) move(fs, live, backup)
+    move(fs, staged, live)
+    fs.delete(backup, true)
+  }
+
+  /** Recovery for one [[swapIn]] target: a lone backup is the only copy
+    * and goes back live; a backup next to a live directory is stale. */
+  private def restoreOrDrop(fs: FileSystem, live: Path): Unit = {
+    val backup = sibling(live, ".backup_")
+    if (fs.exists(backup)) {
+      if (fs.exists(live)) fs.delete(backup, true) else move(fs, backup, live)
+    }
+  }
+
+  private def sibling(p: Path, prefix: String): Path =
+    new Path(p.getParent, prefix + p.getName)
+
+  // a failed rename must stop the commit before it drops the only copy
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IOException(s"rename $from -> $to failed")
 
   /** K3: HTTP POST sink — each partition posts its rows as JSON-array
     * batches (the reference POSTs `to_json(orient="records")` payloads,
@@ -151,12 +192,14 @@ object Sinks {
     * rule names) to a side path — the bulk equivalent of the reference's
     * per-row error taxonomy + `--dump-fail` files
     * (ImportInvoiceReport.php:199-291). The (validCount, rejectCount)
-    * summary rides the write passes themselves via `observe` — no
-    * re-reading of either output, zero extra scans. */
+    * summary rides the write passes themselves via `observe`, so neither
+    * output is read back. The two writes are two jobs, though, and each
+    * re-runs the input lineage that `valid` and `rejects` share unless the
+    * caller persisted it. */
   def writeWithRejects(valid: DataFrame, rejects: DataFrame,
                        mainPath: String, rejectPath: String): (Long, Long) = {
-    val obsValid  = org.apache.spark.sql.Observation()
-    val obsReject = org.apache.spark.sql.Observation()
+    val obsValid  = Observation()
+    val obsReject = Observation()
     valid.observe(obsValid, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(mainPath)
     rejects.withColumn("_failed_rules",

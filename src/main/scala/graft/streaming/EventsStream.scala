@@ -392,23 +392,6 @@ object EventsStream {
       .where(col("event_type") =!= DrainType)
   }
 
-  /** The reference's import loop (S10 → F6 → K4) in streaming form:
-    * readStream → foreachBatch MERGE into a parquet table keyed by event_id
-    * and PARTITIONED BY event_date. Each micro-batch:
-    *   1. prunes the target read to the batch's own dates (partition
-    *      pruning — untouched history is never scanned),
-    *   2. merges the batch over just those partitions,
-    *   3. commits through [[graft.sources.Sinks.writePartitionedStaged]]:
-    *      the merged content lands in a hidden staging directory first,
-    *      then swaps in with per-partition atomic renames — no dependence
-    *      on dynamic-overwrite deferred deletion, the table is readable at
-    *      every instant, and any crash point is repaired by the recovery
-    *      pass at the next batch (see the sink's protocol note).
-    * Replaying a batch (at-least-once delivery) cannot duplicate rows —
-    * the exactly-once-by-key contract of the reference's updateOrCreate —
-    * and per-batch work is O(batch dates), not O(table history). The
-    * merged plan reads the live partitions while WRITING only the staging
-    * directory, so no self-overwrite materialization barrier is needed. */
   /** Streaming CDC apply: maintain a per-user SNAPSHOT table from the
     * event changelog — latest row per user by (ts, event_id) wins,
     * 'error' is the tombstone (q99's compaction semantics, maintained
@@ -423,12 +406,14 @@ object EventsStream {
     * StreamingSpec pins with shuffled multi-file input). Read the
     * logical snapshot with `.where(!col("__deleted"))`.
     *
-    * The snapshot swaps through a staging dir + rename (write stage,
-    * swap in, drop old): the merged plan reads the live snapshot while
-    * writing only staging, so no self-overwrite materialization barrier
-    * is needed, and a crash before the swap leaves the previous snapshot
-    * intact. Per-batch work is O(batch ∪ snapshot) — the snapshot is
-    * keys-sized, not history-sized. */
+    * The snapshot commits through [[graft.sources.Sinks.writeStaged]]
+    * (write a hidden stage, swap it in, drop the old copy): the merged
+    * plan reads the live snapshot while writing only staging, so no
+    * self-overwrite materialization barrier is needed. Each batch runs
+    * the sink's recovery before it reads the snapshot, so a crash at any
+    * point of the swap resumes from the last committed snapshot.
+    * Per-batch work is O(batch ∪ snapshot) — the snapshot is keys-sized,
+    * not history-sized. */
   def streamCdcApply(spark: SparkSession, dir: String, targetPath: String,
                      glob: String = "events*.parquet",
                      maxFilesPerTrigger: Int = 1): Unit = {
@@ -453,6 +438,9 @@ object EventsStream {
           val keys = Seq("user_id")
           val ord = Seq("ts", "event_id")
           val del = col("event_type") === "error"
+          // a crash between the swap's renames left the snapshot only in
+          // its backup: restore it before reading, or the merge starts empty
+          graft.sources.Sinks.recoverStaged(ss, targetPath)
           val existing =
             try Some(ss.read.parquet(targetPath))
             catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -460,16 +448,7 @@ object EventsStream {
           // dropping compaction — ghosts must survive from batch one)
           val merged = Merge.applyChangelogVersioned(
             existing.getOrElse(b.where(lit(false))), b, keys, ord, del)
-          val stage = s"$targetPath.stage_$batchId"
-          merged.write.mode("overwrite").parquet(stage)
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(stage), ss.sparkContext.hadoopConfiguration)
-          val tgt = new org.apache.hadoop.fs.Path(targetPath)
-          val old = new org.apache.hadoop.fs.Path(s"$targetPath.old_$batchId")
-          if (fs.exists(tgt)) fs.rename(tgt, old)
-          fs.rename(new org.apache.hadoop.fs.Path(stage), tgt)
-          fs.delete(old, true)
-          ()
+          graft.sources.Sinks.writeStaged(merged, targetPath)
         } finally b.unpersist()
       }
       .trigger(Trigger.AvailableNow())
@@ -477,6 +456,23 @@ object EventsStream {
     q.awaitTermination()
   }
 
+  /** The reference's import loop (S10 → F6 → K4) in streaming form:
+    * readStream → foreachBatch MERGE into a parquet table keyed by event_id
+    * and PARTITIONED BY event_date. Each micro-batch:
+    *   1. prunes the target read to the batch's own dates (partition
+    *      pruning — untouched history is never scanned),
+    *   2. merges the batch over just those partitions,
+    *   3. commits through [[graft.sources.Sinks.writePartitionedStaged]]:
+    *      the merged content lands in a hidden staging directory first,
+    *      then swaps in with per-partition atomic renames — the table is
+    *      readable at every instant, and any crash point is repaired by
+    *      the recovery pass the next batch runs before it reads the
+    *      target (see the sink's protocol note).
+    * Replaying a batch (at-least-once delivery) cannot duplicate rows —
+    * the exactly-once-by-key contract of the reference's updateOrCreate —
+    * and per-batch work is O(batch dates), not O(table history). The
+    * merged plan reads the live partitions while WRITING only the staging
+    * directory, so no self-overwrite materialization barrier is needed. */
   def streamingUpsert(spark: SparkSession, dir: String, targetPath: String): Unit = {
     import graft.operators.Merge
     val events = eventsStream(spark, dir)
@@ -490,6 +486,7 @@ object EventsStream {
         try {
           val dates = b.select("event_date").distinct().collect()
             .map(_.getAs[java.sql.Date](0))
+          graft.sources.Sinks.recoverStaged(ss, targetPath)
           val existing =
             try Some(ss.read.parquet(targetPath)
               .where(col("event_date").isin(dates.toSeq: _*)))
@@ -498,8 +495,7 @@ object EventsStream {
             case Some(e) => Merge.upsert(e, b, Seq("event_id"))
             case None    => b
           }
-          graft.sources.Sinks.writePartitionedStaged(merged, targetPath,
-            "event_date", token = s"batch_$batchId")
+          graft.sources.Sinks.writePartitionedStaged(merged, targetPath, "event_date")
         } finally b.unpersist()
       }
       .trigger(Trigger.AvailableNow())

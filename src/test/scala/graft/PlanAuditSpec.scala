@@ -121,7 +121,7 @@ class PlanAuditSpec extends SparkSpec {
     val li = spark.read.parquet(s"$d/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate"),
         year(col("l_shipdate")).as("ship_year"))
-    graft.sources.Sinks.writePartitionedByYear(li, dir, "ship_year")
+    graft.sources.Sinks.writePartitionedStaged(li, dir, "ship_year")
     val back = spark.read.parquet(dir).where(col("ship_year") === 1995)
       .groupBy("ship_year").agg(count(lit(1)).as("n"))
     val plan = back.queryExecution.executedPlan.toString

@@ -62,7 +62,7 @@ class SinksSpec extends SparkSpec {
     val path = s"${tmp()}/table"
     val v1 = Seq((1, 2023, "a"), (2, 2024, "b")).toDF("id", "yr", "v")
     Sinks.writePartitionedByYear(v1, path, "yr")
-    // second write touches only 2024 — 2023 must survive (dynamic overwrite)
+    // second write touches only 2024 — 2023 must survive (staged commit)
     val v2 = Seq((3, 2024, "B")).toDF("id", "yr", "v")
     Sinks.writePartitionedByYear(v2, path, "yr")
     val got = spark.read.parquet(path).select("id", "yr", "v")
@@ -106,6 +106,48 @@ class SinksSpec extends SparkSpec {
     val leftovers = fs.listStatus(new Path(path)).map(_.getPath.getName)
       .filter(n => n.startsWith(".backup_") || n.startsWith(".staging_"))
     assert(leftovers.isEmpty)
+  }
+
+  test("etl publish (dbdFinancial upsert → writePartitionedByYear) survives crashes mid-commit") {
+    import org.apache.hadoop.fs.Path
+    import graft.pipelines.Pipelines
+    val path = s"${tmp()}/company_year"
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def table() = spark.read.parquet(path)
+      .select("tax_id", "fiscal_year", "total_revenue", "cost_of_goods_sold", "net_profit")
+      .as[(String, Int, Option[Double], Option[Double], Option[Double])].collect().toSet
+    def leftovers(): Seq[String] = fs.listStatus(new Path(path)).map(_.getPath.getName).toSeq
+      .filter(n => n.startsWith(".backup_") || n.startsWith(".staging_"))
+    val (a, b) = ("0105537086874", "0994000158378")
+    val base = Set((a, 2021, Option(1.0), Option(2.0), Option(3.0)),
+      (b, 2022, Option(4.0), Option(5.0), Option(6.0)), (a, 2023, Option(7.0), Option(8.0), Option(9.0)))
+    Sinks.writePartitionedByYear(base.toSeq.toDF("tax_id", "fiscal_year", "total_revenue",
+      "cost_of_goods_sold", "net_profit"), path, "fiscal_year")
+    assert(table() == base)
+
+    // the delivery touches 2022 and 2023; crash 1: its upsert is fully
+    // staged, no partition renamed yet — the live table is the base
+    val upserted = Pipelines.dbdFinancial(spark, s"$fixtures/dbd_financial.json",
+      spark.read.parquet(path))
+    upserted.write.partitionBy("fiscal_year").parquet(s"$path/.staging_crash")
+    assert(table() == base)
+    // crash 2: between the two renames of 2022 — the live 2022 sits only
+    // in its backup; the table stays readable, minus that year
+    assert(fs.rename(new Path(path, "fiscal_year=2022"), new Path(path, ".backup_fiscal_year=2022")))
+    assert(table() == base.filter(_._2 != 2022))
+
+    // the next publish (a delivery touching only 2023, built from the
+    // table as it reads now) restores 2022 and clears the debris
+    val next = java.nio.file.Files.createTempFile("dbd_next", ".json")
+    java.nio.file.Files.write(next, ("""{"records": [{"tax_id": "0105537086874", """ +
+      """"fiscal_year": 2023, "item_th": "รายได้รวม", "amount": "70.5"}]}""").getBytes("UTF-8"))
+    Sinks.writePartitionedByYear(Pipelines.dbdFinancial(spark, next.toString,
+      spark.read.parquet(path)), path, "fiscal_year")
+    assert(table() == base.map {
+      case (`a`, 2023, _, _, _) => (a, 2023, Option(70.5), None, None)
+      case r => r
+    })
+    assert(leftovers().isEmpty)
   }
 
   test("reject-channel sink splits valid/reject with counts") {

@@ -144,7 +144,7 @@ class StreamingSpec extends SparkSpec {
     EventsStream.streamingUpsert(spark, inDir, target)
     val after = partFiles()
     val minDate = java.time.LocalDate.ofEpochDay(minDay).toString
-    // dynamic overwrite: the touched partition gets new file names, every
+    // staged commit: the touched partition gets new file names, every
     // other partition's files are bit-identical (same names, untouched)
     assert(after(s"event_date=$minDate") != before(s"event_date=$minDate"))
     before.filter(_._1 != s"event_date=$minDate").foreach { case (p, files) =>
@@ -552,11 +552,11 @@ class StreamingSpec extends SparkSpec {
           col("event_id") * 1000000L))
         .drop("day").coalesce(1).write.mode("overwrite")
         .parquet(s"$base/stage_$name")
-    def install(name: String): Unit = {
+    def install(name: String, dir: String = inDir): Unit = {
       val part = new java.io.File(s"$base/stage_$name").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$inDir/events_$name.parquet"))
+        java.nio.file.Paths.get(s"$dir/events_$name.parquet"))
     }
     write("z_first", all.filter(t => t._3 >= 250))
     write("a_second", all.filter(t => t._3 < 250))
@@ -580,5 +580,28 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "event_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(live2 == Set((1L, 150L), (3L, 300L), (4L, 500L)))
+
+    // crash between the snapshot swap's two renames: the live snapshot
+    // sits only in its backup, next to a half-written stage. The next run
+    // reads only a new file, so it must resume from the restored backup.
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(target), new Path(s"$base/.backup_snap")))
+    assert(fs.mkdirs(new Path(s"$base/.staging_snap")))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/.staging_snap/junk.parquet"),
+      "not parquet".getBytes)
+    val in3 = s"$base/in3"
+    new java.io.File(in3).mkdirs()
+    write("m_third", Seq((4L, 10L, 600L, "purchase", 1.0), (5L, 10L, 610L, "view", 2.0)))
+    install("m_third", in3)
+    EventsStream.streamCdcApply(spark, in3, target, maxFilesPerTrigger = 1)
+    val snap = spark.read.parquet(target)
+    assert(snap.where(!col("__deleted")).select("user_id", "event_id", "event_type")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet ==
+      Set((1L, 150L, "purchase"), (3L, 300L, "view"), (4L, 600L, "purchase"),
+        (5L, 610L, "view")))
+    assert(snap.where(col("__deleted")).select("user_id").collect().map(_.getLong(0)).toSet ==
+      Set(2L))
+    assert(new java.io.File(base).list().filter(_.startsWith(".")).isEmpty)
   }
 }
