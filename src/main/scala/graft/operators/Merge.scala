@@ -224,8 +224,9 @@ object Merge {
     *      transactional table format makes this step atomic).
     * A crash before the swap leaves the table unchanged (staging is
     * dot-prefixed). A crash mid-swap leaves the moved survivors next to
-    * their originals: re-running the same delete drops the victims, but
-    * the survivors it rewrites then sit in the table twice.
+    * their originals; the next run first rolls that swap forward
+    * ([[graft.sources.Sinks.recoverStaged]] finishes the delete the
+    * stage's manifest records), so no survivor is rewritten twice.
     *
     * Returns one stats row: (files_total, files_rewritten, rows_deleted,
     * rows_kept_rewritten). Victim sets ride as a plain semi/anti join —
@@ -237,6 +238,7 @@ object Merge {
     import spark.implicits._
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.sources.Sinks.recoverStaged(spark, path)
     val filesTotal = fs.listStatus(target)
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     val table = spark.read.parquet(path)
@@ -263,7 +265,7 @@ object Merge {
     * `smallBytes`, rewrites their union into ceil(bytes/targetBytes)
     * right-sized files (coalesce — a rebalance, no shuffle), and swaps
     * them in through [[graft.sources.Sinks.swapFiles]] (survivors added
-    * before originals drop, same visibility contract as
+    * before originals drop, same visibility contract and crash repair as
     * [[targetedDelete]]). Files already at size are never touched —
     * compaction cost tracks the SMALL fraction, not the table.
     *
@@ -277,6 +279,7 @@ object Merge {
     require(smallBytes <= targetBytes, "small threshold above target size")
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.sources.Sinks.recoverStaged(spark, path)
     val dataFiles = fs.listStatus(target).filter(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
     val small = dataFiles.filter(_.getLen < smallBytes)

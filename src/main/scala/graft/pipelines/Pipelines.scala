@@ -252,8 +252,10 @@ object Pipelines {
     * and decodes it in its own task, and [[poFileRows]] does all per-file
     * work (CSV split, metadata cells, header positions, echo drop,
     * trailing trim) in that same task, stamping the file's metadata on
-    * each of its rows (J4). Only the Column cleansers and the final sort
-    * run after it: no aggregation, join or window over the files. */
+    * each of its rows (J4). Only the Column cleansers run after it: no
+    * aggregation, join, window or sort over the files, so the whole read is
+    * one stage and rows come out in each file's line order, as the
+    * reference's one-file converter emits them. */
   def poCsvMany(spark: SparkSession, glob: String): DataFrame = {
     val raw = Ingest.linesPerFile(spark, glob).flatMap { r =>
       val file = r.getString(0)
@@ -276,7 +278,6 @@ object Pipelines {
       trim(regexp_replace(buyer, "^.*?\\(\\d{10,20}\\)", "")).as("buyer_name"),
       ThaiDates.parseUsDate(col("from_raw")).as("report_from"),
       ThaiDates.parseUsDate(col("to_raw")).as("report_to"))
-      .orderBy("po_no")
   }
 
   /** SURVEY §7.4.3 named variants: the reference ships two Thai-key rename

@@ -1,6 +1,11 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonProcessingException,
+  JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -160,8 +165,10 @@ object Ingest {
 
   /** S10: streaming JSON scan with a JSON-pointer-style sub-array
     * (`/records`), as the importers do with JsonMachine
-    * (ImportInvoiceReport.php:70-79). Spark's multiLine JSON scan is already
-    * streaming/partitioned; the pointer becomes explode(records). */
+    * (ImportInvoiceReport.php:70-79), with the record fields inferred:
+    * Spark's multiLine JSON scan infers them in a pass of its own, and the
+    * pointer becomes explode(records). The pipelines read through the
+    * declared-field form below. */
   def jsonPointer(spark: SparkSession, path: String, pointer: String): DataFrame = {
     val field = pointer.stripPrefix("/")
     spark.read.option("multiLine", "true").json(path)
@@ -169,18 +176,96 @@ object Ingest {
       .select(col("r.*"))
   }
 
-  /** [[jsonPointer]] with a declared record schema: each of `fields` is read
-    * as a string — a JSON number comes through as its text — so no
-    * inference pass scans the files before the read. Fields absent from a
-    * record read null. */
+  /** [[jsonPointer]] with a declared record schema, as a per-file kernel:
+    * one `binaryFile` row per file, and the task that loaded the file
+    * streams it through Jackson once, emitting each record under the
+    * pointer as the string columns `fields` — a string as its text, a
+    * number or boolean as its exact token text, a nested value as its JSON
+    * text, a null or absent field as null (the strings Spark's multiLine
+    * reader gives for the same declared schema); undeclared fields are
+    * skipped. No inference pass and no second parse. A delivery file that
+    * is empty, truncated or not JSON, or has no array at the pointer fails
+    * the read with its path in the message: it never reads as zero rows. */
   def jsonPointer(spark: SparkSession, path: String, pointer: String,
                   fields: Seq[String]): DataFrame = {
-    val field = pointer.stripPrefix("/")
-    val record = StructType(fields.map(StructField(_, StringType)))
-    spark.read.schema(StructType(Seq(StructField(field, ArrayType(record)))))
-      .option("multiLine", "true").json(path)
-      .select(explode(col(field)).as("r"))
-      .select(col("r.*"))
+    val files = spark.read.format("binaryFile").load(path)
+    // binaryFile makes no row for a zero-byte file: check the listing
+    val empty = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i.allFiles() }
+      .flatten.filter(_.getLen == 0)
+    if (empty.nonEmpty)
+      throw new java.io.IOException(s"empty JSON file: ${empty.head.getPath}")
+    val steps = pointer.split('/').filter(_.nonEmpty).toSeq
+    val names = fields.toArray
+    files.select(col("path"), col("content")).flatMap { r =>
+      jsonRecords(r.getString(0), r.getAs[Array[Byte]](1), steps, names).iterator
+        .map(rec => Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(rec)))
+    }(Encoders.row(StructType(fields.map(StructField(_, StringType)))))
+  }
+
+  // Spark's JSON reader defaults: single quotes and NaN/Infinity allowed
+  private val jsonFactory: JsonFactory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /** A nested value as its JSON source text, as Spark's exact string
+    * parsing reads it into a string column; compact JSON when the parser
+    * decoded the bytes through a reader (UTF-16/32) and has no byte offsets. */
+  private def nestedText(p: JsonParser, bytes: Array[Byte]): String = {
+    val from = p.currentTokenLocation().getByteOffset
+    if (from >= 0) {
+      p.skipChildren()
+      new String(bytes, from.toInt, (p.currentLocation().getByteOffset - from).toInt,
+        java.nio.charset.StandardCharsets.UTF_8)
+    } else {
+      val w = new java.io.StringWriter()
+      val g = jsonFactory.createGenerator(w)
+      try g.copyCurrentStructure(p) finally g.close()
+      w.toString
+    }
+  }
+
+  /** The [[jsonPointer]] kernel over one whole file: the declared `fields`
+    * of every record in the array at `pointer` (object keys from the
+    * root). A null element reads as an all-null record. */
+  private[graft] def jsonRecords(file: String, bytes: Array[Byte], pointer: Seq[String],
+                                 fields: Array[String]): Array[Array[String]] = {
+    import JsonToken._
+    def fail(why: String) = throw new java.io.IOException(s"$file: $why")
+    def noArray = fail(s"no array at ${pointer.mkString("/", "/", "")}")
+    val at = fields.zipWithIndex.toMap
+    val p = jsonFactory.createParser(bytes)
+    try {
+      p.nextToken()
+      pointer.foreach { key =>
+        if (p.currentToken != START_OBJECT) noArray
+        while (p.nextToken() == FIELD_NAME && p.currentName != key) { p.nextToken(); p.skipChildren() }
+        if (p.currentToken != FIELD_NAME) noArray
+        p.nextToken()
+      }
+      if (p.currentToken != START_ARRAY) noArray
+      val out = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+      while (p.nextToken() != END_ARRAY) {
+        val rec = new Array[String](fields.length)
+        if (p.currentToken == START_OBJECT) {
+          while (p.nextToken() == FIELD_NAME) {
+            val k = at.getOrElse(p.currentName, -1)
+            p.nextToken() match {
+              case _ if k < 0 => p.skipChildren()
+              case VALUE_NULL => rec(k) = null
+              case START_OBJECT | START_ARRAY => rec(k) = nestedText(p, bytes)
+              case _ => rec(k) = p.getText
+            }
+          }
+        } else if (p.currentToken != VALUE_NULL) fail(s"record ${out.length} is not an object")
+        out += rec
+      }
+      while (p.nextToken() != null) {} // the rest must parse too: no truncation
+      out.toArray
+    } catch {
+      case e: JsonProcessingException => fail(s"corrupt JSON: ${e.getOriginalMessage}")
+    } finally p.close()
   }
 
   /** C44 ragged-row pad/truncate (`normalize_columns`,

@@ -7,6 +7,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.InternalCaches
+
 /** Sinks (SURVEY.md §2.1 K-ops), re-expressed for a columnar lake.
   *
   * The reference's MySQL tables become partitioned parquet: the
@@ -85,10 +87,11 @@ object Sinks {
     swapIn(live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), stage, live)
   }
 
-  /** Crash repair for both staged commits — idempotent, safe to run any
-    * time: restores the table or partitions whose only copy sits in a
-    * `.backup_` directory, drops superseded backups, then clears stale
-    * staging leftovers. */
+  /** Crash repair for all three staged commits — idempotent, safe to run
+    * any time: restores the table or partitions whose only copy sits in a
+    * `.backup_` directory, drops superseded backups, rolls a
+    * [[swapFiles]] stage that holds its manifest forward, then clears
+    * stale staging leftovers. */
   def recoverStaged(spark: SparkSession, path: String): Unit = {
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -97,28 +100,53 @@ object Sinks {
     if (fs.exists(live)) fs.listStatus(live).map(_.getPath).foreach { p =>
       val n = p.getName
       if (n.startsWith(".backup_")) restoreOrDrop(fs, new Path(live, n.stripPrefix(".backup_")))
-      else if (n.startsWith(".staging_")) fs.delete(p, true)
+      else if (n.startsWith(".staging_")) {
+        if (fs.exists(new Path(p, Manifest))) finishSwap(fs, p)
+        fs.delete(p, true)
+      }
     }
   }
 
   /** Add-then-drop file swap inside a flat parquet table: writes `df` to a
-    * hidden staging dir, moves its part files in under a fresh token
-    * prefix, then deletes the `replaced` files and the staging dir. Every
-    * surviving row stays visible at every instant; a reader between the
-    * add and the drop may count the moved rows twice (plain parquet has
-    * no atomic multi-file swap). Returns (files added, rows added). */
+    * hidden staging dir and records there the `replaced` files (the
+    * manifest, written whole by a rename once the stage is complete), then
+    * moves the staged part files in under the stage's token prefix,
+    * deletes the replaced files and drops the stage. Every surviving row
+    * stays visible at every instant; a reader between the add and the drop
+    * may count the moved rows twice (plain parquet has no atomic
+    * multi-file swap). A crash before the manifest leaves the table as it
+    * was; after it, [[recoverStaged]] finishes the moves and the deletes,
+    * so a caller that reads the table to build `df` runs it before that
+    * read. Returns (files added, rows added). */
   def swapFiles(df: DataFrame, path: String, replaced: Seq[Path]): (Int, Long) = {
     val target = new Path(path)
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val token = UUID.randomUUID().toString.take(8)
-    val stage = new Path(target, s".staging_$token")
+    val stage = new Path(target, s".staging_${UUID.randomUUID().toString.take(8)}")
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n")).write.parquet(stage.toString)
-    val staged = fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
-    staged.foreach(p => move(fs, p, new Path(target, s"$token-${p.getName}")))
-    replaced.foreach(fs.delete(_, false))
+    val staged = fs.listStatus(stage).count(_.getPath.getName.startsWith("part-"))
+    val pending = new Path(stage, Manifest + ".tmp")
+    val out = fs.create(pending)
+    try out.write(replaced.map(_.toString + "\n").mkString.getBytes("UTF-8"))
+    finally out.close()
+    move(fs, pending, new Path(stage, Manifest))
+    finishSwap(fs, stage)
     fs.delete(stage, true)
-    (staged.length, obs.get("n").asInstanceOf[Long])
+    (staged, obs.get("n").asInstanceOf[Long])
+  }
+
+  private val Manifest = "_replaces"
+
+  /** The committed half of [[swapFiles]], run again by [[recoverStaged]]:
+    * move what is left of the stage's part files in, then delete the files
+    * its manifest names (a file already gone is skipped). */
+  private def finishSwap(fs: FileSystem, stage: Path): Unit = {
+    val token = stage.getName.stripPrefix(".staging_")
+    fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach(p => move(fs, p, new Path(stage.getParent, s"$token-${p.getName}")))
+    val in = fs.open(new Path(stage, Manifest))
+    val replaced = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    replaced.split('\n').filter(_.nonEmpty).foreach(f => fs.delete(new Path(f), false))
   }
 
   /** The one directory swap: live → `.backup_`, staged → live, drop backup. */
@@ -193,19 +221,22 @@ object Sinks {
     * per-row error taxonomy + `--dump-fail` files
     * (ImportInvoiceReport.php:199-291). The (validCount, rejectCount)
     * summary rides the write passes themselves via `observe`, so neither
-    * output is read back. The two writes are two jobs, though, and each
-    * re-runs the input lineage that `valid` and `rejects` share unless the
-    * caller persisted it. */
+    * output is read back. The input lineage runs once: the valid write
+    * fills the tagged frame that [[graft.operators.Validation.split]]
+    * persisted, the reject write reads it, and the call releases it
+    * (scope "validation") before it returns. */
   def writeWithRejects(valid: DataFrame, rejects: DataFrame,
                        mainPath: String, rejectPath: String): (Long, Long) = {
     val obsValid  = Observation()
     val obsReject = Observation()
-    valid.observe(obsValid, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(mainPath)
-    rejects.withColumn("_failed_rules",
-        concat_ws(",", col("_failed_rules")))
-      .observe(obsReject, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).json(rejectPath)
+    try {
+      valid.observe(obsValid, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(mainPath)
+      rejects.withColumn("_failed_rules",
+          concat_ws(",", col("_failed_rules")))
+        .observe(obsReject, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).json(rejectPath)
+    } finally InternalCaches.release("validation")
     (obsValid.get("n").asInstanceOf[Long],
       obsReject.get("n").asInstanceOf[Long])
   }

@@ -184,21 +184,24 @@ class PoKernelSpec extends SparkSpec {
     val got = po.select(po.columns.map(c => col(c).cast("string")): _*).collect()
       .map(r => r.toSeq.map(v => if (v == null) "null" else v.toString)
         .updated(0, r.getString(0).split('/').last)).toSeq
-    assert(got == Seq(
-      Seq("thai.csv", "1013090869", "72195", "ผู้ขาย หนึ่ง", "2025-07-01", "2025-07-10 14:44:07",
-        "2025-07-15", "1234.56", "1300.0", "2050363000123", "บริษัท หนึ่ง จำกัด", "2025-07-10", "2025-07-14"),
-      Seq("thai.csv", "1013090870", "72196", "ผู้ขาย สอง", "2025-07-02", "2025-07-11 09:15:00",
-        "2025-07-16", "-500.0", "535.0", "2050363000123", "บริษัท หนึ่ง จำกัด", "2025-07-10", "2025-07-14"),
-      Seq("bom.csv", "1013090871", "80002", "ร้าน ข", "null", "2025-08-03 00:00:00",
-        "null", "2000.0", "null", "2050363000456", "บริษัท สอง จำกัด", "2025-08-01", "2025-08-07"),
-      Seq("bom.csv", "1013090880", "80001", "ร้าน ก", "2025-08-02", "2025-08-02 13:05:00",
-        "2025-08-03", "-1171.37", "10.0", "2050363000456", "บริษัท สอง จำกัด", "2025-08-01", "2025-08-07")))
+    // no global order: each file's rows come out in its own line order
+    assert(got.groupBy(_.head) == Map(
+      "thai.csv" -> Seq(
+        Seq("thai.csv", "1013090870", "72196", "ผู้ขาย สอง", "2025-07-02", "2025-07-11 09:15:00",
+          "2025-07-16", "-500.0", "535.0", "2050363000123", "บริษัท หนึ่ง จำกัด", "2025-07-10", "2025-07-14"),
+        Seq("thai.csv", "1013090869", "72195", "ผู้ขาย หนึ่ง", "2025-07-01", "2025-07-10 14:44:07",
+          "2025-07-15", "1234.56", "1300.0", "2050363000123", "บริษัท หนึ่ง จำกัด", "2025-07-10", "2025-07-14")),
+      "bom.csv" -> Seq(
+        Seq("bom.csv", "1013090880", "80001", "ร้าน ก", "2025-08-02", "2025-08-02 13:05:00",
+          "2025-08-03", "-1171.37", "10.0", "2050363000456", "บริษัท สอง จำกัด", "2025-08-01", "2025-08-07"),
+        Seq("bom.csv", "1013090871", "80002", "ร้าน ข", "null", "2025-08-03 00:00:00",
+          "null", "2000.0", "null", "2050363000456", "บริษัท สอง จำกัด", "2025-08-01", "2025-08-07"))))
     assert(po.schema.map(_.name) == Seq("source_file", "po_no", "supplier_code", "supplier_name",
       "order_date", "send_ts", "delivery_date", "amount_incl_vat", "amount_incl_vat_2",
       "buyer_code", "buyer_name", "report_from", "report_to"))
   }
 
-  test("a PO write runs in at most 3 jobs: range sample, sort shuffle, write") {
+  test("a PO write runs in 1 job: no range sample, no sort shuffle") {
     val dir = driftFiles()
     val out = tmpDir("po_write").resolve("out").toString
     val sc = spark.sparkContext
@@ -212,7 +215,7 @@ class PoKernelSpec extends SparkSpec {
       Pipelines.poCsvMany(spark, s"$dir/*.csv").write.parquet(out)
       BusGlue.waitUntilEmpty(sc, 10000)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 3, s"${jobs.get} jobs")
+    assert(jobs.get == 1, s"${jobs.get} jobs")
     assert(spark.read.parquet(out).count() == 4)
   }
 }

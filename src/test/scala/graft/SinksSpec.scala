@@ -161,6 +161,68 @@ class SinksSpec extends SparkSpec {
     assert(rej.getAs[String]("_failed_rules") == "amt_numeric")
   }
 
+  test("writeWithRejects runs its input lineage once and leaves no cache behind") {
+    import graft.core.InternalCaches
+    val seen = spark.sparkContext.longAccumulator("rows_in")
+    val df = spark.range(0, 1000, 1, 4).as[Long]
+      .map { i => seen.add(1); (i, if (i % 7 == 0) "x" else i.toString) }
+      .toDF("id", "amt")
+    val (valid, rejects) = Validation.split(df, Seq(Validation.numeric("amt")))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val base = tmp()
+    val counts = Sinks.writeWithRejects(valid, rejects, s"$base/main", s"$base/rejects")
+    assert(counts == ((857L, 143L)))
+    assert(seen.value == 1000L, s"the input lineage ran for ${seen.value} rows, not 1000")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "a persisted RDD was left")
+    assert(InternalCaches.trackedCount("validation") == 0)
+    assert(spark.read.parquet(s"$base/main").count() == 857L)
+  }
+
+  test("swapFiles crash between add and drop: the next targetedDelete rolls it forward") {
+    import org.apache.hadoop.fs.Path
+    import graft.operators.Merge
+    val dir = s"${tmp()}/t"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rows = (0L until 800L).map(i => (i, s"v$i"))
+    rows.toDF("k", "payload").repartitionByRange(8, col("k")).write.parquet(dir)
+    def table(): Map[Long, Int] =
+      spark.read.parquet(dir).as[(Long, String)].collect().groupBy(_._1).map { case (k, v) => k -> v.length }
+    def leftovers(): Seq[String] =
+      fs.listStatus(new Path(dir)).map(_.getPath.getName).filter(_.startsWith(".")).toSeq
+    /** The state a delete of `victims` leaves when it stops after staging
+      * the survivors of their file (in two part files) and recording that
+      * file, with `movedIn` of the parts renamed into the table; returns
+      * the number of survivors staged. */
+    def crashMidSwap(victims: Seq[Long], token: String, movedIn: Int): Long = {
+      val file = spark.read.parquet(dir).where(col("k") === victims.head)
+        .select(input_file_name()).as[String].head()
+      val stage = new Path(dir, s".staging_$token")
+      val survivors = spark.read.parquet(file).where(!col("k").isin(victims: _*))
+      survivors.repartition(2).write.parquet(stage.toString)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$stage/_replaces"),
+        (new java.net.URI(file).getPath + "\n").getBytes("UTF-8"))
+      fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-")).take(movedIn)
+        .foreach(p => assert(fs.rename(p, new Path(dir, s"$token-${p.getName}"))))
+      survivors.count()
+    }
+    def delete(victims: Seq[Long]): Unit = Merge.targetedDelete(spark, dir, "k", victims.toDF("k")).collect()
+
+    // crash 1: every survivor added, the victims' file not yet dropped —
+    // the survivors read twice until the next run finishes the swap
+    val staged = crashMidSwap(Seq(10L, 11L, 12L), "crash001", movedIn = 2)
+    assert(table().values.sum == 800 + staged)
+    delete(Seq(10L, 11L, 12L))
+    assert(table().values.sum == 797)
+    assert(table() == rows.map(_._1).filterNot(Set(10L, 11L, 12L)).map(_ -> 1).toMap)
+    assert(leftovers().isEmpty, leftovers())
+
+    // crash 2: in the middle of the moves — one staged part still waits
+    crashMidSwap(Seq(500L, 501L), "crash002", movedIn = 1)
+    delete(Seq(500L, 501L))
+    assert(table() == rows.map(_._1).filterNot(Set(10L, 11L, 12L, 500L, 501L)).map(_ -> 1).toMap)
+    assert(leftovers().isEmpty, leftovers())
+  }
+
   test("JDBC sink round-trips through embedded Derby with batched inserts") {
     // Derby ships on the Spark classpath (the Hive-metastore dependency),
     // so the batchsize/driver wiring is exercised against a real JDBC
