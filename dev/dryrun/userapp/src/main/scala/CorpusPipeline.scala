@@ -26,9 +26,8 @@ object CorpusPipeline {
     val exact = Dedup.exactByDigest(kept, "text", "doc_id")
 
     // ---- 2. near-dup dedup (exercises CC + checkpoint mode) ----
-    val pairs = Dedup.minhashNearDupPairs(
-      exact.select("doc_id", "text"), "doc_id", "text",
-      n = 3, k = 16, bands = 4, threshold = 0.5)
+    val pairs = Dedup.jaccardPairsPrefixFilter(
+      exact.select("doc_id", "text"), "doc_id", "text", 3, 0.5)
     val clean = Dedup.dropNearDups(exact, "doc_id", pairs)
 
     // ---- 3. publish, staged + partitioned (reader-safe mid-write) ----

@@ -1,5 +1,5 @@
 // DEPLOY dry run, leg 3: the dirty-source ingest surface as a user —
-// encoding-fallback CSV, multi-sheet Excel (xlsx + legacy xls), PDF
+// encoding-probing CSV, multi-sheet Excel (xlsx + legacy xls), PDF
 // positioned tables, all through the packaged jar via spark-submit.
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -12,9 +12,13 @@ object IngestLeg {
     val spark = SparkSession.builder().appName("ingest-leg").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // CSV whose encoding must be sniffed (the reference's TIS-620 world)
-    val csv = Ingest.csvWithEncodingFallback(spark, s"$dir/po_report.csv")
-    println(s"[ingest] csv rows=${csv.count()} cols=${csv.columns.length}")
+    // CSV whose encoding must be sniffed (the reference's TIS-620 world):
+    // each file decoded in its own task, its lines parsed as CSV
+    import spark.implicits._
+    val lines = Ingest.csvLinesPerFileEncoding(spark, s"$dir/po_report.csv")
+    val csv = spark.read.csv(lines.select("line").as[String])
+    println(s"[ingest] csv rows=${csv.count()} cols=${csv.columns.length} " +
+      s"encoding=${lines.select("encoding").head().getString(0)}")
 
     // multi-sheet xlsx union with per-sheet tag; legacy .xls through the
     // same call (format sniff + engine cascade)

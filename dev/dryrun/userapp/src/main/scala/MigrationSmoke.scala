@@ -190,7 +190,7 @@ object MigrationSmoke {
       req(t > 0 && g == 6, s"text=$t grid=$g (grid must be 6)"); s"text_pages=$t grid_rows=$g"
     }
     row("csv:encoding-fallback") {
-      val n = Ingest.csvWithEncodingFallback(spark, s"$fix/po_report.csv").count()
+      val n = Ingest.csvLinesPerFileEncoding(spark, s"$fix/po_report.csv").count()
       req(n > 0, "csv empty"); s"lines=$n"
     }
     row("excel:multisheet(xlsx+biff8)") {

@@ -10,12 +10,10 @@ import org.apache.spark.sql.expressions.Window
   * Design:
   *  - exact: hash-groupBy on a content digest — one shuffle on a 128-bit key,
   *    never on the document text itself (bytes moved = keys + ids, not docs).
-  *  - MinHash+LSH: shingle → k minhashes → band keys, all inside ONE
-  *    codegen kernel pass over the token array
-  *    (`plans/VectorExpressions.minhashBandKeys`) → explode (docs × bands
-  *    rows, each tiny) → self-join on band key. Candidate pairs only are
-  *    verified with exact Jaccard over the sorted shingle-hash arrays.
-  *    Shuffle volume is O(docs × bands × 16 bytes), independent of text size.
+  *  - Jaccard near-dups: an exact prefix-filter self-join over sorted
+  *    shingle-hash sets ([[jaccardPairsPrefixFilter]], PPJoin). Candidates
+  *    come from each document's rarest shingles and verify with exact
+  *    Jaccard, so no pair above the threshold is missed.
   *  - SimHash: 64-bit fingerprint via per-token hash bit-voting, banded into
   *    4×16-bit keys for Hamming-distance≤3 blocking.
   * All sketches are deterministic (seeded hashes) — reruns give identical
@@ -110,47 +108,6 @@ object Dedup {
     when(count < 1, array().cast("array<string>")).otherwise(
       array_distinct(transform(sequence(lit(1), count),
         i => concat_ws(" ", slice(toks, i, lit(n))))))
-  }
-
-  /** MinHash+LSH near-duplicate pairs: returns (id_a, id_b, jaccard) for
-    * candidate pairs sharing >=1 LSH band whose verified Jaccard >= threshold.
-    * id_a < id_b; pairs deduplicated across bands BEFORE the verify step so
-    * each candidate's Jaccard is computed once.
-    *
-    * Scale: the only wide exchange is the band-key self-join; its input is
-    * (band_key, id, shingles-digest) — the shingle arrays needed for verify
-    * travel once. For 100 TB, raise `bands`/`k`; `maxBandRows` guards the
-    * join against degenerate boilerplate buckets (see [[capBands]]). */
-  def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3, k: Int = 32, bands: Int = 8,
-                          threshold: Double = 0.6,
-                          maxBandRows: Int = 10000): DataFrame = {
-    import graft.plans.VectorExpressions
-    // both sketches come from one-pass kernels over the materialized token
-    // array (the HOF spelling re-evaluates inlined inputs per element /
-    // per band reference — see wordShingleHashes)
-    val exploded = graft.core.ScanWidth.ensure(df)
-      .select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("toks", tokens(col("text")))
-      .where(size(col("toks")) >= n)
-      .withColumn("sh", VectorExpressions.shingleHashes(col("toks"), n))
-      .withColumn("band", explode(
-        VectorExpressions.minhashBandKeys(col("toks"), n, k, bands)))
-      .drop("toks", "text")
-    val withSig = capBands(exploded, "band", maxBandRows, "minhashNearDupPairs")
-    val a = withSig.select(col("band"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = withSig.select(col("band"), col("id").as("id_b"), col("sh").as("sh_b"))
-    // Verify BEFORE the pair-dedup: the shingle arrays then cross exactly
-    // one exchange (the band join); the dedup shuffle carries only
-    // (id_a, id_b, jaccard). A pair sharing m bands pays m verifications —
-    // m is small (usually 1-2) while a post-join array shuffle is a full
-    // second exchange of every candidate's payload.
-    a.join(b, Seq("band"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("jaccard", VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .dropDuplicates("id_a", "id_b")
   }
 
   // ---- prefix-filter similarity join core (PPJoin family: Xiao et al.,
@@ -949,14 +906,6 @@ object Dedup {
   def simhash64Portable(text: Column): Column =
     graft.plans.VectorExpressions.simhash64Md5(tokens(text))
 
-  /** Winnowing fingerprint of a text column (rolling k-gram hashes, window
-    * minima — Schleimer et al. '03): a sorted array of selected hashes per
-    * document. Overlap between two documents' fingerprints estimates shared
-    * content robustly to insertion/reordering; pairs compare with
-    * `VectorExpressions.jaccardSorted` directly (already sorted). */
-  def winnowFingerprint(text: Column, k: Int = 5, w: Int = 4): Column =
-    graft.plans.VectorExpressions.winnow(tokens(text), k, w)
-
   /** Embedding-cosine near-dup pairs, exact: all (id_a < id_b) pairs with
     * cosine >= threshold. One broadcast pass — correct baseline; use the
     * LSH variant below when the corpus no longer fits a broadcast. */
@@ -1221,31 +1170,5 @@ object Dedup {
         }
       } finally kept.unpersist()
     } finally { newIdx.unpersist(); b.unpersist() }
-  }
-
-  /** Continuous-ingestion dedup: the streaming composition of
-    * [[incrementalNearDupDrops]] — each micro-batch of documents dedups
-    * against everything that survived ANY earlier batch, via the
-    * accumulated index (bootstrapped empty; text is never re-read).
-    * foreachBatch is the read-merge-write seam; per-batch semantics and
-    * the crash/replay contract live in [[dedupBatchAgainstIndex]].
-    * Returns the started query — callers drain with AvailableNow
-    * (`availableNow = true`, the finite-backlog shape) or drive batches
-    * and stop (tests, live streams). */
-  def streamingIncrementalDedup(docs: DataFrame, idCol: String, textCol: String,
-                                outPath: String, indexPath: String,
-                                n: Int = 3, k: Int = 32, bands: Int = 8,
-                                threshold: Double = 0.6, nBuckets: Int = 16,
-                                availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dedupBatchAgainstIndex(batch.toDF(), idCol, textCol, outPath, indexPath,
-          n, k, bands, threshold, nBuckets)
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed metadata,
   * decoded/feature-extracted per partition in batches.
@@ -17,9 +16,7 @@ import org.apache.spark.sql.types._
   *    loader, not the pipeline);
   *  - feature extraction runs via `mapPartitions` over an `Iterator`, the
   *    Scala analogue of `mapInPandas`: one decoder init per partition, rows
-  *    streamed through in batches, never materializing a partition in memory;
-  *  - output schema is declared up front (`featureSchema`) so downstream
-  *    plans resolve without running the decoder.
+  *    streamed through in batches, never materializing a partition in memory.
   */
 object Multimodal {
 
@@ -29,13 +26,6 @@ object Multimodal {
   /** Extracted features: fixed, declared schema. */
   final case class MediaFeatures(media_id: Long, kind: String, n_bytes: Int,
                                  digest: String, features: Array[Float])
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = true),
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("digest", StringType, nullable = true),
-    StructField("features", ArrayType(FloatType), nullable = true)))
 
   /** STUB decoder — stands in for an image/audio codec. Deterministic fake:
     * an 8-dim feature vector derived from byte statistics. Replace with a
@@ -212,12 +202,6 @@ object Multimodal {
   final case class MediaFrame(media_id: Long, frame_idx: Int, ts_ms: Long,
                               frame: Array[Byte])
 
-  val frameSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("frame_idx", IntegerType, nullable = false),
-    StructField("ts_ms", LongType, nullable = false),
-    StructField("frame", BinaryType, nullable = true)))
-
   /** Frame sampling — the one-row→many-rows generator (UDTF) shape a video
     * pipeline needs. STUB: fixed-size byte windows stand in for decoded
     * frames at a fixed sample interval; a real codec swaps in a
@@ -234,30 +218,6 @@ object Multimodal {
           java.util.Arrays.copyOfRange(p,
             i * frameBytes, math.min(p.length, (i + 1) * frameBytes)))
       }
-    }
-  }
-
-  /** Resize — STUB: nearest-neighbor byte-space subsample to a fixed target
-    * length (stands in for an image rescale to a fixed resolution; output
-    * size is always `targetLen` for non-empty payloads, up- or
-    * down-sampling as needed). */
-  def resizeStub(payload: Array[Byte], targetLen: Int): Array[Byte] = {
-    if (payload == null || payload.isEmpty) return Array.empty[Byte]
-    val out = new Array[Byte](targetLen)
-    var i = 0
-    while (i < targetLen) {
-      out(i) = payload((i.toLong * payload.length / targetLen).toInt)
-      i += 1
-    }
-    out
-  }
-
-  /** Batch resize over the media table (per-partition init point, as in
-    * [[extractFeatures]]). */
-  def resized(media: Dataset[MediaRow], targetLen: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map(r => r.copy(payload = resizeStub(r.payload, targetLen)))
     }
   }
 

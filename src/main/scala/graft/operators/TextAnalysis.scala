@@ -40,13 +40,6 @@ object TextAnalysis {
       element_at(stats(text), 2).cast("double") / n)
   }
 
-  /** Mean word length. */
-  def meanWordLen(text: Column): Column = {
-    val toks = tokenCount(text)
-    when(toks === 0, lit(0.0)).otherwise(
-      length(regexp_replace(text, "\\s+", "")).cast("double") / toks)
-  }
-
   /** English stopword hit ratio of the token stream (0..1). */
   val enStopwords: Seq[String] = Seq("the", "a", "an", "and", "or", "of",
     "to", "in", "is", "it", "that", "for", "on", "with", "as", "at", "by")
@@ -66,16 +59,6 @@ object TextAnalysis {
     round((lenScore + punctScore + stopScore) / 3.0, 4)
   }
 
-  /** Heuristic language ID: Thai-script char ratio → 'th'; else English
-    * stopword density → 'en'; else 'und'. Extendable per-script. */
-  def langIdHeuristic(text: Column): Column = {
-    val n = greatest(length(text), lit(1))
-    val thaiRatio = (n - length(regexp_replace(text, "[\\u0E00-\\u0E7F]", ""))).cast("double") / n
-    when(thaiRatio > 0.3, lit("th"))
-      .when(stopwordRatio(text) > 0.05, lit("en"))
-      .otherwise(lit("und"))
-  }
-
   /** Per-language stopword marker sets (small, mutually disjoint — overlap
     * would make the argmax unstable). */
   val langStopwords: Map[String, Seq[String]] = Map(
@@ -83,9 +66,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht"),
     "fr" -> Seq("le", "les", "est", "dans", "que", "pour"),
     "es" -> Seq("el", "los", "una", "por", "para", "del"))
-
-  private def stopwordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(x => x: Any): _*)))
 
   /** Multi-language n-gram/stopword heuristic language ID:
     * CJK char ratio > 0.2 → 'zh'; else argmax of per-language stopword hits
@@ -123,11 +103,6 @@ object TextAnalysis {
     * the exact-dedup key (content-defined; reorder-sensitive). */
   def fingerprint(text: Column): Column =
     md5(Dedup.normalizedText(text))
-
-  /** 64-bit rolling-style content hash via xxhash64 of the normalized text —
-    * cheaper join key than the md5 hex string (8 bytes vs 32). */
-  def fingerprint64(text: Column): Column =
-    xxhash64(Dedup.normalizedText(text))
 
   /** Repetition/diversity profile (Gopher-family filters, Rae et al. 2021
     * §A1.1): [n_tokens, n_distinct, max token count, max bigram count] from

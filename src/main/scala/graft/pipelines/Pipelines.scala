@@ -255,11 +255,15 @@ object Pipelines {
     * each of its rows (J4). Only the Column cleansers run after it: no
     * aggregation, join, window or sort over the files, so the whole read is
     * one stage and rows come out in each file's line order, as the
-    * reference's one-file converter emits them. */
+    * reference's one-file converter emits them. A zero-byte file, or one
+    * without a header on line 5, fails the read naming the file. */
   def poCsvMany(spark: SparkSession, glob: String): DataFrame = {
     val raw = Ingest.linesPerFile(spark, glob).flatMap { r =>
       val file = r.getString(0)
-      poFileRows(r.getSeq[String](2).toArray).iterator
+      val lines = r.getSeq[String](2).toArray
+      if (lines.length < 5 || RowFilters.isBlankCells(CsvOps.splitFields(lines(4), ',')))
+        throw new java.io.IOException(s"$file: no PO header on line 5")
+      poFileRows(lines).iterator
         .map { case (_, cells) => Row.fromSeq(file +: cells.toSeq) }
     }(Encoders.row(poRawSchema))
     def c(k: Int): Column = col(s"c$k")

@@ -308,56 +308,6 @@ object VectorOps {
     if (w == grams) hs else java.util.Arrays.copyOf(hs, w)
   }
 
-  /** MinHash LSH band keys straight from the token array: per shingle one
-    * string hash (seed 42), then k cheap int-seeded rehashes keep the
-    * running per-seed minimum; band key = chained xxhash64 over (band idx,
-    * band's minhashes). One kernel call per row replaces k string hashes
-    * per shingle PLUS the k·bands element_at references that would
-    * re-evaluate an inlined signature expression per reference. */
-  def minhashBandKeys(arr: ArrayData, n: Int, k: Int, bands: Int): Array[Long] = {
-    val sz = arr.numElements()
-    val grams = sz - (n - 1)
-    if (grams <= 0) return Array.emptyLongArray
-    val rowsPerBand = k / bands
-    val toks = new Array[org.apache.spark.unsafe.types.UTF8String](sz)
-    var i = 0
-    while (i < sz) {
-      toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
-      i += 1
-    }
-    val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    i = 0
-    while (i < grams) {
-      var j = 0
-      while (j < n) { parts(j) = toks(i + j); j += 1 }
-      val hs = XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.concatWs(SpaceSep, parts: _*),
-        StringType, 42L)
-      var s = 0
-      while (s < k) {
-        val h = XxHash64Function.hash(s, IntegerType, hs)
-        if (h < mins(s)) mins(s) = h
-        s += 1
-      }
-      i += 1
-    }
-    val keys = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = XxHash64Function.hash(b, IntegerType, 42L)
-      var r = 0
-      while (r < rowsPerBand) {
-        h = XxHash64Function.hash(mins(b * rowsPerBand + r), LongType, h)
-        r += 1
-      }
-      keys(b) = h
-      b += 1
-    }
-    keys
-  }
-
   /** Portable k-slot MinHash signature over word n-grams, built ONLY from
     * `md5(gram)` + affine arithmetic so any SQL engine recomputes it
     * bit-for-bit (the [[md5Top64]] portability contract, extended to a
@@ -368,10 +318,9 @@ object VectorOps {
     *
     * (s+1) <= k <= 2^20 keeps the product below 2^63 for both engines'
     * ANSI arithmetic; the affine maps are universal-hash permutations mod
-    * the Mersenne prime. xxhash-based [[minhashBandKeys]] stays the faster
-    * library default; this variant exists so an incremental dedup INDEX
-    * persisted by one engine can be probed-and-verified by another. Empty
-    * gram sets (< n tokens) yield an empty array. */
+    * the Mersenne prime, so an incremental dedup INDEX persisted by one
+    * engine can be probed-and-verified by another. Empty gram sets
+    * (< n tokens) yield an empty array. */
   def minhashSigPortable(arr: ArrayData, n: Int, k: Int): Array[Long] = {
     val sz = arr.numElements()
     val grams = sz - (n - 1)
@@ -565,19 +514,6 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class MinhashBandKeys(child: Expression, n: Int, k: Int, bands: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.minhashBandKeys(v.asInstanceOf[ArrayData], n, k, bands))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.minhashBandKeys($a, $n, $k, $bands));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   case class PqEncode(child: Expression, cb: Array[Double],
                       norm2: Array[Double], m: Int, codes: Int, subDim: Int)
       extends UnaryExpression {
@@ -659,8 +595,6 @@ object VectorExpressions {
     column(Winnow(expression(tokens), k, w))
   def shingleHashes(tokens: Column, n: Int): Column =
     column(ShingleHashes(expression(tokens), n))
-  def minhashBandKeys(tokens: Column, n: Int, k: Int, bands: Int): Column =
-    column(MinhashBandKeys(expression(tokens), n, k, bands))
   def tokenChunks(tokens: Column, size: Int, step: Int): Column =
     column(TokenChunks(expression(tokens), size, step))
   def minhashSigPortable(tokens: Column, n: Int, k: Int): Column =

@@ -16,12 +16,11 @@ import org.apache.spark.sql.types._
   * dirty data (SURVEY §7.4.5). */
 object Ingest {
 
-  /** S1: CSV read with encoding fallback — try encodings in order until one
-    * round-trips without replacement characters
+  /** S1: the candidate encodings, tried in order until one decodes a
+    * file's first 64 KB without a malformed or unmappable byte
     * (read_po_csv_to_json.py:38-44 tries utf-8-sig, utf-8, cp874, tis-620,
-    * latin1). Spark won't retry encodings natively, so the probe reads a
-    * sample of raw bytes per candidate on the driver (cheap — bytes stream
-    * once), then the winning encoding drives the distributed read. */
+    * latin1). Spark won't retry encodings natively, so [[linesPerFile]]
+    * probes and decodes each file inside the task that read it. */
   val defaultEncodings: Seq[String] = Seq("UTF-8", "x-windows-874", "TIS-620", "ISO-8859-1")
 
   /** Drop a possibly-split trailing multi-byte char (UTF-8 continuations
@@ -34,10 +33,8 @@ object Ingest {
     java.util.Arrays.copyOf(buf, end)
   }
 
-  /** Pick the first candidate that decodes `sample` cleanly. Shared by the
-    * driver-side single-file probe and the per-task many-files path. */
-  def detectEncodingFromBytes(sample: Array[Byte],
-                              encodings: Seq[String] = defaultEncodings): String =
+  /** Pick the first candidate that decodes `sample` cleanly. */
+  private def detectEncodingFromBytes(sample: Array[Byte], encodings: Seq[String]): String =
     encodings.find { enc =>
       try {
         val cs = java.nio.charset.Charset.forName(enc)
@@ -49,73 +46,21 @@ object Ingest {
       } catch { case _: java.nio.charset.CharacterCodingException => false }
     }.getOrElse("ISO-8859-1") // latin1 accepts any byte sequence — last resort
 
-  /** First 64 KB of a file through the Hadoop filesystem API — a bounded
-    * seekable read for any supported scheme (file:, hdfs:, s3a:, …), never
-    * a whole-file driver read; a split trailing multi-byte char is trimmed
-    * so the cut itself can't fail an encoding probe. */
-  def sampleBytes(path: String,
-                  conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val len = fs.getFileStatus(p).getLen
-      val want = math.min(len, 64L * 1024).toInt
-      var buf = new Array[Byte](want)
-      in.readFully(0, buf)
-      if (want.toLong < len) buf = trimSplitTail(buf)
-      buf
-    } finally in.close()
-  }
-
-  /** Probe a file's encoding from its first 64 KB only. */
-  def detectEncoding(path: String, encodings: Seq[String] = defaultEncodings,
-                     conf: org.apache.hadoop.conf.Configuration =
-                       new org.apache.hadoop.conf.Configuration()): String =
-    detectEncodingFromBytes(sampleBytes(path, conf), encodings)
-
-  /** Charsets Spark's CSV reader accepts natively; anything else (cp874,
-    * TIS-620, …) goes through the transcode path. */
-  private val sparkNativeCharsets =
-    Set("UTF-8", "US-ASCII", "ISO-8859-1", "UTF-16", "UTF-16BE", "UTF-16LE", "UTF-32")
-
-  /** Excel-on-Windows writes UTF-8 CSVs with a BOM; the reference's first
-    * candidate is `utf-8-sig` (read_po_csv_to_json.py:39), whose whole
-    * point is stripping it. A kept BOM corrupts the first header cell
-    * (`"<BOM>PO No."` never matches a named-column lookup). */
-  def hasUtf8Bom(bytes: Array[Byte]): Boolean =
-    bytes.length >= 3 && (bytes(0) & 0xFF) == 0xEF &&
-      (bytes(1) & 0xFF) == 0xBB && (bytes(2) & 0xFF) == 0xBF
-
   private def stripBomChar(s: String): String =
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
 
-  /** Read a CSV with encoding fallback; all columns string, no header
-    * promotion (that happens grid-side).
-    *
-    * Thai charsets are outside Spark's CSV whitelist, so those files are
-    * decoded from raw bytes ([[linesPerFile]] with the probed charset) and
-    * parsed via `csv(Dataset[String])`; a BOM-carrying UTF-8 file takes the
-    * same path so the BOM strips (the utf-8-sig semantics). */
-  def csvWithEncodingFallback(spark: SparkSession, path: String,
-                              encodings: Seq[String] = defaultEncodings): DataFrame = {
-    // session hadoop conf: credentials/settings for s3a/hdfs reach the probe
-    val sample = sampleBytes(path, spark.sparkContext.hadoopConfiguration)
-    val enc = detectEncodingFromBytes(sample, encodings)
-    if (sparkNativeCharsets(enc.toUpperCase) && !hasUtf8Bom(sample)) {
-      spark.read
-        .option("header", "false")
-        .option("encoding", enc)
-        .option("inferSchema", "false")
-        .csv(path)
-    } else {
-      import spark.implicits._
-      val lines = linesPerFile(spark, path, Seq(enc)).select(explode(col("lines"))).as[String]
-      spark.read
-        .option("header", "false")
-        .option("inferSchema", "false")
-        .csv(lines)
-    }
+  /** The `binaryFile` source over `path`, failing with the file's path
+    * when the listing holds a zero-byte file: the source makes no row for
+    * one, so a delivered file would vanish without a trace. The check reads
+    * the driver's listing, which the scan then reuses. */
+  private def binaryFiles(spark: SparkSession, path: String): DataFrame = {
+    val files = spark.read.format("binaryFile").load(path)
+    val empty = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i.allFiles() }
+      .flatten.filter(_.getLen == 0)
+    if (empty.nonEmpty)
+      throw new java.io.IOException(s"empty file: ${empty.head.getPath}")
+    files
   }
 
   /** Decode one whole file: the charset is probed from its first 64 KB,
@@ -145,7 +90,7 @@ object Ingest {
     * instead of sharing one split. */
   def linesPerFile(spark: SparkSession, pathGlob: String,
                    encodings: Seq[String] = defaultEncodings): DataFrame = {
-    spark.read.format("binaryFile").load(pathGlob)
+    binaryFiles(spark, pathGlob)
       .select(col("path"), col("content"))
       .map { r =>
         val (enc, lines) = decodeLines(r.getAs[Array[Byte]](1), encodings)
@@ -155,7 +100,7 @@ object Ingest {
 
   /** [[linesPerFile]] one row per line: (source_file, encoding, line_no,
     * line), line_no counting from 0 within the file. Feed the `line` column
-    * to `spark.read.csv(Dataset[String])` per the single-file reader. */
+    * to `spark.read.csv(Dataset[String])` to parse it as CSV. */
   def csvLinesPerFileEncoding(spark: SparkSession, pathGlob: String,
                               encodings: Seq[String] = defaultEncodings): DataFrame =
     linesPerFile(spark, pathGlob, encodings)
@@ -188,13 +133,7 @@ object Ingest {
     * the read with its path in the message: it never reads as zero rows. */
   def jsonPointer(spark: SparkSession, path: String, pointer: String,
                   fields: Seq[String]): DataFrame = {
-    val files = spark.read.format("binaryFile").load(path)
-    // binaryFile makes no row for a zero-byte file: check the listing
-    val empty = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
-      .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i.allFiles() }
-      .flatten.filter(_.getLen == 0)
-    if (empty.nonEmpty)
-      throw new java.io.IOException(s"empty JSON file: ${empty.head.getPath}")
+    val files = binaryFiles(spark, path)
     val steps = pointer.split('/').filter(_.nonEmpty).toSeq
     val names = fields.toArray
     files.select(col("path"), col("content")).flatMap { r =>

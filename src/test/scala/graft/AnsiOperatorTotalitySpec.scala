@@ -38,15 +38,12 @@ class AnsiOperatorTotalitySpec extends SparkSpec {
     "TextAnalysis.tokenCount" -> TextAnalysis.tokenCount _,
     "TextAnalysis.subwordCount" -> TextAnalysis.subwordCount _,
     "TextAnalysis.punctRatio" -> TextAnalysis.punctRatio _,
-    "TextAnalysis.meanWordLen" -> TextAnalysis.meanWordLen _,
     "TextAnalysis.stopwordRatio" -> TextAnalysis.stopwordRatio _,
     "TextAnalysis.qualityScore" -> TextAnalysis.qualityScore _,
-    "TextAnalysis.langIdHeuristic" -> TextAnalysis.langIdHeuristic _,
     "TextAnalysis.langIdMulti" -> TextAnalysis.langIdMulti _,
     "TextAnalysis.halfLangs._1" -> ((c: Column) => TextAnalysis.halfLangs(c)._1),
     "TextAnalysis.halfLangs._2" -> ((c: Column) => TextAnalysis.halfLangs(c)._2),
     "TextAnalysis.fingerprint" -> TextAnalysis.fingerprint _,
-    "TextAnalysis.fingerprint64" -> TextAnalysis.fingerprint64 _,
     "TextAnalysis.distinctTokenRatio" -> TextAnalysis.distinctTokenRatio _,
     "TextAnalysis.topTokenFraction" -> TextAnalysis.topTokenFraction _,
     "TextAnalysis.topBigramFraction" -> TextAnalysis.topBigramFraction _,

@@ -114,17 +114,22 @@ class JsonKernelSpec extends SparkSpec {
        | "item_th": "$item", "amount": "${i * 100}.00"}""".stripMargin
   }.mkString("{\"records\": [\n", ",\n", "\n]}\n")
 
-  /** Every message down the cause chain. */
-  private def messages(t: Throwable): String =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-
   test("hostile JSON delivery files fail the read loudly, naming the file") {
-    val hostile: Seq[(String, String => String)] = Seq(
-      "truncated" -> (good => good.take(good.length / 2)),
-      "no_pointer" -> (_ => """{"meta": {}, "rows": [{"tax_id": "1"}]}"""),
-      "not_array" -> (_ => """{"records": {"tax_id": "1"}}"""),
-      "null_pointer" -> (_ => """{"records": null}"""),
-      "zero_byte" -> (_ => ""))
+    def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+    def gzip(s: String): Array[Byte] = {
+      val buf = new java.io.ByteArrayOutputStream
+      val z = new java.util.zip.GZIPOutputStream(buf)
+      try z.write(utf8(s)) finally z.close()
+      buf.toByteArray
+    }
+    // the kernel reads a file's bytes as they are: a gzip delivery is not JSON
+    val hostile: Seq[(String, String => Array[Byte])] = Seq(
+      "truncated.json" -> (good => utf8(good.take(good.length / 2))),
+      "no_pointer.json" -> (_ => utf8("""{"meta": {}, "rows": [{"tax_id": "1"}]}""")),
+      "not_array.json" -> (_ => utf8("""{"records": {"tax_id": "1"}}""")),
+      "null_pointer.json" -> (_ => utf8("""{"records": null}""")),
+      "zero_byte.json" -> (_ => Array.emptyByteArray),
+      "gzip.json.gz" -> (good => gzip(good)))
     val existing = Seq.empty[(String, Int, Option[Double], Option[Double], Option[Double])]
       .toDF("tax_id", "fiscal_year", "total_revenue", "cost_of_goods_sold", "net_profit")
     val deliveries: Seq[(String, (Int, Int) => String, String => Long)] = Seq(
@@ -141,9 +146,9 @@ class JsonKernelSpec extends SparkSpec {
       for ((fault, make) <- hostile) {
         val dir = tmpDir(s"${kind}_$fault")
         (0 until 3).foreach(s => write(dir, s"$kind-$s.json", file(30, s)))
-        write(dir, s"bad_$fault.json", make(file(30, 9)))
+        Files.write(dir.resolve(s"bad_$fault"), make(file(30, 9)))
         val e = withClue(s"$kind/$fault: ")(intercept[Exception](run(dir.toString)))
-        assert(messages(e).contains(s"bad_$fault.json"), s"$kind/$fault: ${messages(e)}")
+        assert(messages(e).contains(s"bad_$fault"), s"$kind/$fault: ${messages(e)}")
       }
     }
   }

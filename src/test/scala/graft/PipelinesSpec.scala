@@ -7,9 +7,10 @@ import graft.sources.Ingest
 class PipelinesSpec extends SparkSpec {
 
   test("encoding detection picks TIS-620 for the Thai PO grid") {
-    val enc = Ingest.detectEncoding(s"$fixtures/po_report.csv")
-    // per-file distributed variant: mixed encodings in one glob, each file
-    // probed and decoded inside its own task
+    val enc = Ingest.csvLinesPerFileEncoding(spark, s"$fixtures/po_report.csv")
+      .where(col("line_no") === 0).collect()(0).getString(1)
+    // mixed encodings in one glob: each file probed and decoded inside its
+    // own task
     locally {
       val dir = java.nio.file.Files.createTempDirectory("graft_enc")
       val thai = "รหัส,จำนวน\nก,1"
@@ -36,10 +37,10 @@ class PipelinesSpec extends SparkSpec {
     val line0 = Ingest.csvLinesPerFileEncoding(spark, s"$dir/*.csv")
       .where(col("line_no") === 0).collect()(0).getString(3)
     assert(line0 == "PO No.,จำนวน", s"got <$line0>")
-    // single-file path: BOM-carrying UTF-8 routes through the transcode
-    // branch so the first header cell is clean
-    val first = Ingest.csvWithEncodingFallback(spark, s"$dir/bom.csv")
-      .collect()(0).getString(0)
+    // CSV path: the decoded lines parsed as CSV keep a clean first cell
+    import spark.implicits._
+    val lines = Ingest.csvLinesPerFileEncoding(spark, s"$dir/bom.csv").select("line").as[String]
+    val first = spark.read.csv(lines).collect()(0).getString(0)
     assert(first == "PO No.", s"got <$first>")
   }
 

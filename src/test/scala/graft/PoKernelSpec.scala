@@ -148,6 +148,28 @@ class PoKernelSpec extends SparkSpec {
     assert(f3.forall(r => r.getString(0) == s"file:$dir/f03.csv" && r.getString(1) == "UTF-8"))
   }
 
+  test("a zero-byte PO file or one with no header line fails the read, naming the file") {
+    val data = csvLine(Seq("1000000001", "5", "ผู้ขาย", "01/08/2568", "", "", "10.00", ""))
+    val top = preamble(0 until 8).take(4)
+    def text(lines: Seq[String]) = lines.mkString("", "\r\n", "\r\n").getBytes(StandardCharsets.UTF_8)
+    val good = text(preamble(0 until 8) :+ data)
+    val hostile: Seq[(String, Array[Byte])] = Seq(
+      "zero_byte.csv" -> Array.emptyByteArray,
+      "four_lines.csv" -> text(top),
+      "blank_header.csv" -> text(top ++ Seq("", data)),
+      "empty_cells_header.csv" -> text(top ++ Seq(",,,,,,,", data)))
+    val clean = tmpDir("po_clean")
+    Files.write(clean.resolve("good.csv"), good)
+    assert(Pipelines.poCsvMany(spark, s"$clean/*.csv").count() == 1)
+    for ((name, bytes) <- hostile) {
+      val dir = tmpDir("po_hostile")
+      Files.write(dir.resolve("good.csv"), good)
+      Files.write(dir.resolve(name), bytes)
+      val e = withClue(s"$name: ")(intercept[Exception](Pipelines.poCsvMany(spark, s"$dir/*.csv").count()))
+      assert(messages(e).contains(name), s"$name: ${messages(e)}")
+    }
+  }
+
   /** A TIS-620 report and a UTF-8-BOM report whose columns sit in another
     * order, each with a trailing total; returns their directory. */
   private def driftFiles(): Path = {

@@ -20,4 +20,9 @@ trait SparkSpec extends AnyFunSuite {
     * (the forked test JVM's working directory). */
   val fixtures: String =
     java.nio.file.Paths.get("src/test/resources/fixtures").toAbsolutePath.toString
+
+  /** Every message down the cause chain: a task's failure reaches the
+    * driver wrapped, with the cause's message inside. */
+  def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 }

@@ -462,41 +462,32 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming incremental dedup accumulates the index across micro-batches") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_sid").toString
     val (out, idx) = (s"$base/out", s"$base/idx")
-    val mem =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = graft.operators.Dedup.streamingIncrementalDedup(docs, "doc_id",
-      "text", out, idx, n = 3, k = 16, bands = 4, threshold = 0.5,
-      availableNow = false)
-    try {
-      val textA = "the quick brown fox jumps over the lazy dog again and again"
-      val fresh = "fresh unique eleven alpha beta gamma delta epsilon zeta eta"
-      mem.addData((1L, textA),
-        (2L, "completely different content about spark execution engines at scale"))
-      q.processAllAvailable()
-      mem.addData((3L, textA + " tail"), // near-dup of batch-1 doc 1: dropped
-        (4L, fresh))                     // genuinely new: kept
-      q.processAllAvailable()
-      mem.addData((5L, fresh))           // dup of doc 4 from an EARLIER batch
-      q.processAllAvailable()            // (whole batch drops: no writes at all)
-      val kept = spark.read.parquet(out)
-        .select("doc_id").as[Long].collect().toSet
-      assert(kept == Set(1L, 2L, 4L))
-      // the index accumulated exactly the survivors, 4 band rows each
-      val indexed = spark.read.parquet(idx)
-      assert(indexed.select("id").distinct().as[Long].collect().toSet ==
-        Set(1L, 2L, 4L))
-      assert(indexed.count() == 3 * 4)
-      // replay convergence: re-running a batch already absorbed must not
-      // duplicate output rows or change the kept set (the crash contract)
-      graft.operators.Dedup.dedupBatchAgainstIndex(
-        Seq((4L, fresh)).toDF("doc_id", "text"), "doc_id", "text", out, idx,
-        n = 3, k = 16, bands = 4, threshold = 0.5)
-      assert(spark.read.parquet(out).count() == 3)
-    } finally q.stop()
+    // one micro-batch: the body a foreachBatch sink runs per batch
+    def batch(docs: (Long, String)*): Unit =
+      graft.operators.Dedup.dedupBatchAgainstIndex(docs.toDF("doc_id", "text"),
+        "doc_id", "text", out, idx, n = 3, k = 16, bands = 4, threshold = 0.5)
+    val textA = "the quick brown fox jumps over the lazy dog again and again"
+    val fresh = "fresh unique eleven alpha beta gamma delta epsilon zeta eta"
+    batch((1L, textA),
+      (2L, "completely different content about spark execution engines at scale"))
+    batch((3L, textA + " tail"), // near-dup of batch-1 doc 1: dropped
+      (4L, fresh))               // genuinely new: kept
+    batch((5L, fresh))           // dup of doc 4 from an EARLIER batch
+                                 // (whole batch drops: no writes at all)
+    val kept = spark.read.parquet(out)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(1L, 2L, 4L))
+    // the index accumulated exactly the survivors, 4 band rows each
+    val indexed = spark.read.parquet(idx)
+    assert(indexed.select("id").distinct().as[Long].collect().toSet ==
+      Set(1L, 2L, 4L))
+    assert(indexed.count() == 3 * 4)
+    // replay convergence: re-running a batch already absorbed must not
+    // duplicate output rows or change the kept set (the crash contract)
+    batch((4L, fresh))
+    assert(spark.read.parquet(out).count() == 3)
   }
 
   test("incremental sessionization emits each closed session exactly once") {
