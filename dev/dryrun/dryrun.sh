@@ -75,7 +75,7 @@ ls "$RUN/ckpt" | grep -q . || fail "leg1: reliable checkpoints missing from spar
 echo "[dryrun] 5/9 legs 2-3: streaming (multi-batch, rocksdb) + dirty-source ingest" >&2
 OUT2=$("$SUBMIT" --class StreamingLeg --master 'local[16]' --driver-memory 16g \
   --jars "$RUN/userapp/lib/$(basename "$JAR")" \
-  --conf spark.graft.stateStore=rocksdb \
+  --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
   --conf spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows=false \
   --conf spark.graft.streaming.maxFilesPerTrigger=8 \
   --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \

@@ -1,6 +1,6 @@
 // DEPLOY dry run, leg 2: the streaming surface via spark-submit — the
-// playbook's streaming confs (spark.graft.stateStore=rocksdb + tuning,
-// spark.graft.streaming.maxFilesPerTrigger) passed as --conf only.
+// playbook's streaming confs (Spark's RocksDB state-store provider +
+// tuning, spark.graft.streaming.maxFilesPerTrigger) passed as --conf only.
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.EventsStream

@@ -1,19 +1,25 @@
 #!/usr/bin/env python3
 """Name-reachability scan over the library sources (stdlib only).
 
-Usage: python3 dev/reach.py [repoDir]
+Usage: python3 dev/reach.py [--check] [repoDir]
 
 Lists every member (object, class, trait, def, val) under src/main that no
 root reaches, with its line count (doc comment included), then the total.
+With --check it lists nothing and instead fails (exit 1) naming every
+unreached member that dev/reach_keep.txt does not keep, and every keep
+entry that names no unreached member; it exits 0 and prints one
+"reach check: ok" line when the two agree.
 The roots are:
   - every line of SparkEntry.scala and GraftExtensions.scala (the oracle
     queries and the SQL functions);
   - every Scala file under perfbench/;
   - every `def main`.
 A reached member makes every identifier in its body reached, and so on to a
-fixed point. `override`, `implicit`, `apply` and `unapply` members are
-reached exactly when their enclosing type is. Comments are not read; string
-literals are (generated Java code names its helpers inside strings).
+fixed point. A member whose name is used is reached only when its
+enclosing type already is, so a live name inside a dead type does not
+revive the type. `override`, `implicit`, `apply` and `unapply` members
+are reached exactly when their enclosing type is. Comments are not read;
+string literals are (generated Java code names its helpers inside strings).
 
 The scan goes by name, not by symbol: a name defined twice is reached when
 either is used. So it can miss dead code, and every member it lists has no
@@ -29,6 +35,7 @@ DEF_RE = re.compile(
 IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 TYPES = {"object", "class", "trait"}
 ROOT_FILES = {"SparkEntry.scala", "GraftExtensions.scala"}
+KEEP_FILE = os.path.join("dev", "reach_keep.txt")
 ALWAYS = {"apply", "unapply", "main"}
 
 
@@ -137,7 +144,9 @@ def scala_files(root):
                 yield os.path.join(d, f)
 
 
-def main(repo):
+def unreached(repo):
+    """Members no root reaches whose enclosing type is reached (a dead
+    type's members are counted in the type's lines)."""
     names, members, roots = set(), [], []
     for p in scala_files(os.path.join(repo, "perfbench", "src")):
         names |= parse(p)[1]
@@ -166,19 +175,56 @@ def main(repo):
             # an override is called through its parent's interface: it is
             # live exactly when its own type is, whatever its name
             auto = m.name in ALWAYS or "override" in m.mods or "implicit" in m.mods
-            if (m.owner is not None and m.owner.reached) if auto else m.name in names:
+            owner_live = m.owner is None or m.owner.reached
+            if owner_live and (m.owner is not None if auto else m.name in names):
                 reach(m)
                 changed = True
+    return [m for m in members
+            if not m.reached and (m.owner is None or m.owner.reached)]
 
-    total, rel = 0, lambda p: os.path.relpath(p, repo)
-    for m in members:
-        if not m.reached and (m.owner is None or m.owner.reached):
-            n = m.hi - m.start + 1
-            total += n
-            print(f"{rel(m.path)}:{m.lo + 1}\t{n}\t{m.kind} {m.qual()}")
+
+def read_keep(repo):
+    """Qualified member names of the keep file, each of which must be
+    followed by a reason; '#' starts a comment line."""
+    keep = set()
+    with open(os.path.join(repo, KEEP_FILE), encoding="utf-8") as f:
+        for no, line in enumerate(f, 1):
+            line = line.strip()
+            if not line or line.startswith("#"):
+                continue
+            name, _, reason = line.partition(" ")
+            if not reason.strip():
+                sys.exit(f"{KEEP_FILE}:{no}: {name} has no reason")
+            keep.add(name)
+    return keep
+
+
+def main(args):
+    check = "--check" in args
+    rest = [a for a in args if a != "--check"]
+    repo = rest[0] if rest else os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dead, rel = unreached(repo), lambda p: os.path.relpath(p, repo)
+    if check:
+        keep = read_keep(repo)
+        lost = [m for m in dead if m.qual() not in keep]
+        stale = sorted(keep - {m.qual() for m in dead})
+        for m in lost:
+            print(f"{rel(m.path)}:{m.lo + 1}: {m.kind} {m.qual()} is reached by no "
+                  f"root and not kept in {KEEP_FILE}")
+        for name in stale:
+            print(f"{KEEP_FILE}: {name} is kept but is not an unreached member")
+        if lost or stale:
+            sys.exit(1)
+        print(f"reach check: ok ({len(keep)} kept members, "
+              f"{sum(m.hi - m.start + 1 for m in dead)} lines)")
+        return
+    total = 0
+    for m in dead:
+        n = m.hi - m.start + 1
+        total += n
+        print(f"{rel(m.path)}:{m.lo + 1}\t{n}\t{m.kind} {m.qual()}")
     print(f"total\t{total} unreached lines")
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else
-         os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    main(sys.argv[1:])

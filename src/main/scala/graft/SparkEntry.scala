@@ -1031,8 +1031,8 @@ object SparkEntry {
     // IVF ANN, sampled-codebook variant: the md5-ordered centroid sample,
     // cosine assignment and probe set are all recomputable in SQL, so the
     // DuckDB oracle rebuilds the inverted file and re-ranks — the full IVF
-    // output is hash-checkable (ivfTopK's k-means path stays the quality
-    // variant, recall-gated in OperatorsSpec).
+    // output is hash-checkable (recall against brute force is gated in
+    // OperatorsSpec).
     "q53_ivf_topk" -> ((s0, d) => {
       val s = prep(s0)
       import graft.operators.Similarity
@@ -1064,8 +1064,8 @@ object SparkEntry {
 
     // Embedding-cosine near-dup pairs — exact AND scale-safe: block-pair
     // partitioned join (each task holds two hash buckets; no corpus
-    // broadcast). Same complete semantics as the brute-force oracle;
-    // Dedup.embeddingNearDupPairsLSH remains the approximate-recall path.
+    // broadcast). Same complete semantics as the brute-force oracle and
+    // as the broadcast Dedup.embeddingNearDupPairs (spec-pinned).
     "q54_embedding_neardup" -> ((s0, d) => {
       val s = prep(s0)
       import graft.operators.Dedup

@@ -73,7 +73,8 @@ object GraftConf {
         // at a 1.12–1.46× tuned premium; the tuning (no per-put
         // read-before-write) is the evidence/ROCKSDB_TUNE.jsonl preset
         Map(
-          "spark.graft.stateStore" -> "rocksdb",
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
           "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false") ++
           // changelog checkpointing pays only when the snapshot upload
           // it replaces crosses a remote store (measured ~neutral on

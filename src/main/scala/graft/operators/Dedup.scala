@@ -390,7 +390,7 @@ object Dedup {
     // every downstream join broadcasts for free. At corpus scale the
     // gate simply never fires and the distributed loop below is the
     // path; set spark.graft.graphDriverMaxEdges=0 to pin the distributed
-    // loop in measurement protocols (the decade/width rigs do).
+    // loop (the specs that test the loop itself do).
     val driverMaxEdges = pairs.sparkSession.conf
       .get("spark.graft.graphDriverMaxEdges", "262144").toLong
     if (nEdges <= driverMaxEdges) {
@@ -907,8 +907,9 @@ object Dedup {
     graft.plans.VectorExpressions.simhash64Md5(tokens(text))
 
   /** Embedding-cosine near-dup pairs, exact: all (id_a < id_b) pairs with
-    * cosine >= threshold. One broadcast pass — correct baseline; use the
-    * LSH variant below when the corpus no longer fits a broadcast. */
+    * cosine >= threshold. One broadcast pass — the reference answer the
+    * blocked variant below is tested against; use that one when the corpus
+    * no longer fits a broadcast. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double): DataFrame = {
     import graft.plans.VectorExpressions.{dot => vdot}
@@ -931,8 +932,7 @@ object Dedup {
     * pair (i <= j) becomes one independent join task. Memory per task is
     * O(2·corpus/nBlocks) vectors, shuffle volume O(corpus × nBlocks), and
     * the inherent O(n²/2) dot products spread over nBlocks·(nBlocks+1)/2
-    * tasks. Raise nBlocks as the corpus grows; use the LSH variant below
-    * when approximate recall is acceptable. */
+    * tasks. Raise nBlocks as the corpus grows. */
   def embeddingNearDupPairsBlocked(df: DataFrame, idCol: String, vecCol: String,
                                    threshold: Double, nBlocks: Int = 8): DataFrame = {
     import graft.plans.VectorExpressions.{dot => vdot}
@@ -956,29 +956,6 @@ object Dedup {
       .where(col("cos") >= threshold)
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"), col("cos"))
-  }
-
-  /** Embedding-cosine near-dup pairs via hyperplane LSH blocking: candidate
-    * pairs share a bucket in >=1 of `nTables` tables; exact cosine verifies.
-    * Shuffle volume O(rows × nTables); recall grows with nTables. */
-  def embeddingNearDupPairsLSH(df: DataFrame, idCol: String, vecCol: String,
-                               threshold: Double, nTables: Int = 8,
-                               nPlanes: Int = 8): DataFrame = {
-    import graft.operators.Similarity
-    val bucketed = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", explode(array((0 until nTables).map(t =>
-        struct(lit(t).as("t"),
-          Similarity.lshBucket(col("v"), t, nPlanes).as("b"))): _*)))
-    val a = bucketed.select(col("bucket"), col("id").as("id_a"), col("v").as("va"))
-    val b = bucketed.select(col("bucket"), col("id").as("id_b"), col("v").as("vb"))
-    // verify before the pair-dedup so the vectors cross only the bucket
-    // join; the dedup shuffle carries (id_a, id_b, cos) scalars.
-    a.join(b, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cos", Similarity.cosine(col("va"), col("vb")))
-      .where(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
-      .dropDuplicates("id_a", "id_b")
   }
 
   /** SimHash near-dup pairs: block on 4×16-bit bands (any pair within

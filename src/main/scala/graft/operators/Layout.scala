@@ -131,19 +131,13 @@ object Layout {
   /** Three-way clustering-quality comparison — natural ingest order vs
     * z-order vs Hilbert, same fixed-width-bucket measurement as
     * [[zOrderQuality]] (hilbert/z d-domains are both 2^(2·bits), so the
-    * identical bucket shift applies). The expected ordering on real
-    * data: hilbert ≤ zorder « natural on average span. */
-  def curveQuality(df: DataFrame, xCol: String, yCol: String,
-                   orderCol: String, bits: Int = 16,
-                   bucketBits: Int = 10): DataFrame =
-    curveQualityMulti(df, xCol, yCol, orderCol, bits, Seq(bucketBits))
-      .drop("bucket_bits")
-
-  /** [[curveQuality]] for SEVERAL bucket granularities from ONE pass:
-    * the expensive per-row work (bounds scan, Morton interleave, the
-    * 16-level Hilbert fold) computes once and every granularity is just
-    * another shift of the same curve values — the shape the oracle uses
-    * too. Output adds a `bucket_bits` column. */
+    * identical bucket shift applies), for SEVERAL bucket granularities
+    * from ONE pass: the expensive per-row work (bounds scan, Morton
+    * interleave, the 16-level Hilbert fold) computes once and every
+    * granularity is just another shift of the same curve values — the
+    * shape the oracle uses too. Output adds a `bucket_bits` column. The
+    * expected ordering on real data: hilbert ≤ zorder « natural on
+    * average span. */
   def curveQualityMulti(df: DataFrame, xCol: String, yCol: String,
                         orderCol: String, bits: Int,
                         bucketBitsSeq: Seq[Int]): DataFrame = {

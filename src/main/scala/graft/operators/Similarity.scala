@@ -6,17 +6,20 @@ import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
-  * Two paths:
-  *  - brute-force cosine top-k — the exact baseline. O(n·m) dot products via
-  *    `zip_with`/`aggregate` (codegen'd, no UDF). The small query side is
-  *    broadcast, so the big corpus never shuffles.
-  *  - LSH-bucketed ANN (random hyperplanes) — the scale path: sign-bit
-  *    sketch of each vector against `nPlanes` deterministic hyperplanes,
+  * Three kinds of top-k path:
+  *  - brute-force cosine top-k — the exact baseline. O(n·m) dot products in
+  *    a codegen'd kernel (no UDF). The small query side is broadcast, so
+  *    the big corpus never shuffles.
+  *  - LSH-bucketed ANN ([[annTopKPortable]]) — sign-bit sketch of each
+  *    vector against `nPlanes` md5-parity Rademacher hyperplanes,
   *    candidates = same bucket (multi-probe over `nTables` independent
   *    tables), verified with exact cosine. Shuffle volume is
   *    O(rows × nTables), independent of corpus pair count.
-  * Hyperplanes are derived from xxhash64(seed, dim, plane) → uniform in
-  * [-1,1] — deterministic across runs/executors without shipping a matrix. */
+  *  - IVF ([[ivfTopKSampled]], [[pqTopKSampled]]) — a sampled coarse
+  *    codebook partitions the corpus; queries probe their nearest cells.
+  * Every plane and codebook is derived from md5 of plain values, so each
+  * ANN output is recomputable in SQL and deterministic across executors
+  * without shipping a matrix. */
 object Similarity {
 
   import graft.plans.VectorExpressions.{dot => vdot}
@@ -82,53 +85,7 @@ object Similarity {
         col("neg_label"), col("cos"))
   }
 
-  /** Sign-bit LSH bucket id of a vector for one hash table: `nPlanes` dot
-    * products against hash-derived pseudo-random hyperplanes, packed into a
-    * long (custom expression — one loop, no plane matrix to broadcast). */
-  def lshBucket(vec: Column, table: Int, nPlanes: Int): Column =
-    graft.plans.VectorExpressions.hyperplaneBucket(vec, table, nPlanes)
-
-  /** ANN top-k via multi-table, multiprobe hyperplane LSH: the corpus is
-    * bucketed once per table; each query probes its own bucket plus every
-    * bucket at Hamming distance 1 (flip one sign bit). Exact cosine re-ranks
-    * the candidates.
-    *
-    * Tuning model (p = per-plane agreement prob for a target neighbor):
-    * per-table hit prob ≈ p^b + b·(1-p)·p^(b-1); recall = 1-(1-hit)^T.
-    * With b=8, T=4 on weakly-clustered data (top-1 cos ≈ 0.37 → p ≈ 0.62)
-    * this reaches ~50% recall while scanning ~15% of the corpus — the knob
-    * to raise recall at scale is T (more tables), not brute force. */
-  def annTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nTables: Int = 4, nPlanes: Int = 8): DataFrame = {
-    def buckets(v: String, probe: Boolean): Column = {
-      val per: Seq[Column] = (0 until nTables).flatMap { t =>
-        val b0 = lshBucket(col(v), t, nPlanes)
-        val exact = struct(lit(t).as("t"), b0.as("b"))
-        if (!probe) Seq(exact)
-        else exact +: (0 until nPlanes).map(i =>
-          struct(lit(t).as("t"), b0.bitwiseXOR(shiftleft(lit(1L), i)).as("b")))
-      }
-      explode(array(per: _*))
-    }
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-      .withColumn("bucket", buckets("cv", probe = false))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("bucket", buckets("qv", probe = true))
-    // score before the pair-dedup: the vectors cross only the bucket join;
-    // the dedup + rank shuffles carry (query_id, corpus_id, cos) scalars.
-    val cands = c.join(q, Seq("bucket"))
-      .where(col("corpus_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .select("query_id", "corpus_id", "cos")
-      .dropDuplicates("query_id", "corpus_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id"))
-    cands.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
-  }
-
-  /** md5-parity Rademacher hyperplanes for the PORTABLE LSH variant:
+  /** md5-parity Rademacher hyperplanes for the LSH path:
     * coef(t, p, i) = +1 when the last hex char of md5("t_p_i") is odd,
     * else -1. Any engine with an `md5(text) -> hex` function recomputes the
     * exact matrix, which makes bucket assignments — and therefore the whole
@@ -146,10 +103,15 @@ object Similarity {
     }
   }
 
-  /** [[annTopK]] with [[portablePlanes]] instead of xxhash64-derived ones —
-    * identical multiprobe candidate semantics (own bucket + every
-    * Hamming-1 flip per table), but every step is recomputable in plain
-    * SQL: plane coefs from md5 parity, dots as sequential double sums,
+  /** ANN top-k via multi-table, multiprobe hyperplane LSH over
+    * [[portablePlanes]]: the corpus is bucketed once per table; each query
+    * probes its own bucket plus every bucket at Hamming distance 1 (flip
+    * one sign bit); exact cosine re-ranks the candidates. Per-table hit
+    * probability for a neighbor with per-plane agreement p is
+    * ≈ p^b + b·(1-p)·p^(b-1), recall = 1-(1-hit)^T — the knob that raises
+    * recall at scale is T (more tables), not brute force. Every step is
+    * recomputable in plain SQL: plane coefs from md5 parity, dots as
+    * sequential double sums,
     * ranks by (cos DESC, corpus_id). All nTables sketches come from ONE
     * kernel call per row (`rademacherBuckets` — the matrix rides as a
     * codegen reference object), accumulating left-to-right exactly like
@@ -222,72 +184,6 @@ object Similarity {
         aggregate(col("dots"), lit(0.0), (a, x) => a + x).as("coord_sum"))
   }
 
-  /** Deterministic spherical k-means training for the IVF codebook:
-    * Lloyd's iterations over a bounded, deterministically chosen sample —
-    * the `sampleSize` rows with the smallest `xxhash64(id)` (a seedless
-    * uniform pseudo-random sample that needs no up-front `count()`; the
-    * TakeOrdered top-k is ONE pass over the corpus). Assignment is by max
-    * cosine; the new centroid is the per-dimension mean of its members
-    * (scale is irrelevant to cosine assignment, so means are not
-    * re-normalized); an emptied cluster keeps its previous centroid.
-    *
-    * Scale shape: the sample is constant-size regardless of corpus size,
-    * so training cost does not grow with the data — exactly ONE Spark job
-    * (sample + collect of sampleSize×dim doubles, ~1 MB at 2048×64); the
-    * Lloyd iterations then run driver-local over the collected sample
-    * (the FAISS/MiniBatch pattern: train in memory on a bounded sample,
-    * apply distributed). The trained codebook (k×dim doubles) is embedded
-    * as a literal in the distributed assignment expression. */
-  def trainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                     nCentroids: Int, iters: Int = 3,
-                     sampleSize: Int = 2048): Array[Seq[Double]] = {
-    val sample: Array[(Long, Array[Double])] = corpus
-      .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .orderBy(xxhash64(col("id")), col("id"))
-      .limit(math.max(sampleSize, nCentroids))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    require(sample.length >= nCentroids,
-      s"corpus too small for $nCentroids centroids")
-    // seeds: the nCentroids lowest ids of the sample (deterministic)
-    var cents: Array[Array[Double]] =
-      sample.sortBy(_._1).take(nCentroids).map(_._2.clone())
-    val dim = cents.head.length
-    val vecs = sample.map(_._2)
-    // precompute vector norms once (assignment is by cosine)
-    val vnorm = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    for (_ <- 1 to iters) {
-      val cnorm = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-      val sums = Array.fill(nCentroids)(new Array[Double](dim))
-      val counts = new Array[Long](nCentroids)
-      var i = 0
-      while (i < vecs.length) {
-        val v = vecs(i)
-        // argmax cosine, ties to the lower cid (matches nearestCentroid)
-        var best = 0; var bestCos = Double.NegativeInfinity
-        var c = 0
-        while (c < nCentroids) {
-          var d = 0.0; var j = 0
-          while (j < dim) { d += v(j) * cents(c)(j); j += 1 }
-          val cos = if (vnorm(i) == 0.0 || cnorm(c) == 0.0) 0.0
-                    else d / (vnorm(i) * cnorm(c))
-          if (cos > bestCos) { bestCos = cos; best = c }
-          c += 1
-        }
-        var j = 0
-        while (j < dim) { sums(best)(j) += v(j); j += 1 }
-        counts(best) += 1
-        i += 1
-      }
-      cents = cents.indices.map { c =>
-        if (counts(c) == 0) cents(c)
-        else sums(c).map(_ / counts(c))
-      }.toArray
-    }
-    cents.map(_.toSeq)
-  }
-
   /** Index of the max-cosine centroid for a vector column — a pure
     * projection (k dot products per row, no join, no shuffle), with the
     * codebook embedded as literals. Ties break on the lower centroid id. */
@@ -312,31 +208,13 @@ object Similarity {
     transform(slice(sorted, 1, nProbe), s => s.getField("cid"))
   }
 
-  /** IVF (inverted-file) ANN with a trained codebook: spherical-k-means
-    * centroids ([[trainCentroids]]) partition the corpus; each corpus
-    * vector joins its single nearest cluster, each query probes its
-    * `nProbe` nearest clusters; exact cosine re-ranks within probed
-    * clusters.
-    *
-    * Scale shape: training cost is sample-bounded; assignment on both
-    * sides is a pure argmax projection (no join, no shuffle — the codebook
-    * rides the expression); the probe join exchanges only the probed
-    * fraction — candidates/query ≈ corpus × nProbe / nCentroids. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nCentroids: Int = 16,
-              nProbe: Int = 4, trainIters: Int = 3): DataFrame = {
-    val cents = trainCentroids(corpus, idCol, vecCol, nCentroids, trainIters)
-    ivfTopKWithCodebook(corpus, queries, idCol, vecCol, k, cents, nProbe)
-  }
-
   /** Deterministic SAMPLED codebook: the `n` corpus vectors whose ids come
     * first in (md5(id-as-string), id) order — a uniform pseudo-random
     * sample any SQL engine reproduces verbatim (md5 hex sorts identically
     * everywhere), widened to double. Centroid id = position in that order.
     * IVF does not require k-means — any coarse quantizer partitions the
     * corpus; sampled centroids trade some cluster balance for a codebook
-    * that is itself oracle-checkable ([[trainCentroids]] remains the
-    * quality path). */
+    * that is itself oracle-checkable. */
   def sampledCodebook(corpus: DataFrame, idCol: String, vecCol: String,
                       n: Int): Array[Seq[Double]] = {
     val rows = corpus
@@ -349,17 +227,42 @@ object Similarity {
     rows.map(_.getSeq[Double](1))
   }
 
-  /** [[ivfTopK]] with the [[sampledCodebook]] — every step (codebook
-    * choice, nearest-centroid assignment with (cos DESC, cid) tie-breaks,
-    * probe set, final re-rank) is recomputable in plain SQL, so the full
-    * ANN output is oracle-checkable. Same scale shape as ivfTopK: the
-    * codebook rides the expressions as literals, assignment is a pure
-    * projection, the probe join exchanges only the probed fraction. */
+  /** IVF (inverted-file) ANN over the [[sampledCodebook]]: each corpus
+    * vector joins its single nearest cell, each query probes its `nProbe`
+    * nearest cells, and exact cosine re-ranks within the probed cells.
+    * Every step (codebook choice, nearest-centroid assignment with
+    * (cos DESC, cid) tie-breaks, probe set, final re-rank) is recomputable
+    * in plain SQL, so the full ANN output is oracle-checkable. Scale shape:
+    * the codebook rides the expressions as literals, assignment on both
+    * sides is a pure projection (no join, no shuffle), and the probe join
+    * exchanges only the probed fraction — candidates/query ≈
+    * corpus × nProbe / nCentroids. */
   def ivfTopKSampled(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, nCentroids: Int = 16,
                      nProbe: Int = 4): DataFrame = {
     val cents = sampledCodebook(corpus, idCol, vecCol, nCentroids)
-    ivfTopKWithCodebook(corpus, queries, idCol, vecCol, k, cents, nProbe)
+    val widen = (c: Column) => transform(c, x => x.cast("double"))
+    val assigned = corpus
+      .select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
+      .withColumn("__vd", widen(col("cv")))
+      .withColumn("cid", nearestCentroid(col("__vd"), cents))
+      .drop("__vd")
+    val probes = queries
+      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .withColumn("__vd", widen(col("qv")))
+      .withColumn("cid", explode(nearestCentroids(col("__vd"), cents, nProbe)))
+      .drop("__vd")
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("corpus_id"))
+    // no pair-dedup needed: each corpus row lives in exactly one cluster
+    // and a query's probed clusters are distinct, so the join yields each
+    // (query, corpus) pair at most once.
+    assigned.join(probes, Seq("cid"))
+      .where(col("corpus_id") =!= col("query_id"))
+      .withColumn("cos", cosine(col("qv"), col("cv")))
+      .withColumn("rnk", row_number().over(w))
+      .where(col("rnk") <= k)
+      .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
   }
 
   /** IVF+PQ ANN (FAISS IVFPQ shape; Jégou et al., PAMI '11, "Product
@@ -431,33 +334,6 @@ object Similarity {
       .where(col("corpus_id") =!= col("query_id"))
       .withColumn("cos", when(col("qnorm") === 0.0 || sqrt(xnorm2) === 0.0,
         lit(0.0)).otherwise(ip / (col("qnorm") * sqrt(xnorm2))))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
-  }
-
-  private def ivfTopKWithCodebook(corpus: DataFrame, queries: DataFrame,
-                                  idCol: String, vecCol: String, k: Int,
-                                  cents: Array[Seq[Double]], nProbe: Int): DataFrame = {
-    val widen = (c: Column) => transform(c, x => x.cast("double"))
-    val assigned = corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-      .withColumn("__vd", widen(col("cv")))
-      .withColumn("cid", nearestCentroid(col("__vd"), cents))
-      .drop("__vd")
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__vd", widen(col("qv")))
-      .withColumn("cid", explode(nearestCentroids(col("__vd"), cents, nProbe)))
-      .drop("__vd")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id"))
-    // no pair-dedup needed: each corpus row lives in exactly one cluster
-    // and a query's probed clusters are distinct, so the join yields each
-    // (query, corpus) pair at most once.
-    assigned.join(probes, Seq("cid"))
-      .where(col("corpus_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
       .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))

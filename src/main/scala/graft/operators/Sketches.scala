@@ -61,13 +61,6 @@ object Sketches {
       .groupBy((groupCols :+ "idx").map(col): _*)
       .agg(max(col("rho")).cast("int").as("rho"))
 
-  /** Merge register sets (sketch union): register-wise max. Inputs are
-    * `hllRegisters`-shaped frames over the same group columns. */
-  def hllMerge(a: DataFrame, b: DataFrame, groupCols: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((groupCols :+ "idx").map(col): _*)
-      .agg(max(col("rho")).cast("int").as("rho"))
-
   /** Cardinality estimate per group from a register frame.
     *
     * Engineered for cross-engine exactness: the register sum

@@ -25,14 +25,6 @@ object TextAnalysis {
       .otherwise(element_at(stats(text), 4).cast("int"))
   }
 
-  /** BPE-ish subword count: word-piece regex (letter runs, digit runs,
-    * punctuation singles) — a cheap proxy for tokenizer cost accounting. */
-  def subwordCount(text: Column): Column =
-    // null text -> null count under BOTH ANSI modes (size of a null array
-    // is -1 with legacy sizeOfNull but null under ANSI; guard instead)
-    when(text.isNotNull,
-      size(regexp_extract_all(text, lit("[A-Za-z\\u0E00-\\u0E7F]+|[0-9]+|[^\\sA-Za-z0-9\\u0E00-\\u0E7F]"), lit(0))))
-
   /** Punctuation character ratio (0..1). */
   def punctRatio(text: Column): Column = {
     val n = element_at(stats(text), 1)
@@ -59,17 +51,11 @@ object TextAnalysis {
     round((lenScore + punctScore + stopScore) / 3.0, 4)
   }
 
-  /** Per-language stopword marker sets (small, mutually disjoint — overlap
-    * would make the argmax unstable). */
-  val langStopwords: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "of", "is", "that", "it", "with"),
-    "de" -> Seq("der", "die", "und", "das", "ist", "nicht"),
-    "fr" -> Seq("le", "les", "est", "dans", "que", "pour"),
-    "es" -> Seq("el", "los", "una", "por", "para", "del"))
-
   /** Multi-language n-gram/stopword heuristic language ID:
     * CJK char ratio > 0.2 → 'zh'; else argmax of per-language stopword hits
-    * with fixed precedence en > de > fr > es; no hits → 'und'.
+    * (the small, mutually disjoint marker sets of the text-stats kernel,
+    * `graft.plans.StringExpressions`) with fixed precedence
+    * en > de > fr > es; no hits → 'und'.
     * Pure expression — replicable in ANSI SQL for oracle checks. */
   def langIdMulti(text: Column): Column = {
     val st = stats(text)
@@ -150,7 +136,8 @@ object TextAnalysis {
   def piiCounts(text: Column): (Column, Column, Column) = {
     val noEmail = regexp_replace(text, emailPattern, "[EMAIL]")
     val noIp = regexp_replace(noEmail, ipv4Pattern, "[IP]")
-    // null text -> null counts under BOTH ANSI modes (see subwordCount)
+    // null text -> null counts under BOTH ANSI modes (size of a null array
+    // is -1 with legacy sizeOfNull but null under ANSI; guard instead)
     (when(text.isNotNull, size(regexp_extract_all(text, lit(emailPattern), lit(0)))),
       when(text.isNotNull, size(regexp_extract_all(noEmail, lit(ipv4Pattern), lit(0)))),
       when(text.isNotNull, size(regexp_extract_all(noIp, lit(phonePattern), lit(0)))))

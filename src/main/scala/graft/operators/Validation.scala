@@ -43,15 +43,6 @@ object Validation {
     (valid, rejects)
   }
 
-  /** Attach live counters (rows seen / rows invalid) to a plan via
-    * `observe` — read them from the QueryExecutionListener or
-    * `Observation` after the action completes. */
-  def observed(df: DataFrame, rules: Seq[Rule], name: String = "validation"): DataFrame = {
-    val anyFail = rules.map(r => !coalesce(r.pred, lit(false))).reduce(_ || _)
-    df.observe(name, count(lit(1)).as("rows_seen"),
-      sum(when(anyFail, 1L).otherwise(0L)).as("rows_invalid"))
-  }
-
   /** Data-quality census: per-column row/null/distinct counts in ONE
     * aggregation (exact distincts expand the scan n_cols ways — the
     * standard profiling trade; swap in approx_count_distinct when a

@@ -26,8 +26,10 @@ object StringOps {
   * keeps the surrounding stage — same pattern as VectorExpressions). */
 object StringExpressions {
 
-  // word sets for the text-stats kernel — MUST stay identical to
-  // graft.operators.TextAnalysis.{enStopwords, langStopwords}
+  // word sets for the text-stats kernel: En17 MUST stay identical to
+  // graft.operators.TextAnalysis.enStopwords; the four language marker
+  // sets are owned here (small and mutually disjoint — overlap would make
+  // langIdMulti's argmax unstable)
   private def set(ws: String*): java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](); ws.foreach(s.add); s
   }

@@ -104,30 +104,6 @@ object VectorOps {
     fp
   }
 
-  /** Sign-bit LSH bucket against `nPlanes` hash-derived hyperplanes.
-    * Plane components come from chained xxhash64(table, plane, dim) — every
-    * executor derives identical planes, nothing is broadcast. */
-  def hyperplaneBucket(a: ArrayData, table: Int, nPlanes: Int, isFloat: Boolean): Long = {
-    val n = a.numElements()
-    var bucket = 0L
-    var p = 0
-    while (p < nPlanes) {
-      var dot = 0.0
-      var i = 0
-      while (i < n) {
-        val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
-        var h = XxHash64Function.hash(table, IntegerType, 42L)
-        h = XxHash64Function.hash(p, IntegerType, h)
-        h = XxHash64Function.hash(i, IntegerType, h)
-        dot += x * (h.toDouble / Long.MaxValue.toDouble)
-        i += 1
-      }
-      if (dot > 0) bucket |= (1L << p)
-      p += 1
-    }
-    bucket
-  }
-
   /** All `nTables` Rademacher-LSH bucket ids of a vector in ONE pass: the
     * plane matrix rides as a flat double[] reference object (size
     * nTables·nPlanes·dim — tiny), each dot accumulates left-to-right in
@@ -443,18 +419,6 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class HyperplaneBucket(child: Expression, table: Int, nPlanes: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = LongType
-    private def isFloat = isFloatArray(child.dataType)
-    override def nullSafeEval(v: Any): Any =
-      VectorOps.hyperplaneBucket(v.asInstanceOf[ArrayData], table, nPlanes, isFloat)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.VectorOps.hyperplaneBucket($a, $table, $nPlanes, $isFloat);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   case class RademacherBuckets(child: Expression, planes: Array[Double],
                                nTables: Int, nPlanes: Int)
       extends UnaryExpression {
@@ -582,8 +546,6 @@ object VectorExpressions {
     column(SimHash64(expression(tokens)))
   def simhash64Md5(tokens: Column): Column =
     column(SimHash64Md5(expression(tokens)))
-  def hyperplaneBucket(vec: Column, table: Int, nPlanes: Int): Column =
-    column(HyperplaneBucket(expression(vec), table, nPlanes))
   def rademacherBuckets(vec: Column, planes: Array[Double],
                         nTables: Int, nPlanes: Int): Column =
     column(RademacherBuckets(expression(vec), planes, nTables, nPlanes))

@@ -241,33 +241,17 @@ object EventsStream {
     val prev = lastMemTable.getAndSet(name)
     if (prev != null)
       try spark.catalog.dropTempView(prev) catch { case _: Exception => () }
-    // State-store backend selection: the default HDFS-backed provider
-    // holds every store's state ON-HEAP — at 100x key cardinality
-    // (billions of open dedup keys / session windows) that heap is the
-    // first thing to fall over, long before the shuffle plan does.
-    // `spark.graft.stateStore=rocksdb` switches the query to Spark's
-    // RocksDBStateStoreProvider: state lives off-heap + on local disk
-    // with changelog/snapshot files in the checkpoint dir, so state
-    // capacity scales with executor DISK, not heap. Same query results
-    // (StreamingSpec pins equality); sizing notes in PLANS.md.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(providerKey)
-    val wantRocks = spark.conf.getOption("spark.graft.stateStore")
-      .exists(_.equalsIgnoreCase("rocksdb"))
+    // The state-store backend is the session's own
+    // spark.sql.streaming.stateStore.providerClass, read at query start:
+    // the HDFS-backed default holds all state on-heap, RocksDB keeps it
+    // off-heap and on local disk (GraftConf.recommended picks it when
+    // state approaches heap; StreamingSpec pins equal results).
     val q =
       try {
         spark.conf.set(key, statePartitions)
-        if (wantRocks) spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         df.writeStream.outputMode(mode).format("memory")
           .queryName(name).trigger(Trigger.AvailableNow()).start()
-      } finally {
-        spark.conf.set(key, saved)
-        if (wantRocks) savedProvider match {
-          case Some(p) => spark.conf.set(providerKey, p)
-          case None => spark.conf.unset(providerKey)
-        }
-      }
+      } finally spark.conf.set(key, saved)
     q.awaitTermination()
     // Late data drops SILENTLY by the streaming contract — correct on a
     // live stream, but on a backlog replay it usually means the files

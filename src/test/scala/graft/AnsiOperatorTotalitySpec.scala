@@ -36,7 +36,6 @@ class AnsiOperatorTotalitySpec extends SparkSpec {
 
   private def textFns: Seq[(String, Column => Column)] = Seq(
     "TextAnalysis.tokenCount" -> TextAnalysis.tokenCount _,
-    "TextAnalysis.subwordCount" -> TextAnalysis.subwordCount _,
     "TextAnalysis.punctRatio" -> TextAnalysis.punctRatio _,
     "TextAnalysis.stopwordRatio" -> TextAnalysis.stopwordRatio _,
     "TextAnalysis.qualityScore" -> TextAnalysis.qualityScore _,
@@ -77,7 +76,9 @@ class AnsiOperatorTotalitySpec extends SparkSpec {
   private def vectorFns: Seq[(String, Column => Column)] = Seq(
     "Similarity.cosine(self)" -> ((v: Column) => Similarity.cosine(v, v)),
     "Similarity.cosine(reverse)" -> ((v: Column) => Similarity.cosine(v, reverse(v))),
-    "Similarity.lshBucket" -> ((v: Column) => Similarity.lshBucket(v, table = 1, nPlanes = 8)),
+    "VectorExpressions.rademacherBuckets" -> ((v: Column) =>
+      to_json(graft.plans.VectorExpressions.rademacherBuckets(v,
+        Similarity.portablePlanes(2, 8, 3).flatten.flatten, nTables = 2, nPlanes = 8))),
     "Multimodal.dHash63" -> ((v: Column) => Multimodal.dHash63(v)))
 
   // KMV sketches: ascending long arrays per the contract; shorter-than-k

@@ -42,10 +42,12 @@ class GraftConfSpec extends AnyFunSuite {
 
   test("RocksDB engages only when max state approaches heap, with the tuned preset") {
     val none = GraftConf.recommended(cluster, maxStreamingStateBytes = 1L << 30)
-    assert(!none.contains("spark.graft.stateStore"),
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    assert(!none.contains(provider),
       "1 GB state on a 16 GB heap stays on-heap (hdfs provider)")
     val big = GraftConf.recommended(cluster, maxStreamingStateBytes = 12L << 30)
-    assert(big("spark.graft.stateStore") == "rocksdb")
+    assert(big(provider) ==
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     assert(big("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows") == "false",
       "the ROCKSDB_TUNE preset (no per-put read-before-write) must ride along")
   }

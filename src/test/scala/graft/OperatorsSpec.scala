@@ -353,20 +353,18 @@ class OperatorsSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("ivfTopK recalls a useful fraction of exact neighbors") {
+  test("ivfTopKSampled recalls a useful fraction of exact neighbors") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q = emb.where(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
       .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(emb, q, "vec_id", "embedding", 5,
+    val ivf = Similarity.ivfTopKSampled(emb, q, "vec_id", "embedding", 5,
       nCentroids = 8, nProbe = 3)
       .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(ivf.nonEmpty)
-    // trained spherical-k-means centroids measure ≈0.92 here; the floor
-    // leaves margin for sampling drift (the lowest-id-centroid baseline
-    // this replaced could only promise ≈0.2)
+    // the floor the trained k-means codebook was held to
     val recall = (exact & ivf).size.toDouble / exact.size
-    info(s"ivf recall with trained centroids: $recall")
+    info(s"ivf recall with the sampled codebook: $recall")
     assert(recall >= 0.6, s"recall $recall at nProbe=3/8")
   }
 
@@ -570,31 +568,6 @@ class OperatorsSpec extends SparkSpec {
     assert(exact.nonEmpty && blocked == exact)
   }
 
-  test("embedding near-dup: LSH candidates are a high-recall subset of exact") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val n = emb.count()
-    val exact = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding", 0.35)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.embeddingNearDupPairsLSH(emb, "vec_id", "embedding", 0.35,
-      nTables = 8, nPlanes = 6)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(lsh.subsetOf(exact)) // verify step guarantees no false positives
-    // recall + candidate-scan fraction pinned as data (same-bucket pairs
-    // over all pairs — the dot products LSH actually pays vs brute force)
-    val bucketed = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
-      .select(col("id"), explode(array((0 until 8).map(t =>
-        struct(lit(t).as("t"),
-          Similarity.lshBucket(col("v"), t, 6).as("b"))): _*)).as("bucket"))
-    val cands = bucketed.as("x").join(bucketed.as("y"), "bucket")
-      .where(col("x.id") < col("y.id"))
-      .select(col("x.id"), col("y.id")).distinct().count()
-    val frac = cands.toDouble / (n.toDouble * (n - 1) / 2)
-    val recall = if (exact.isEmpty) 1.0 else (exact & lsh).size.toDouble / exact.size
-    info(f"embedding-LSH recall=$recall%.3f candidates=$cands scan-fraction=$frac%.4f")
-    assert(exact.nonEmpty && recall >= 0.3, s"recall $recall below 0.3 floor")
-    assert(frac <= 0.5, s"candidate scan fraction $frac above 0.5 — blocking is not pruning")
-  }
-
   test("winnowing fingerprints overlap heavily for shifted documents") {
     import graft.plans.VectorExpressions
     val base = (0 until 60).map(i => s"tok$i").mkString(" ")
@@ -633,14 +606,13 @@ class OperatorsSpec extends SparkSpec {
     assert(got.toSeq == Seq("en", "de", "fr", "es", "zh"))
   }
 
-  test("token/subword counts and quality score bounds") {
+  test("token counts and quality score bounds") {
     val df = Seq("Hello world, this is a test of the quality scorer.").toDF("t")
     val r = df.select(
       TextAnalysis.tokenCount(col("t")).as("n"),
-      TextAnalysis.subwordCount(col("t")).as("sw"),
       TextAnalysis.qualityScore(col("t")).as("q")).collect()(0)
-    assert(r.getInt(0) == 10 && r.getInt(1) >= 10)
-    assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
+    assert(r.getInt(0) == 10)
+    assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0)
   }
 
   // ---- Multimodal
@@ -1326,7 +1298,7 @@ class OperatorsSpec extends SparkSpec {
 
   // ---- portable HyperLogLog
 
-  test("hllProfile: estimate within the m=256 error contract; registers merge") {
+  test("hllProfile: estimate within the m=256 error contract") {
     val n = 5000
     val df = (1 to n).map(i => ("g", s"user_$i")).toDF("g", "v")
     val prof = Sketches.hllProfile(df, Seq("g"), "v")
@@ -1334,19 +1306,6 @@ class OperatorsSpec extends SparkSpec {
     assert(prof._1 == n.toLong)
     // standard error 1.04/sqrt(256) ~ 6.5%; assert within 4 sigma
     assert(math.abs(prof._2 - n) / n < 0.26, s"estimate ${prof._2} too far from $n")
-    // union-by-max merge of two halves == registers of the whole
-    val a = Sketches.hllRegisters(df.where(expr("substr(v, 6) % 2 = 0")), Seq("g"), "v")
-    val b = Sketches.hllRegisters(df.where(expr("substr(v, 6) % 2 = 1")), Seq("g"), "v")
-    val merged = Sketches.hllMerge(a, b, Seq("g"))
-      .orderBy("idx").as[(String, Long, Int)].collect()
-    val whole = Sketches.hllRegisters(df, Seq("g"), "v")
-      .orderBy("idx").as[(String, Long, Int)].collect()
-    assert(merged.toSeq == whole.toSeq)
-    // idempotent: re-merging the same sketch is a no-op
-    val re = Sketches.hllMerge(Sketches.hllRegisters(df, Seq("g"), "v"),
-        Sketches.hllRegisters(df, Seq("g"), "v"), Seq("g"))
-      .orderBy("idx").as[(String, Long, Int)].collect()
-    assert(re.toSeq == whole.toSeq)
   }
 
   test("hllRegisters: rho is the portable leading-zero spelling, partition-invariant") {

@@ -82,22 +82,20 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("rocksdb state store: dedup and sessionization match the default store") {
-    // spark.graft.stateStore=rocksdb swaps the on-heap HDFS-backed store
-    // for RocksDBStateStoreProvider (state on executor disk — the 100x
-    // key-cardinality path). Same plans, same results, byte for byte.
+    // RocksDBStateStoreProvider swaps the on-heap HDFS-backed store for
+    // state on executor disk (the 100x key-cardinality path). Same plans,
+    // same results, byte for byte.
     val dedupDefault = EventsStream.dedupedEvents(spark, sfDir).collect().toSet
     val sessDefault = EventsStream.sessionize(spark, sfDir, 1800).collect().toSet
-    spark.conf.set("spark.graft.stateStore", "rocksdb")
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val dedupRocks = EventsStream.dedupedEvents(spark, sfDir).collect().toSet
       assert(dedupRocks.nonEmpty && dedupRocks == dedupDefault)
       val sessRocks = EventsStream.sessionize(spark, sfDir, 1800).collect().toSet
       assert(sessRocks.nonEmpty && sessRocks == sessDefault)
-    } finally spark.conf.unset("spark.graft.stateStore")
-    // the provider conf never leaks into the session after the run
-    // (getOption surfaces the session DEFAULT, so assert "not rocksdb")
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
+    } finally spark.conf.unset(providerKey)
   }
 
   test("streaming upsert is idempotent by event_id") {
