@@ -1854,7 +1854,7 @@ object SparkEntry {
     // family. NULLS FIRST on both id columns pinned on both engines.
     "q160_stream_full_outer_join" -> ((s0, d) => {
       val s = prep(s0)
-      graft.streaming.EventsStream.clickPurchaseFullOuterJoin(s, d, 1800)
+      graft.streaming.EventsStream.clickPurchaseJoin(s, d, "full_outer", 1800)
         .orderBy(col("user_id"), col("purchase_id").asc_nulls_first,
           col("click_id").asc_nulls_first)
     }),
@@ -2722,7 +2722,7 @@ object SparkEntry {
     // equals the batch join bit-for-bit.
     "q70_stream_interval_join" -> ((s0, d) => {
       val s = prep(s0)
-      graft.streaming.EventsStream.clickPurchaseIntervalJoin(s, d, 1800)
+      graft.streaming.EventsStream.clickPurchaseJoin(s, d, "inner", 1800)
         .orderBy("user_id", "purchase_id", "click_id")
     }),
 
@@ -2732,7 +2732,7 @@ object SparkEntry {
     // match emits and clears the row).
     "q157_stream_semi_join" -> ((s0, d) => {
       val s = prep(s0)
-      graft.streaming.EventsStream.clickPurchaseSemiJoin(s, d, 1800)
+      graft.streaming.EventsStream.clickPurchaseJoin(s, d, "left_semi", 1800)
         .orderBy("user_id", "purchase_id")
     }),
 
@@ -2743,7 +2743,7 @@ object SparkEntry {
     // FIRST ordering pinned on both engines.
     "q133_stream_outer_join" -> ((s0, d) => {
       val s = prep(s0)
-      graft.streaming.EventsStream.clickPurchaseLeftOuterJoin(s, d, 1800)
+      graft.streaming.EventsStream.clickPurchaseJoin(s, d, "left_outer", 1800)
         .orderBy(col("user_id"), col("purchase_id"),
           col("click_id").asc_nulls_first)
     }),

@@ -391,8 +391,7 @@ object Dedup {
     // gate simply never fires and the distributed loop below is the
     // path; set spark.graft.graphDriverMaxEdges=0 to pin the distributed
     // loop (the specs that test the loop itself do).
-    val driverMaxEdges = pairs.sparkSession.conf
-      .get("spark.graft.graphDriverMaxEdges", "262144").toLong
+    val driverMaxEdges = Graphs.driverMaxEdges(pairs.sparkSession)
     if (nEdges <= driverMaxEdges) {
       log.info(s"connectedComponents: $nEdges edges <= gate $driverMaxEdges" +
         " — exact driver union-find (distributed loop skipped)")

@@ -25,6 +25,23 @@ object Graphs {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** The small-graph gate shared by the iterative/graph operators
+    * (`Dedup.connectedComponents`, `pageRank`, `triangleCounts`,
+    * `kCorePeel`): at or under this many canonical edges they compute
+    * exactly on the driver (one bounded collect, <= 2 longs per edge,
+    * ~4 MB at the default). `spark.graft.graphDriverMaxEdges=0` pins the
+    * distributed loops. */
+  private[operators] def driverMaxEdges(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.get("spark.graft.graphDriverMaxEdges", "262144").toLong
+
+  /** Both id columns integral: the driver paths sort ids themselves, and
+    * only integral orderings are trivially identical to Catalyst's
+    * (UTF8String binary order is not JVM String order). */
+  private def integralIds(df: DataFrame): Boolean =
+    df.schema.fields.forall(f =>
+      f.dataType == org.apache.spark.sql.types.LongType ||
+        f.dataType == org.apache.spark.sql.types.IntegerType)
+
   /** Fixed-iteration PageRank over an edge list. Returns (id, pr).
     *
     * pr_{k+1}(v) = (1-d)/N + d * (Σ_{u→v} pr_k(u)/deg(u) + dangling_k/N)
@@ -68,17 +85,11 @@ object Graphs {
     // IEEE ops, so the gated path emits the identical doubles (the
     // dangling scalar keeps its documented ≤1-ulp fold-order caveat,
     // same as between any two distributed runs). Gated additionally on
-    // BOTH id columns being integral: the driver sorts ids itself, and
-    // only integral orderings are trivially identical to Catalyst's
-    // (UTF8String binary order is not JVM String order). The count is
-    // one map-side scan of the just-persisted edge list.
-    val driverMaxEdges = edges.sparkSession.conf
-      .get("spark.graft.graphDriverMaxEdges", "262144").toLong
-    val integralIds = e.schema.fields.forall(f =>
-      f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (driverMaxEdges > 0 && integralIds && e.count() <= driverMaxEdges) {
-      log.info(s"pageRank: edge count <= gate $driverMaxEdges" +
+    // BOTH id columns being integral (`integralIds`). The count is one
+    // map-side scan of the just-persisted edge list.
+    val maxEdges = driverMaxEdges(edges.sparkSession)
+    if (maxEdges > 0 && integralIds(e) && e.count() <= maxEdges) {
+      log.info(s"pageRank: edge count <= gate $maxEdges" +
         " — exact driver iterations (distributed loop skipped)")
       return driverPageRank(e, iters, damping)
     }
@@ -266,12 +277,8 @@ object Graphs {
     // (deg, id) and only integral orderings trivially match Catalyst's);
     // pin spark.graft.graphDriverMaxEdges=0 to force the distributed
     // plan in measurement protocols.
-    val triDriverMax = edges.sparkSession.conf
-      .get("spark.graft.graphDriverMaxEdges", "262144").toLong
-    val triIntegral = und.schema.fields.forall(f =>
-      f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (nUnd <= triDriverMax && triIntegral) {
+    val triDriverMax = driverMaxEdges(edges.sparkSession)
+    if (nUnd <= triDriverMax && integralIds(und)) {
       log.info(s"triangleCounts: $nUnd edges <= gate $triDriverMax" +
         " — exact driver enumeration (distributed plan skipped)")
       return driverTriangles(und)
@@ -432,10 +439,9 @@ object Graphs {
     // identical (id, degree) output by construction. Pin
     // spark.graft.graphDriverMaxEdges=0 to force the distributed loop
     // (measurement protocols do).
-    val driverMaxEdges = edges.sparkSession.conf
-      .get("spark.graft.graphDriverMaxEdges", "262144").toLong
-    if (prevN <= driverMaxEdges) {
-      log.info(s"kCorePeel: $prevN edges <= gate $driverMaxEdges" +
+    val maxEdges = driverMaxEdges(edges.sparkSession)
+    if (prevN <= maxEdges) {
+      log.info(s"kCorePeel: $prevN edges <= gate $maxEdges" +
         " — exact driver peel (distributed loop skipped)")
       return driverKCorePeel(e, k, rounds)
     }

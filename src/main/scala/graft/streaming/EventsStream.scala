@@ -26,9 +26,8 @@ object EventsStream {
                      windowSec: Int = 300,
                      statePartitions: Int = 8): DataFrame = {
     val wmDelaySec = 3600L
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"))
-      .unionByName(drainSentinel(spark, dir, wmDelaySec + windowSec + 60))
+    val evs = drainedEvents(spark, dir, Seq("ts", "event_type", "value"),
+        wmDelaySec + windowSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
     val agg = evs
       .groupBy(window(col("ts"), s"$windowSec seconds"), col("event_type"))
@@ -40,7 +39,7 @@ object EventsStream {
     // the predicate below the EventTimeWatermark node and the sentinel
     // never reaches the watermark stats (its window also never finalizes,
     // so this only guards the pathological case)
-    runToTable(agg, "append", statePartitions)
+    runToTable(agg, statePartitions)
       .where(col("event_type") =!= DrainType)
   }
 
@@ -65,9 +64,8 @@ object EventsStream {
     require(bins > 0 && hi > lo, s"bad histogram domain [$lo,$hi)/$bins")
     val wmDelaySec = 3600L
     val w = (hi - lo) / bins
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"))
-      .unionByName(drainSentinel(spark, dir, wmDelaySec + windowSec + 60))
+    val evs = drainedEvents(spark, dir, Seq("ts", "event_type", "value"),
+        wmDelaySec + windowSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
       .where(col("value").isNotNull)
     val bin = least(greatest(floor((col("value") - lit(lo)) / lit(w)), lit(0.0)),
@@ -78,7 +76,7 @@ object EventsStream {
       .agg(count(lit(1)).as("cnt"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("bin"), col("cnt"))
-    runToTable(agg, "append", statePartitions)
+    runToTable(agg, statePartitions)
       .where(col("event_type") =!= DrainType)
   }
 
@@ -214,7 +212,16 @@ object EventsStream {
     }.foldLeft(0L)(math.max)
   }
 
-  /** Start-run-drain a streaming query into a memory table.
+  // memory-sink tables accumulate per call; cap the leak at one pending
+  // table by dropping the previous run's (consumers hold their result as
+  // a DataFrame over the sink's rows; dropping the VIEW of an earlier
+  // query that someone still lazily holds is the documented tradeoff —
+  // consume results before starting the next streaming query)
+  private val lastMemTable =
+    new java.util.concurrent.atomic.AtomicReference[String](null)
+
+  /** Start-run-drain a streaming query into a memory table, in append
+    * mode (every query here emits each row once, when it is final).
     *
     * `statePartitions` sizes the state-store width: streaming state
     * instantiates one store per shuffle partition (×4 for a stream-stream
@@ -224,16 +231,7 @@ object EventsStream {
     * the interval join spend 10 of 12 seconds on store machinery; 8 runs
     * the same query in 3). The conf is captured at query START, so
     * restoring after start() cannot affect the running query. */
-  // memory-sink tables accumulate per call; cap the leak at one pending
-  // table by dropping the previous run's (consumers hold their result as
-  // a DataFrame over the sink's rows; dropping the VIEW of an earlier
-  // query that someone still lazily holds is the documented tradeoff —
-  // consume results before starting the next streaming query)
-  private val lastMemTable =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private def runToTable(df: DataFrame, mode: String,
-                         statePartitions: Int = 8): DataFrame = {
+  private def runToTable(df: DataFrame, statePartitions: Int): DataFrame = {
     val spark = df.sparkSession
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
@@ -249,7 +247,7 @@ object EventsStream {
     val q =
       try {
         spark.conf.set(key, statePartitions)
-        df.writeStream.outputMode(mode).format("memory")
+        df.writeStream.outputMode("append").format("memory")
           .queryName(name).trigger(Trigger.AvailableNow()).start()
       } finally spark.conf.set(key, saved)
     q.awaitTermination()
@@ -281,9 +279,8 @@ object EventsStream {
                     windowSec: Int = 600, slideSec: Int = 300,
                     statePartitions: Int = 8): DataFrame = {
     val wmDelaySec = 3600L
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"))
-      .unionByName(drainSentinel(spark, dir, wmDelaySec + windowSec + 60))
+    val evs = drainedEvents(spark, dir, Seq("ts", "event_type", "value"),
+        wmDelaySec + windowSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
     val agg = evs
       .groupBy(window(col("ts"), s"$windowSec seconds", s"$slideSec seconds"),
@@ -292,7 +289,7 @@ object EventsStream {
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("n"))
     // drain filter outside the streaming plan — see tumblingCounts
-    runToTable(agg, "append", statePartitions)
+    runToTable(agg, statePartitions)
       .where(col("event_type") =!= DrainType)
   }
 
@@ -309,9 +306,8 @@ object EventsStream {
                            windowSec: Int = 600,
                            statePartitions: Int = 8): DataFrame = {
     val wmDelaySec = 3600L
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"))
-      .unionByName(drainSentinel(spark, dir, wmDelaySec + windowSec + 60))
+    val evs = drainedEvents(spark, dir, Seq("ts", "event_type", "value"),
+        wmDelaySec + windowSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
     val joined = evs.join(broadcast(dim), Seq("event_type"), "left")
     val agg = joined
@@ -324,7 +320,7 @@ object EventsStream {
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("category"), col("event_type"), col("n"), col("weighted_value"))
     // drain filter outside the streaming plan — see tumblingCounts
-    runToTable(agg, "append", statePartitions)
+    runToTable(agg, statePartitions)
       .where(col("event_type") =!= DrainType)
   }
 
@@ -338,7 +334,7 @@ object EventsStream {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("event_id"), col("user_id"), col("event_type"))
-    runToTable(deduped, "append", statePartitions)
+    runToTable(deduped, statePartitions)
   }
 
   /** Windowed distinct-user sketches in streaming: per-event register
@@ -358,10 +354,8 @@ object EventsStream {
                            statePartitions: Int = 8): DataFrame = {
     import graft.operators.Sketches
     val wmDelaySec = 3600L
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("user_id"))
-      .unionByName(drainSentinel(spark, dir, wmDelaySec + windowSec + 60)
-        .select(col("ts"), col("event_type"), lit(-1L).as("user_id")))
+    val evs = drainedEvents(spark, dir, Seq("ts", "event_type", "user_id"),
+        wmDelaySec + windowSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
     val agg = evs
       .withColumn("idx", Sketches.hllIdx(col("user_id")))
@@ -372,7 +366,7 @@ object EventsStream {
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("idx"), col("rho"))
     // drain filter outside the streaming plan — see tumblingCounts
-    runToTable(agg, "append", statePartitions)
+    runToTable(agg, statePartitions)
       .where(col("event_type") =!= DrainType)
   }
 
@@ -401,7 +395,6 @@ object EventsStream {
   def streamCdcApply(spark: SparkSession, dir: String, targetPath: String,
                      glob: String = "events*.parquet",
                      maxFilesPerTrigger: Int = 1): Unit = {
-    import graft.operators.Merge
     // same legacy-nanos tolerance as eventsStream; normalizeEventTs
     // adapts to whichever shape the files carry
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -413,31 +406,14 @@ object EventsStream {
           .parquet(dir))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts"))
-    val q = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val b = batch.toDF().persist()
-        try {
-          val keys = Seq("user_id")
-          val ord = Seq("ts", "event_id")
-          val del = col("event_type") === "error"
-          // a crash between the swap's renames left the snapshot only in
-          // its backup: restore it before reading, or the merge starts empty
-          graft.sources.Sinks.recoverStaged(ss, targetPath)
-          val existing =
-            try Some(ss.read.parquet(targetPath))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          // first batch applies onto an empty snapshot (NOT a tombstone-
-          // dropping compaction — ghosts must survive from batch one)
-          val merged = Merge.applyChangelogVersioned(
-            existing.getOrElse(b.where(lit(false))), b, keys, ord, del)
-          graft.sources.Sinks.writeStaged(merged, targetPath)
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    mergeEachBatch(events, targetPath)({ b =>
+      val existing = readTarget(b, targetPath)
+      // first batch applies onto an empty snapshot (NOT a tombstone-
+      // dropping compaction — ghosts must survive from batch one)
+      graft.operators.Merge.applyChangelogVersioned(
+        existing.getOrElse(b.where(lit(false))), b, Seq("user_id"),
+        Seq("ts", "event_id"), col("event_type") === "error")
+    }, graft.sources.Sinks.writeStaged(_, targetPath))
   }
 
   /** The reference's import loop (S10 → F6 → K4) in streaming form:
@@ -458,34 +434,45 @@ object EventsStream {
     * merged plan reads the live partitions while WRITING only the staging
     * directory, so no self-overwrite materialization barrier is needed. */
   def streamingUpsert(spark: SparkSession, dir: String, targetPath: String): Unit = {
-    import graft.operators.Merge
     val events = eventsStream(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         to_date(col("ts")).as("event_date"))
-    val q = events.writeStream
+    mergeEachBatch(events, targetPath)({ b =>
+      val dates = b.select("event_date").distinct().collect()
+        .map(_.getAs[java.sql.Date](0))
+      readTarget(b, targetPath)
+        .map(t => graft.operators.Merge.upsert(
+          t.where(col("event_date").isin(dates.toSeq: _*)), b, Seq("event_id")))
+        .getOrElse(b)
+    }, graft.sources.Sinks.writePartitionedStaged(_, targetPath, "event_date"))
+  }
+
+  /** The micro-batch frame [[streamCdcApply]] and [[streamingUpsert]]
+    * share: each batch is persisted, the target's interrupted swap is
+    * recovered (a crash between the swap's renames leaves the table only
+    * in its backup: restore it before `merge` reads it, or the merge
+    * starts empty), `merge`'s result goes to `commit`, and the batch is
+    * released. The backlog runs with AvailableNow; returns when it is
+    * drained. */
+  private def mergeEachBatch(events: DataFrame, targetPath: String)(
+      merge: DataFrame => DataFrame, commit: DataFrame => Unit): Unit =
+    events.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ss = batch.sparkSession
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF().persist()
         try {
-          val dates = b.select("event_date").distinct().collect()
-            .map(_.getAs[java.sql.Date](0))
-          graft.sources.Sinks.recoverStaged(ss, targetPath)
-          val existing =
-            try Some(ss.read.parquet(targetPath)
-              .where(col("event_date").isin(dates.toSeq: _*)))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          val merged = existing match {
-            case Some(e) => Merge.upsert(e, b, Seq("event_id"))
-            case None    => b
-          }
-          graft.sources.Sinks.writePartitionedStaged(merged, targetPath, "event_date")
+          graft.sources.Sinks.recoverStaged(b.sparkSession, targetPath)
+          commit(merge(b))
         } finally b.unpersist()
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** The merge target as of this batch; None before its first commit. */
+  private def readTarget(b: DataFrame, targetPath: String): Option[DataFrame] =
+    try Some(b.sparkSession.read.parquet(targetPath))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
 
   /** Stateful sessionization: per-user session = events with < `gapSec`
     * between them (flatMapGroupsWithState with event-time timeout — custom
@@ -499,14 +486,6 @@ object EventsStream {
   // across batches and diverge from a sequential oracle
   final case class SessState(start: Long, last: Long, n: Long, totalCents: Long)
 
-  /** Pure streaming sessionization transform — the live-stream-correct
-    * core. EventTimeTimeout: a closed session is emitted EXACTLY ONCE,
-    * either when a later event of the same user breaks the gap, or when
-    * the event-time watermark passes `last + gap` (timeout). Open sessions
-    * are never emitted early, so a multi-batch run cannot duplicate them.
-    * State per user is the single open session (constant size); each group
-    * call sorts only its own micro-batch slice, which a watermarked
-    * production source keeps bounded. */
   /** Half-away-from-zero cent rounding — the same tie policy as SQL
     * ROUND and graft.functions.Numeric (math.round is half-up toward
     * +inf, which diverges on negative ties). */
@@ -515,6 +494,14 @@ object EventsStream {
     (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toLong
   }
 
+  /** Pure streaming sessionization transform — the live-stream-correct
+    * core. EventTimeTimeout: a closed session is emitted EXACTLY ONCE,
+    * either when a later event of the same user breaks the gap, or when
+    * the event-time watermark passes `last + gap` (timeout). Open sessions
+    * are never emitted early, so a multi-batch run cannot duplicate them.
+    * State per user is the single open session (constant size); each group
+    * call sorts only its own micro-batch slice, which a watermarked
+    * production source keeps bounded. */
   def sessionizeStream(evs: org.apache.spark.sql.Dataset[Ev],
                        gapSec: Int): org.apache.spark.sql.Dataset[SessionRow] = {
     import evs.sparkSession.implicits._
@@ -562,17 +549,20 @@ object EventsStream {
       }
   }
 
-  /** Sentinel user id / event type used by the drain wrappers (filtered
+  /** Sentinel user id / event type carried by the drain row (filtered
     * from every output). */
   private val DrainUser = Long.MinValue
   private val DrainType = "__drain"
 
-  /** A one-row sentinel stream whose event time sits `aheadSec` past the
-    * directory's max event time. Union it with the file stream BEFORE
-    * `withWatermark`: the single watermark then advances past end-of-input
-    * on the final batch (the Flink drain-on-stop pattern), so append-mode
-    * windows finalize and event-time timeouts fire on a finite run. A live
-    * deployment simply omits the sentinel. */
+  /** The events stream projected to `cols`, unioned with the drain
+    * sentinel carrying the same columns — the input of every drained
+    * operator. Each caller puts its own watermark (delay) on the result
+    * and passes its own horizon as `aheadSec`. */
+  private def drainedEvents(spark: SparkSession, dir: String, cols: Seq[String],
+                            aheadSec: Long): DataFrame =
+    eventsStream(spark, dir).select(cols.map(col): _*)
+      .unionByName(drainSentinel(spark, dir, aheadSec, cols))
+
   /** Max `ts` as EPOCH SECONDS across the parquet footers — O(files)
     * metadata reads, no row scan (the column statistics the writer already
     * computed). The raw footer long is in whatever unit the column's
@@ -639,228 +629,111 @@ object EventsStream {
     else maxes.flatten.reduceOption(_ max _)
   } catch { case _: Exception => None } // unreadable footer → scan path
 
-  private def drainSentinel(spark: SparkSession, dir: String,
-                            aheadSec: Long): DataFrame = {
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // spark.graft.streaming.drain=false runs the query WITHOUT the drain
-    // sentinel — the sentinel is a finite-run convenience that is WRONG
-    // under multi-batch triggers: its MemoryStream row lands in batch 1,
-    // jumping the watermark past end-of-input so every later batch's
-    // events read as late and drop. Multi-batch runs (over
-    // time-ordered files) advance the watermark naturally instead; the
-    // cost is that trailing windows/sessions stay unemitted at shutdown,
-    // exactly as on a live stream.
-    // The multi-batch trap, found live by the round-10 DEPLOY dry run: a
-    // user set ONLY maxFilesPerTrigger (DEPLOY's backlog bullet) and lost
-    // exactly the late half of a non-time-ordered backlog — silently, exit
-    // 0. There is NO correct sentinel+multi-batch combination (even over
-    // time-ordered files the batch-1 sentinel marks every later batch
-    // late), so multi-batch mode now IMPLIES steady-state: drain unset →
-    // off; drain=true explicitly → refuse loudly instead of dropping data.
-    val multiBatch =
-      spark.conf.getOption("spark.graft.streaming.maxFilesPerTrigger").isDefined
-    val drainConf = spark.conf.getOption("spark.graft.streaming.drain")
-    require(!(multiBatch && drainConf.exists(_.equalsIgnoreCase("true"))),
-      "spark.graft.streaming.drain=true with " +
-        "spark.graft.streaming.maxFilesPerTrigger set would drop every " +
-        "event behind the batch-1 sentinel watermark as late data; unset " +
-        "one of the two (backlog replay = drain off, trailing windows stay " +
-        "unemitted exactly as on a live stream)")
-    if (multiBatch || drainConf.exists(_.equalsIgnoreCase("false"))) {
-      val mem0 = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Long](org.apache.spark.sql.Encoders.scalaLong, spark.sqlContext)
-      return mem0.toDF().select( // no addData: a forever-empty source
-        timestamp_seconds(col("value")).as("ts"),
-        lit(DrainType).as("event_type"),
-        lit(0.0).as("value"))
+  /** A one-row sentinel stream whose event time sits `aheadSec` past the
+    * directory's max event time, with `cols` filled by sentinel values.
+    * Unioned with the file stream BEFORE `withWatermark`, it advances the
+    * single watermark past end-of-input on the final batch (the Flink
+    * drain-on-stop pattern), so append-mode windows finalize and
+    * event-time timeouts fire on a finite run.
+    *
+    * Multi-batch runs (`spark.graft.streaming.maxFilesPerTrigger` set)
+    * get a forever-empty source instead: the sentinel row would land in
+    * batch 1 and jump the watermark past end-of-input, so every later
+    * batch's events would read as late and drop silently (the round-10
+    * DEPLOY dry run lost the late half of a non-time-ordered backlog that
+    * way, exit 0). Such runs advance the watermark naturally, and their
+    * trailing windows and sessions stay unemitted, exactly as on a live
+    * stream. Reads `nanosAsLong` parquet, which [[eventsStream]] (always
+    * built first by [[drainedEvents]]) switches on. */
+  private def drainSentinel(spark: SparkSession, dir: String, aheadSec: Long,
+                            cols: Seq[String]): DataFrame = {
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long](org.apache.spark.sql.Encoders.scalaLong, spark.sqlContext)
+    if (spark.conf.getOption("spark.graft.streaming.maxFilesPerTrigger").isEmpty) {
+      // empty input → max(ts) is NULL; fall back to epoch 0 so the drained
+      // operators return an empty result instead of throwing on .getLong
+      val maxEpochSec = maxTsEpochSecFromFooters(spark, dir)
+        .orElse(Option(
+          graft.core.Tables.normalizeEventTs(
+              spark.read.parquet(s"$dir/events.parquet"))
+            .agg(max(unix_seconds(col("ts")))).first().get(0))
+          .map(_.asInstanceOf[Long]))
+        .getOrElse(0L)
+      mem.addData(maxEpochSec + aheadSec)
     }
-    // empty input → max(ts) is NULL; fall back to epoch 0 so the drain
-    // wrappers return an empty result instead of throwing on .getLong
-    val maxEpochSec = maxTsEpochSecFromFooters(spark, dir)
-      .orElse(Option(
-        graft.core.Tables.normalizeEventTs(
-            spark.read.parquet(s"$dir/events.parquet"))
-          .agg(max(unix_seconds(col("ts")))).first().get(0))
-        .map(_.asInstanceOf[Long]))
-      .getOrElse(0L)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    mem.addData(maxEpochSec + aheadSec)
-    mem.toDF().select(
-      timestamp_seconds(col("value")).as("ts"),
-      lit(DrainType).as("event_type"),
-      lit(0.0).as("value"))
+    val values = Map("ts" -> timestamp_seconds(col("value")),
+      "event_type" -> lit(DrainType), "value" -> lit(0.0),
+      "user_id" -> lit(DrainUser), "event_id" -> lit(-1L))
+    mem.toDF().select(cols.map(c => values(c).as(c)): _*)
   }
 
   /** Stream-stream interval join (§2.8 extension): each purchase matched
-    * to the same user's clicks within the trailing `windowSec`. Both sides
-    * carry watermarks and the join condition is time-bounded, so each
-    * side's state is O(watermark + window horizon) — Spark drops a
-    * buffered click once the purchase-side watermark passes
-    * `click_ts + windowSec`; a matched pair emits exactly once in append
-    * mode. The drain sentinel rides BOTH sides (the global watermark is
-    * the MIN across watermark operators, so both must advance past
-    * end-of-input for the trailing matches to flush).
+    * to the same user's clicks within the trailing `windowSec`, with `how`
+    * one of the watermarked join types:
+    *   - `inner`: matched pairs only. Both sides carry watermarks and the
+    *     join condition is time-bounded, so each side's state is
+    *     O(watermark + window horizon) — Spark drops a buffered click once
+    *     the purchase-side watermark passes `click_ts + windowSec`; a
+    *     matched pair emits exactly once in append mode.
+    *   - `left_outer`: the state-eviction-emits-null semantics the inner
+    *     join doesn't exercise. A purchase with no qualifying click cannot
+    *     emit when it arrives (a match may still come), so Spark holds it
+    *     in state and emits the null-extended row only when the watermark
+    *     passes its eviction point — outer results are driven by
+    *     watermark progress, not by input order.
+    *   - `left_semi`: "purchases that HAD a qualifying click", emitted
+    *     WITHOUT the click payload — the existence-check shape (J1's
+    *     streaming form). Semi-join state is cheaper than inner: a
+    *     purchase emits on its FIRST match and leaves state immediately
+    *     (no multiplicity, no click columns), and unmatched purchases
+    *     evict silently at the watermark.
+    *   - `full_outer`: both sides' unmatched rows surface null-extended,
+    *     each only when the watermark passes that row's eviction point.
+    *     The click side's unmatched rows are the new semantics vs left
+    *     outer: a click with no purchase within the FOLLOWING window emits
+    *     with null purchase columns. Either side may be null, so `user_id`
+    *     (and the drain filter) is `coalesce(p_user, c_user)`.
+    * Every type keeps O(watermark + window) state per side. The drain
+    * sentinel rides BOTH sides: the global watermark is the MIN across
+    * watermark operators, so both must advance past end-of-input for the
+    * trailing matches and unmatched rows to flush.
     *
-    * Times join and emit as integer MICROSECONDS (`unix_micros`): the
-    * parquet source is nanos, truncated micros compare identically in any
+    * Returns `user_id, purchase_id, click_id, purchase_us, click_us`;
+    * the semi join returns `user_id, purchase_id, purchase_us`. Times
+    * join and emit as integer MICROSECONDS (`unix_micros`): the parquet
+    * source is nanos, truncated micros compare identically in any
     * engine, and second-level rounding never reorders a boundary pair. */
-  def clickPurchaseIntervalJoin(spark: SparkSession, dir: String,
-                                windowSec: Int = 1800,
-                                statePartitions: Int = 8): DataFrame = {
+  def clickPurchaseJoin(spark: SparkSession, dir: String, how: String,
+                        windowSec: Int = 1800,
+                        statePartitions: Int = 8): DataFrame = {
+    require(Seq("inner", "left_outer", "left_semi", "full_outer").contains(how),
+      s"clickPurchaseJoin: join type '$how' is not inner, left_outer, " +
+        "left_semi or full_outer")
     val wmDelaySec = 3600L
-    val sent = drainSentinel(spark, dir, wmDelaySec + windowSec + 60)
-      .withColumn("user_id", lit(DrainUser))
-      .withColumn("event_id", lit(-1L))
-      .select("ts", "event_type", "user_id", "event_id")
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-      .unionByName(sent)
+    val evs = drainedEvents(spark, dir,
+      Seq("ts", "event_type", "user_id", "event_id"), wmDelaySec + windowSec + 60)
     // the sentinel passes each side's filter (isin) — it must reach both
     // watermark operators; the output filter below runs on the sink table
-    val clicks = evs
-      .where(col("event_type").isin("click", DrainType))
-      .select(col("ts").as("c_ts"), col("user_id").as("c_user"),
-        col("event_id").as("click_id"))
-      .withWatermark("c_ts", s"$wmDelaySec seconds")
-    val purchases = evs
-      .where(col("event_type").isin("purchase", DrainType))
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", s"$wmDelaySec seconds")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
-        col("c_ts") <= col("p_ts"))
-    runToTable(joined, "append", statePartitions)
-      .where(col("p_user") =!= DrainUser)
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
-        unix_micros(col("p_ts")).as("purchase_us"),
-        unix_micros(col("c_ts")).as("click_us"))
-  }
-
-  /** LEFT OUTER stream-stream interval join — the state-eviction-emits-
-    * null semantics the inner join doesn't exercise: a purchase with no
-    * qualifying click cannot emit when it arrives (a match may still
-    * come), so Spark holds it in state and emits the null-extended row
-    * only when the watermark passes its eviction point — proving outer
-    * results are driven by watermark progress, not by input order. The
-    * drain sentinel advances both watermarks past end-of-input so the
-    * trailing unmatched purchases flush; state stays O(watermark +
-    * window) per side exactly as in the inner join. */
-  def clickPurchaseLeftOuterJoin(spark: SparkSession, dir: String,
-                                 windowSec: Int = 1800,
-                                 statePartitions: Int = 8): DataFrame = {
-    val wmDelaySec = 3600L
-    val sent = drainSentinel(spark, dir, wmDelaySec + windowSec + 60)
-      .withColumn("user_id", lit(DrainUser))
-      .withColumn("event_id", lit(-1L))
-      .select("ts", "event_type", "user_id", "event_id")
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-      .unionByName(sent)
-    val clicks = evs
-      .where(col("event_type").isin("click", DrainType))
-      .select(col("ts").as("c_ts"), col("user_id").as("c_user"),
-        col("event_id").as("click_id"))
-      .withWatermark("c_ts", s"$wmDelaySec seconds")
-    val purchases = evs
-      .where(col("event_type").isin("purchase", DrainType))
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", s"$wmDelaySec seconds")
-    val joined = purchases.join(clicks,
+    def side(eventType: String, p: String, id: String) = evs
+      .where(col("event_type").isin(eventType, DrainType))
+      .select(col("ts").as(s"${p}_ts"), col("user_id").as(s"${p}_user"),
+        col("event_id").as(id))
+      .withWatermark(s"${p}_ts", s"$wmDelaySec seconds")
+    val joined = side("purchase", "p", "purchase_id").join(
+      side("click", "c", "click_id"),
       col("p_user") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
         col("c_ts") <= col("p_ts"),
-      "left_outer")
-    runToTable(joined, "append", statePartitions)
-      .where(col("p_user") =!= DrainUser)
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
-        unix_micros(col("p_ts")).as("purchase_us"),
-        unix_micros(col("c_ts")).as("click_us"))
-  }
-
-  /** LEFT SEMI stream-stream interval join — "purchases that HAD a
-    * qualifying click", emitted WITHOUT the click payload: the
-    * existence-check shape (J1's streaming form). Semi-join state is
-    * cheaper than inner: a purchase emits on its FIRST match and leaves
-    * state immediately (no multiplicity, no click columns in the
-    * output), unmatched purchases evict silently at the watermark. Same
-    * O(watermark + window) state bounds per side as the inner join. */
-  def clickPurchaseSemiJoin(spark: SparkSession, dir: String,
-                            windowSec: Int = 1800,
-                            statePartitions: Int = 8): DataFrame = {
-    val wmDelaySec = 3600L
-    val sent = drainSentinel(spark, dir, wmDelaySec + windowSec + 60)
-      .withColumn("user_id", lit(DrainUser))
-      .withColumn("event_id", lit(-1L))
-      .select("ts", "event_type", "user_id", "event_id")
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-      .unionByName(sent)
-    val clicks = evs
-      .where(col("event_type").isin("click", DrainType))
-      .select(col("ts").as("c_ts"), col("user_id").as("c_user"),
-        col("event_id").as("click_id"))
-      .withWatermark("c_ts", s"$wmDelaySec seconds")
-    val purchases = evs
-      .where(col("event_type").isin("purchase", DrainType))
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", s"$wmDelaySec seconds")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
-        col("c_ts") <= col("p_ts"),
-      "left_semi")
-    runToTable(joined, "append", statePartitions)
-      .where(col("p_user") =!= DrainUser)
-      .select(col("p_user").as("user_id"), col("purchase_id"),
+      how)
+    val user =
+      if (how == "full_outer") coalesce(col("p_user"), col("c_user"))
+      else col("p_user")
+    val out = runToTable(joined, statePartitions).where(user =!= DrainUser)
+    if (how == "left_semi")
+      out.select(user.as("user_id"), col("purchase_id"),
         unix_micros(col("p_ts")).as("purchase_us"))
-  }
-
-  /** FULL OUTER stream-stream interval join — completes the join family
-    * (inner / left outer / left semi / full outer): both sides' unmatched
-    * rows surface as null-extended output, each emitted only when the
-    * watermark passes that row's eviction point. The click side's
-    * unmatched rows are the new semantics vs left-outer — a click with no
-    * purchase within the FOLLOWING window emits (null purchase columns)
-    * at eviction. Same O(watermark + window) state per side as the inner
-    * join; the drain sentinel flushes trailing unmatched state on BOTH
-    * sides. The drain filter uses coalesce because either side may be
-    * null in a full-outer row. */
-  def clickPurchaseFullOuterJoin(spark: SparkSession, dir: String,
-                                 windowSec: Int = 1800,
-                                 statePartitions: Int = 8): DataFrame = {
-    val wmDelaySec = 3600L
-    val sent = drainSentinel(spark, dir, wmDelaySec + windowSec + 60)
-      .withColumn("user_id", lit(DrainUser))
-      .withColumn("event_id", lit(-1L))
-      .select("ts", "event_type", "user_id", "event_id")
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-      .unionByName(sent)
-    val clicks = evs
-      .where(col("event_type").isin("click", DrainType))
-      .select(col("ts").as("c_ts"), col("user_id").as("c_user"),
-        col("event_id").as("click_id"))
-      .withWatermark("c_ts", s"$wmDelaySec seconds")
-    val purchases = evs
-      .where(col("event_type").isin("purchase", DrainType))
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", s"$wmDelaySec seconds")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
-        col("c_ts") <= col("p_ts"),
-      "full_outer")
-    runToTable(joined, "append", statePartitions)
-      .where(coalesce(col("p_user"), col("c_user")) =!= DrainUser)
-      .select(coalesce(col("p_user"), col("c_user")).as("user_id"),
-        col("purchase_id"), col("click_id"),
+    else
+      out.select(user.as("user_id"), col("purchase_id"), col("click_id"),
         unix_micros(col("p_ts")).as("purchase_us"),
         unix_micros(col("c_ts")).as("click_us"))
   }
@@ -879,18 +752,15 @@ object EventsStream {
     // sentinel far enough that wm = sentinel - delay > max(last + gap);
     // ts stays in the record: the watermarked column must survive the
     // projection feeding flatMapGroupsWithState
-    val evs = eventsStream(spark, dir)
-      .select(col("ts"), col("event_type"), col("value"), col("user_id"))
-      .unionByName(
-        drainSentinel(spark, dir, wmDelaySec + gapSec + 60)
-          .withColumn("user_id", lit(DrainUser)))
+    val evs = drainedEvents(spark, dir,
+        Seq("ts", "event_type", "value", "user_id"), wmDelaySec + gapSec + 60)
       .withWatermark("ts", s"$wmDelaySec seconds")
       .select(col("user_id"), unix_timestamp(col("ts")).as("epoch"),
         col("value"), col("ts"))
       .as[Ev]
 
     val sessions = sessionizeStream(evs, gapSec)
-    runToTable(sessions.toDF(), "append", statePartitions)
+    runToTable(sessions.toDF(), statePartitions)
       .where(col("user_id") =!= DrainUser)
   }
 }

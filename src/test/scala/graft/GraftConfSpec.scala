@@ -65,4 +65,21 @@ class GraftConfSpec extends AnyFunSuite {
   test("width is clamped: a petabyte estimate cannot demand millions of partitions") {
     assert(GraftConf.shufflePartitions(4000, 1L << 50) == (1 << 20))
   }
+
+  test("every spark.graft.* key the library reads has a DEPLOY.md conf row, and no more") {
+    // a key is read wherever src/main names it in a string literal
+    val key = "spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_]".r
+    val literal = ("\"(" + key.regex + ")").r
+    val read = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+      .toSet
+    val rowKey = ("^\\| `(" + key.regex + ")` \\|").r
+    val documented = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("DEPLOY.md"))
+      .toArray.flatMap(l => rowKey.findFirstMatchIn(l.toString).map(_.group(1))).toSet
+    assert(read == documented,
+      s"read but undocumented: ${read -- documented}; documented but unread: ${documented -- read}")
+    assert(read.nonEmpty, "no spark.graft.* literal found: run from the repository root")
+  }
 }

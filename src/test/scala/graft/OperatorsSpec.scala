@@ -582,17 +582,6 @@ class OperatorsSpec extends SparkSpec {
     assert(simOther == 0.0, s"unrelated sim $simOther")
   }
 
-  test("validation observe() metrics report seen/invalid counts") {
-    val df = Seq((1, "7"), (2, "x"), (3, null)).toDF("id", "amt")
-    val obs = new org.apache.spark.sql.Observation("v")
-    val rules = Seq(Validation.notNull("amt"), Validation.numeric("amt"))
-    val anyFail = rules.map(r => !coalesce(r.pred, lit(false))).reduce(_ || _)
-    df.observe(obs, count(lit(1)).as("rows_seen"),
-        sum(when(anyFail, 1L).otherwise(0L)).as("rows_invalid"))
-      .collect()
-    assert(obs.get("rows_seen") == 3L && obs.get("rows_invalid") == 2L)
-  }
-
   // ---- TextAnalysis
 
   test("langIdMulti identifies real language samples") {

@@ -151,14 +151,18 @@ class SinksSpec extends SparkSpec {
   }
 
   test("reject-channel sink splits valid/reject with counts") {
-    val df = Seq((1, "7"), (2, "x")).toDF("id", "amt")
-    val (valid, rejects) = Validation.split(df, Seq(Validation.numeric("amt")))
+    // a null amt passes numeric (nulls are notNull's to catch), so each
+    // reject carries exactly the one rule it broke
+    val df = Seq((1, "7"), (2, "x"), (3, null)).toDF("id", "amt")
+    val (valid, rejects) = Validation.split(df,
+      Seq(Validation.notNull("amt"), Validation.numeric("amt")))
     val base = tmp()
     val (nv, nr) = Sinks.writeWithRejects(valid, rejects,
       s"$base/main", s"$base/rejects")
-    assert(nv == 1 && nr == 1)
-    val rej = spark.read.json(s"$base/rejects").collect()(0)
-    assert(rej.getAs[String]("_failed_rules") == "amt_numeric")
+    assert((nv, nr) == ((1L, 2L)))
+    val rej = spark.read.json(s"$base/rejects").collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[String]("_failed_rules")).toMap
+    assert(rej == Map(2L -> "amt_numeric", 3L -> "amt_not_null"))
   }
 
   test("writeWithRejects runs its input lineage once and leaves no cache behind") {

@@ -181,70 +181,58 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream interval join equals the batch join on a drained run") {
-    val streamed = EventsStream.clickPurchaseIntervalJoin(spark, sfDir, 1800)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
+  // One body for the four click/purchase interval joins: each streamed join
+  // must equal the batch join of the same type. A null id reads as
+  // Long.MinValue, so outer rows compare as tuples.
+  private def intervalJoinEqualsBatch(how: String): Set[Seq[Long]] = {
     val e = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-    val batch = e.as("p").filter(col("p.event_type") === "purchase")
-      .join(e.as("c").filter(col("c.event_type") === "click"),
-        col("c.user_id") === col("p.user_id") &&
-          col("c.us") >= col("p.us") - 1800000000L && col("c.us") <= col("p.us"))
-      .select(col("p.user_id"), col("p.event_id"), col("c.event_id"),
-        col("p.us"), col("c.us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    assert(batch.nonEmpty && streamed == batch)
+    val p = e.as("p").filter(col("p.event_type") === "purchase")
+    val c = e.as("c").filter(col("c.event_type") === "click")
+    val cond = col("c.user_id") === col("p.user_id") &&
+      col("c.us") >= col("p.us") - 1800000000L && col("c.us") <= col("p.us")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
+      df.collect().map(r => (0 until r.length).map(i =>
+        if (r.isNullAt(i)) Long.MinValue else r.getLong(i)).toSeq).toSet
+    val streamed = rows(EventsStream.clickPurchaseJoin(spark, sfDir, how, 1800))
+    val batch = rows(
+      if (how == "left_semi")
+        p.join(c, cond, how).select(col("p.user_id"), col("p.event_id"), col("p.us"))
+      else
+        p.join(c, cond, how).select(
+          if (how == "full_outer") coalesce(col("p.user_id"), col("c.user_id"))
+          else col("p.user_id"),
+          col("p.event_id"), col("c.event_id"), col("p.us"), col("c.us")))
+    assert(batch.nonEmpty && streamed == batch, s"$how join differs from batch")
+    streamed
+  }
+
+  test("stream-stream interval join equals the batch join on a drained run") {
+    val inner = intervalJoinEqualsBatch("inner")
+    assert(inner.forall(r => r(2) != Long.MinValue))
   }
 
   test("left-outer interval join: unmatched purchases emit null rows on eviction") {
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) Long.MinValue else r.getLong(2))
-    val streamed = EventsStream.clickPurchaseLeftOuterJoin(spark, sfDir, 1800)
-      .collect().map(key).toSet
-    val e = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-    val batch = e.as("p").filter(col("p.event_type") === "purchase")
-      .join(e.as("c").filter(col("c.event_type") === "click"),
-        col("c.user_id") === col("p.user_id") &&
-          col("c.us") >= col("p.us") - 1800000000L && col("c.us") <= col("p.us"),
-        "left_outer")
-      .select(col("p.user_id"), col("p.event_id"), col("c.event_id"))
-      .collect().map(key).toSet
-    assert(streamed == batch)
-    // the outer semantics must actually fire: some purchases are unmatched
-    assert(streamed.exists(_._3 == Long.MinValue))
+    val streamed = intervalJoinEqualsBatch("left_outer")
+    // the outer semantics must actually fire: some purchases are unmatched,
     // and the inner matches are a strict subset
-    assert(streamed.exists(_._3 != Long.MinValue))
+    assert(streamed.exists(_(2) == Long.MinValue))
+    assert(streamed.exists(_(2) != Long.MinValue))
+  }
+
+  test("left-semi interval join equals the batch semi join") {
+    val semi = intervalJoinEqualsBatch("left_semi")
+    // exactly the purchases the inner join matched, once each
+    assert(semi == intervalJoinEqualsBatch("inner").map(r => Seq(r(0), r(1), r(3))))
   }
 
   test("full-outer interval join: both sides' unmatched rows surface") {
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0),
-        if (r.isNullAt(1)) Long.MinValue else r.getLong(1),
-        if (r.isNullAt(2)) Long.MinValue else r.getLong(2))
-    val streamed = EventsStream.clickPurchaseFullOuterJoin(spark, sfDir, 1800)
-      .collect().map(key).toSet
-    val e = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-    val batch = e.as("p").filter(col("p.event_type") === "purchase")
-      .join(e.as("c").filter(col("c.event_type") === "click"),
-        col("c.user_id") === col("p.user_id") &&
-          col("c.us") >= col("p.us") - 1800000000L && col("c.us") <= col("p.us"),
-        "full_outer")
-      .select(coalesce(col("p.user_id"), col("c.user_id")),
-        col("p.event_id"), col("c.event_id"))
-      .collect().map(key).toSet
-    assert(streamed == batch)
+    val streamed = intervalJoinEqualsBatch("full_outer")
     // both outer directions must actually fire
-    assert(streamed.exists(_._2 == Long.MinValue), "no unmatched clicks")
-    assert(streamed.exists(_._3 == Long.MinValue), "no unmatched purchases")
-    assert(streamed.exists(r => r._2 != Long.MinValue && r._3 != Long.MinValue))
+    assert(streamed.exists(_(1) == Long.MinValue), "no unmatched clicks")
+    assert(streamed.exists(_(2) == Long.MinValue), "no unmatched purchases")
+    assert(streamed.exists(r => r(1) != Long.MinValue && r(2) != Long.MinValue))
   }
 
   test("per-batch incremental cost measured separately from setup (4-batch run)") {
@@ -299,11 +287,13 @@ class StreamingSpec extends SparkSpec {
 
   test("drain-off multi-batch run equals the single-drain run on every " +
     "watermark-closed window; trailing windows stay unemitted") {
-    // the drain=false + maxFilesPerTrigger mode rewires the sentinel
-    // union every streaming oracle query flows through — this pins that
-    // on time-ordered files the multi-batch run's emitted rows are
-    // EXACTLY the single-drain run's rows restricted to windows the
-    // natural watermark closed (a prefix by win_start), nothing altered
+    // maxFilesPerTrigger alone turns the drain sentinel off (the sentinel
+    // union every streaming oracle query flows through) — the round-10
+    // DEPLOY dry run set only that conf and the batch-1 sentinel silently
+    // late-dropped half a backlog. This pins that on time-ordered files
+    // the multi-batch run's emitted rows are EXACTLY the single-drain
+    // run's rows restricted to windows the natural watermark closed (a
+    // prefix by win_start), nothing altered
     val base = java.nio.file.Files.createTempDirectory("graft_drainoff").toString
     val out = s"$base/events.parquet"
     Tables.events(spark, sfDir).repartitionByRange(5, col("ts"))
@@ -319,14 +309,10 @@ class StreamingSpec extends SparkSpec {
       .map(r => key(r) -> r).toMap
     val partial =
       try {
-        spark.conf.set("spark.graft.streaming.drain", "false")
         spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", "1")
         EventsStream.tumblingCounts(spark, base, 300).collect()
           .map(r => key(r) -> r).toMap
-      } finally {
-        spark.conf.unset("spark.graft.streaming.drain")
-        spark.conf.unset("spark.graft.streaming.maxFilesPerTrigger")
-      }
+      } finally spark.conf.unset("spark.graft.streaming.maxFilesPerTrigger")
     assert(partial.nonEmpty, "multi-batch run emitted nothing — watermark never advanced")
     assert(partial.size < drained.size,
       "drain-off must withhold the trailing windows the sentinel would close")
@@ -409,53 +395,6 @@ class StreamingSpec extends SparkSpec {
     // degenerate backlogs: nothing to overlap with
     assert(EventsStream.worstOverlap(Seq((1000L, 2000L))) == 0L)
     assert(EventsStream.worstOverlap(Nil) == 0L)
-  }
-
-  test("maxFilesPerTrigger alone implies drain-off; drain=true with it is refused") {
-    // the round-10 DEPLOY dry run set ONLY maxFilesPerTrigger (the
-    // backlog bullet) and the batch-1 sentinel silently late-dropped
-    // half a non-time-ordered backlog — multi-batch mode must imply
-    // steady-state, and the one lossy combination must fail loudly
-    val base = java.nio.file.Files.createTempDirectory("graft_mbdrain").toString
-    val out = s"$base/events.parquet"
-    Tables.events(spark, sfDir).repartitionByRange(5, col("ts"))
-      .sortWithinPartitions("ts").write.parquet(out)
-    val parts = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val t0 = System.currentTimeMillis() - parts.length * 2000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 2000L) }
-    def run(): Set[(Long, String)] =
-      EventsStream.tumblingCounts(spark, base, 300).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-    val implied =
-      try {
-        spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", "1")
-        run()
-      } finally spark.conf.unset("spark.graft.streaming.maxFilesPerTrigger")
-    val explicit =
-      try {
-        spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", "1")
-        spark.conf.set("spark.graft.streaming.drain", "false")
-        run()
-      } finally {
-        spark.conf.unset("spark.graft.streaming.drain")
-        spark.conf.unset("spark.graft.streaming.maxFilesPerTrigger")
-      }
-    assert(implied.nonEmpty, "implied drain-off run emitted nothing")
-    assert(implied == explicit,
-      "maxFilesPerTrigger without a drain conf must behave as drain=false")
-    val ex = intercept[IllegalArgumentException] {
-      try {
-        spark.conf.set("spark.graft.streaming.maxFilesPerTrigger", "1")
-        spark.conf.set("spark.graft.streaming.drain", "true")
-        run()
-      } finally {
-        spark.conf.unset("spark.graft.streaming.drain")
-        spark.conf.unset("spark.graft.streaming.maxFilesPerTrigger")
-      }
-    }
-    assert(ex.getMessage.contains("late"),
-      s"refusal must name the late-drop mechanism, got: ${ex.getMessage}")
   }
 
   test("streaming incremental dedup accumulates the index across micro-batches") {
