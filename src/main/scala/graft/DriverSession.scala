@@ -28,13 +28,12 @@ private[graft] object DriverSession {
     spark
   }
 
-  /** Drop every cache a query left behind: graft's operator-internal
-    * persists ([[core.InternalCaches]]), cached tables and persisted RDDs.
-    * Operators cannot unpersist what they return lazily, so without this
-    * one long session accumulates every dedup/linkage cache, and the heap
-    * pressure lands on whichever queries run late in the suite. */
+  /** Drop every cache a query left behind: cached tables and persisted
+    * RDDs. graft's operators end their own caches before they return, so
+    * what this drops is a query's own persists and the checkpoint blocks
+    * of its cut leaves, which would otherwise wait for the ContextCleaner
+    * while later queries in the same session run. */
   def drain(spark: SparkSession): Unit = {
-    core.InternalCaches.release()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }

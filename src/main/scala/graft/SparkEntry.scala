@@ -91,17 +91,19 @@ object SparkEntry {
     // scan + the (ok, sk) DISTINCT (an exchange + aggregate, not a free
     // projection — the §4 revert test that kills speculative caches does
     // not apply). Two longs per row, bounded by |lineitem| at any scale.
-    val sup = graft.core.InternalCaches.persistTracked(
-      Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-        .distinct(),
-      scope = "graphs")
-    sup.join(sup.select(col("ok"), col("sk").as("sk2")), Seq("ok"))
-      .where(col("sk") < col("sk2"))
-      .groupBy(col("sk").as("u"), col("sk2").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("u"), col("v")).limit(topK)
-      .select("u", "v")
+    // The cache ends once the top-`topK` result is cut.
+    val sup = Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
+      .distinct()
+      .persist()
+    try graft.core.Checkpoints.cut(
+      sup.join(sup.select(col("ok"), col("sk").as("sk2")), Seq("ok"))
+        .where(col("sk") < col("sk2"))
+        .groupBy(col("sk").as("u"), col("sk2").as("v"))
+        .agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("u"), col("v")).limit(topK)
+        .select("u", "v"))
+    finally sup.unpersist(false)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */

@@ -2,7 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for iterative loops (connected components, PageRank).
+/** Lineage truncation for iterative loops (connected components, PageRank),
+  * and the materialized result an operator returns when it ends its own
+  * caches before returning (the prefix-filter and banded pair joins,
+  * keep-best dedup, phrase search, local OCR).
   *
   * Two materialization modes, selected by the runtime conf
   * `spark.graft.reliableCheckpoint`:

@@ -31,15 +31,14 @@ object Dedup {
     * dedup handles without the quadratic task.
     *
     * The input is persisted (count pass + join pass read it once each);
-    * the collect is bounded metadata — at most totalRows/maxRows over-cap
-    * keys can exist. `maxRows <= 0` disables the guard. */
+    * the caller ends that cache: [[hammingPairsBanded]] unpersists it once
+    * its pairs are cut. The collect is bounded metadata — at most
+    * totalRows/maxRows over-cap keys can exist. `maxRows <= 0` disables
+    * the guard. */
   private def capBands(banded: DataFrame, bandCol: String, maxRows: Int,
                        who: String): DataFrame = {
     if (maxRows <= 0) return banded
-    // tracked persist: lazily-returned, so the operator has no correct
-    // unpersist point — long-lived sessions release via
-    // graft.core.InternalCaches.release() (see its Scaladoc)
-    val cached = graft.core.InternalCaches.persistTracked(banded, scope = "dedup")
+    val cached = banded.persist()
     val hot = cached.groupBy(col(bandCol)).agg(count(lit(1)).as("__n"))
       .where(col("__n") > maxRows).collect()
     if (hot.isEmpty) cached
@@ -117,23 +116,23 @@ object Dedup {
   // built from these helpers. A join is complete only when every side
   // ranks its grams by ONE global total order and cuts its prefix at the
   // same length function — both live here, once. Each caller keeps its
-  // own persists: which frames have several consumers differs per caller.
+  // own persists, since which frames have several consumers differs per
+  // caller, and ends them once the join has cut its result.
 
   /** (id, sh, sz): each row's distinct gram hashes as a sorted array (the
     * `jaccardSorted` input shape) and its size; empty sets are dropped.
-    * Persisted under `scope`, as every caller reads it at least three
-    * times (postings, the df count via postings, the verify joins), so
-    * tokenization and hashing run once. MEMORY_AND_DISK: at corpus scale
-    * the hash arrays spill rather than evict-and-recompute. TRACKED: the
-    * joins return lazy frames, so there is no correct in-operator
-    * unpersist — long-lived sessions release via InternalCaches.release(). */
+    * Persisted, as every caller reads it at least three times (postings,
+    * the df count via postings, the verify joins), so tokenization and
+    * hashing run once. MEMORY_AND_DISK (the persist default): at corpus
+    * scale the hash arrays spill rather than evict-and-recompute. The join
+    * that reads it ends the cache before it returns ([[jaccardJoin]],
+    * [[containmentPairs]]). */
   private[operators] def gramSets(df: DataFrame, idCol: String, textCol: String,
-                                  gramsOf: Column => Column,
-                                  scope: String): DataFrame =
+                                  gramsOf: Column => Column): DataFrame =
     df.select(col(idCol).as("id"), gramsOf(col(textCol)).as("sh"))
       .select(col("id"), col("sh"), size(col("sh")).as("sz"))
       .where(col("sz") > 0)
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = scope))
+      .persist()
 
   /** (id, sz, g): one row per gram of each set. The posting, frequency
     * and rank exchanges carry these fixed-width triples only, never the
@@ -195,20 +194,23 @@ object Dedup {
     * linear, see PLANS.md round 6). The 1e-9 slack keeps float rounding on
     * the safe (over-keeping) side.
     *
-    * The candidate id pairs are persisted under `scope` so the verify
-    * joins see a REAL size estimate: unestimated, the planner built its
-    * hash relations from the set side instead — broadcasting every set's
+    * The candidate id pairs are persisted so the verify joins see a REAL
+    * size estimate: unestimated, the planner built its hash relations
+    * from the set side instead — broadcasting every set's
     * full array twice per call (the candidate list is a bare id-pair
     * table, orders of magnitude lighter at every scale). The arrays then
     * cross exactly two exchanges (one hash join per pair side), never per
     * candidate. The verify rounds BEFORE the threshold filter (6 dp, the
     * SQL oracle's ROUND-then-filter order): a pair whose true Jaccard sits
-    * within 5e-7 below the threshold must round up INTO the result. */
+    * within 5e-7 below the threshold must round up INTO the result.
+    *
+    * The result is returned materialized ([[graft.core.Checkpoints.cut]])
+    * and the candidate cache ended; the caller ends the caches it passed
+    * in. */
   private[operators] def jaccardJoin(rankedA: DataFrame, rankedB: DataFrame,
                                      setsA: DataFrame, setsB: DataFrame,
                                      idA: String, idB: String,
-                                     pairFilter: Column, threshold: Double,
-                                     scope: String): DataFrame = {
+                                     pairFilter: Column, threshold: Double): DataFrame = {
     def side(ranked: DataFrame, id: String, s: String): DataFrame =
       ranked.select(col("g"), col("id").as(id), col("sz").as(s"sz_$s"),
         col("rk").as(s"rk_$s"), col("nsh").as(s"nsh_$s"))
@@ -221,13 +223,15 @@ object Dedup {
         (lit(1.0) + least(col("nsh_a") - col("rk_a"),
           col("nsh_b") - col("rk_b")).cast("double")) >= alpha - lit(1e-9))
       .select(idA, idB).dropDuplicates(idA, idB)
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = scope))
-    cand.join(setsA.select(col("id").as(idA), col("sh").as("sh_a")), Seq(idA))
-      .join(setsB.select(col("id").as(idB), col("sh").as("sh_b")), Seq(idB))
-      .withColumn("jaccard", round(
-        graft.plans.VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
-      .where(col("jaccard") >= threshold)
-      .select(idA, idB, "jaccard")
+      .persist()
+    try graft.core.Checkpoints.cut(
+      cand.join(setsA.select(col("id").as(idA), col("sh").as("sh_a")), Seq(idA))
+        .join(setsB.select(col("id").as(idB), col("sh").as("sh_b")), Seq(idB))
+        .withColumn("jaccard", round(
+          graft.plans.VectorExpressions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
+        .where(col("jaccard") >= threshold)
+        .select(idA, idB, "jaccard"))
+    finally cand.unpersist(false)
   }
 
   /** Exact word n-gram Jaccard near-dup pairs over the WHOLE corpus:
@@ -243,7 +247,7 @@ object Dedup {
                                n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
     val docs = gramSets(graft.core.ScanWidth.ensure(df), idCol, textCol,
-      wordShingleHashes(_, n), "dedup")
+      wordShingleHashes(_, n))
     val posting = postings(docs)
     // `ranked` is materialized ONCE: the self-join reads it as BOTH
     // sides, and Spark does not share common subtrees across self-join
@@ -261,9 +265,10 @@ object Dedup {
     // already compact columnar CachedBatches, so SER only adds a
     // serialize/deserialize pass (OPTIMIZATION_r14.md)
     val ranked = rankedPrefix(posting, sharedFreq(posting), jaccardPrefixLen(threshold))
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
-    jaccardJoin(ranked, ranked, docs, docs, "id_a", "id_b",
-      col("id_a") < col("id_b"), threshold, "dedup")
+      .persist()
+    try jaccardJoin(ranked, ranked, docs, docs, "id_a", "id_b",
+      col("id_a") < col("id_b"), threshold)
+    finally { ranked.unpersist(false); docs.unpersist(false) }
   }
 
   /** Asymmetric containment join: pairs (id_a, id_b) where doc A's
@@ -284,13 +289,13 @@ object Dedup {
     * still applies to both sides (a shingle in one doc connects nothing).
     * Exact verification recomputes |A∩B| on the sorted-distinct hash
     * arrays; ROUND(6)-then-filter matches the SQL oracle's order. Returns
-    * (id_a, id_b, containment) — directional: both (A⊂B) and (B⊂A) can
-    * appear. */
+    * (id_a, id_b, containment), materialized, with the gram-set and `freq`
+    * caches ended — directional: both (A⊂B) and (B⊂A) can appear. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
     val docs = gramSets(graft.core.ScanWidth.ensure(df), idCol, textCol,
-      wordShingleHashes(_, n), "dedup")
+      wordShingleHashes(_, n))
     val posting = postings(docs)
     // `freq` IS materialized (r14): probe and index both join it, so the
     // unpersisted plan re-ran the posting explode PLUS the full groupBy
@@ -299,8 +304,7 @@ object Dedup {
     // table, whose own cache the r13 round reverted (measured: +0.1 s
     // isolated / +0.7 s full-suite — cache build + suite memory pressure
     // on a docs-sized frame), so the probe/index `shared` join stays lazy.
-    val freq = sharedFreq(posting)
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
+    val freq = sharedFreq(posting).persist()
     val probe = rankedPrefix(posting, freq, col("sz") - ceil(col("sz") * threshold) + 1)
       .select(col("g"), col("id").as("id_a"))
     // index side: all shared shingles (no prefix — see Scaladoc)
@@ -314,12 +318,14 @@ object Dedup {
     val arrA = docs.select(col("id").as("id_a"), col("sh").as("sh_a"),
       col("sz").as("sz_a"))
     val arrB = docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    cand.join(arrA, Seq("id_a")).join(arrB, Seq("id_b"))
-      .withColumn("containment", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          col("sz_a"), 6))
-      .where(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
+    try graft.core.Checkpoints.cut(
+      cand.join(arrA, Seq("id_a")).join(arrB, Seq("id_b"))
+        .withColumn("containment", round(
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+            col("sz_a"), 6))
+        .where(col("containment") >= threshold)
+        .select("id_a", "id_b", "containment"))
+    finally { freq.unpersist(false); docs.unpersist(false) }
   }
 
   /** Connected components over an undirected pair set — the step that
@@ -870,24 +876,27 @@ object Dedup {
                            aCol: String = "id_a",
                            bCol: String = "id_b"): DataFrame = {
     val comp = connectedComponents(pairs, aCol, bCol)
-    // both materialized (r13): `scored` feeds the keeper aggregation AND
-    // the losers join, and the final anti-join's right side is pushed
-    // through any Union in `df` (PushDownLeftSemiAntiJoin duplicates the
-    // right subtree per branch) — unmaterialized, the whole keeper chain
-    // (incl. the score expression over the corpus, e.g. a tokenizing
-    // length) re-ran once per consumer per branch: 4× in the q149 plan.
-    // Both frames are inner-joined to `comp`, i.e. bounded by the
-    // CLUSTERED docs only — small at any scale.
+    // both materialized (r13): `scored` (persisted) feeds the keeper
+    // aggregation AND the losers join, and `losers` (cut) is the final
+    // anti-join's right side, which is pushed through any Union in `df`
+    // (PushDownLeftSemiAntiJoin duplicates the right subtree per branch) —
+    // unmaterialized, the whole keeper chain (incl. the score expression
+    // over the corpus, e.g. a tokenizing length) re-ran once per consumer
+    // per branch: 4× in the q149 plan. Both frames are inner-joined to
+    // `comp`, i.e. bounded by the CLUSTERED docs only — small at any
+    // scale. `scored` ends once `losers` is cut, so the call leaves no
+    // cache behind.
     val scored = df.select(col(idCol).as("id"), score.as("__s"))
       .join(comp, Seq("id"))
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
+      .persist()
     // struct max = (score asc, -id asc) → highest score, smallest id
     val keep = scored.groupBy("component")
       .agg(max(struct(col("__s"), negate(col("id")).as("__ni"))).as("__k"))
       .select(col("component"), negate(col("__k").getField("__ni")).as("keeper"))
-    val losers = scored.join(keep, Seq("component"))
-      .where(col("id") =!= col("keeper")).select(col("id"))
-      .transform(d => graft.core.InternalCaches.persistTracked(d, scope = "dedup"))
+    val losers =
+      try graft.core.Checkpoints.cut(scored.join(keep, Seq("component"))
+        .where(col("id") =!= col("keeper")).select(col("id")))
+      finally scored.unpersist(false)
     df.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
@@ -978,7 +987,8 @@ object Dedup {
     * sharing a band verify by popcount. For maxHamming > 3 the banding
     * is a recall-trading blocker (a pair can differ in all 4 bands);
     * <= 3 it is exact by pigeonhole. Shuffle carries (band, id, fp)
-    * triples only; hot bands cap via [[capBands]]. */
+    * triples only; hot bands cap via [[capBands]]. The pairs come back
+    * materialized, with [[capBands]]' cache ended. */
   def hammingPairsBanded(df: DataFrame, idCol: String, fpCol: String,
                          maxHamming: Int = 3, maxBandRows: Int = 10000,
                          tag: String = "hammingPairsBanded"): DataFrame = {
@@ -990,12 +1000,14 @@ object Dedup {
     val b = withFp.select(col("band"), col("id").as("id_b"), col("fp").as("fp_b"))
     // popcount-verify before the pair-dedup — the dedup shuffle then moves
     // only surviving (id_a, id_b, hamming) rows.
-    a.join(b, Seq("band"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
+    try graft.core.Checkpoints.cut(
+      a.join(b, Seq("band"))
+        .where(col("id_a") < col("id_b"))
+        .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
+        .where(col("hamming") <= maxHamming)
+        .select("id_a", "id_b", "hamming")
+        .dropDuplicates("id_a", "id_b"))
+    finally exploded.unpersist(false)
   }
 
   /** Persistable MinHash index of a corpus batch: one row per (doc, band),

@@ -70,80 +70,94 @@ object Graphs {
     * `exactFoldMaxInDegree`, logging the switch — bit-parity is a
     * property worth one bounded list, never an OOM. Plain sum differs
     * from the exact fold only in float association order (<= 1 ulp per
-    * add). `exactFold = false` skips the probe and always plain-sums. */
+    * add). `exactFold = false` skips the probe and always plain-sums.
+    *
+    * The edge list is persisted for the call only: both paths return a
+    * materialized table (a driver table or the last round's cut), so the
+    * call ends its caches before it returns. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
                exactFold: Boolean = true,
                exactFoldMaxInDegree: Long = 100000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters $iters out of [1,50]")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "graphs"))
-    // Small-graph fast path, same gate as the other iterative loops
-    // (round 13). Bit-parity survives it BECAUSE of the exact-fold
-    // contract: per-target contributions fold in sorted-source order —
-    // an engine-independent order the driver reproduces with the same
-    // IEEE ops, so the gated path emits the identical doubles (the
-    // dangling scalar keeps its documented ≤1-ulp fold-order caveat,
-    // same as between any two distributed runs). Gated additionally on
-    // BOTH id columns being integral (`integralIds`). The count is one
-    // map-side scan of the just-persisted edge list.
-    val maxEdges = driverMaxEdges(edges.sparkSession)
-    if (maxEdges > 0 && integralIds(e) && e.count() <= maxEdges) {
-      log.info(s"pageRank: edge count <= gate $maxEdges" +
-        " — exact driver iterations (distributed loop skipped)")
-      return driverPageRank(e, iters, damping)
-    }
-    val useExactFold = exactFold &&
-      resolveExactFold(e, exactFoldMaxInDegree)
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
+    try {
+      // Small-graph fast path, same gate as the other iterative loops
+      // (round 13). Bit-parity survives it BECAUSE of the exact-fold
+      // contract: per-target contributions fold in sorted-source order —
+      // an engine-independent order the driver reproduces with the same
+      // IEEE ops, so the gated path emits the identical doubles (the
+      // dangling scalar keeps its documented ≤1-ulp fold-order caveat,
+      // same as between any two distributed runs). Gated additionally on
+      // BOTH id columns being integral (`integralIds`). The count is one
+      // map-side scan of the just-persisted edge list.
+      val maxEdges = driverMaxEdges(edges.sparkSession)
+      if (maxEdges > 0 && integralIds(e) && e.count() <= maxEdges) {
+        log.info(s"pageRank: edge count <= gate $maxEdges" +
+          " — exact driver iterations (distributed loop skipped)")
+        driverPageRank(e, iters, damping)
+      } else
+        distributedPageRank(e, iters, damping,
+          exactFold && resolveExactFold(e, exactFoldMaxInDegree))
+    } finally e.unpersist(false)
+  }
+
+  /** The distributed iterations of [[pageRank]] over its persisted edge
+    * list. Every round is a cut, so the result reads no cache, and the
+    * persisted node set ends here. */
+  private def distributedPageRank(e: DataFrame, iters: Int, damping: Double,
+                                  useExactFold: Boolean): DataFrame = {
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id")))
       .distinct()
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "graphs"))
-    val n = nodes.count() // scalar driver value, O(1) memory
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val base = (1.0 - damping) / n
-    // Each round checkpoints (id, pr, deg) — lineage cut per round, the
-    // connectedComponents lesson: without it the plan doubles per
-    // iteration. Two round-12 folds ride that one materialization:
-    //  - the dangling rank mass (nodes with no out-edges) is an observed
-    //    metric on the checkpoint's own action — one SCALAR per
-    //    iteration, map-side partials, never a separate job and never a
-    //    collect_list of the dangling set (node-cardinality-sized on
-    //    web graphs);
-    //  - deg travels WITH pr, so the contribution join no longer
-    //    re-joins deg onto the edge list every round.
-    // The dangling sum's addends are identical to the old standalone
-    // aggregation (sum ignores the non-dangling rows' nulls); only the
-    // scalar's float fold ORDER may differ — the documented ≤1-ulp
-    // caveat that already applied to it.
-    def cutWithDangling(prDf: DataFrame): (DataFrame, Double) = {
-      val obs = org.apache.spark.sql.Observation()
-      val withDeg = prDf.join(deg, prDf("id") === deg("src"), "left")
-        .select(col("id"), col("pr"), col("deg"))
-      val out = graft.core.Checkpoints.cut(withDeg.observe(obs,
-        coalesce(sum(when(col("deg").isNull, col("pr"))), lit(0.0)).as("dangling")))
-      (out, obs.get("dangling").asInstanceOf[Double])
-    }
-    var (pr, dangling) = cutWithDangling(nodes.select(col("id"), lit(1.0 / n).as("pr")))
-    for (_ <- 1 to iters) {
-      val contribs = e.join(pr, e("src") === pr("id"))
-        .select(col("dst"), col("src"), (col("pr") / col("deg")).as("c"))
-      val summed =
-        if (useExactFold)
-          contribs.groupBy("dst")
-            .agg(sort_array(collect_list(struct(col("src"), col("c")))).as("cs"))
-            .select(col("dst"), aggregate(col("cs"), lit(0.0),
-              (a, x) => a + x.getField("c")).as("s"))
-        else contribs.groupBy("dst").agg(sum("c").as("s"))
-      val (next, nextDangling) = cutWithDangling(
-        nodes.join(summed, nodes("id") === summed("dst"), "left")
-          .select(col("id"),
-            (lit(base) + lit(damping) *
-              (coalesce(col("s"), lit(0.0)) + lit(dangling / n))).as("pr")))
-      pr = next
-      dangling = nextDangling
-    }
-    pr.select(col("id"), col("pr"))
+      .persist()
+    try {
+      val n = nodes.count() // scalar driver value, O(1) memory
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val base = (1.0 - damping) / n
+      // Each round checkpoints (id, pr, deg) — lineage cut per round, the
+      // connectedComponents lesson: without it the plan doubles per
+      // iteration. Two round-12 folds ride that one materialization:
+      //  - the dangling rank mass (nodes with no out-edges) is an observed
+      //    metric on the checkpoint's own action — one SCALAR per
+      //    iteration, map-side partials, never a separate job and never a
+      //    collect_list of the dangling set (node-cardinality-sized on
+      //    web graphs);
+      //  - deg travels WITH pr, so the contribution join no longer
+      //    re-joins deg onto the edge list every round.
+      // The dangling sum's addends are identical to the old standalone
+      // aggregation (sum ignores the non-dangling rows' nulls); only the
+      // scalar's float fold ORDER may differ — the documented ≤1-ulp
+      // caveat that already applied to it.
+      def cutWithDangling(prDf: DataFrame): (DataFrame, Double) = {
+        val obs = org.apache.spark.sql.Observation()
+        val withDeg = prDf.join(deg, prDf("id") === deg("src"), "left")
+          .select(col("id"), col("pr"), col("deg"))
+        val out = graft.core.Checkpoints.cut(withDeg.observe(obs,
+          coalesce(sum(when(col("deg").isNull, col("pr"))), lit(0.0)).as("dangling")))
+        (out, obs.get("dangling").asInstanceOf[Double])
+      }
+      var (pr, dangling) = cutWithDangling(nodes.select(col("id"), lit(1.0 / n).as("pr")))
+      for (_ <- 1 to iters) {
+        val contribs = e.join(pr, e("src") === pr("id"))
+          .select(col("dst"), col("src"), (col("pr") / col("deg")).as("c"))
+        val summed =
+          if (useExactFold)
+            contribs.groupBy("dst")
+              .agg(sort_array(collect_list(struct(col("src"), col("c")))).as("cs"))
+              .select(col("dst"), aggregate(col("cs"), lit(0.0),
+                (a, x) => a + x.getField("c")).as("s"))
+          else contribs.groupBy("dst").agg(sum("c").as("s"))
+        val (next, nextDangling) = cutWithDangling(
+          nodes.join(summed, nodes("id") === summed("dst"), "left")
+            .select(col("id"),
+              (lit(base) + lit(damping) *
+                (coalesce(col("s"), lit(0.0)) + lit(dangling / n))).as("pr")))
+        pr = next
+        dangling = nextDangling
+      }
+      pr.select(col("id"), col("pr"))
+    } finally nodes.unpersist(false)
   }
 
   /** Exact PageRank iterations over an already-bounded integral-id edge

@@ -50,14 +50,15 @@ object Linkage {
     * never materializing the cross product. Prefix-filter completeness
     * carries over from the self-join unchanged, because the gram order
     * is computed over the union of both sides' postings (see
-    * `Dedup.sharedFreq`). */
+    * `Dedup.sharedFreq`). The pairs come back materialized, with every
+    * cache the join made ended. */
   def linkPairsPrefixFilter(left: DataFrame, leftId: String, leftText: String,
                             right: DataFrame, rightId: String, rightText: String,
                             gramsOf: Column => Column,
                             threshold: Double = 0.55): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val l = Dedup.gramSets(left, leftId, leftText, gramsOf, "linkage")
-    val r = Dedup.gramSets(right, rightId, rightText, gramsOf, "linkage")
+    val l = Dedup.gramSets(left, leftId, leftText, gramsOf)
+    val r = Dedup.gramSets(right, rightId, rightText, gramsOf)
     val lPost = Dedup.postings(l)
     val rPost = Dedup.postings(r)
     // materialized: BOTH prefix computations below consume `freq`, and an
@@ -65,12 +66,12 @@ object Linkage {
     // consumer (4 explodes per call — the same self-join-sides miss the
     // r13 round measured in Dedup.jaccardPairsPrefixFilter). Shared-gram
     // counts are a (hash, long) table, tiny at any scale.
-    val freq = Dedup.sharedFreq(lPost, rPost)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "linkage"))
+    val freq = Dedup.sharedFreq(lPost, rPost).persist()
     val prefixLen = Dedup.jaccardPrefixLen(threshold)
-    Dedup.jaccardJoin(Dedup.rankedPrefix(lPost, freq, prefixLen),
+    try Dedup.jaccardJoin(Dedup.rankedPrefix(lPost, freq, prefixLen),
       Dedup.rankedPrefix(rPost, freq, prefixLen), l, r,
-      "left_id", "right_id", lit(true), threshold, "linkage")
+      "left_id", "right_id", lit(true), threshold)
+    finally { freq.unpersist(false); l.unpersist(false); r.unpersist(false) }
   }
 
   /** The DECIDE step: best right-side match per left record (highest

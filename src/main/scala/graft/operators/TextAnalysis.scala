@@ -607,7 +607,9 @@ object TextAnalysis {
     * chain of (k-1) equi-joins on (doc, position+offset) — each join a
     * hash join on the (doc_id, pos) pair, with the smallest posting list
     * bounding the output. Returns (phrase_id, doc_id, n_matches) for
-    * docs with ≥1 occurrence; overlapping matches each count. */
+    * docs with ≥1 occurrence, materialized, so the pruned postings every
+    * phrase reads are persisted only for the call; overlapping matches
+    * each count. */
   def phraseSearch(df: org.apache.spark.sql.DataFrame, idCol: String,
                    textCol: String,
                    phrases: Seq[(Long, Seq[String])]): org.apache.spark.sql.DataFrame = {
@@ -617,7 +619,7 @@ object TextAnalysis {
         posexplode(filter(split(lower(trim(col(textCol))), "\\s+"), t => t =!= "")))
       .toDF("doc_id", "pos", "token")
       .where(col("token").isin(allTerms.map(x => x: Any): _*))
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "text"))
+      .persist()
     val perPhrase = phrases.map { case (pid, terms) =>
       val first = postings.where(col("token") === terms.head)
         .select(col("doc_id"), col("pos").as("p0"))
@@ -630,7 +632,8 @@ object TextAnalysis {
       matched.groupBy("doc_id").agg(count(lit(1)).as("n_matches"))
         .select(lit(pid).as("phrase_id"), col("doc_id"), col("n_matches"))
     }
-    perPhrase.reduce(_ unionByName _)
+    try graft.core.Checkpoints.cut(perPhrase.reduce(_ unionByName _))
+    finally postings.unpersist(false)
   }
 
   /** Character-level Shannon entropy (nats) over the lowercased

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.InternalCaches
-
 /** F6 row-level validation with a reject channel (SURVEY.md §2.2).
   *
   * The reference validates per-row and classifies failures
@@ -30,14 +28,15 @@ object Validation {
   /** Split `df` into (valid, rejects). `rejects` carries a `_failed_rules`
     * array naming every violated rule — the bulk equivalent of the
     * reference's per-row error taxonomy. Both sides read one tagged frame,
-    * persisted lazily under scope "validation" so the two outputs run the
-    * input lineage once; [[graft.sources.Sinks.writeWithRejects]] releases
-    * it, other callers with `InternalCaches.release("validation")`. */
+    * and the split persists nothing: the one consumer of both sides,
+    * [[graft.sources.Sinks.writeWithRejects]], caches that frame for its
+    * two writes (so the input lineage runs once) and ends the cache before
+    * it returns. Any other reader of both sides runs the lineage once per
+    * side, or persists `df` itself. */
   def split(df: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) = {
     val failed = array_compact(array(rules.map(r =>
       when(!coalesce(r.pred, lit(false)), lit(r.name))): _*))
-    val tagged = InternalCaches.persistTracked(df.withColumn("_failed_rules", failed),
-      scope = "validation")
+    val tagged = df.withColumn("_failed_rules", failed)
     val valid   = tagged.where(size(col("_failed_rules")) === 0).drop("_failed_rules")
     val rejects = tagged.where(size(col("_failed_rules")) > 0)
     (valid, rejects)

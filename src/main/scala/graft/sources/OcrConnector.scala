@@ -169,9 +169,9 @@ object OcrConnector {
     // persist before branching: the merged and reject branches of the
     // union would otherwise EACH recompute the rasterize+OCR RDD — with
     // real pdf2image/Tesseract that doubles the dominant cost, and a
-    // transient per-pass failure could land differently in the two scans
-    val passes = spark.createDataFrame(rows, passSchema)
-      .transform(df => graft.core.InternalCaches.persistTracked(df, scope = "ocr"))
+    // transient per-pass failure could land differently in the two scans.
+    // The cache ends once the result (one row per page) is cut.
+    val passes = spark.createDataFrame(rows, passSchema).persist()
     val merged = mergeOcrPasses(
         passes.where(col("reject_reason").isNull),
         "source_file", "page", "pass_idx", "text")
@@ -179,8 +179,9 @@ object OcrConnector {
     val rejects = passes.where(col("reject_reason").isNotNull)
       .select(col("source_file"), col("page"),
         lit(null).cast(StringType).as("text"), col("reject_reason"))
-    merged.select("source_file", "page", "text", "reject_reason")
-      .unionByName(rejects)
+    try graft.core.Checkpoints.cut(
+      merged.select("source_file", "page", "text", "reject_reason").unionByName(rejects))
+    finally passes.unpersist(false)
   }
 
   /** Distributed acquisition: every file under `path` is shaped, posted

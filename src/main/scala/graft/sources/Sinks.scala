@@ -5,9 +5,10 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
-
-import graft.core.InternalCaches
+import org.apache.spark.storage.StorageLevel
 
 /** Sinks (SURVEY.md §2.1 K-ops), re-expressed for a columnar lake.
   *
@@ -221,14 +222,16 @@ object Sinks {
     * per-row error taxonomy + `--dump-fail` files
     * (ImportInvoiceReport.php:199-291). The (validCount, rejectCount)
     * summary rides the write passes themselves via `observe`, so neither
-    * output is read back. The input lineage runs once: the valid write
-    * fills the tagged frame that [[graft.operators.Validation.split]]
-    * persisted, the reject write reads it, and the call releases it
-    * (scope "validation") before it returns. */
+    * output is read back. The input lineage runs once: the call caches
+    * the tagged frame both sides of a [[graft.operators.Validation.split]]
+    * read, the valid write fills it, the reject write reads it, and the
+    * call unpersists exactly that frame before it returns. Other caches in
+    * the session, the caller's own and another split's, are not touched. */
   def writeWithRejects(valid: DataFrame, rejects: DataFrame,
                        mainPath: String, rejectPath: String): (Long, Long) = {
     val obsValid  = Observation()
     val obsReject = Observation()
+    val tagged = cacheSplitFrame(rejects)
     try {
       valid.observe(obsValid, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(mainPath)
@@ -236,8 +239,24 @@ object Sinks {
           concat_ws(",", col("_failed_rules")))
         .observe(obsReject, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).json(rejectPath)
-    } finally InternalCaches.release("validation")
+    } finally tagged.foreach(_.unpersist(false))
     (obsValid.get("n").asInstanceOf[Long],
       obsReject.get("n").asInstanceOf[Long])
+  }
+
+  /** Persists the tagged frame of the split `rejects` came from: the plan
+    * whose projection defines `rejects`' `_failed_rules` column. Returns
+    * it for the caller to unpersist, or None when there is no such plan
+    * or it is already cached — a cache this call did not make, and so
+    * leaves alone. */
+  private def cacheSplitFrame(rejects: DataFrame): Option[DataFrame] = {
+    val plan = rejects.queryExecution.analyzed
+    val failed = plan.output.find(_.name == "_failed_rules").map(_.exprId)
+    plan.collectFirst {
+      case p: Project if p.projectList.exists {
+          case a: Alias => failed.contains(a.exprId)
+          case _ => false
+        } => org.apache.spark.sql.graftglue.ColumnGlue.dataFrame(rejects.sparkSession, p)
+    }.filter(_.storageLevel == StorageLevel.NONE).map(_.persist())
   }
 }

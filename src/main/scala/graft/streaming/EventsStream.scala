@@ -142,26 +142,9 @@ object EventsStream {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
         !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
     require(files.nonEmpty, s"orderBacklogByEventTime: no parquet files under $dir")
-    // footer stats first: Long min/max per file (INT64 micros/nanos both
+    // footer stats first: raw min/max per file (INT64 micros/nanos both
     // order correctly as raw longs — no unit conversion needed to SORT)
-    def footerMinMax(p: org.apache.hadoop.fs.Path): Option[(Long, Long)] =
-      scala.util.Try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          import scala.jdk.CollectionConverters._
-          val perBlock = r.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == tsColumn)
-              .map(_.getStatistics).collect {
-                case s: org.apache.parquet.column.statistics.LongStatistics
-                  if !s.isEmpty => (s.genericGetMin.longValue, s.genericGetMax.longValue)
-              }
-          }
-          if (perBlock.isEmpty) None
-          else Some((perBlock.map(_._1).min, perBlock.map(_._2).max))
-        } finally r.close()
-      }.toOption.flatten
-    val fromFooters = files.map(s => s -> footerMinMax(s.getPath))
+    val fromFooters = files.map(s => s -> footerRange(hconf, s.getPath, tsColumn))
     val keyed: Seq[(org.apache.hadoop.fs.FileStatus, Long, Long)] =
       if (fromFooters.forall(_._2.isDefined))
         fromFooters.map { case (s, mm) => (s, mm.get._1, mm.get._2) }
@@ -563,21 +546,58 @@ object EventsStream {
     eventsStream(spark, dir).select(cols.map(col): _*)
       .unionByName(drainSentinel(spark, dir, aheadSec, cols))
 
-  /** Max `ts` as EPOCH SECONDS across the parquet footers — O(files)
-    * metadata reads, no row scan (the column statistics the writer already
-    * computed). The raw footer long is in whatever unit the column's
-    * logical type declares (NANOS for the old testdata, MICROS for the
-    * regenerated `timestamp[us]` shape) — divide accordingly rather than
-    * assuming nanos. An `isAdjustedToUTC = false` column (Spark's
-    * TIMESTAMP_NTZ) stores WALL-CLOCK values; `normalizeEventTs` casts
-    * those through the session time zone, so this path applies the same
-    * shift — otherwise the drain sentinel would sit a UTC-offset behind
-    * the true max event instant and trailing windows would never
-    * finalize. Falls back to a scan if any footer lacks ts stats. */
-  private def maxTsEpochSecFromFooters(spark: SparkSession, dir: String): Option[Long] = try {
+  /** `column`'s raw (min, max, unit) in one parquet file's footer: the
+    * row-group statistics the writer already computed, no row read. Row
+    * groups without a non-null value are skipped; None when no row group
+    * is left or the footer can't be read, and each caller falls back to a
+    * scan. The raw longs are in the unit the column's logical type
+    * declares; `unit` is (divisor to epoch seconds, stored as wall
+    * clock?) — NANOS for the old untagged testdata, MICROS for the
+    * regenerated `timestamp[us]` shape — and None for a non-timestamp
+    * annotation. */
+  private def footerRange(conf: org.apache.hadoop.conf.Configuration,
+                          p: org.apache.hadoop.fs.Path, column: String)
+      : Option[(Long, Long, Option[(Long, Boolean)])] = scala.util.Try {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import LogicalTypeAnnotation.TimeUnit
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    try {
+      val chunks = r.getFooter.getBlocks.asScala.toSeq
+        .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
+      val unit = chunks.headOption.flatMap { c =>
+        c.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            Some((t.getUnit match {
+              case TimeUnit.MILLIS => 1000L
+              case TimeUnit.MICROS => 1000000L
+              case TimeUnit.NANOS  => 1000000000L
+            }, !t.isAdjustedToUTC))
+          // untagged int64 (legacy nanos-as-long testdata): epoch nanos
+          case null => Some((1000000000L, false))
+          case _    => None
+        }
+      }
+      val ranges = chunks.map(_.getStatistics).collect {
+        case s: org.apache.parquet.column.statistics.LongStatistics if s.hasNonNullValue =>
+          (s.getMin, s.getMax)
+      }
+      if (ranges.isEmpty) None
+      else Some((ranges.map(_._1).min, ranges.map(_._2).max, unit))
+    } finally r.close()
+  }.toOption.flatten
+
+  /** Max `ts` as EPOCH SECONDS across the parquet footers — O(files)
+    * metadata reads, no row scan ([[footerRange]]), divided by the unit
+    * the column declares rather than assuming nanos. An
+    * `isAdjustedToUTC = false` column (Spark's TIMESTAMP_NTZ) stores
+    * WALL-CLOCK values; `normalizeEventTs` casts those through the
+    * session time zone, so this path applies the same shift — otherwise
+    * the drain sentinel would sit a UTC-offset behind the true max event
+    * instant and trailing windows would never finalize. None (the caller
+    * scans) if any footer lacks ts stats or a timestamp unit. */
+  private def maxTsEpochSecFromFooters(spark: SparkSession, dir: String): Option[Long] = try {
     val conf = spark.sparkContext.hadoopConfiguration
     val sessionZone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone",
@@ -587,47 +607,16 @@ object EventsStream {
     val files = (if (fs.getFileStatus(root).isDirectory)
         fs.listStatus(root).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
       else Seq(fs.getFileStatus(root))).map(_.getPath)
-    if (files.isEmpty) return None
-    val maxes = files.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val perBlock = r.getFooter.getBlocks.asScala.flatMap { b =>
-          b.getColumns.asScala
-            .find(_.getPath.toDotString == "ts")
-            .flatMap { c =>
-              // (seconds divisor, stored-as-wall-clock?)
-              val unitInfo = c.getPrimitiveType.getLogicalTypeAnnotation match {
-                case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  val d = t.getUnit match {
-                    case TimeUnit.MILLIS => 1000L
-                    case TimeUnit.MICROS => 1000000L
-                    case TimeUnit.NANOS  => 1000000000L
-                  }
-                  Some((d, !t.isAdjustedToUTC))
-                // untagged int64 (legacy nanos-as-long testdata): epoch nanos
-                case null => Some((1000000000L, false))
-                case _    => None
-              }
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) None
-              else (st.genericGetMax, unitInfo) match {
-                case (l: java.lang.Long, Some((d, wallClock))) =>
-                  val raw = l.longValue() / d
-                  if (!wallClock) Some(raw)
-                  else Some(java.time.LocalDateTime
-                    .ofEpochSecond(raw, 0, java.time.ZoneOffset.UTC)
-                    .atZone(sessionZone).toEpochSecond)
-                case _ => None
-              }
-            }
-        }
-        if (perBlock.isEmpty) None else Some(perBlock.max)
-      } finally r.close()
-    }
-    if (maxes.exists(_.isEmpty)) None // a rowgroup without stats → scan
+    val maxes = files.map(footerRange(conf, _, "ts").collect {
+      case (_, mx, Some((d, wallClock))) =>
+        val raw = mx / d
+        if (!wallClock) raw
+        else java.time.LocalDateTime.ofEpochSecond(raw, 0, java.time.ZoneOffset.UTC)
+          .atZone(sessionZone).toEpochSecond
+    })
+    if (maxes.exists(_.isEmpty)) None // a file without stats → scan
     else maxes.flatten.reduceOption(_ max _)
-  } catch { case _: Exception => None } // unreadable footer → scan path
+  } catch { case _: Exception => None } // unreadable listing → scan path
 
   /** A one-row sentinel stream whose event time sits `aheadSec` past the
     * directory's max event time, with `cols` filled by sentinel values.

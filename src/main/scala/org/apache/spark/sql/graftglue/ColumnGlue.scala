@@ -13,6 +13,14 @@ object ColumnGlue {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over an analyzed `plan` — a subtree of another frame's
+    * plan, which `Dataset.ofRows` (`private[sql]`) wraps as it is. */
+  def dataFrame(spark: org.apache.spark.sql.SparkSession,
+                plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Apply an extensions object's injected functions to an ALREADY-built
     * session (tests and REPLs — production wiring is
     * `spark.sql.extensions=graft.GraftExtensions`, which Spark applies at

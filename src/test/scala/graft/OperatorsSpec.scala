@@ -1932,67 +1932,37 @@ class OperatorsSpec extends SparkSpec {
     assert(r._4 == 1L && r._3 == 0L) // exactly the injected row, high side
   }
 
-  test("InternalCaches: operator-internal persists are tracked and releasable") {
+  test("InternalCaches: release() and release(scope) leave every cache resident") {
     import graft.core.InternalCaches
     import org.apache.spark.storage.StorageLevel
-    InternalCaches.release() // drain whatever earlier tests registered
-    assert(InternalCaches.trackedCount == 0)
-    // direct: a tracked persist really is cached, and release really drops it
-    val p = InternalCaches.persistTracked((1 to 5).toDF("x"))
-    p.count()
-    assert(p.storageLevel != StorageLevel.NONE)
+    // operators end their own caches, so the hooks have nothing to drop,
+    // and they must not reach for the caller's
+    val a = (1 to 5).toDF("x").persist()
+    val b = (6 to 9).toDF("y").persist()
+    a.count(); b.count()
+    InternalCaches.release("dedup")
     InternalCaches.release()
-    assert(p.storageLevel == StorageLevel.NONE, "release did not unpersist")
-    assert(InternalCaches.trackedCount == 0)
-    InternalCaches.release() // idempotent
-    // via an operator: the similarity join's internal shingle persist —
-    // the class of cache a long-lived session could never reach before
-    val docs = (1 to 30).map(i =>
-      (i.toLong, s"alpha beta gamma delta w$i x$i y$i z$i")).toDF("doc_id", "text")
-    Dedup.jaccardPairsPrefixFilter(docs, "doc_id", "text", 3, 0.5).count()
-    assert(InternalCaches.trackedCount > 0,
-      "jaccardPairsPrefixFilter's internal persist was not tracked")
-    assert(InternalCaches.trackedCount("dedup") > 0,
-      "the dedup family's persist must register under its own scope")
-    InternalCaches.release()
-    assert(InternalCaches.trackedCount == 0)
-    // the shared prefix-filter core persists under each caller's scope
-    Linkage.linkPairsPrefixFilter(docs, "doc_id", "text", docs, "doc_id", "text",
-      Dedup.wordShingleHashes(_, 3), 0.5).count()
-    assert(InternalCaches.trackedCount("linkage") > 0,
-      "linkPairsPrefixFilter's persists must register under scope 'linkage'")
-    assert(InternalCaches.trackedCount("dedup") == 0,
-      "linkPairsPrefixFilter must not register under scope 'dedup'")
-    InternalCaches.release()
-    Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.5).count()
-    assert(InternalCaches.trackedCount("dedup") > 0,
-      "containmentPairs's persists must register under scope 'dedup'")
-    assert(InternalCaches.trackedCount("linkage") == 0,
-      "containmentPairs must not register under scope 'linkage'")
-    InternalCaches.release()
-    assert(InternalCaches.trackedCount == 0)
+    assert(a.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    a.unpersist(); b.unpersist()
   }
 
-  test("InternalCaches: releasing one scope leaves another's cache resident") {
-    import graft.core.InternalCaches
+  test("prefix-filter dedup leaves the caller's cached input resident and adds no cache") {
     import org.apache.spark.storage.StorageLevel
-    InternalCaches.release()
-    // two concurrent "pipelines" in one session, each under its family
-    val a = InternalCaches.persistTracked((1 to 5).toDF("x"), scope = "dedup")
-    val b = InternalCaches.persistTracked((6 to 9).toDF("y"), scope = "graphs")
-    a.count(); b.count()
-    assert(a.storageLevel != StorageLevel.NONE)
-    assert(b.storageLevel != StorageLevel.NONE)
-    InternalCaches.release("dedup")
-    assert(a.storageLevel == StorageLevel.NONE, "own scope not released")
-    assert(b.storageLevel != StorageLevel.NONE,
-      "releasing scope 'dedup' must not evict scope 'graphs' mid-flight")
-    assert(InternalCaches.trackedCount("dedup") == 0)
-    assert(InternalCaches.trackedCount("graphs") == 1)
-    // the global drain still clears everything (DriverSession.drain)
-    InternalCaches.release()
-    assert(b.storageLevel == StorageLevel.NONE)
-    assert(InternalCaches.trackedCount == 0)
+    spark.catalog.clearCache() // what earlier tests left
+    val docs = (1 to 30).map(i =>
+      (i.toLong, s"alpha beta gamma delta w${i % 4} x$i")).toDF("doc_id", "text").persist()
+    docs.count()
+    val pairs = Dedup.jaccardPairsPrefixFilter(docs, "doc_id", "text", 3, 0.5)
+    assert(pairs.count() > 0)
+    Linkage.linkPairsPrefixFilter(docs, "doc_id", "text", docs, "doc_id", "text",
+      Dedup.wordShingleHashes(_, 3), 0.5).count()
+    Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.5).count()
+    Dedup.dropNearDupsKeepBest(docs, "doc_id", pairs, length(col("text"))).count()
+    assert(docs.storageLevel == StorageLevel.MEMORY_AND_DISK,
+      "an operator unpersisted the caller's input")
+    docs.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "an operator left a cache behind")
   }
 
   test("madOutliers materialization contract: derived-uncached inputs are flagged") {

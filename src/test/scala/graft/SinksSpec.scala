@@ -166,20 +166,39 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeWithRejects runs its input lineage once and leaves no cache behind") {
-    import graft.core.InternalCaches
+    spark.catalog.clearCache() // what earlier tests left
     val seen = spark.sparkContext.longAccumulator("rows_in")
     val df = spark.range(0, 1000, 1, 4).as[Long]
       .map { i => seen.add(1); (i, if (i % 7 == 0) "x" else i.toString) }
       .toDF("id", "amt")
     val (valid, rejects) = Validation.split(df, Seq(Validation.numeric("amt")))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val base = tmp()
     val counts = Sinks.writeWithRejects(valid, rejects, s"$base/main", s"$base/rejects")
     assert(counts == ((857L, 143L)))
     assert(seen.value == 1000L, s"the input lineage ran for ${seen.value} rows, not 1000")
-    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "a persisted RDD was left")
-    assert(InternalCaches.trackedCount("validation") == 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore, "a persisted RDD was left")
+    assert(spark.sharedState.cacheManager.isEmpty, "a cached plan was left")
     assert(spark.read.parquet(s"$base/main").count() == 857L)
+  }
+
+  test("two splits in one session: each writeWithRejects runs its own input lineage once") {
+    // the first write must not evict the second split's frame before the
+    // second write fills it
+    def input(seen: org.apache.spark.util.LongAccumulator) =
+      spark.range(0, 1000, 1, 4).as[Long]
+        .map { i => seen.add(1); (i, if (i % 7 == 0) "x" else i.toString) }
+        .toDF("id", "amt")
+    val seenA = spark.sparkContext.longAccumulator("rows_in_a")
+    val seenB = spark.sparkContext.longAccumulator("rows_in_b")
+    val rules = Seq(Validation.numeric("amt"))
+    val (validA, rejectsA) = Validation.split(input(seenA), rules)
+    val (validB, rejectsB) = Validation.split(input(seenB), rules)
+    val base = tmp()
+    assert(Sinks.writeWithRejects(validA, rejectsA, s"$base/a", s"$base/a_rejects") == ((857L, 143L)))
+    assert(Sinks.writeWithRejects(validB, rejectsB, s"$base/b", s"$base/b_rejects") == ((857L, 143L)))
+    assert(seenA.value == 1000L, s"the first input lineage ran for ${seenA.value} rows, not 1000")
+    assert(seenB.value == 1000L, s"the second input lineage ran for ${seenB.value} rows, not 1000")
   }
 
   test("swapFiles crash between add and drop: the next targetedDelete rolls it forward") {
