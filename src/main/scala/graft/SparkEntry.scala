@@ -1227,9 +1227,10 @@ object SparkEntry {
     }),
 
     // Per-GROUP exact quantiles without the single-reducer aggregate:
-    // per-group sort window → boundary rows only → one interpolating
-    // aggregation (removes the q57-style buffer-a-whole-group reducer;
-    // a dominant group no longer owns the job).
+    // a (group, value-bucket) histogram locates each wanted rank, only
+    // the candidate cells are sorted, one aggregation interpolates
+    // (removes the q57-style buffer-a-whole-group reducer; a dominant
+    // group never lands in one task's sort).
     "q105_group_quantiles" -> ((s0, d) => {
       val s = prep(s0)
       import graft.operators.Quantiles
@@ -1976,12 +1977,12 @@ object SparkEntry {
       // broadcast back); pass 2: clamp + exact-cents sum. The cut points
       // quantize to cents BEFORE the clamp so every comparison and the
       // winsorized sum are pure integer arithmetic on both engines.
-      // Percentiles ride exactGroupQuantiles (per-group sort window +
-      // boundary-row pick), NOT the `percentile` aggregate: percentile
-      // buffers each group's whole value-count map into one final
-      // reducer — fine at three groups of bounded price cardinality,
-      // but the q91 pathology the moment the value domain is unbounded.
-      // The window's external sort spills; the aggregate's map doesn't.
+      // Percentiles ride exactGroupQuantiles (histogram + candidate-cell
+      // selection), NOT the `percentile` aggregate: percentile buffers
+      // each group's whole value-count map into one final reducer — fine
+      // at three groups of bounded price cardinality, but the q91
+      // pathology the moment the value domain is unbounded. Selection
+      // sorts only candidate cells; the aggregate's map never spills.
       // NULL-group caveat (deliberate divergence from `percentile`): a
       // group whose values are ALL NULL gets no cut rows here, so the
       // inner join drops it, where `percentile` would emit it with NULL
@@ -2384,13 +2385,16 @@ object SparkEntry {
         .orderBy("id")
     }),
 
-    // BPE tokenizer training, distributed: 6 greedy merge rounds over
-    // the vocabulary-sized word-type table; delimiter-exact string
-    // replace makes each round's application ANSI-replicable.
+    // BPE tokenizer training, distributed: 6 greedy merge rounds of one
+    // merge each over the vocabulary-sized word-type table;
+    // delimiter-exact string replace makes each round's application
+    // ANSI-replicable.
     "q190_bpe_merges" -> ((s0, d) => {
       val s = prep(s0)
       import graft.operators.TextAnalysis
-      TextAnalysis.bpeMerges(Tables.documents(s, d), "text", nMerges = 6)
+      TextAnalysis.bpeMerges(Tables.documents(s, d), "text",
+          nMerges = 6, batch = 1)
+        .select("step", "left", "right", "merged", "pair_freq", "symbols_after")
         .orderBy("step")
     }),
 
@@ -3684,7 +3688,7 @@ object SparkEntry {
     "q203_bpe_batched" -> ((s0, d) => {
       val s = prep(s0)
       import graft.operators.TextAnalysis
-      TextAnalysis.bpeMergesBatched(Tables.documents(s, d), "text",
+      TextAnalysis.bpeMerges(Tables.documents(s, d), "text",
           nMerges = 64, batch = 8)
         .orderBy("step")
     }),

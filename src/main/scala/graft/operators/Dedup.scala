@@ -524,6 +524,10 @@ object Dedup {
       .select(col(idCol)).distinct()
   }
 
+  /** Widest Bloom filter [[contaminatedIdsBloomPrefilter]] probes as a
+    * plan literal (2^24 bits, 4 MB); wider ones ship as joined rows. */
+  private val LiteralMaxHexChars = 6
+
   /** [[contaminatedIds]] with a Bloom pre-filter — the two-phase probe
     * pattern for when the test-gram set outgrows an exact broadcast:
     * a benchmark suite's distinct 8-grams can run to 10^8 entries
@@ -540,27 +544,23 @@ object Dedup {
     * on a 32-hex-char key instead of a raw 8-gram also cuts the
     * confirm-shuffle width ~4x for prose).
     *
-    * SIZING IS AUTOMATIC by default (`bloomHexChars = 0`): one cheap
-    * no-shuffle agg over the test docs (total gram count from token
-    * lengths — an upper bound on distinct grams, and over-sizing is the
-    * safe direction) picks the smallest width holding
-    * the ~10 bits/entry law (an undersized filter saturates, every probe
-    * reads positive, and the prefilter degrades into [[contaminatedIds]]
-    * plus pure overhead — CORRECT at every width, which is why the old
-    * hand-sized parameter failed silently: q124's 2^20-bit filter was
-    * right at sf1 and 13x super-linear at sf10). Past
-    * `literalMaxHexChars` (default 6 = 2^24 bits, a 4 MB literal) the
-    * probe auto-switches from the plan-literal form to the
-    * [[Sketches.bloomProbe]] broadcast-word-join form, whose filter side
-    * ships as joined rows instead of a task-binary literal. Decisions are
-    * width- and form-independent (no false negatives), so callers never
-    * re-verify outputs after a sizing change. Pass `bloomHexChars > 0`
-    * to pin a width (skips the counting job). */
+    * SIZING IS AUTOMATIC: one cheap no-shuffle agg over the test docs
+    * (total gram count from token lengths — an upper bound on distinct
+    * grams, and over-sizing is the safe direction) picks the smallest
+    * width holding the ~10 bits/entry law, capped at 8 hex chars (2^32
+    * bits). An undersized filter saturates, every probe reads positive,
+    * and the prefilter degrades into [[contaminatedIds]] plus pure
+    * overhead — CORRECT at every width, which is why a hand-sized
+    * parameter fails silently: q124's 2^20-bit filter was right at sf1
+    * and 13x super-linear at sf10. Up to 6 hex chars (2^24 bits, a
+    * 4 MB literal) the probe is the plan-literal form; wider
+    * filters use the [[Sketches.bloomProbeDigest]] broadcast-word-join
+    * form, whose filter side ships as joined rows instead of a
+    * task-binary literal. Decisions are width- and form-independent (no
+    * false negatives), so outputs never change with the sizing. */
   def contaminatedIdsBloomPrefilter(corpus: DataFrame, testDocs: DataFrame,
                                     idCol: String, textCol: String,
-                                    n: Int = 8,
-                                    bloomHexChars: Int = 0,
-                                    literalMaxHexChars: Int = 6): DataFrame = {
+                                    n: Int = 8): DataFrame = {
     val testGrams = testDocs
       .withColumn("__toks", tokens(col(textCol)))
       .select(explode(shinglesFromTokens(col("__toks"), n)).as("g"))
@@ -571,74 +571,58 @@ object Dedup {
       while (h < 8 && (1L << (4 * h)) < 10L * entries) h += 1
       h
     }
-    val hexChars =
-      if (bloomHexChars > 0) bloomHexChars
-      else {
-        // the width law needs ONE number >= the distinct-gram count of
-        // the SMALL side. TOTAL grams (sum of per-doc token counts, one
-        // map-side agg over testDocs with NO explode/distinct shuffle)
-        // upper-bounds distinct grams, and OVER-sizing is the safe
-        // direction — the law is ">= 10 bits/entry", saturation only
-        // threatens under-sizing. For a NON-repetitive corpus the
-        // duplication factor total/distinct is small and the bound costs
-        // at most a hexChar step or two of width; a repetitive corpus
-        // (one n-gram repeated across a doc) makes the ratio unbounded,
-        // so when the cheap bound lands at a width that CHANGES THE PLAN
-        // (past the literal-probe form, or at the cap) it is refined by
-        // approx_count_distinct over the actual grams — one extra pass
-        // over the (small) test side, still no wide shuffle (the HLL
-        // partials merge into a single row). The 1.1 margin covers the
-        // sketch's ~5% default rsd on the over-sizing side; either way
-        // decisions stay exact (the confirm join). Eager by design: a
-        // plan-time scalar, like the broadcast threshold.
-        val nGramsBound = math.max(testDocs
-          .agg(coalesce(sum(greatest(size(tokens(col(textCol))) - (n - 1),
-            lit(0)).cast("long")), lit(0L)))
-          .head().getLong(0), 1L)
-        val hBound = widthFor(nGramsBound)
-        val nGrams =
-          if (hBound <= literalMaxHexChars && hBound < 8) nGramsBound
-          else {
-            val est = testDocs
-              .withColumn("__toks", tokens(col(textCol)))
-              .select(explode(shinglesFromTokens(col("__toks"), n)).as("g"))
-              .agg(approx_count_distinct(col("g")))
-              .head().getLong(0)
-            math.max((est * 1.1).toLong, 1L)
-          }
-        val h = widthFor(nGrams)
-        if ((1L << 32) < 10L * nGrams)
-          log.warn(s"contaminatedIdsBloomPrefilter: ~$nGrams distinct test " +
-            s"grams exceed the 2^32-bit cap's ~4.3e8-entry capacity at 10 " +
-            "bits/entry — the filter will partially saturate and the " +
-            "prefilter degrades toward pure overhead (decisions stay " +
-            "exact; consider contaminatedIds direct at this test-set size)")
-        log.info(s"contaminatedIdsBloomPrefilter: auto-sized bloom to " +
-          s"hexChars=$h (2^${4 * h} bits) for <=$nGrams test grams" +
-          (if (h > literalMaxHexChars) " — using broadcast-join probe form" else ""))
-        h
-      }
-    // digest slicing draws 3 non-overlapping hexChars-wide slices from the
-    // 32-hex-char md5 — impossible past hexChars 10. Explicit widths that
-    // wide (the pre-slicing scheme accepted them) fall back to the
-    // md5-redraw position scheme on BOTH sides instead of throwing deep
-    // inside Sketches: same decisions (no false negatives either way),
-    // the probe just pays its per-gram re-hash again.
-    val useDigestSlices = 3 * hexChars <= 32
-    if (!useDigestSlices)
-      log.info(s"contaminatedIdsBloomPrefilter: hexChars=$hexChars exceeds " +
-        "the digest-slice budget (3*hexChars <= 32) — using the md5-redraw " +
-        "position scheme (3 extra md5s per probed gram)")
+    val hexChars = {
+      // the width law needs ONE number >= the distinct-gram count of
+      // the SMALL side. TOTAL grams (sum of per-doc token counts, one
+      // map-side agg over testDocs with NO explode/distinct shuffle)
+      // upper-bounds distinct grams, and OVER-sizing is the safe
+      // direction — the law is ">= 10 bits/entry", saturation only
+      // threatens under-sizing. For a NON-repetitive corpus the
+      // duplication factor total/distinct is small and the bound costs
+      // at most a hexChar step or two of width; a repetitive corpus
+      // (one n-gram repeated across a doc) makes the ratio unbounded,
+      // so when the cheap bound lands at a width that CHANGES THE PLAN
+      // (past the literal-probe form) it is refined by
+      // approx_count_distinct over the actual grams — one extra pass
+      // over the (small) test side, still no wide shuffle (the HLL
+      // partials merge into a single row). The 1.1 margin covers the
+      // sketch's ~5% default rsd on the over-sizing side; either way
+      // decisions stay exact (the confirm join). Eager by design: a
+      // plan-time scalar, like the broadcast threshold.
+      val nGramsBound = math.max(testDocs
+        .agg(coalesce(sum(greatest(size(tokens(col(textCol))) - (n - 1),
+          lit(0)).cast("long")), lit(0L)))
+        .head().getLong(0), 1L)
+      val hBound = widthFor(nGramsBound)
+      val nGrams =
+        if (hBound <= LiteralMaxHexChars) nGramsBound
+        else {
+          val est = testDocs
+            .withColumn("__toks", tokens(col(textCol)))
+            .select(explode(shinglesFromTokens(col("__toks"), n)).as("g"))
+            .agg(approx_count_distinct(col("g")))
+            .head().getLong(0)
+          math.max((est * 1.1).toLong, 1L)
+        }
+      val h = widthFor(nGrams)
+      if ((1L << 32) < 10L * nGrams)
+        log.warn(s"contaminatedIdsBloomPrefilter: ~$nGrams distinct test " +
+          s"grams exceed the 2^32-bit cap's ~4.3e8-entry capacity at 10 " +
+          "bits/entry — the filter will partially saturate and the " +
+          "prefilter degrades toward pure overhead (decisions stay " +
+          "exact; consider contaminatedIds direct at this test-set size)")
+      log.info(s"contaminatedIdsBloomPrefilter: auto-sized bloom to " +
+        s"hexChars=$h (2^${4 * h} bits) for <=$nGrams test grams" +
+        (if (h > LiteralMaxHexChars) " — using broadcast-join probe form" else ""))
+      h
+    }
     // digest-sliced positions: gk IS an md5 hex digest, so filter bits
-    // come from substring slices of it instead of 3 fresh md5 draws per
-    // gram — on the corpus side (the 10^8-gram leg at scale) that
-    // removes ALL per-gram hashing from the probe. Build + probe share
-    // the scheme; decisions stay exact either way (the confirm join).
-    val bloom =
-      if (useDigestSlices)
-        Sketches.bloomWordsDigest(testGrams, Seq.empty, "gk", hexChars = hexChars)
-      else
-        Sketches.bloomWords(testGrams, Seq.empty, "gk", hexChars = hexChars)
+    // come from 3 non-overlapping substring slices of it (3 × 8 <= 32 hex
+    // chars at the widest width) instead of 3 fresh md5 draws per gram —
+    // on the corpus side (the 10^8-gram leg at scale) that removes ALL
+    // per-gram hashing from the probe. Build + probe share the scheme.
+    val bloom = Sketches.bloomWordsDigest(testGrams, Seq.empty, "gk",
+      hexChars = hexChars)
     // the probe work (tokenize + explode + md5 + bloom check) is fused
     // into the corpus scan stage BY DESIGN (zero exchange) — which makes
     // it the operator most exposed to row-group starvation (measured:
@@ -653,21 +637,14 @@ object Dedup {
     // filters inside its own scan stage — zero exchange before the
     // (rare-survivor) exact confirm join. Wider filters switch to the
     // broadcast-word-join probe: same decisions, filter ships as rows.
-    val survivors = (
-      (useDigestSlices, hexChars <= literalMaxHexChars) match {
-        case (true, true) =>
-          Sketches.bloomProbeLiteralDigest(bloom, corpusGrams, "gk",
-            hexChars = hexChars)
-        case (true, false) =>
-          Sketches.bloomProbeDigest(bloom, corpusGrams, Seq.empty, "gk",
-            carryCols = Seq(idCol), hexChars = hexChars)
-        case (false, true) =>
-          Sketches.bloomProbeLiteral(bloom, corpusGrams, "gk",
-            hexChars = hexChars)
-        case (false, false) =>
-          Sketches.bloomProbe(bloom, corpusGrams, Seq.empty, "gk",
-            carryCols = Seq(idCol), hexChars = hexChars)
-      }).where(col("bloom_positive"))
+    val probed =
+      if (hexChars <= LiteralMaxHexChars)
+        Sketches.bloomProbeLiteralDigest(bloom, corpusGrams, "gk",
+          hexChars = hexChars)
+      else
+        Sketches.bloomProbeDigest(bloom, corpusGrams, Seq.empty, "gk",
+          carryCols = Seq(idCol), hexChars = hexChars)
+    val survivors = probed.where(col("bloom_positive"))
       .select(col(idCol), col("gk"))
     survivors
       .join(testGrams, Seq("gk"), "left_semi")

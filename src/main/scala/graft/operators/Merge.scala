@@ -63,6 +63,17 @@ object Merge {
     (synced, deleted)
   }
 
+  /** The latest row per key in descending `ordCols` order: one
+    * `row_number` window over a single shuffle by key. */
+  private def latestPerKey(log: DataFrame, keys: Seq[String],
+                           ordCols: Seq[String]): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(ordCols.map(c => col(c).desc): _*)
+    log.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn")
+  }
+
   /** CDC changelog compaction: reduce an append-only change stream to
     * current state — latest row per key in (ordCols) order wins, rows
     * matching `deletePred` are tombstones that erase their key. The
@@ -71,15 +82,10 @@ object Merge {
     * buffering beyond the row counter. */
   def compactChangelog(log: DataFrame, keys: Seq[String],
                        ordCols: Seq[String],
-                       deletePred: org.apache.spark.sql.Column): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(ordCols.map(c => col(c).desc): _*)
-    log.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
+                       deletePred: org.apache.spark.sql.Column): DataFrame =
+    latestPerKey(log, keys, ordCols)
       // a NULL predicate is NOT a tombstone match — keep the row
       .where(!coalesce(deletePred, lit(false)))
-  }
 
   /** Full MERGE / CDC-apply: advance a base snapshot by an append-only
     * changelog carrying inserts, updates AND deletes — the three-clause
@@ -101,15 +107,10 @@ object Merge {
                      ordCols: Seq[String],
                      deletePred: org.apache.spark.sql.Column): DataFrame = {
     require(keys.nonEmpty, "applyChangelog needs at least one key column")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(ordCols.map(c => col(c).desc): _*)
     // cut: `latest` feeds both the anti-join (untouched base rows) and
     // the survivor filter — uncut, the changelog window-compaction runs
     // twice, once per consumer
-    val latest = graft.core.Checkpoints.cut(
-      log.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn"))
+    val latest = graft.core.Checkpoints.cut(latestPerKey(log, keys, ordCols))
     val untouched = base.join(
       latest.select(keys.map(col): _*), keys, "left_anti")
     val survivors = latest
@@ -150,11 +151,7 @@ object Merge {
     val base1 =
       if (base.columns.contains("__deleted")) base
       else base.withColumn("__deleted", lit(false))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(ordCols.map(c => col(c).desc): _*)
-    val latest = log.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    val latest = latestPerKey(log, keys, ordCols)
       .withColumn("__del", coalesce(deletePred, lit(false)))
     val bs = base1.select(keys.map(col) ++ Seq(
       struct(payload.map(col): _*).as("__b"), col("__deleted").as("__bdel")): _*)
@@ -195,11 +192,9 @@ object Merge {
     val versions = changed
       .where(col("__chg") || col("__first"))
       .drop("__chg", "__first")
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(keyCol)).orderBy(col(tsCol))
     versions
       .withColumn("valid_from", col(tsCol))
-      .withColumn("valid_to", lead(col(tsCol), 1).over(wv))
+      .withColumn("valid_to", lead(col(tsCol), 1).over(w))
       .withColumn("is_current", col("valid_to").isNull)
       .drop(tsCol)
   }

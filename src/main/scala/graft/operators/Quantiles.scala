@@ -9,18 +9,14 @@ import org.apache.spark.sql.functions._
   * reducer (a value-count map, merged then sorted in a single task) — at
   * 100 TB that reducer IS the bottleneck (measured: 15 s for one column
   * at sf0.1 where the whole suite averages 0.3 s/query). The scale path
-  * for EXACT quantiles is the order-statistics spelling: range-partition
-  * sort (distributed, what orderBy already does), global row indices via
-  * zipWithIndex (two light passes), and a filter that collects ONLY the
-  * 2×|ps| boundary rows to the driver. Interpolation happens driver-side
-  * with the standard (n-1)·p convention — bit-identical to
-  * `percentile_cont`/`quantile_cont`. */
+  * for EXACT quantiles here is two-pass distributed selection
+  * ([[exactGroupQuantiles]]; [[exactQuantiles]] is its one-group case):
+  * a (group, value-bucket) histogram locates the bucket holding each
+  * wanted rank, and only those candidate buckets are ever sorted — no
+  * global or whole-group sort, no single-reducer buffer. Interpolation
+  * uses the standard (n-1)·p convention in `quantile_cont`'s operation
+  * order — bit-identical to `percentile_cont`/`quantile_cont`. */
 object Quantiles {
-
-  /** Runtime selector for [[exactGroupQuantiles]]'s implementation:
-    * `window` (default) or `selection` — see the method Scaladoc for the
-    * measured crossover. */
-  val SpellingConf = "spark.graft.quantileSpelling"
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -52,98 +48,22 @@ object Quantiles {
   }
 
   /** Exact interpolated quantiles of `valueCol` at fractions `ps` —
-    * the whole-column case of [[exactGroupQuantilesSkewSafe]] (a
-    * constant group), so the column is never globally sorted: the old
-    * orderBy + zipWithIndex spelling paid a full range-partition sort
-    * TWICE (zipWithIndex's count job, then the filtered collect
-    * recomputing its parent), where the selection pass is two
-    * column-pruned scans and a candidate-cell sort. Interpolation is
-    * quantile_cont's exact operation order (lo·(crn−r) + hi·(r−frn),
-    * NOT lo + (hi−lo)·frac — the forms differ by an ulp on some inputs
-    * and the oracle compare is bit-exact); empty/all-null input → NaNs,
-    * preserving the old contract. */
+    * the whole-column case of [[exactGroupQuantiles]] (a constant
+    * group), so the column is never globally sorted: two column-pruned
+    * scans and a candidate-cell sort. Interpolation is quantile_cont's
+    * exact operation order (lo·(crn−r) + hi·(r−frn), NOT
+    * lo + (hi−lo)·frac — the forms differ by an ulp on some inputs and
+    * the oracle compare is bit-exact); empty/all-null input → NaNs. */
   def exactQuantiles(df: DataFrame, valueCol: String,
                      ps: Seq[Double]): Seq[Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       s"fractions must be in [0,1]: $ps")
     val names = ps.indices.map(i => s"__q$i")
-    val rows = exactGroupQuantilesSkewSafe(
+    val rows = exactGroupQuantiles(
       df.select(col(valueCol)).withColumn("__g", lit(1)),
       "__g", valueCol, ps, names).collect()
     if (rows.isEmpty) ps.map(_ => Double.NaN)
     else ps.indices.map(i => rows.head.getDouble(i + 1))
-  }
-
-  /** Exact interpolated quantiles PER GROUP: one data pass — a per-group
-    * ranking window (rank and group size in a SINGLE WindowExec: both
-    * frames share the partition+order spec), a filter keeping only the
-    * 2×|ps| boundary rows per group, and one interpolating aggregation.
-    * No single-reducer value BUFFER at any group size (the per-group
-    * `percentile` aggregate's q91 pathology), but the sort window does
-    * place each whole group in one task's external sort — spillable, yet
-    * a dominant group serializes the job. That trade is deliberate and
-    * measured: at bench scale this spelling beats the skew-immune
-    * selection spelling ([[exactGroupQuantilesSkewSafe]]) by ~25%
-    * (0.93 vs 1.20 s for q176's first median at sf0.1 — the selection
-    * pass pays two scans plus broadcast-subplan plumbing); on inputs
-    * where one group can dwarf the rest, call the skew-safe variant —
-    * identical results, bounded per-task sorts.
-    *
-    * NULL semantics: values are filtered before ranking, so a group whose
-    * values are ALL null yields NO output row — unlike `percentile_cont`,
-    * which would emit the group with NULL quantiles. Callers needing
-    * aggregate parity should left-join the group list back.
-    *
-    * The runtime conf [[SpellingConf]] (`spark.graft.quantileSpelling`)
-    * selects the implementation: `window` (default — fastest on quiet
-    * boxes below ~1M rows/group) or `selection` (the skew-safe spelling;
-    * measured ~2× faster already at 2M rows/group, and the window's CPU
-    * per decade grows 12–22× vs the selection's linear histogram — set
-    * it on cluster deployments). Results are bit-identical either way. */
-  def exactGroupQuantiles(df: DataFrame, groupCol: String, valueCol: String,
-                          ps: Seq[Double], names: Seq[String]): DataFrame = {
-    val spelling =
-      df.sparkSession.conf.get(SpellingConf, "window")
-    require(spelling == "window" || spelling == "selection",
-      s"$SpellingConf must be 'window' or 'selection': $spelling")
-    if (spelling == "selection")
-      return exactGroupQuantilesSkewSafe(df, groupCol, valueCol, ps, names)
-    require(ps.nonEmpty && ps.size == names.size,
-      s"each fraction needs a name: $ps / $names")
-    require(ps.forall(p => p >= 0 && p <= 1), s"fractions must be in [0,1]: $ps")
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy(col(groupCol)).orderBy(col("__v"))
-    // group size over the SAME partition+order spec with an explicit
-    // whole-partition frame: Spark plans both functions into ONE
-    // WindowExec (one buffering pass), where the orderless spec would
-    // add a second
-    val wAll = wOrd.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val base = df
-      .select(col(groupCol), col(valueCol).cast("double").as("__v"))
-      .where(col("__v").isNotNull)
-      .withColumn("__rn", row_number().over(wOrd).cast("long") - 1)
-      .withColumn("__n", count(lit(1)).over(wAll))
-    def rank(p: Double) = lit(p) * (col("__n") - 1).cast("double")
-    val isBoundary = ps.map { p =>
-      col("__rn") === floor(rank(p)).cast("long") ||
-        col("__rn") === ceil(rank(p)).cast("long")
-    }.reduce(_ || _)
-    val aggs = ps.zip(names).flatMap { case (p, nm) => Seq(
-      max(when(col("__rn") === floor(rank(p)).cast("long"), col("__v"))).as(s"__lo_$nm"),
-      max(when(col("__rn") === ceil(rank(p)).cast("long"), col("__v"))).as(s"__hi_$nm"))
-    } :+ first(col("__n")).as("__gn")
-    val g = base.where(isBoundary)
-      .groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-    val outs = ps.zip(names).map { case (p, nm) =>
-      val rr = lit(p) * (col("__gn") - 1).cast("double")
-      // quantile_cont's operation order (see exactQuantiles)
-      when(floor(rr) === ceil(rr), col(s"__lo_$nm"))
-        .otherwise(col(s"__lo_$nm") * (ceil(rr) - rr) +
-          col(s"__hi_$nm") * (rr - floor(rr)))
-        .as(nm)
-    }
-    g.select(col(groupCol) +: outs: _*)
   }
 
   /** Exact interpolated quantiles PER GROUP via two-pass distributed
@@ -164,27 +84,26 @@ object Quantiles {
     *     ~rows/cells values), picks the wanted indices, and one
     *     aggregation interpolates.
     *
-    * Why not a per-group sort window: the window spelling buffers each
-    * whole group in ONE task's sort — spillable, but a dominant group
+    * Why not a per-group sort window: a window buffers each whole
+    * group in ONE task's sort — spillable, but a dominant group
     * serializes the job (the q91 pathology moved from the aggregate into
     * the sort). Here the full data crosses NO exchange and is never
     * sorted; only candidate cells are, and a cell is one value-prefix
     * slice of one group. Degenerate case: a group whose values are all
     * near-equal collapses into one cell and its candidate sort approaches
-    * the old whole-group sort — never worse, and the picks are trivially
-    * the repeated value. Returns one row per group with one column per
-    * requested fraction, named by `names`; values are bit-identical to
-    * the sort-window spelling (same rank picks, same interpolation
-    * arithmetic — see exactQuantiles on operation order).
+    * a whole-group sort — never worse, and the picks are trivially the
+    * repeated value. The price is a second input pass (histogram, then
+    * candidates). Returns one row per group with one column per
+    * requested fraction, named by `names`.
     *
-    * Same NULL semantics as [[exactGroupQuantiles]] (all-null groups
-    * dropped), same output schema, bit-identical values. Costs one extra
-    * input pass (histogram + candidates vs the window's single pass) —
-    * measured ~25% slower at sf0.1 on even groups — in exchange for
-    * skew immunity: prefer it whenever one group can dominate. */
-  def exactGroupQuantilesSkewSafe(df: DataFrame, groupCol: String,
-                                  valueCol: String, ps: Seq[Double],
-                                  names: Seq[String]): DataFrame = {
+    * NULL semantics: values are filtered before bucketing, so a group
+    * whose values are ALL null yields NO output row — unlike
+    * `percentile_cont`, which would emit the group with NULL quantiles.
+    * Callers needing aggregate parity should left-join the group list
+    * back. */
+  def exactGroupQuantiles(df: DataFrame, groupCol: String,
+                          valueCol: String, ps: Seq[Double],
+                          names: Seq[String]): DataFrame = {
     require(ps.nonEmpty && ps.size == names.size,
       s"each fraction needs a name: $ps / $names")
     require(ps.forall(p => p >= 0 && p <= 1), s"fractions must be in [0,1]: $ps")
@@ -244,7 +163,7 @@ object Quantiles {
     g.select(col(groupCol) +: outs: _*)
   }
 
-  /** Bucket granularity for [[exactGroupQuantilesSkewSafe]]'s selection pass:
+  /** Bucket granularity for [[exactGroupQuantiles]]'s selection pass:
     * 20 bits ⇒ ≤2^20 cells over the whole double line, 2^8 cells per
     * binary octave (1 sign + 11 exponent + 8 mantissa bits) — money-scale
     * domains populate a few thousand cells,
@@ -252,27 +171,6 @@ object Quantiles {
     * stays small enough to partial-aggregate map-side. */
   private val bucketBits = 20
 
-  /** Robust per-group outlier screen: median + MAD (median absolute
-    * deviation), the estimator that survives the contamination that
-    * wrecks mean/stddev screens — one fat-finger 1e9 row shifts a
-    * z-score gate for the whole group but moves the median not at all.
-    * Flags |x − median| > k·1.4826·MAD (1.4826 ≈ 1/Φ⁻¹(3/4) makes MAD
-    * consistent for the normal σ, so `k` reads like a z-cutoff).
-    *
-    * Exactness: money quantizes to cents ×2 (HALF-cent units), so the
-    * first median — interpolated at worst between adjacent integers —
-    * is an exact double; deviations in half-cent units are again exact,
-    * and the second median's worst case (quarter-cents) still sits on a
-    * double-exact dyadic. The gate compares an exact integer-valued
-    * deviation against one correctly-rounded product — deterministic on
-    * any IEEE engine. Returns per group: n, median, mad_sigma (scaled
-    * MAD in money units), n_out_low, n_out_high.
-    *
-    * Scale shape: both medians ride [[exactGroupQuantiles]] (per-group
-    * sort windows, boundary-rows-only aggregation — no single-reducer
-    * value buffer); the group-sized median/MAD tables broadcast back;
-    * the data crosses the group-key exchange twice (once per ranking
-    * pass) and nothing else. */
   /** [[madOutliers]] stage 1: money → exact half-cent integers. */
   private def madCents(df: DataFrame, groupCol: String,
                        valueCol: String): DataFrame =
@@ -292,6 +190,26 @@ object Quantiles {
   private def madScale(dev: DataFrame, groupCol: String): DataFrame =
     exactGroupQuantiles(dev, groupCol, "dev2", Seq(0.5), Seq("mad2"))
 
+  /** Robust per-group outlier screen: median + MAD (median absolute
+    * deviation), the estimator that survives the contamination that
+    * wrecks mean/stddev screens — one fat-finger 1e9 row shifts a
+    * z-score gate for the whole group but moves the median not at all.
+    * Flags |x − median| > k·1.4826·MAD (1.4826 ≈ 1/Φ⁻¹(3/4) makes MAD
+    * consistent for the normal σ, so `k` reads like a z-cutoff).
+    *
+    * Exactness: money quantizes to cents ×2 (HALF-cent units), so the
+    * first median — interpolated at worst between adjacent integers —
+    * is an exact double; deviations in half-cent units are again exact,
+    * and the second median's worst case (quarter-cents) still sits on a
+    * double-exact dyadic. The gate compares an exact integer-valued
+    * deviation against one correctly-rounded product — deterministic on
+    * any IEEE engine. Returns per group: n, median, mad_sigma (scaled
+    * MAD in money units), n_out_low, n_out_high.
+    *
+    * Scale shape: both medians ride [[exactGroupQuantiles]] (histogram
+    * plus candidate-cell selection — no whole-group sort, no
+    * single-reducer value buffer); the group-sized median/MAD tables
+    * broadcast back. */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
                   k: Double = 3.0): DataFrame = {
     // deliberately NOT materialized (the Layout curveQualityMulti
@@ -314,13 +232,12 @@ object Quantiles {
         "lazy-is-cheaper measurement only covers pruned raw-table scans.")
     val c2 = madCents(df, groupCol, valueCol)
     // `dev` also stays UNmaterialized (r14, measured): it fans out to
-    // madScale AND the final aggregation with the med window in its
+    // madScale AND the final aggregation with the med selection in its
     // subtree — the exchange-bearing shape that usually warrants a
     // persist — but BOTH storage levels measured ~1.09× SLOWER in 4-round
-    // alternating-JVM A/Bs at sf0.1 (SER and deserialized alike): the
-    // re-run subtree parallelizes across every core while the cache
-    // build+read serializes on the single-partition-per-group window
-    // output. Rig + A/B numbers in OPTIMIZATION_r14.md.
+    // alternating-JVM A/Bs at sf0.1 (SER and deserialized alike; measured
+    // when the medians still ran a per-group sort window). Rig + A/B
+    // numbers in OPTIMIZATION_r14.md.
     val dev = madDeviations(c2, groupCol)
     val mad = madScale(dev, groupCol)
     dev.join(broadcast(mad), groupCol)

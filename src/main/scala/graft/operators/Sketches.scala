@@ -338,39 +338,22 @@ object Sketches {
       .agg(min(coalesce(col("ip"), lit(0L))).as("est_join_size"))
   }
 
-  /** Probe values against a built filter: returns (groupCols...,
-    * valueCol, bloom_positive). A value is positive iff every one of its
-    * numHashes bits is set — no false negatives by construction; false
-    * positives at the classic (1 - e^{-kn/m})^k rate. The filter side is
-    * <= 2048 rows per group, so the probe join broadcasts: the corpus
-    * side never shuffles — the 100 TB point of the operator. */
-  /** Ungrouped probe with the filter COLLECTED to a literal: the 16-bit
-    * position domain bounds ANY filter at 2048 words (16 KB), so it rides
-    * the plan as an array literal and membership becomes a pure codegen
-    * projection — no explode, no join, no exchange on the probe side
-    * (the join spelling pays a 3× explode plus a probe-side groupBy to
-    * AND the hits, a full shuffle of every probe row; measured 2.4× the
-    * plain broadcast-join decontamination at sf0.1 before this).
-    * Identical decisions to [[bloomProbe]]: all `numHashes` bits set.
-    * Building the literal is one bounded job over the (small) filter
-    * side — the same boundedness the broadcast in [[bloomProbe]] needs. */
-  def bloomProbeLiteral(words: DataFrame, probes: DataFrame, valueCol: String,
-                        numHashes: Int = 3, hexChars: Int = 4): DataFrame =
-    probeLiteralWith(words, probes, numHashes, hexChars,
-      // same bloomPosition definition as the build — no drift possible
-      j => bloomPosition(col(valueCol), lit(j), hexChars))
-
-  /** [[bloomProbeLiteral]] against a [[bloomWordsDigest]]-built filter:
-    * positions sliced from the md5-hex `valueCol`, no per-probe md5. */
+  /** Ungrouped probe of a [[bloomWordsDigest]]-built filter with the
+    * filter COLLECTED to a literal: the 4·hexChars-bit position domain
+    * bounds the filter at 2^(4·hexChars−5) words (2048 longs = 16 KB at
+    * the default), so it rides the plan as an array literal and
+    * membership becomes a pure codegen projection — no explode, no join,
+    * no exchange on the probe side (the join spelling pays a 3× explode
+    * plus a probe-side groupBy to AND the hits, a full shuffle of every
+    * probe row; measured 2.4× the plain broadcast-join decontamination at
+    * sf0.1 before this). Positions are sliced from the md5-hex
+    * `valueCol`, no per-probe md5. Identical decisions to
+    * [[bloomProbeDigest]]: all `numHashes` bits set. Building the literal
+    * is one bounded job over the (small) filter side — the same
+    * boundedness the broadcast in [[bloomProbeDigest]] needs. */
   def bloomProbeLiteralDigest(words: DataFrame, probes: DataFrame,
                               valueCol: String, numHashes: Int = 3,
-                              hexChars: Int = 4): DataFrame =
-    probeLiteralWith(words, probes, numHashes, hexChars,
-      j => digestPosition(col(valueCol), j, hexChars))
-
-  private def probeLiteralWith(words: DataFrame, probes: DataFrame,
-                               numHashes: Int, hexChars: Int,
-                               posOf: Int => Column): DataFrame = {
+                              hexChars: Int = 4): DataFrame = {
     // filter words: position domain 4·hexChars bits, 32 bits per word —
     // 2048 longs at the default, 32k longs (256 KB literal) at hexChars=5;
     // bounded by the FILTER SIZE constant either way, never the data
@@ -382,7 +365,7 @@ object Sketches {
       .foreach(r => arr(r.getLong(0).toInt) |= r.getLong(1))
     val filterLit = typedlit(arr.toSeq)
     val positive = (0 until numHashes).map { j =>
-      val pos = posOf(j)
+      val pos = digestPosition(col(valueCol), j, hexChars)
       call_function("shiftright",
         element_at(filterLit, (pos / 32).cast("int") + 1),
         (pos % 32).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
@@ -444,6 +427,12 @@ object Sketches {
     }.reduce(_ unionByName _)
   }
 
+  /** Probe values against a built filter: returns (groupCols...,
+    * valueCol, bloom_positive). A value is positive iff every one of its
+    * numHashes bits is set — no false negatives by construction; false
+    * positives at the classic (1 - e^{-kn/m})^k rate. The filter side is
+    * <= 2048 rows per group, so the probe join broadcasts: the corpus
+    * side never shuffles — the 100 TB point of the operator. */
   def bloomProbe(words: DataFrame, probes: DataFrame, groupCols: Seq[String],
                  valueCol: String, numHashes: Int = 3,
                  carryCols: Seq[String] = Nil, hexChars: Int = 4): DataFrame =

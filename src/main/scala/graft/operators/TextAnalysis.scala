@@ -665,131 +665,57 @@ object TextAnalysis {
 
   /** Byte-pair-encoding merge training (Sennrich et al., ACL 2016) —
     * the tokenizer-training step of an LLM data pipeline, distributed:
-    * learn the `nMerges` most frequent adjacent symbol pairs, greedily,
-    * over the corpus WORD-TYPE table (BPE's own trick: statistics live
-    * on distinct words × frequency, so the iteration cost is
+    * learn `nMerges` frequent adjacent symbol pairs, greedily, over the
+    * corpus WORD-TYPE table (BPE's own trick: statistics live on
+    * distinct words × frequency, so the iteration cost is
     * vocabulary-sized no matter how large the corpus — the corpus is
     * read ONCE to build the type table).
     *
-    * Each round: (1) adjacent-pair counts weighted by word frequency —
-    * one vocabulary-sized aggregation; (2) argmax under the total order
-    * (count desc, left, right) — a 1-row bounded collect, the IVF-
-    * centroid pattern; (3) apply the merge to every word's symbol
-    * string via `replace('|a||b|' → '|ab|')`. Each symbol carries its
-    * OWN delimiters ('|a||b||a||b|'), which is what makes plain
-    * left-to-right non-overlapping replace EXACTLY symbol-level greedy
-    * BPE application: consecutive matches share no characters, so
-    * '|b||b||b|' with merge (b,b) → '|bb||b|' and '|a||b||a||b|' →
-    * '|ab||ab|' (a single-space-joined form would CONSUME the shared
-    * delimiter and skip every second back-to-back repeat). Both
-    * Spark's `replace` and ANSI REPLACE share these semantics, which
-    * makes the trainer hash-checkable stage by stage in plain SQL.
-    * Symbols stay in the lowercased [a-z] channel (word boundaries =
-    * anything else), so '|' can never occur inside a symbol.
-    *
-    * Returns (step, left, right, merged, pair_freq). Scale shape: the
-    * word-type table localCheckpoints once per round (lineage cut —
-    * 8 chained replaces would otherwise stack one plan); every round's
-    * exchange carries (pair, freq) rows bounded by |vocab|·avg_len. */
-  def bpeMerges(df: org.apache.spark.sql.DataFrame, textCol: String,
-                nMerges: Int): org.apache.spark.sql.DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
-    val spark = df.sparkSession
-    import spark.implicits._
-    var cur = df
-      .select(explode(filter(split(trim(
-          regexp_replace(lower(col(textCol)), "[^a-z]+", " ")), " "),
-        t => t =!= "")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("freq"), concat(lit("|"),
-        concat_ws("||", filter(split(col("word"), ""), c => c =!= "")),
-        lit("|")).as("rep"))
-      .localCheckpoint(true)
-    val merges =
-      scala.collection.mutable.ArrayBuffer[(Int, String, String, Long, Long)]()
-    var exhausted = false
-    for (step <- 1 to nMerges if !exhausted) {
-      val toksC = filter(split(trim(col("rep"), "|"), "\\|\\|"), t => t =!= "")
-      val pairs = cur
-        .select(col("freq"), toksC.as("t"))
-        .select(col("freq"), explode(zip_with(
-          slice(col("t"), lit(1), size(col("t")) - 1),
-          slice(col("t"), lit(2), size(col("t")) - 1),
-          (x, y) => struct(x.as("a"), y.as("b")))).as("pr"))
-        .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
-        .agg(sum("freq").as("cnt"))
-      val best = pairs.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        // the compression curve: corpus symbol count after this merge —
-        // the number a tokenizer budget actually negotiates with (each
-        // merge trades one vocab slot for Σ freq fewer symbols). It RIDES
-        // the checkpoint's own materialization as an observed metric (the
-        // connectedComponents bookkeeping pattern) instead of a separate
-        // per-round aggregate job over the checkpointed table (r14).
-        val symObs = org.apache.spark.sql.Observation()
-        cur = cur.withColumn("rep",
-            replace(col("rep"), lit(s"|$a||$b|"), lit(s"|$a$b|")))
-          .observe(symObs, sum(col("freq") *
-            size(filter(split(trim(col("rep"), "|"), "\\|\\|"),
-              t => t =!= ""))).as("ns"))
-          .localCheckpoint(true)
-        val nSyms = symObs.get("ns").asInstanceOf[Long]
-        merges += ((step, a, b, cnt, nSyms))
-      }
-    }
-    merges.toSeq.toDF("step", "left", "right", "pair_freq", "symbols_after")
-      .withColumn("merged", concat(col("left"), col("right")))
-      .select("step", "left", "right", "merged", "pair_freq", "symbols_after")
-  }
-
-  /** BATCHED BPE merge training — the production spelling of
-    * [[bpeMerges]]: a 32 k-merge vocabulary cannot afford one Spark job
-    * chain per merge (32 k argmax collects + 32 k checkpoints), so each
-    * ROUND applies up to `batch` mutually COMPATIBLE merges from one
-    * pair-count pass, cutting driver round-trips and checkpoints by the
-    * batch factor. Selection is greedy over the top-`candWindow`
-    * candidates in (count desc, left, right) order: a pair is picked
-    * unless any of its three symbols {left, right, left+right} was
-    * already claimed by an earlier pick of the SAME round — the
-    * "non-chaining" rule. It keeps the round's pre-computed counts
+    * Each ROUND: (1) adjacent-pair counts weighted by word frequency —
+    * one vocabulary-sized aggregation; (2) the top `batch * 8` pairs
+    * under the total order (count desc, left, right) — a bounded
+    * TakeOrdered to the driver, never the pair table; (3) a greedy pick
+    * of up to `batch` mutually COMPATIBLE merges from that window: a
+    * pair is picked unless any of its three symbols {left, right,
+    * left+right} was already claimed by an earlier pick of the SAME
+    * round — the "non-chaining" rule. It keeps the round's counts
     * honest (no picked pair consumes another picked pair's occurrences:
     * overlap at a shared position needs a shared symbol) and blocks
     * textual chaining through the merged string (picking (t,h) and then
     * (th,e) in one round would let the second replace consume
-    * boundaries the first just created).
+    * boundaries the first just created); (4) the picks apply in pick
+    * order to every word's symbol string via `replace('|a||b|' →
+    * '|ab|')`, with a lineage cut.
     *
-    * Batched greedy is the standard approximation (per-round counts are
-    * a round stale vs. per-merge recount) — with batch = 1 it IS
-    * [[bpeMerges]], pick for pick (the spec pins that equivalence).
+    * `batch = 1` is exact per-merge greedy BPE (the first candidate is
+    * the argmax). A 32 k-merge vocabulary cannot afford one Spark job
+    * chain per merge, so larger batches cut driver round-trips and
+    * checkpoints by the batch factor — the standard approximation
+    * (per-round counts are a round stale vs. a per-merge recount).
     *
-    * Determinism and oracle parity: candidates are a deterministic
-    * top-`candWindow` slice; greedy selection over that bounded slice is
-    * pure; application is the same delimiter-exact REPLACE chain in pick
-    * order, so an engine unrolling (rank window → greedy fold → chained
-    * REPLACE) per round reproduces every stage — the q203 oracle spells
-    * the greedy fold as a recursive CTE over the candidate ranks.
+    * Each symbol carries its OWN delimiters ('|a||b||a||b|'), which is
+    * what makes plain left-to-right non-overlapping replace EXACTLY
+    * symbol-level greedy BPE application: consecutive matches share no
+    * characters, so '|b||b||b|' with merge (b,b) → '|bb||b|' and
+    * '|a||b||a||b|' → '|ab||ab|' (a single-space-joined form would
+    * CONSUME the shared delimiter and skip every second back-to-back
+    * repeat). Both Spark's `replace` and ANSI REPLACE share these
+    * semantics, so an engine unrolling (rank window → greedy fold →
+    * chained REPLACE) per round reproduces every stage — the q203
+    * oracle spells the greedy fold as a recursive CTE over the
+    * candidate ranks. Symbols stay in the lowercased [a-z] channel
+    * (word boundaries = anything else), so '|' can never occur inside
+    * a symbol.
     *
-    * Scale shape per round: one vocabulary-sized pair aggregation, one
-    * top-W TakeOrdered (W = `candWindow` rows to the driver — a bounded
-    * constant, NOT the pair table), one chained-replace projection with
-    * a lineage cut, one symbol-count aggregate. `symbols_after` is the
-    * corpus symbol count after the whole ROUND (per-merge curve
-    * granularity is what [[bpeMerges]] trades its round-trips for).
+    * `symbols_after` is the corpus symbol count after the whole ROUND.
     * Under-picking (fewer than `batch` compatible candidates in the
     * window) applies a smaller round; rounds stop once `nMerges` merges
     * are applied or the pair table empties. Returns
     * (step, round, left, right, merged, pair_freq, symbols_after). */
-  def bpeMergesBatched(df: org.apache.spark.sql.DataFrame, textCol: String,
-                       nMerges: Int, batch: Int,
-                       candWindow: Int = 0): org.apache.spark.sql.DataFrame = {
+  def bpeMerges(df: org.apache.spark.sql.DataFrame, textCol: String,
+                nMerges: Int, batch: Int): org.apache.spark.sql.DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
     require(batch >= 1, s"batch must be >= 1: $batch")
-    val wnd = if (candWindow > 0) candWindow else batch * 8
-    require(wnd >= batch, s"candWindow $wnd < batch $batch")
     val spark = df.sparkSession
     import spark.implicits._
     var cur = df
@@ -817,7 +743,7 @@ object TextAnalysis {
           (x, y) => struct(x.as("a"), y.as("b")))).as("pr"))
         .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
         .agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b")).limit(wnd)
+        .orderBy(col("cnt").desc, col("a"), col("b")).limit(batch * 8)
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       if (cands.isEmpty) exhausted = true
       else {
@@ -827,8 +753,9 @@ object TextAnalysis {
           val syms = Seq(a, b, a + b)
           if (!syms.exists(used.contains)) { picks += ((a, b, c)); used ++= syms }
         }
-        // symbols_after rides the checkpoint action as an observed metric
-        // (one job per round instead of two — see bpeMerges, r14)
+        // the compression curve (corpus symbol count after this round)
+        // RIDES the checkpoint's own materialization as an observed
+        // metric instead of a separate aggregate job per round (r14)
         val symObs = org.apache.spark.sql.Observation()
         cur = cur.withColumn("rep",
             picks.foldLeft(col("rep")) { case (e, (a, b, _)) =>

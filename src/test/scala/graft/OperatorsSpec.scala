@@ -867,10 +867,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("exactGroupQuantiles selection spelling: negatives, sign straddle, " +
     "extremes, duplicates, dominant group") {
-    // the distributed-selection rewrite's new edge paths: the bit-flip
-    // branch (all-negative group), a group straddling ±0, p=0/1 picks,
-    // heavy duplicates (many rows per bucket cell), a single-row group,
-    // and one dominant group (the skew case the rewrite exists for)
+    // the distributed selection's edge paths: the bit-flip branch
+    // (all-negative group), a group straddling ±0, p=0/1 picks, heavy
+    // duplicates (many rows per bucket cell), a single-row group, and
+    // one dominant group (the skew case the selection exists for)
     val rows =
       (1 to 2000).map(i => ("skew", (i % 7).toDouble - 3.0)) ++     // dominant, 7 distinct values
       (1 to 37).map(i => ("neg", -i * 2.5)) ++                       // all negative
@@ -883,44 +883,23 @@ class OperatorsSpec extends SparkSpec {
     val want = df.groupBy("g")
       .agg(percentile(col("v"), array(ps.map(lit): _*)).as("qs"))
       .orderBy("g").collect()
-    val spellings = Seq(
-      "window" -> Quantiles.exactGroupQuantiles _,
-      "skewSafe" -> Quantiles.exactGroupQuantilesSkewSafe _)
-    val results = spellings.map { case (label, fn) =>
-      val got = fn(df, "g", "v", ps, names).orderBy("g").collect()
-      assert(got.length == want.length && got.length == 4, label)
-      got.zip(want).foreach { case (a, b) =>
-        assert(a.getString(0) == b.getString(0), label)
-        val qs = b.getSeq[Double](1)
-        ps.indices.foreach { i =>
-          assert(math.abs(a.getDouble(i + 1) - qs(i)) < 1e-9,
-            s"$label ${a.getString(0)} p=${ps(i)}: ${a.getDouble(i + 1)} vs ${qs(i)}")
-        }
+    val got = Quantiles.exactGroupQuantiles(df, "g", "v", ps, names)
+      .orderBy("g").collect()
+    assert(got.length == want.length && got.length == 4)
+    got.zip(want).foreach { case (a, b) =>
+      assert(a.getString(0) == b.getString(0))
+      val qs = b.getSeq[Double](1)
+      ps.indices.foreach { i =>
+        assert(math.abs(a.getDouble(i + 1) - qs(i)) < 1e-9,
+          s"${a.getString(0)} p=${ps(i)}: ${a.getDouble(i + 1)} vs ${qs(i)}")
       }
-      // non-interpolated picks (p=0, p=1, and any integral (n−1)p) must
-      // be EXACT data values — bit-equality, not tolerance
-      val skew = got.find(_.getString(0) == "skew").get
-      assert(skew.getDouble(1) == -3.0 && skew.getDouble(5) == 3.0, label)
-      val one = got.find(_.getString(0) == "one").get
-      assert(names.indices.forall(i => one.getDouble(i + 1) == 42.25), label)
-      got.map(_.toSeq).toSeq
     }
-    // the two spellings' documented contract: bit-identical outputs
-    assert(results.head == results(1),
-      "window and skewSafe spellings diverged")
-    // conf dispatch: spark.graft.quantileSpelling=selection must route
-    // the default entry point to the skew-safe spelling (same results),
-    // and an unknown value must refuse loudly
-    spark.conf.set(Quantiles.SpellingConf, "selection")
-    try {
-      val viaConf = Quantiles.exactGroupQuantiles(df, "g", "v", ps, names)
-        .orderBy("g").collect().map(_.toSeq).toSeq
-      assert(viaConf == results.head, "conf-dispatched selection diverged")
-      spark.conf.set(Quantiles.SpellingConf, "bogus")
-      intercept[IllegalArgumentException] {
-        Quantiles.exactGroupQuantiles(df, "g", "v", ps, names)
-      }
-    } finally spark.conf.unset(Quantiles.SpellingConf)
+    // non-interpolated picks (p=0, p=1, and any integral (n−1)p) must
+    // be EXACT data values — bit-equality, not tolerance
+    val skew = got.find(_.getString(0) == "skew").get
+    assert(skew.getDouble(1) == -3.0 && skew.getDouble(5) == 3.0)
+    val one = got.find(_.getString(0) == "one").get
+    assert(names.indices.forall(i => one.getDouble(i + 1) == 42.25))
   }
 
   // ---- CDC compaction
@@ -1375,14 +1354,6 @@ class OperatorsSpec extends SparkSpec {
     // and on a corpus with zero contamination both are empty
     val clean = corpus.where(col("doc_id") < 50)
     assert(Dedup.contaminatedIdsBloomPrefilter(clean, test, "doc_id", "text").count() == 0)
-    // explicit widths past the digest-slice budget (3*hexChars > 32 —
-    // hexChars 11 = 2^44 bits) were accepted by the pre-slicing md5
-    // scheme and must not throw now: the operator falls back to the
-    // md5-redraw positions on both sides, decisions unchanged
-    val wide = Dedup.contaminatedIdsBloomPrefilter(corpus, test, "doc_id",
-      "text", n = 8, bloomHexChars = 11, literalMaxHexChars = 6)
-      .as[Long].collect().sorted.toSeq
-    assert(wide == exact)
   }
 
   // ---- Count-Min sketch
@@ -2311,37 +2282,24 @@ class OperatorsSpec extends SparkSpec {
     }
     val docs = wordFreq.flatMap { case (w, f) => Seq.fill(f)(w) }
       .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
-    val rows = TextAnalysis.bpeMerges(docs, "text", nMerges = 6)
+    // batch = 1 is per-merge greedy BPE: one merge per round
+    val rows = TextAnalysis.bpeMerges(docs, "text", nMerges = 6, batch = 1)
       .orderBy("step")
-      .select("step", "left", "right", "merged", "pair_freq", "symbols_after")
-      .as[(Int, String, String, String, Long, Long)].collect().toSeq
-    assert(rows == expect.toSeq, s"got $rows\nwant $expect")
+      .select("step", "round", "left", "right", "merged", "pair_freq",
+        "symbols_after")
+      .as[(Int, Int, String, String, String, Long, Long)].collect().toSeq
+    assert(rows.map(_._2) == (1 to 6), s"one merge per round: $rows")
+    assert(rows.map { case (st, _, a, b, m, f, n) => (st, a, b, m, f, n) } ==
+      expect.toSeq, s"got $rows\nwant $expect")
   }
 
-  test("bpeMergesBatched: batch=1 IS the unbatched trainer, pick for pick") {
-    val wordFreq = Seq("low" -> 5, "lower" -> 2, "newest" -> 6, "widest" -> 3,
-      "papa" -> 7, "aaaa" -> 4)
-    val docs = wordFreq.flatMap { case (w, f) => Seq.fill(f)(w) }
-      .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
-    val unbatched = TextAnalysis.bpeMerges(docs, "text", nMerges = 6)
-      .select("step", "left", "right", "merged", "pair_freq", "symbols_after")
-      .orderBy("step")
-      .as[(Int, String, String, String, Long, Long)].collect().toSeq
-    val batched = TextAnalysis.bpeMergesBatched(docs, "text",
-        nMerges = 6, batch = 1)
-      .select("step", "left", "right", "merged", "pair_freq", "symbols_after")
-      .orderBy("step")
-      .as[(Int, String, String, String, Long, Long)].collect().toSeq
-    assert(batched == unbatched, s"got $batched\nwant $unbatched")
-  }
-
-  test("bpeMergesBatched: rounds hold the batch bound and picks are compatible") {
+  test("bpeMerges: rounds hold the batch bound and picks are compatible") {
     // enough distinct pair mass that every round fills its batch: the
     // whole lowercase corpus of q203's shape in miniature
     val docs = (0 until 400).map { i =>
       (i.toLong, s"lower newest widest paper stone brick cloud ${i % 7}g")
     }.toDF("id", "text")
-    val got = TextAnalysis.bpeMergesBatched(docs, "text",
+    val got = TextAnalysis.bpeMerges(docs, "text",
         nMerges = 12, batch = 4)
       .select("step", "round", "left", "right", "pair_freq")
       .as[(Int, Int, String, String, Long)].collect().toSeq.sortBy(_._1)

@@ -391,12 +391,11 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("exact group quantiles: both spellings equal the percentile " +
-    "aggregate on random grouped data") {
+  test("exact group quantiles equal the percentile aggregate on " +
+    "random grouped data") {
     // random group sizes (incl. singletons), duplicate-heavy and
-    // negative values, awkward fractions — the window and the skew-safe
-    // selection spellings must agree with the percentile aggregate and
-    // bit-for-bit with EACH OTHER on every draw
+    // negative values, awkward fractions — the distributed selection
+    // must agree with the percentile aggregate on every draw
     import graft.operators.Quantiles
     val rnd = new scala.util.Random(20260816L)
     val ps = Seq(0.0, 0.1, 0.37, 0.5, 0.73, 1.0)
@@ -417,25 +416,18 @@ class PropertySpec extends SparkSpec {
         .agg(percentile(col("v"), array(ps.map(lit): _*)).as("qs"))
         .orderBy("g").collect()
         .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-      val spellings = Seq(
-        "window" -> Quantiles.exactGroupQuantiles _,
-        "skewSafe" -> Quantiles.exactGroupQuantilesSkewSafe _)
-      val outs = spellings.map { case (label, fn) =>
-        val got = fn(df, "g", "v", ps, names).orderBy("g").collect()
-        assert(got.length == want.size, s"$label trial $trial group count")
-        got.foreach { r =>
-          val qs = want(r.getString(0))
-          ps.indices.foreach { i =>
-            assert(math.abs(r.getDouble(i + 1) - qs(i)) <=
-              1e-9 * math.max(1.0, math.abs(qs(i))),
-              s"$label trial $trial ${r.getString(0)} p=${ps(i)}: " +
-                s"${r.getDouble(i + 1)} vs ${qs(i)}")
-          }
+      val got = Quantiles.exactGroupQuantiles(df, "g", "v", ps, names)
+        .orderBy("g").collect()
+      assert(got.length == want.size, s"trial $trial group count")
+      got.foreach { r =>
+        val qs = want(r.getString(0))
+        ps.indices.foreach { i =>
+          assert(math.abs(r.getDouble(i + 1) - qs(i)) <=
+            1e-9 * math.max(1.0, math.abs(qs(i))),
+            s"trial $trial ${r.getString(0)} p=${ps(i)}: " +
+              s"${r.getDouble(i + 1)} vs ${qs(i)}")
         }
-        got.map(_.toSeq).toSeq
       }
-      assert(outs.head == outs(1),
-        s"trial $trial: window and skewSafe spellings diverged")
     }
   }
 }
