@@ -77,10 +77,7 @@ object ScanWidth {
       files.foreach { f =>
         val path = new org.apache.hadoop.fs.Path(f)
         scala.util.Try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(path, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val g = try r.getRowGroups.size() finally r.close()
+          val g = ParquetFooters.read(conf, path).rowGroups
           val len = path.getFileSystem(conf).getFileStatus(path).getLen
           (g.toLong, len)
         // unreadable or non-parquet (csv/json split by bytes) => treat

@@ -47,7 +47,7 @@ object ThaiDates {
     * Returns a DateType column, null when unparseable — parser totality
     * mirrors the reference's null-on-failure contract.
     *
-    * Runs as a custom codegen'd expression (graft.plans.DateKernels): the
+    * Runs as one static kernel call (graft.plans.DateKernels): the
     * equivalent Column cascade inlined itself ~6× per use and blew the
     * 64KB generated-method limit on multi-date projections. */
   def parseFlexibleDate(raw: Column): Column =

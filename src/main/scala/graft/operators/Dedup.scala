@@ -879,7 +879,7 @@ object Dedup {
 
   /** 64-bit SimHash of the token multiset: per token, xxhash64 (seed 42);
     * each of the 64 bits votes +1/-1; fingerprint bit = sign of the vote
-    * sum. Runs as a custom Catalyst expression — one loop over the tokens
+    * sum. Runs as one static kernel call — one loop over the tokens
     * instead of 64 interpreted array traversals. */
   def simhash64(text: Column): Column =
     graft.plans.VectorExpressions.simhash64(tokens(text))

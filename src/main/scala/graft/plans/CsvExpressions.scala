@@ -1,13 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** RFC-4180-style CSV line splitting as a codegen'd kernel, for the
+/** RFC-4180-style CSV line splitting as a static kernel, for the
   * many-files ingestion path where lines arrive as a string column with
   * file lineage (Ingest.csvLinesPerFileEncoding) and Spark's file-based CSV
   * reader can't be used without losing that lineage.
@@ -18,8 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * tolerant readers the reference relies on). Always returns
   * fields.length == delims+1 (trailing empty fields preserved). */
 object CsvOps {
-  def splitLine(line: UTF8String, delim: Char): Array[UTF8String] =
-    splitFields(line.toString, delim).map(UTF8String.fromString)
+  /** The Column kernel; `delim` is the delimiter's char code. */
+  def splitLine(line: UTF8String, delim: Int): ArrayData =
+    new GenericArrayData(
+      splitFields(line.toString, delim.toChar).map(f => UTF8String.fromString(f): Any))
 
   /** [[splitLine]] over a JVM string — the per-file kernels' entry. */
   def splitFields(s: String, delim: Char): Array[String] = {
@@ -49,21 +49,8 @@ object CsvOps {
 
 object CsvExpressions {
 
-  case class CsvSplitLine(child: Expression, delim: Char) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new GenericArrayData(CsvOps.splitLine(v.asInstanceOf[UTF8String], delim)
-        .asInstanceOf[Array[AnyRef]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"(Object[]) graft.plans.CsvOps.splitLine($a, (char) ${delim.toInt}));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
-
   /** Split a CSV line column into its string fields. */
   def splitCsvLine(line: Column, delim: Char = ','): Column =
-    column(CsvSplitLine(expression(line), delim))
+    StaticKernel(CsvOps, "splitLine", ArrayType(StringType, containsNull = false))(
+      line, delim.toInt)
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DateType}
+import org.apache.spark.sql.types.DateType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernel for the flexible Thai/B.E. date parse (C1-C5 composed).
@@ -25,7 +23,6 @@ object DateKernels {
 
   /** Returns days-since-epoch, or null when unparseable/invalid. */
   def parseFlexDate(s: UTF8String): Integer = {
-    if (s == null) return null
     val norm = s.toString.trim.replaceAll("\\s+", " ").replace('.', '-').replace('/', '-')
     val m = pat.matcher(norm)
     if (!m.matches()) return null
@@ -50,20 +47,6 @@ object DateKernels {
 
 object DateExpressions {
 
-  case class ParseFlexDate(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DateType
-    override def nullable: Boolean = true
-    override def nullSafeEval(v: Any): Any =
-      DateKernels.parseFlexDate(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |Integer r = graft.plans.DateKernels.parseFlexDate($c);
-        |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.intValue(); }
-        |""".stripMargin)
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
-
-  def parseFlexDate(c: Column): Column = column(ParseFlexDate(expression(c)))
+  def parseFlexDate(c: Column): Column =
+    StaticKernel(DateKernels, "parseFlexDate", DateType, nullable = true)(c)
 }

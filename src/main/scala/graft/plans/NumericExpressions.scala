@@ -1,13 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
-/** Scalar numeric kernels shared by the codegen expressions below and
-  * (via the static forwarders Scala emits for object methods) by the
-  * generated Java. */
+/** Scalar numeric kernels, called from plans through [[StaticKernel]]. */
 object NumericOps {
 
   /** Top `bits` of the IEEE-754 radix-sortable transform of a double:
@@ -32,23 +28,9 @@ object NumericOps {
 object NumericExpressions {
 
   /** Monotone `bits`-bit bucket id of a double (see
-    * [[NumericOps.orderedPrefix]]). Codegen'd; null-in → null-out under
-    * both legacy and ANSI modes (nullSafeEval/nullSafeCodeGen). */
-  case class OrderedDoublePrefix(child: Expression, bits: Int)
-      extends UnaryExpression {
+    * [[NumericOps.orderedPrefix]]); null in, null out. */
+  def orderedPrefix(v: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 63, s"prefix bits $bits outside [1,63]")
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      NumericOps.orderedPrefix(v.asInstanceOf[Double], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.NumericOps.orderedPrefix($a, $bits);")
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
+    StaticKernel(NumericOps, "orderedPrefix", LongType)(v, bits)
   }
-
-  import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
-
-  def orderedPrefix(v: Column, bits: Int): Column =
-    column(OrderedDoublePrefix(expression(v), bits))
 }

@@ -1,12 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** String kernels that need the JDK behind a codegen'd call. */
+/** String kernels that need the JDK behind a static call. */
 object StringOps {
 
   /** Unicode NFC normalization (java.text.Normalizer): canonical
@@ -22,8 +21,9 @@ object StringOps {
   }
 }
 
-/** Catalyst wrappers emitting a single static call (whole-stage codegen
-  * keeps the surrounding stage — same pattern as VectorExpressions). */
+/** The text-stats kernels and the Column wrappers over them. Each wrapper
+  * is one [[StaticKernel]] call, a single static call that keeps the
+  * surrounding stage whole-stage compiled (as in VectorExpressions). */
 object StringExpressions {
 
   // word sets for the text-stats kernel: En17 MUST stay identical to
@@ -58,7 +58,7 @@ object StringExpressions {
     *  - nTokSplit is that split's size (1 for empty text — callers keep
     *    their own empty-string guards); stop-hit counts test exact token
     *    membership, so boundary "" tokens never match */
-  def textStats(s: UTF8String): Array[Long] = {
+  def textStats(s: UTF8String): ArrayData = {
     val raw = s.toString
     var len = 0L; var punct = 0L; var cjk = 0L
     var i = 0
@@ -94,7 +94,7 @@ object StringExpressions {
         if (pos >= t.length) { nTok += 1; done = true } // trailing "" token
       }
     }
-    Array(len, punct, cjk, nTok, en17, en6, de, fr, es)
+    new GenericArrayData(Array(len, punct, cjk, nTok, en17, en6, de, fr, es))
   }
 
   /** One pass over a text value → the 4 counts behind the repetition/
@@ -105,7 +105,7 @@ object StringExpressions {
     * pairs. A hash-explode spelling (explode → groupBy(doc, token) → max)
     * would shuffle rows × tokens; this computes the same counts per row
     * inside whole-stage codegen with zero shuffle. */
-  def repStats(s: UTF8String): Array[Long] = {
+  def repStats(s: UTF8String): ArrayData = {
     val t = s.trim().toLowerCase.toString
     def isWs(c: Char) = c == ' ' || c == '\t' || c == '\n' ||
       c == '\u000B' || c == '\f' || c == '\r'
@@ -133,50 +133,12 @@ object StringExpressions {
     var maxBi = 0L
     val it2 = biCounts.values().iterator()
     while (it2.hasNext) { val v = it2.next(); if (v > maxBi) maxBi = v }
-    Array(nTok, tokCounts.size().toLong, maxTok, maxBi)
+    new GenericArrayData(Array(nTok, tokCounts.size().toLong, maxTok, maxBi))
   }
 
-  case class RepStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        repStats(v.asInstanceOf[UTF8String]))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.StringExpressions.repStats($a));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
+  private val Longs = ArrayType(LongType, containsNull = false)
 
-  case class TextStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        textStats(v.asInstanceOf[UTF8String]))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.StringExpressions.textStats($a));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      StringOps.nfc(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.StringOps.nfc($a);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
-
-  def nfc(c: Column): Column = column(NfcNormalize(expression(c)))
-  def textStatsCol(c: Column): Column = column(TextStats(expression(c)))
-  def repStatsCol(c: Column): Column = column(RepStats(expression(c)))
+  def nfc(c: Column): Column = StaticKernel(StringOps, "nfc", StringType)(c)
+  def textStatsCol(c: Column): Column = StaticKernel(this, "textStats", Longs)(c)
+  def repStatsCol(c: Column): Column = StaticKernel(this, "repStats", Longs)(c)
 }

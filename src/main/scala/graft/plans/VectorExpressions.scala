@@ -3,13 +3,13 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Static kernels for the vector/sketch hot paths — called both from the
-  * interpreted `eval` path and from generated code (the expressions below
-  * emit a single static call in `doGenCode`, so they stay inside
-  * whole-stage codegen instead of breaking the stage with CodegenFallback).
+/** Static kernels for the vector/sketch hot paths. Each is one static
+  * call from a plan (a [[StaticKernel]] call, or one of the three
+  * type-dependent expressions below), so it stays inside whole-stage
+  * codegen instead of breaking the stage with CodegenFallback.
   *
   * Numeric contract: elements are widened to double and accumulated
   * left-to-right — bit-identical to an `aggregate(zip_with(...))`
@@ -177,7 +177,7 @@ object VectorOps {
     * because the HOF spelling paid m interpreted array_sort comparators
     * per row (the q29 lambda lesson, again). `a` must be a DOUBLE array. */
   def pqEncode(a: ArrayData, cb: Array[Double], norm2: Array[Double],
-               m: Int, codes: Int, subDim: Int): Array[Int] = {
+               m: Int, codes: Int, subDim: Int): ArrayData = {
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -199,7 +199,7 @@ object VectorOps {
       out(s) = best
       s += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
   /** Winnowing fingerprint (Schleimer et al., SIGMOD '03): hash every
@@ -207,10 +207,10 @@ object VectorOps {
     * hashes, keep each window's minimum (rightmost on ties) — the standard
     * position-robust document fingerprint for near-dup/overlap detection.
     * Returns the distinct selected hashes, sorted. */
-  def winnow(arr: ArrayData, k: Int, w: Int): Array[Long] = {
+  def winnow(arr: ArrayData, k: Int, w: Int): ArrayData = {
     val n = arr.numElements()
     val nGrams = n - k + 1
-    if (nGrams <= 0) return Array.emptyLongArray
+    if (nGrams <= 0) return new GenericArrayData(Array.emptyLongArray)
     val grams = new Array[Long](nGrams)
     var i = 0
     while (i < nGrams) {
@@ -239,7 +239,7 @@ object VectorOps {
         s += 1
       }
     }
-    out.toArray
+    new GenericArrayData(out.toArray)
   }
 
   private val SpaceSep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
@@ -252,10 +252,10 @@ object VectorOps {
     * sketch contract), but evaluates the token array ONCE: the HOF version
     * re-evaluates its lambda-captured token column per shingle position
     * after projection collapse — O(tokens · regex) per document. */
-  def shingleHashes(arr: ArrayData, n: Int): Array[Long] = {
+  def shingleHashes(arr: ArrayData, n: Int): ArrayData = {
     val sz = arr.numElements()
     val grams = sz - (n - 1)
-    if (grams <= 0) return Array.emptyLongArray
+    if (grams <= 0) return new GenericArrayData(Array.emptyLongArray)
     val toks = new Array[org.apache.spark.unsafe.types.UTF8String](sz)
     var i = 0
     while (i < sz) {
@@ -281,7 +281,7 @@ object VectorOps {
       if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
       i += 1
     }
-    if (w == grams) hs else java.util.Arrays.copyOf(hs, w)
+    new GenericArrayData(if (w == grams) hs else java.util.Arrays.copyOf(hs, w))
   }
 
   /** Portable k-slot MinHash signature over word n-grams, built ONLY from
@@ -297,10 +297,10 @@ object VectorOps {
     * the Mersenne prime, so an incremental dedup INDEX persisted by one
     * engine can be probed-and-verified by another. Empty gram sets
     * (< n tokens) yield an empty array. */
-  def minhashSigPortable(arr: ArrayData, n: Int, k: Int): Array[Long] = {
+  def minhashSigPortable(arr: ArrayData, n: Int, k: Int): ArrayData = {
     val sz = arr.numElements()
     val grams = sz - (n - 1)
-    if (grams <= 0) return Array.emptyLongArray
+    if (grams <= 0) return new GenericArrayData(Array.emptyLongArray)
     val P = 2147483647L
     val toks = new Array[org.apache.spark.unsafe.types.UTF8String](sz)
     var i = 0
@@ -325,7 +325,7 @@ object VectorOps {
       }
       i += 1
     }
-    mins
+    new GenericArrayData(mins)
   }
 
   /** Overlapping token-window chunks (the RAG/pretraining chunker):
@@ -333,16 +333,16 @@ object VectorOps {
     * window clipped at the end; a document shorter than `size` yields one
     * chunk. One pass, one join per chunk — the HOF spelling would
     * re-evaluate the captured token column per chunk (see shingleHashes). */
-  def tokenChunks(arr: ArrayData, size: Int, step: Int): Array[org.apache.spark.unsafe.types.UTF8String] = {
+  def tokenChunks(arr: ArrayData, size: Int, step: Int): ArrayData = {
     val n = arr.numElements()
-    if (n <= 0) return Array.empty
+    if (n <= 0) return new GenericArrayData(Array.empty[Any])
     val toks = new Array[org.apache.spark.unsafe.types.UTF8String](n)
     var i = 0
     while (i < n) {
       toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
       i += 1
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.unsafe.types.UTF8String]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var start = 0
     var done = false
     while (!done) {
@@ -351,7 +351,7 @@ object VectorOps {
         SpaceSep, java.util.Arrays.copyOfRange(toks, start, end): _*)
       if (start + size >= n) done = true else start += step
     }
-    out.toArray
+    new GenericArrayData(out.toArray)
   }
 
   /** Exact Jaccard of two SORTED, deduplicated long arrays via a linear
@@ -374,14 +374,22 @@ object VectorOps {
   }
 }
 
-/** Catalyst expressions wrapping the VectorOps kernels; `doGenCode` emits a
-  * single static call so the surrounding stage keeps whole-stage codegen. */
+/** Column wrappers over the VectorOps kernels. Each kernel call is built
+  * here once, as a [[StaticKernel]] call; the SQL functions in
+  * `graft.GraftExtensions` go through these wrappers too. */
 object VectorExpressions {
+
+  private val Longs = ArrayType(LongType, containsNull = false)
 
   private def isFloatArray(dt: DataType): Boolean = dt match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
+
+  // These three stay hand-written expressions: each picks getFloat or
+  // getDouble from the child's resolved element type, and an unresolved
+  // column such as col("embedding") has no type yet when the wrapper
+  // builds its Column, so the static call cannot be chosen there.
 
   case class ArrayDotProduct(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -399,33 +407,13 @@ object VectorExpressions {
       copy(left = l, right = r)
   }
 
-  case class SimHash64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      VectorOps.simhash64(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.VectorOps.simhash64($a);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class SimHash64Md5(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any =
-      VectorOps.simhash64Md5(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.VectorOps.simhash64Md5($a);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   case class RademacherBuckets(child: Expression, planes: Array[Double],
                                nTables: Int, nPlanes: Int)
       extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def dataType: DataType = Longs
     private def isFloat = isFloatArray(child.dataType)
     override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      new GenericArrayData(
         VectorOps.rademacherBuckets(v.asInstanceOf[ArrayData], planes,
           nTables, nPlanes, isFloat))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -442,7 +430,7 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
     private def isFloat = isFloatArray(child.dataType)
     override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      new GenericArrayData(
         VectorOps.rademacherProject(v.asInstanceOf[ArrayData], planes, k, isFloat))
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val ref = ctx.addReferenceObj("planes", planes, "double[]")
@@ -453,89 +441,6 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  case class Winnow(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.winnow(v.asInstanceOf[ArrayData], k, w))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.winnow($a, $k, $w));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.shingleHashes(v.asInstanceOf[ArrayData], n))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.shingleHashes($a, $n));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class PqEncode(child: Expression, cb: Array[Double],
-                      norm2: Array[Double], m: Int, codes: Int, subDim: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.pqEncode(v.asInstanceOf[ArrayData], cb, norm2, m, codes, subDim))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("pqcb", cb, "double[]")
-      val n2Ref = ctx.addReferenceObj("pqnorm2", norm2, "double[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.pqEncode($a, $cbRef, $n2Ref, $m, $codes, $subDim));")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class PortableMinhashSig(child: Expression, n: Int, k: Int)
-      extends UnaryExpression {
-    require(n >= 1 && k >= 1 && k <= (1 << 20), s"bad n=$n k=$k")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.minhashSigPortable(v.asInstanceOf[ArrayData], n, k))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.minhashSigPortable($a, $n, $k));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class TokenChunks(child: Expression, size: Int, step: Int)
-      extends UnaryExpression {
-    require(size > 0 && step > 0, s"size $size / step $step must be positive")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        VectorOps.tokenChunks(v.asInstanceOf[ArrayData], size, step)
-          .asInstanceOf[Array[Any]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-          s"graft.plans.VectorOps.tokenChunks($a, $size, $step));")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  case class JaccardSortedLongs(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(l: Any, r: Any): Any =
-      VectorOps.jaccardSorted(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.plans.VectorOps.jaccardSorted($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-  }
-
   // ---- Column wrappers
 
   import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
@@ -543,25 +448,31 @@ object VectorExpressions {
   def dot(a: Column, b: Column): Column =
     column(ArrayDotProduct(expression(a), expression(b)))
   def simhash64(tokens: Column): Column =
-    column(SimHash64(expression(tokens)))
+    StaticKernel(VectorOps, "simhash64", LongType)(tokens)
   def simhash64Md5(tokens: Column): Column =
-    column(SimHash64Md5(expression(tokens)))
+    StaticKernel(VectorOps, "simhash64Md5", LongType)(tokens)
   def rademacherBuckets(vec: Column, planes: Array[Double],
                         nTables: Int, nPlanes: Int): Column =
     column(RademacherBuckets(expression(vec), planes, nTables, nPlanes))
   def rademacherProject(vec: Column, planes: Array[Double], k: Int): Column =
     column(RademacherProject(expression(vec), planes, k))
   def jaccardSorted(a: Column, b: Column): Column =
-    column(JaccardSortedLongs(expression(a), expression(b)))
+    StaticKernel(VectorOps, "jaccardSorted", DoubleType)(a, b)
   def winnow(tokens: Column, k: Int, w: Int): Column =
-    column(Winnow(expression(tokens), k, w))
+    StaticKernel(VectorOps, "winnow", Longs)(tokens, k, w)
   def shingleHashes(tokens: Column, n: Int): Column =
-    column(ShingleHashes(expression(tokens), n))
-  def tokenChunks(tokens: Column, size: Int, step: Int): Column =
-    column(TokenChunks(expression(tokens), size, step))
-  def minhashSigPortable(tokens: Column, n: Int, k: Int): Column =
-    column(PortableMinhashSig(expression(tokens), n, k))
+    StaticKernel(VectorOps, "shingleHashes", Longs)(tokens, n)
+  def tokenChunks(tokens: Column, size: Int, step: Int): Column = {
+    require(size > 0 && step > 0, s"size $size / step $step must be positive")
+    StaticKernel(VectorOps, "tokenChunks", ArrayType(StringType, containsNull = false))(
+      tokens, size, step)
+  }
+  def minhashSigPortable(tokens: Column, n: Int, k: Int): Column = {
+    require(n >= 1 && k >= 1 && k <= (1 << 20), s"bad n=$n k=$k")
+    StaticKernel(VectorOps, "minhashSigPortable", Longs)(tokens, n, k)
+  }
   def pqEncode(vec: Column, cb: Array[Double], norm2: Array[Double],
                m: Int, codes: Int, subDim: Int): Column =
-    column(PqEncode(expression(vec), cb, norm2, m, codes, subDim))
+    StaticKernel(VectorOps, "pqEncode", ArrayType(IntegerType, containsNull = false))(
+      vec, cb, norm2, m, codes, subDim)
 }

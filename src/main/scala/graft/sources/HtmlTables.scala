@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * as HTML tables, and the reference walks them with BeautifulSoup
   * (pdf_ocr_sale_invoice_to_json.py:168-215: find_all("table"), first
   * `<tr>` = header, `get_text(strip=True)` per `<td>`/`<th>`). Here the
-  * parse is a pure kernel over the HTML string, exposed as a codegen
-  * Catalyst expression, so a corpus of OCR outputs parses inside the scan
+  * parse is a pure kernel over the HTML string, called from the plan as
+  * one static call (`graft.plans.StaticKernel`), so a corpus of OCR outputs parses inside the scan
   * with no UDF and no driver loop; the downstream semantics (header
   * promotion P4, blank/total-row F2/F3, ragged pad/truncate C43/C44) are
   * the existing grid operators.
@@ -79,33 +77,20 @@ object HtmlTables {
     tables.toArray
   }
 
-  /** Catalyst expression over the kernel: html string →
-    * array&lt;array&lt;array&lt;string&gt;&gt;&gt; (tables / rows / cells).
-    * One static call in codegen — the stage stays whole-stage compiled. */
-  case class HtmlTableCells(child: Expression) extends UnaryExpression {
-    override def dataType: DataType =
-      ArrayType(ArrayType(ArrayType(StringType, containsNull = false),
-        containsNull = false), containsNull = false)
-    override def nullSafeEval(v: Any): Any =
-      HtmlTables.evalParse(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.sources.HtmlTables.evalParse($a);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Kernel entry shared by eval and codegen. */
+  /** [[parse]] over Spark's internal values: the kernel the Column form calls. */
   def evalParse(html: UTF8String): GenericArrayData =
-    new GenericArrayData(parse(if (html == null) null else html.toString).map(rows =>
+    new GenericArrayData(parse(html.toString).map(rows =>
       new GenericArrayData(rows.map(cells =>
         new GenericArrayData(cells.map(UTF8String.fromString(_).asInstanceOf[Any]))
           .asInstanceOf[Any]).asInstanceOf[Array[Any]])
         .asInstanceOf[Any]).asInstanceOf[Array[Any]])
 
-  import org.apache.spark.sql.graftglue.ColumnGlue.{column, expression}
-
-  /** Column form of the parse. */
-  def htmlTables(html: Column): Column = column(HtmlTableCells(expression(html)))
+  /** Column form of the parse: html string →
+    * array&lt;array&lt;array&lt;string&gt;&gt;&gt; (tables / rows / cells). */
+  def htmlTables(html: Column): Column =
+    graft.plans.StaticKernel(this, "evalParse",
+      ArrayType(ArrayType(ArrayType(StringType, containsNull = false),
+        containsNull = false), containsNull = false))(html)
 
   /** The S9 scan: one row per `<tr>` of every `<table>` of every document,
     * in document order — (source_file, table_idx, row_idx, cells), the same

@@ -49,17 +49,23 @@ object Ingest {
   private def stripBomChar(s: String): String =
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
 
-  /** The `binaryFile` source over `path`, failing with the file's path
-    * when the listing holds a zero-byte file: the source makes no row for
-    * one, so a delivered file would vanish without a trace. The check reads
-    * the driver's listing, which the scan then reuses. */
-  private def binaryFiles(spark: SparkSession, path: String): DataFrame = {
+  /** The `binaryFile` source over `path` and the zero-byte files in the
+    * driver's listing (their paths), which the scan then reuses. The source
+    * makes no row for an empty file, so each caller decides what one means. */
+  private def binaryListing(spark: SparkSession, path: String): (DataFrame, Seq[String]) = {
     val files = spark.read.format("binaryFile").load(path)
     val empty = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
       .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i.allFiles() }
-      .flatten.filter(_.getLen == 0)
-    if (empty.nonEmpty)
-      throw new java.io.IOException(s"empty file: ${empty.head.getPath}")
+      .flatten.filter(_.getLen == 0).map(_.getPath.toString)
+    (files, empty)
+  }
+
+  /** The `binaryFile` source over `path`, failing with the file's path
+    * when the listing holds a zero-byte file: a delivered file must not
+    * vanish without a trace. */
+  private def binaryFiles(spark: SparkSession, path: String): DataFrame = {
+    val (files, empty) = binaryListing(spark, path)
+    if (empty.nonEmpty) throw new java.io.IOException(s"empty file: ${empty.head}")
     files
   }
 
@@ -244,7 +250,12 @@ object Ingest {
     * leave the scan task that hashes them. */
   def deltaFiles(spark: SparkSession, path: String,
                  manifest: DataFrame): DataFrame = {
-    val inv = spark.read.format("binaryFile").load(path)
+    import spark.implicits._
+    // zero-byte files get no binaryFile row: they join the inventory from
+    // the same listing, with size 0 and the md5 of no bytes
+    val (files, empty) = binaryListing(spark, path)
+    val inv = files.select(col("path"), col("length"), col("content"))
+      .unionByName(empty.map((_, 0L, Array.emptyByteArray)).toDF("path", "length", "content"))
       .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file_name"),
         col("length").as("size_bytes"),
         md5(col("content")).as("file_md5"))

@@ -546,47 +546,14 @@ object EventsStream {
     eventsStream(spark, dir).select(cols.map(col): _*)
       .unionByName(drainSentinel(spark, dir, aheadSec, cols))
 
-  /** `column`'s raw (min, max, unit) in one parquet file's footer: the
-    * row-group statistics the writer already computed, no row read. Row
-    * groups without a non-null value are skipped; None when no row group
-    * is left or the footer can't be read, and each caller falls back to a
-    * scan. The raw longs are in the unit the column's logical type
-    * declares; `unit` is (divisor to epoch seconds, stored as wall
-    * clock?) — NANOS for the old untagged testdata, MICROS for the
-    * regenerated `timestamp[us]` shape — and None for a non-timestamp
-    * annotation. */
+  /** `column`'s raw (min, max, unit) in one parquet file's footer
+    * ([[graft.core.ParquetFooters]]); None when the footer has no range or
+    * can't be read, and each caller falls back to a scan. */
   private def footerRange(conf: org.apache.hadoop.conf.Configuration,
                           p: org.apache.hadoop.fs.Path, column: String)
-      : Option[(Long, Long, Option[(Long, Boolean)])] = scala.util.Try {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import LogicalTypeAnnotation.TimeUnit
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    try {
-      val chunks = r.getFooter.getBlocks.asScala.toSeq
-        .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == column))
-      val unit = chunks.headOption.flatMap { c =>
-        c.getPrimitiveType.getLogicalTypeAnnotation match {
-          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            Some((t.getUnit match {
-              case TimeUnit.MILLIS => 1000L
-              case TimeUnit.MICROS => 1000000L
-              case TimeUnit.NANOS  => 1000000000L
-            }, !t.isAdjustedToUTC))
-          // untagged int64 (legacy nanos-as-long testdata): epoch nanos
-          case null => Some((1000000000L, false))
-          case _    => None
-        }
-      }
-      val ranges = chunks.map(_.getStatistics).collect {
-        case s: org.apache.parquet.column.statistics.LongStatistics if s.hasNonNullValue =>
-          (s.getMin, s.getMax)
-      }
-      if (ranges.isEmpty) None
-      else Some((ranges.map(_._1).min, ranges.map(_._2).max, unit))
-    } finally r.close()
-  }.toOption.flatten
+      : Option[(Long, Long, Option[(Long, Boolean)])] =
+    scala.util.Try(graft.core.ParquetFooters.read(conf, p, Some(column)).range)
+      .toOption.flatten
 
   /** Max `ts` as EPOCH SECONDS across the parquet footers — O(files)
     * metadata reads, no row scan ([[footerRange]]), divided by the unit

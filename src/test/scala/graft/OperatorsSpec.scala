@@ -756,7 +756,7 @@ class OperatorsSpec extends SparkSpec {
   test("repStats counts tokens, distincts, and top token/bigram") {
     import graft.plans.StringExpressions.repStats
     import org.apache.spark.unsafe.types.UTF8String
-    def rs(s: String) = repStats(UTF8String.fromString(s)).toSeq
+    def rs(s: String) = repStats(UTF8String.fromString(s)).toLongArray.toSeq
     // "a b a b a": 5 tokens, 2 distinct, 'a'×3, bigram "a b"×2
     assert(rs("a b a b a") == Seq(5L, 2L, 3L, 2L))
     // case-folds and collapses whitespace runs; boundary empties excluded

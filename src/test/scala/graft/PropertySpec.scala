@@ -141,7 +141,7 @@ class PropertySpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     (corpus(400) :+ " " :+ "" :+ "a" :+ "\t\n" :+ "a a a a a").foreach { s0 =>
       val s = if (s0 == null) "" else s0
-      val Array(nTok, nDist, maxTok, maxBi) = repStats(UTF8String.fromString(s))
+      val Array(nTok, nDist, maxTok, maxBi) = repStats(UTF8String.fromString(s)).toLongArray
       assert(nDist <= nTok, s"distinct > total on ${s.take(40)}")
       assert(maxTok <= nTok && (nTok == 0 || maxTok >= 1))
       assert(maxBi <= math.max(nTok - 1, 0))

@@ -419,12 +419,21 @@ class SinksSpec extends SparkSpec {
     val md5BOld = java.security.MessageDigest.getInstance("MD5")
       .digest("beta-v1".getBytes("UTF-8")).map("%02x".format(_)).mkString
     put("c.txt", "carol")
-    val manifest = Seq(("a.txt", md5A), ("b.txt", md5BOld), ("gone.txt", "x"))
+    // zero-byte files: one newly delivered, one truncated since the manifest
+    val md5Empty = put("empty.txt", "")
+    put("cut.txt", "")
+    val manifest = Seq(("a.txt", md5A), ("b.txt", md5BOld), ("gone.txt", "x"),
+        ("cut.txt", md5A))
       .toDF("file_name", "md5")
-    val got = Ingest.deltaFiles(spark, dir.getAbsolutePath, manifest)
-      .select("file_name", "status").as[(String, String)].collect().toMap
-    assert(got == Map("a.txt" -> "unchanged", "b.txt" -> "changed",
-      "c.txt" -> "new", "gone.txt" -> "deleted"))
+    val ledger = Ingest.deltaFiles(spark, dir.getAbsolutePath, manifest)
+      .select("file_name", "status", "size_bytes", "file_md5")
+      .as[(String, String, Option[Long], Option[String])].collect()
+    assert(ledger.map(r => r._1 -> r._2).toMap == Map("a.txt" -> "unchanged",
+      "b.txt" -> "changed", "c.txt" -> "new", "gone.txt" -> "deleted",
+      "empty.txt" -> "new", "cut.txt" -> "changed"))
+    assert(md5Empty == "d41d8cd98f00b204e9800998ecf8427e")
+    assert(ledger.filter(r => Set("empty.txt", "cut.txt")(r._1))
+      .forall(r => r._3.contains(0L) && r._4.contains(md5Empty)))
   }
 
   test("orc sink roundtrips types and pushes filters to the orc scan") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** The SQL surface: every registered function must resolve and compute
   * through `spark.sql(...)` — a pure-SQL user (spark-sql shell, JDBC,
   * `spark.sql.extensions=graft.GraftExtensions`) gets the same kernels
@@ -22,7 +24,11 @@ class SqlSurfaceSpec extends SparkSpec {
         |            array(CAST(3.0 AS DOUBLE), CAST(4.0 AS DOUBLE))) AS dot,
         |  graft_simhash64_md5(array('a', 'b')) AS sh,
         |  size(graft_shingle_hashes(array('a','b','c','d'), 2)) AS nsh,
-        |  size(graft_token_chunks(array('a','b','c','d','e'), 2, 2)) AS nch
+        |  size(graft_token_chunks(array('a','b','c','d','e'), 2, 2)) AS nch,
+        |  graft_simhash64(array('a', 'b')) AS sx,
+        |  graft_text_stats('The cat, the hat') AS ts,
+        |  graft_rep_stats('a b a b a') AS rs,
+        |  graft_csv_split('x;"y;z";', ';') AS cs
         |""".stripMargin).collect().head
     assert(r.getString(0) == "é") // e + combining acute -> é
     assert(r.getDate(1).toString == "2022-12-25") // B.E. 2565 -> 2022
@@ -30,6 +36,13 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(!r.isNullAt(3))
     assert(r.getInt(4) == 3) // 3 distinct bigrams of 4 tokens
     assert(r.getInt(5) == 3) // chunks [a b][c d][e]
+    assert(r.getLong(6) == graft.plans.VectorOps.simhash64(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        Array[Any](UTF8String.fromString("a"), UTF8String.fromString("b")))))
+    // [len, punct, cjk, nTokens, en17, en6, de6, fr6, es6]
+    assert(r.getSeq[Long](7) == Seq(16L, 1L, 0L, 4L, 2L, 2L, 0L, 0L, 0L))
+    assert(r.getSeq[Long](8) == Seq(5L, 2L, 3L, 2L))
+    assert(r.getSeq[String](9) == Seq("x", "y;z", ""))
   }
 
   test("bounded_min_k works as a SQL aggregate with GROUP BY") {
@@ -58,5 +71,9 @@ class SqlSurfaceSpec extends SparkSpec {
         .collect()
     }
     assert(e.getMessage.contains("integer literal"))
+    val d = intercept[Exception] {
+      spark.sql("SELECT graft_csv_split('a;b', ';;')").collect()
+    }
+    assert(d.getMessage.contains("1-char string literal"))
   }
 }
