@@ -21,19 +21,24 @@ object IngestLeg {
       s"encoding=${lines.select("encoding").head().getString(0)}")
 
     // multi-sheet xlsx union with per-sheet tag; legacy .xls through the
-    // same call (format sniff + engine cascade)
-    val xlsx = ExcelReader.multiSheetUnion(spark, s"$dir/supplier_sheets.xlsx")
-    val xls = ExcelReader.multiSheetUnion(spark, s"$dir/supplier_sheets.xls")
+    // same call (format sniff + engine cascade); files that fail to parse
+    // come back as rejects
+    val (xlsx, xlsxRejects) = ExcelReader.multiSheetUnionWithRejects(spark, s"$dir/supplier_sheets.xlsx")
+    val (xls, xlsRejects) = ExcelReader.multiSheetUnionWithRejects(spark, s"$dir/supplier_sheets.xls")
     println(s"[ingest] xlsx rows=${xlsx.count()} sheets=" +
       xlsx.select("source_sheet").distinct().count() +
-      s" xls rows=${xls.count()}")
+      s" xls rows=${xls.count()} rejects=${xlsxRejects.count() + xlsRejects.count()}")
 
-    // PDF positioned-table extraction
-    val grid = PdfReader.pagesGrid(spark, s"$dir/invoice_table.pdf")
-    println(s"[ingest] pdf grid rows=${grid.count()}")
+    // PDF positioned-table extraction: grid rows, and a reject row per
+    // file that does not parse
+    val tagged = PdfReader.pagesGridTagged(spark, s"$dir/invoice_table.pdf")
+    val grid = tagged.where(col("reject_reason").isNull)
+    println(s"[ingest] pdf grid rows=${grid.count()} " +
+      s"rejects=${tagged.where(col("reject_reason").isNotNull).count()}")
 
-    // JSON pointer into nested records
-    val js = Ingest.jsonPointer(spark, s"$dir/invoice_records.json", "/records")
+    // JSON pointer into nested records, the declared fields as strings
+    val js = Ingest.jsonPointer(spark, s"$dir/invoice_records.json", "/records",
+      Seq("Invoice No.", "Supplier Code", "Amount"))
     println(s"[ingest] jsonPointer rows=${js.count()}")
     spark.stop()
   }

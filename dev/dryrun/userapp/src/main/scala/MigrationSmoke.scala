@@ -41,7 +41,8 @@ object MigrationSmoke {
       req(c > 0, s"no clean rows (rejects=$r)"); s"clean=$c rejects=$r"
     }
     row("import:old-invoices(jsonPointer)") {
-      val n = Ingest.jsonPointer(spark, s"$fix/invoice_records.json", "/records").count()
+      val n = Ingest.jsonPointer(spark, s"$fix/invoice_records.json", "/records",
+        Seq("Invoice No.", "Supplier Code", "Amount")).count()
       req(n > 0, "pointer read empty"); s"records=$n"
     }
     row("import:po-report") {
@@ -185,18 +186,22 @@ object MigrationSmoke {
       } finally server.stop(0)
     }
     row("pdf:text+grid") {
-      val t = PdfReader.pagesText(spark, s"$fix/invoice_table.pdf").count()
-      val g = PdfReader.pagesGrid(spark, s"$fix/invoice_table.pdf").count()
-      req(t > 0 && g == 6, s"text=$t grid=$g (grid must be 6)"); s"text_pages=$t grid_rows=$g"
+      val text = PdfReader.pagesTextTagged(spark, s"$fix/invoice_table.pdf")
+      val grid = PdfReader.pagesGridTagged(spark, s"$fix/invoice_table.pdf")
+      val rj = Seq(text, grid).map(_.where(col("reject_reason").isNotNull).count()).sum
+      val (t, g) = (text.count(), grid.count())
+      req(rj == 0 && t > 0 && g == 6, s"text=$t grid=$g rejects=$rj (grid must be 6)")
+      s"text_pages=$t grid_rows=$g"
     }
     row("csv:encoding-fallback") {
       val n = Ingest.csvLinesPerFileEncoding(spark, s"$fix/po_report.csv").count()
       req(n > 0, "csv empty"); s"lines=$n"
     }
     row("excel:multisheet(xlsx+biff8)") {
-      val x = ExcelReader.multiSheetUnion(spark, s"$fix/supplier_sheets.xlsx").count()
-      val b = ExcelReader.multiSheetUnion(spark, s"$fix/supplier_sheets.xls").count()
-      req(x > 0 && b > 0, s"xlsx=$x xls=$b"); s"xlsx_rows=$x xls_rows=$b"
+      val (xlsx, xRj) = ExcelReader.multiSheetUnionWithRejects(spark, s"$fix/supplier_sheets.xlsx")
+      val (xls, bRj) = ExcelReader.multiSheetUnionWithRejects(spark, s"$fix/supplier_sheets.xls")
+      val (x, b, rj) = (xlsx.count(), xls.count(), xRj.count() + bRj.count())
+      req(x > 0 && b > 0 && rj == 0, s"xlsx=$x xls=$b rejects=$rj"); s"xlsx_rows=$x xls_rows=$b"
     }
     row("dbd:doc-parser+title-cards") {
       val lines = spark.read.option("multiLine", "true")

@@ -10,12 +10,12 @@ Writes:
       Two pages whose text layer reproduces rm_pages.json exactly (same
       remittance lines, Thai headers/totals as UTF-16BE hex strings), each
       display line its own Tj with Td line movements. Drives the S7 path:
-      PdfReader.pagesText -> the unchanged remittance line-parse cascade.
+      PdfReader.pagesTextTagged -> the unchanged remittance line-parse cascade.
   src/test/resources/fixtures/invoice_table.pdf
       One page with a positioned 3-column table (header row, data rows, a
       row with a missing middle cell, Thai total row) — each cell a single
       explicitly positioned Tj, the camelot-"stream" shape. Drives the S5
-      path: PdfReader.pagesGrid -> header skip, total-row drop, money parse.
+      path: PdfReader.pagesGridTagged -> header skip, total-row drop, money parse.
   src/test/resources/fixtures/pdf_edge.pdf
       Parser corners: uncompressed stream, indirect /Length, /Contents
       array, nested Pages tree, TJ kerning array, ' and " operators,

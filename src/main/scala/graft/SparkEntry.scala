@@ -936,10 +936,11 @@ object SparkEntry {
     "q46_multisheet_union" -> ((s0, d) => {
       val s = prep(s0)
       // real .xlsx file (zip + OOXML parsed with JDK built-ins): two data
-      // sheets with differing columns, one all-empty sheet that must drop
-      graft.sources.ExcelReader
-        .multiSheetUnion(s, s"$fixtures/supplier_sheets.xlsx")
-        .select(col("code"), col("amount").cast("double").as("amount"),
+      // sheets with differing columns, one all-empty sheet that must drop;
+      // it parses, so its reject frame is empty (ExcelSpec)
+      val (rows, _) = graft.sources.ExcelReader
+        .multiSheetUnionWithRejects(s, s"$fixtures/supplier_sheets.xlsx")
+      rows.select(col("code"), col("amount").cast("double").as("amount"),
           col("source_sheet"), col("note"))
         .orderBy("code")
     }),
@@ -2954,9 +2955,10 @@ object SparkEntry {
     // value under the right name.
     "q66_xlsx_many_union" -> ((s0, d) => {
       val s = prep(s0)
-      graft.sources.ExcelReader
-        .multiSheetUnion(s, s"$fixtures/xlsx_many/*.xlsx")
-        .withColumn("source_file",
+      // every workbook of the glob parses: no rejects (ExcelSpec)
+      val (rows, _) = graft.sources.ExcelReader
+        .multiSheetUnionWithRejects(s, s"$fixtures/xlsx_many/*.xlsx")
+      rows.withColumn("source_file",
           regexp_extract(col("source_file"), "([^/]+)\\.xlsx$", 1))
         .select(col("source_file"), col("source_sheet"), col("code"),
           col("amount").cast("double").as("amount"), col("note"),
@@ -2971,10 +2973,10 @@ object SparkEntry {
     // openpyxl-vs-xlrd cascade, in-engine).
     "q106_xls_engine_cascade" -> ((s0, d) => {
       val s = prep(s0)
-      graft.sources.ExcelReader
-        .multiSheetUnion(s,
-          s"$fixtures/supplier_sheets.xlsx,$fixtures/supplier_sheets.xls")
-        .withColumn("engine",
+      // both files parse, one per engine: no rejects (ExcelSpec)
+      val (rows, _) = graft.sources.ExcelReader
+        .multiSheetUnionWithRejects(s, s"$fixtures/supplier_sheets.{xlsx,xls}")
+      rows.withColumn("engine",
           regexp_extract(col("source_file"), "\\.(xlsx?)$", 1))
         .select(col("engine"), col("source_sheet"), col("code"),
           col("amount").cast("double").as("amount"), col("note"))
@@ -3067,7 +3069,7 @@ object SparkEntry {
     // and engine (the real pdf2image/Tesseract legs are external by
     // design — documented in the Scaladoc; the pass texts here replicate
     // the reference's duplicate-pass-drop + correction-pass shape). What
-    // this row gates is the Spark plumbing: binaryFiles fan-out, page ×
+    // this row gates is the Spark plumbing: the per-file fan-out, page ×
     // pass row shaping, the q112-gated voting merge composed on top, and
     // that no file lands in the reject channel.
     "q139_local_ocr_pipeline" -> ((s0, d) => {
@@ -3560,7 +3562,8 @@ object SparkEntry {
     // (pdf_ocr_dbd_to_json.py:45-63 text-layer-first policy).
     "q108_pdf_text_layer" -> ((s0, d) => {
       val s = prep(s0)
-      val pages = graft.sources.PdfReader.pagesText(s, s"$fixtures/rm_pages.pdf")
+      val pages = graft.sources.PdfReader.pagesTextTagged(s, s"$fixtures/rm_pages.pdf")
+        .where(col("reject_reason").isNull)
         .select(col("page_number").as("page"), col("text"))
       val (tx0, _) = graft.pipelines.Pipelines.remittancePagesParsed(pages)
       graft.pipelines.Pipelines.remittanceDedup(tx0)
@@ -3576,7 +3579,8 @@ object SparkEntry {
       val s = prep(s0)
       import graft.operators.RowFilters
       import graft.functions.Money
-      val grid = graft.sources.PdfReader.pagesGrid(s, s"$fixtures/invoice_table.pdf")
+      val grid = graft.sources.PdfReader.pagesGridTagged(s, s"$fixtures/invoice_table.pdf")
+        .where(col("reject_reason").isNull)
       grid.where(!RowFilters.isBlankRowArr(col("cells")))
         .where(!RowFilters.isTotalRowArr(col("cells")))
         .select(col("page_number"), col("row_idx"),

@@ -114,7 +114,7 @@ object Pipelines {
 
   /** Same parse cascade over ANY `(page, text)` source — the OCR-JSON
     * fixture reader above and the S7 PDF text layer
-    * ([[graft.sources.PdfReader.pagesText]]) both feed this, so the
+    * ([[graft.sources.PdfReader.pagesTextTagged]]) both feed this, so the
     * acquisition format never leaks into the parse semantics. */
   def remittancePagesParsed(pages: DataFrame): (DataFrame, DataFrame) = {
     val lines = pages.select(col("page"),

@@ -20,11 +20,13 @@ import org.apache.spark.sql.types._
   * decoder), shared/inline strings are resolved, booleans stay "0"/"1".
   *
   * Scale shape: `parseWorkbook` is a pure function over the file bytes, so
-  * the distributed path runs it inside the `binaryFiles` task of each file —
-  * one task per workbook, parallel across the many-files 100 TB layout; no
-  * driver-side whole-file reads. The S3 engine cascade sniffs magic bytes
-  * and routes: zip container → this parser, OLE2 → [[XlsReader]] (BIFF8),
-  * anything else → the typed reject channel. */
+  * the distributed path runs it in the task that loaded the file, through
+  * the one per-file frame [[Ingest.perFile]] — parallel across the
+  * many-files layout, no driver-side whole-file reads. The S3 engine
+  * cascade sniffs magic bytes and routes: zip container → this parser,
+  * OLE2 → [[XlsReader]] (BIFF8), anything else → the typed reject channel;
+  * a file that fails, a zero-byte one included, is one reject row
+  * ([[Ingest.rejectRow]]). */
 object ExcelReader {
 
   /** Column letters of a cell ref ("BC7" → 54, 0-based). -1 when absent. */
@@ -213,56 +215,29 @@ object ExcelReader {
 
   /** Every sheet of every matching workbook as one tagged grid, plus one
     * reject row (null cells, `reject_reason` set) per file that fails the
-    * magic-bytes sniff or zip/XML parse. One task per file (binaryFiles),
-    * rows in file order per sheet. */
-  def sheetsGridTagged(spark: SparkSession, path: String,
-                       cacheRdd: Boolean = false): DataFrame = {
-    val rows0 = spark.sparkContext.binaryFiles(path).flatMap { case (file, pds) =>
-      val bytes = pds.toArray()
-      def reject(reason: String) =
-        Seq(Row(file, null, null, null, null, reason))
+    * magic-bytes sniff or zip/XML parse, a zero-byte file included. Each
+    * workbook parses in the task that loaded it ([[Ingest.perFile]]), rows
+    * in file order per sheet. */
+  def sheetsGridTagged(spark: SparkSession, path: String): DataFrame =
+    Ingest.perFile(spark, path, gridSchema) { (file, bytes) =>
+      def grid(sheets: Seq[(String, Vector[Vector[String]])]): Seq[Row] =
+        sheets.zipWithIndex.flatMap { case ((sheet, sheetRows), si) =>
+          sheetRows.zipWithIndex.map { case (cells, ri) =>
+            Row(file, sheet, si, ri.toLong, cells, null)
+          }
+        }
       detectFormat(bytes) match {
         case "xlsx_zip" =>
-          try parseWorkbook(bytes).zipWithIndex.flatMap {
-            case ((sheet, sheetRows), si) =>
-              sheetRows.zipWithIndex.map { case (cells, ri) =>
-                Row(file, sheet, si, ri.toLong, cells, null)
-              }
-          } catch { case e: Exception =>
-            reject(s"xlsx_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
+          Ingest.rowsOrReject(gridSchema, file, "xlsx_parse_error")(grid(parseWorkbook(bytes)))
+        // the legacy-engine leg of the cascade: same grid contract as the
+        // zip path, so downstream union/cleanse code never sees which
+        // engine parsed the workbook
         case "ole2" =>
-          // the legacy-engine leg of the cascade: same grid contract as
-          // the zip path, so downstream union/cleanse code never sees
-          // which engine parsed the workbook
-          try XlsReader.parseWorkbook(bytes).zipWithIndex.flatMap {
-            case ((sheet, sheetRows), si) =>
-              sheetRows.zipWithIndex.map { case (cells, ri) =>
-                Row(file, sheet, si, ri.toLong, cells, null)
-              }
-          } catch { case e: Exception =>
-            reject(s"xls_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
+          Ingest.rowsOrReject(gridSchema, file, "xls_parse_error")(grid(XlsReader.parseWorkbook(bytes)))
         case _ =>
-          reject("unknown_format: no zip (PK) signature")
+          Seq(Ingest.rejectRow(gridSchema, file, "unknown_format: no zip (PK) signature"))
       }
     }
-    // cacheRdd: cache at the RDD layer, NOT DataFrame.persist — RDD cache
-    // entries are released by Spark's ContextCleaner as soon as the RDD
-    // becomes unreachable, so a multi-pass consumer (multiSheetUnion's
-    // metadata pass + data pass) parses each workbook once WITHOUT
-    // leaking a CacheManager entry past the call (DataFrame persist is
-    // never auto-evicted and was accumulating one grid per call)
-    val rows = if (cacheRdd)
-      rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else rows0
-    spark.createDataFrame(rows, gridSchema)
-  }
-
-  /** S4 back-compat view: valid rows only (rejected files dropped). */
-  def sheetsGrid(spark: SparkSession, path: String): DataFrame =
-    sheetsGridTagged(spark, path)
-      .where(col("reject_reason").isNull).drop("reject_reason")
 
   /** S2: multi-sheet concat with `source_file`/`source_sheet` tags — header
     * promoted from each sheet's row `headerIdx`, all-empty sheets dropped
@@ -270,18 +245,13 @@ object ExcelReader {
     * `isnull().all().all()`, tag, concat). Column sets may differ per sheet
     * AND per workbook; the union aligns by name with missing columns null,
     * and every sheet's columns resolve against ITS OWN file's header (two
-    * workbooks sharing a sheet name never cross-contaminate).
+    * workbooks sharing a sheet name never cross-contaminate). Returns
+    * (rows, rejects), where rejects = (source_file, reject_reason) for the
+    * files failing the format sniff or parse.
     *
     * Scale shape: per-sheet headers + emptiness come from ONE conditional
     * aggregation over the grid — a single job for N workbooks × M
-    * sheets, not a driver job per sheet. */
-  def multiSheetUnion(spark: SparkSession, path: String,
-                      headerIdx: Long = 0): DataFrame =
-    multiSheetUnionWithRejects(spark, path, headerIdx)._1
-
-  /** [[multiSheetUnion]] plus the reject channel: (rows, rejects) where
-    * rejects = (source_file, reject_reason) for files failing the format
-    * sniff or parse.
+    * sheets, not a driver job per sheet.
     *
     * Scale shape: per-sheet header metadata NEVER rides through the
     * driver as per-file maps — the (file, sheet) → name-position map is
@@ -296,17 +266,10 @@ object ExcelReader {
     * sheet) equi-join shuffle — the resolution logic is unchanged. */
   def multiSheetUnionWithRejects(spark: SparkSession, path: String,
                                  headerIdx: Long = 0): (DataFrame, DataFrame) = {
-    // grid cache lives at the RDD layer (ContextCleaner-released when the
-    // returned frames are dropped); the per-sheet metadata frame is tiny
-    // and localCheckpoint(eager) both materializes it ONCE for its two
-    // consumers (schema collect + broadcast join) and cuts its lineage
-    // off the grid, so the data pass is the only post-metadata grid scan.
-    // localCheckpoint is NON-reliable: the blocks live on executors, so
-    // on a real cluster an executor loss mid-query fails the job instead
-    // of recomputing — acceptable for this kilobyte-scale metadata frame
-    // (re-running the read is cheap); a reliable checkpoint would buy
-    // fault tolerance at the cost of a distributed-FS round trip
-    val tagged = sheetsGridTagged(spark, path, cacheRdd = true)
+    // the grid is cut once: the metadata aggregation, its two consumers
+    // (schema collect + broadcast join), the data pass and the rejects all
+    // read the parsed workbooks instead of parsing them again
+    val tagged = graft.core.Checkpoints.cut(sheetsGridTagged(spark, path))
     val rejects = tagged.where(col("reject_reason").isNotNull)
       .select(col("source_file"), col("reject_reason"))
     val grid = tagged.where(col("reject_reason").isNull)
@@ -338,7 +301,6 @@ object ExcelReader {
       .select(col("source_file"), col("source_sheet"), col("__names"),
         map_from_arrays(col("__names"),
           sequence(lit(1), size(col("__names")))).as("__pos"))
-      .localCheckpoint(true)
 
     // output columns: every name, first-seen order across (file, sheet)
     // — the schema collect, bounded by header-name vocabulary

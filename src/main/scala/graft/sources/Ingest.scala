@@ -49,25 +49,45 @@ object Ingest {
   private def stripBomChar(s: String): String =
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
 
-  /** The `binaryFile` source over `path` and the zero-byte files in the
-    * driver's listing (their paths), which the scan then reuses. The source
-    * makes no row for an empty file, so each caller decides what one means. */
-  private def binaryListing(spark: SparkSession, path: String): (DataFrame, Seq[String]) = {
+  /** Every file under `path` as (path, length, content): the `binaryFile`
+    * source, plus the zero-byte files of the same driver listing as empty
+    * content — the source makes no row for an empty file, and a delivered
+    * file must not vanish without a trace. `path` is a file, a directory or
+    * a glob (`{a,b}` braces for a set of files). */
+  private def deliveredFiles(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
     val files = spark.read.format("binaryFile").load(path)
+      .select(col("path"), col("length"), col("content"))
     val empty = files.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
       .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i.allFiles() }
       .flatten.filter(_.getLen == 0).map(_.getPath.toString)
-    (files, empty)
+    if (empty.isEmpty) files
+    else files.unionByName(empty.map((_, 0L, Array.emptyByteArray)).toDF("path", "length", "content"))
   }
 
-  /** The `binaryFile` source over `path`, failing with the file's path
-    * when the listing holds a zero-byte file: a delivered file must not
-    * vanish without a trace. */
-  private def binaryFiles(spark: SparkSession, path: String): DataFrame = {
-    val (files, empty) = binaryListing(spark, path)
-    if (empty.nonEmpty) throw new java.io.IOException(s"empty file: ${empty.head}")
-    files
-  }
+  /** The per-file frame every file reader shares: `kernel(file, bytes)`
+    * runs inside the task that loaded the file — a zero-byte file too,
+    * with no bytes — and its rows, of `schema`, are the frame. A reader
+    * with a reject channel turns a file it cannot read into [[rejectRow]];
+    * one without lets the kernel throw, naming the file. */
+  private[graft] def perFile(spark: SparkSession, path: String, schema: StructType)(
+      kernel: (String, Array[Byte]) => IterableOnce[Row]): DataFrame =
+    deliveredFiles(spark, path).select(col("path"), col("content"))
+      .flatMap(r => kernel(r.getString(0), r.getAs[Array[Byte]](1)))(Encoders.row(schema))
+
+  /** The reject row of `schema` for `file`: source_file, nulls, then
+    * reject_reason (the schema's first and last columns). */
+  private[graft] def rejectRow(schema: StructType, file: String, reason: String): Row =
+    Row.fromSeq(file +: Seq.fill(schema.length - 2)(null) :+ reason)
+
+  /** `rows`, or the one [[rejectRow]] `prefix: <exception class>: <message>`
+    * when computing them throws. */
+  private[graft] def rowsOrReject(schema: StructType, file: String, prefix: String)(
+      rows: => Seq[Row]): Seq[Row] =
+    try rows
+    catch { case e: Exception =>
+      Seq(rejectRow(schema, file, s"$prefix: ${e.getClass.getSimpleName}: ${e.getMessage}"))
+    }
 
   /** Decode one whole file: the charset is probed from its first 64 KB,
     * a leading BOM is dropped (utf-8-sig semantics: it never reaches the
@@ -90,19 +110,16 @@ object Ingest {
   /** S1 at scale — MANY files, each with its own unknown encoding, one row
     * per file: (source_file, encoding, lines). The probe and the decode run
     * inside the task that reads the file, so nothing per-file touches the
-    * driver, and a per-file kernel sees its whole file in one row. Built on
-    * the `binaryFile` source, which packs files into partitions by
-    * `spark.sql.files.openCostInBytes` — small files spread over the cores
-    * instead of sharing one split. */
+    * driver, and a per-file kernel sees its whole file in one row (a
+    * zero-byte file: one empty line). Built on [[perFile]]: the `binaryFile`
+    * source packs files into partitions by `spark.sql.files.openCostInBytes`
+    * — small files spread over the cores instead of sharing one split. */
   def linesPerFile(spark: SparkSession, pathGlob: String,
-                   encodings: Seq[String] = defaultEncodings): DataFrame = {
-    binaryFiles(spark, pathGlob)
-      .select(col("path"), col("content"))
-      .map { r =>
-        val (enc, lines) = decodeLines(r.getAs[Array[Byte]](1), encodings)
-        Row(r.getString(0), enc, scala.collection.immutable.ArraySeq.unsafeWrapArray(lines))
-      }(Encoders.row(linesPerFileSchema))
-  }
+                   encodings: Seq[String] = defaultEncodings): DataFrame =
+    perFile(spark, pathGlob, linesPerFileSchema) { (file, bytes) =>
+      val (enc, lines) = decodeLines(bytes, encodings)
+      Iterator.single(Row(file, enc, scala.collection.immutable.ArraySeq.unsafeWrapArray(lines)))
+    }
 
   /** [[linesPerFile]] one row per line: (source_file, encoding, line_no,
     * line), line_no counting from 0 within the file. Feed the `line` column
@@ -127,25 +144,24 @@ object Ingest {
       .select(col("r.*"))
   }
 
-  /** [[jsonPointer]] with a declared record schema, as a per-file kernel:
-    * one `binaryFile` row per file, and the task that loaded the file
-    * streams it through Jackson once, emitting each record under the
-    * pointer as the string columns `fields` — a string as its text, a
-    * number or boolean as its exact token text, a nested value as its JSON
-    * text, a null or absent field as null (the strings Spark's multiLine
-    * reader gives for the same declared schema); undeclared fields are
-    * skipped. No inference pass and no second parse. A delivery file that
-    * is empty, truncated or not JSON, or has no array at the pointer fails
-    * the read with its path in the message: it never reads as zero rows. */
+  /** [[jsonPointer]] with a declared record schema, as a per-file kernel
+    * ([[perFile]]): the task that loaded the file streams it through
+    * Jackson once, emitting each record under the pointer as the string
+    * columns `fields` — a string as its text, a number or boolean as its
+    * exact token text, a nested value as its JSON text, a null or absent
+    * field as null (the strings Spark's multiLine reader gives for the same
+    * declared schema); undeclared fields are skipped. No inference pass
+    * and no second parse. A delivery file that is empty, truncated or not
+    * JSON, or has no array at the pointer fails the read with its path in
+    * the message: it never reads as zero rows. */
   def jsonPointer(spark: SparkSession, path: String, pointer: String,
                   fields: Seq[String]): DataFrame = {
-    val files = binaryFiles(spark, path)
     val steps = pointer.split('/').filter(_.nonEmpty).toSeq
     val names = fields.toArray
-    files.select(col("path"), col("content")).flatMap { r =>
-      jsonRecords(r.getString(0), r.getAs[Array[Byte]](1), steps, names).iterator
+    perFile(spark, path, StructType(fields.map(StructField(_, StringType)))) { (file, bytes) =>
+      jsonRecords(file, bytes, steps, names).iterator
         .map(rec => Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(rec)))
-    }(Encoders.row(StructType(fields.map(StructField(_, StringType)))))
+    }
   }
 
   // Spark's JSON reader defaults: single quotes and NaN/Infinity allowed
@@ -223,7 +239,8 @@ object Ingest {
     * Returns (column names, normalized grid). */
   def padTruncate(gridDf: DataFrame,
                   header: Option[Seq[String]] = None): (Seq[String], DataFrame) = {
-    val widest = gridDf.agg(max(size(col("cells")))).first().getInt(0)
+    // an empty grid (every file rejected) has no widest row: width 0
+    val widest = gridDf.agg(coalesce(max(size(col("cells"))), lit(0))).first().getInt(0)
     val width = math.max(header.map(_.length).getOrElse(0), widest)
     val names = header match {
       case Some(h) => h.padTo(width, "").take(width)
@@ -250,12 +267,8 @@ object Ingest {
     * leave the scan task that hashes them. */
   def deltaFiles(spark: SparkSession, path: String,
                  manifest: DataFrame): DataFrame = {
-    import spark.implicits._
-    // zero-byte files get no binaryFile row: they join the inventory from
-    // the same listing, with size 0 and the md5 of no bytes
-    val (files, empty) = binaryListing(spark, path)
-    val inv = files.select(col("path"), col("length"), col("content"))
-      .unionByName(empty.map((_, 0L, Array.emptyByteArray)).toDF("path", "length", "content"))
+    // a zero-byte file is in the inventory with size 0 and the md5 of no bytes
+    val inv = deliveredFiles(spark, path)
       .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file_name"),
         col("length").as("size_bytes"),
         md5(col("content")).as("file_md5"))

@@ -14,10 +14,11 @@ import org.apache.spark.sql.types._
   *
   * The transport is pluggable — `OcrRequest => (status, body)` — the K3
   * pattern: the connector is fully unit-testable offline, and a deployment
-  * passes a `java.net.http`-based function. Each file's request runs inside
-  * its `binaryFiles` task, so a directory of scans fans out across
-  * executors with no driver loop; failures land in the reject channel with
-  * the HTTP status, not as task crashes. */
+  * passes a `java.net.http`-based function. Each file's request runs in the
+  * task that loaded the file, through the one per-file frame
+  * [[Ingest.perFile]], so a directory of scans fans out across executors
+  * with no driver loop; failures land in the reject channel with the HTTP
+  * status, not as task crashes, one [[Ingest.rejectRow]] per file. */
 object OcrConnector {
 
   /** A fully-shaped request: what the transport must send. */
@@ -131,9 +132,9 @@ object OcrConnector {
     * preprocessing (Otsu / adaptive threshold / bilateral) + Tesseract;
     * none of those are library dependencies here, so a deployment passes
     * functions wrapping them, while everything Spark-side is real and
-    * tested: the `binaryFiles` fan-out (one task per scan, no driver
-    * loop), per-(page, pass) row shaping, the [[mergeOcrPasses]] voting
-    * merge, and the reject channel for rasterizer/engine failures.
+    * tested: the [[Ingest.perFile]] fan-out (no driver loop), per-(page,
+    * pass) row shaping, the [[mergeOcrPasses]] voting merge, and the
+    * reject channel for rasterizer/engine failures.
     *
     * `rasterizer(pdfBytes, dpi)` returns one image per page;
     * `ocrPass(imageBytes, passIdx)` runs preprocessing variant `passIdx`
@@ -149,10 +150,14 @@ object OcrConnector {
       StructField("pass_idx", IntegerType, nullable = true),
       StructField("text", StringType, nullable = true),
       StructField("reject_reason", StringType, nullable = true)))
-    val rows = spark.sparkContext.binaryFiles(path).flatMap { case (file, pds) =>
-      try {
-        val pages = rasterizer(pds.toArray(), dpi)
-        pages.zipWithIndex.flatMap { case (img, p) =>
+    // persist before branching: the merged and reject branches of the
+    // union would otherwise EACH recompute the rasterize+OCR scan — with
+    // real pdf2image/Tesseract that doubles the dominant cost, and a
+    // transient per-pass failure could land differently in the two scans.
+    // The cache ends once the result (one row per page) is cut.
+    val passes = Ingest.perFile(spark, path, passSchema) { (file, bytes) =>
+      Ingest.rowsOrReject(passSchema, file, "rasterize_error") {
+        rasterizer(bytes, dpi).zipWithIndex.flatMap { case (img, p) =>
           (0 until nPasses).map { i =>
             try Row(file, (p + 1).toLong, i, ocrPass(img, i), null)
             catch { case e: Exception =>
@@ -161,17 +166,8 @@ object OcrConnector {
             }
           }
         }
-      } catch { case e: Exception =>
-        Seq(Row(file, null, null, null,
-          s"rasterize_error: ${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
-    }
-    // persist before branching: the merged and reject branches of the
-    // union would otherwise EACH recompute the rasterize+OCR RDD — with
-    // real pdf2image/Tesseract that doubles the dominant cost, and a
-    // transient per-pass failure could land differently in the two scans.
-    // The cache ends once the result (one row per page) is cut.
-    val passes = spark.createDataFrame(rows, passSchema).persist()
+    }.persist()
     val merged = mergeOcrPasses(
         passes.where(col("reject_reason").isNull),
         "source_file", "page", "pass_idx", "text")
@@ -192,18 +188,13 @@ object OcrConnector {
     * created per partition). */
   def ocrFiles(spark: SparkSession, path: String, url: String, apiKey: String,
                taskType: String,
-               transport: OcrRequest => (Int, String)): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(path).map { case (file, pds) =>
+               transport: OcrRequest => (Int, String)): DataFrame =
+    Ingest.perFile(spark, path, ocrSchema) { (file, bytes) =>
       val name = file.substring(file.lastIndexOf('/') + 1)
-      try {
-        val req = buildRequest(url, apiKey, name, pds.toArray(), taskType)
-        val (status, body) = transport(req)
-        if (status >= 200 && status < 300) Row(file, extractText(body), null)
-        else Row(file, null, s"ocr_http_$status")
-      } catch { case e: Exception =>
-        Row(file, null, s"ocr_transport_error: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      Ingest.rowsOrReject(ocrSchema, file, "ocr_transport_error") {
+        val (status, body) = transport(buildRequest(url, apiKey, name, bytes, taskType))
+        if (status >= 200 && status < 300) Seq(Row(file, extractText(body), null))
+        else Seq(Ingest.rejectRow(ocrSchema, file, s"ocr_http_$status"))
       }
     }
-    spark.createDataFrame(rows, ocrSchema)
-  }
 }

@@ -39,9 +39,10 @@ import org.apache.spark.sql.types._
   * chunks here; OCR rasterization (S6) stays out-of-engine, reachable via
   * the S8 remote connector.
   *
-  * All per-file work runs inside each file's `binaryFiles` task: a
-  * million-PDF corpus fans out with no driver loop and no shuffle — the
-  * same 100 TB layout as the xlsx/xls readers. */
+  * All per-file work runs in the task that loaded the file, through the
+  * one per-file frame [[Ingest.perFile]]: a million-PDF corpus fans out
+  * with no driver loop and no shuffle, as the xlsx/xls readers do, and a
+  * file that does not parse is one reject row ([[Ingest.rejectRow]]). */
 object PdfReader {
 
   // ---------------------------------------------------------------- COS --
@@ -485,50 +486,33 @@ object PdfReader {
   /** S7 surface: `(source_file, page_number, text, reject_reason)` — the
     * same `{page_number, text}` page shape the reference's downstream
     * consumes, so the remittance/DBD line parsers run unchanged on PDF
-    * input. Unparseable files land in the reject channel, one row each,
-    * like the Excel readers. */
+    * input. A file that does not parse, a zero-byte one included, is one
+    * reject row, like the Excel readers'. Each file parses in the task
+    * that loaded it ([[Ingest.perFile]]). */
   def pagesTextTagged(spark: SparkSession, path: String,
-                      yTol: Double = 2.0): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(path).flatMap { case (file, pds) =>
-      try {
-        parsePages(pds.toArray()).zipWithIndex.map { case (chunks, i) =>
+                      yTol: Double = 2.0): DataFrame =
+    Ingest.perFile(spark, path, pagesSchema) { (file, bytes) =>
+      Ingest.rowsOrReject(pagesSchema, file, "pdf_parse_error") {
+        parsePages(bytes).zipWithIndex.map { case (chunks, i) =>
           Row(file, (i + 1).toLong, pageText(chunks, yTol), null)
         }
-      } catch { case e: Exception =>
-        Seq(Row(file, null, null,
-          s"pdf_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
     }
-    spark.createDataFrame(rows, pagesSchema)
-  }
-
-  def pagesText(spark: SparkSession, path: String): DataFrame =
-    pagesTextTagged(spark, path).where("reject_reason IS NULL")
-      .drop("reject_reason")
 
   /** S5 surface: positioned-table rows
-    * `(source_file, page_number, row_idx, cells)` in the shared grid shape
-    * of the Excel/CSV/HTML readers — header promotion, total/blank-row
-    * filters, ragged pad and the cleanse kernels compose downstream
-    * unchanged. */
+    * `(source_file, page_number, row_idx, cells, reject_reason)` in the
+    * shared grid shape of the Excel/CSV/HTML readers — header promotion,
+    * total/blank-row filters, ragged pad and the cleanse kernels compose
+    * downstream unchanged; rejects as in [[pagesTextTagged]]. */
   def pagesGridTagged(spark: SparkSession, path: String, yTol: Double = 2.0,
-                      colTol: Double = 12.0): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(path).flatMap { case (file, pds) =>
-      try {
-        parsePages(pds.toArray()).zipWithIndex.flatMap { case (chunks, p) =>
+                      colTol: Double = 12.0): DataFrame =
+    Ingest.perFile(spark, path, gridSchema) { (file, bytes) =>
+      Ingest.rowsOrReject(gridSchema, file, "pdf_parse_error") {
+        parsePages(bytes).zipWithIndex.flatMap { case (chunks, p) =>
           pageGrid(chunks, yTol, colTol).zipWithIndex.map { case (cells, ri) =>
             Row(file, (p + 1).toLong, ri.toLong, cells, null)
           }
         }
-      } catch { case e: Exception =>
-        Seq(Row(file, null, null, null,
-          s"pdf_parse_error: ${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
     }
-    spark.createDataFrame(rows, gridSchema)
-  }
-
-  def pagesGrid(spark: SparkSession, path: String): DataFrame =
-    pagesGridTagged(spark, path).where("reject_reason IS NULL")
-      .drop("reject_reason")
 }

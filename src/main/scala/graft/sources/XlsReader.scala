@@ -8,7 +8,7 @@ package graft.sources
   * sniff the container, pick the engine — instead of a typed reject.
   *
   * Two layers, both pure functions over the file bytes (so the distributed
-  * path runs them inside each file's `binaryFiles` task, like the xlsx
+  * path runs them in the task that loaded the file, like the xlsx
   * reader):
   *
   *  - CFB (Compound File Binary, MS-CFB): sector FAT + directory tree +

@@ -34,7 +34,9 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("sheetsGrid tags every row with file/sheet and keeps row order") {
-    val grid = ExcelReader.sheetsGrid(spark, s"$fixtures/supplier_sheets.xlsx")
+    val tagged = ExcelReader.sheetsGridTagged(spark, s"$fixtures/supplier_sheets.xlsx")
+    assert(tagged.where(col("reject_reason").isNotNull).isEmpty)
+    val grid = tagged.drop("reject_reason")
     assert(grid.select("source_sheet").distinct().count() == 3)
     val s1 = grid.where(col("source_sheet") === "Sheet1")
       .orderBy("row_idx").select("cells").collect()
@@ -43,8 +45,10 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("multiSheetUnion promotes headers, drops empty sheets, aligns columns") {
-    val got = ExcelReader.multiSheetUnion(spark, s"$fixtures/supplier_sheets.xlsx")
-      .select("code", "amount", "note", "source_sheet")
+    val (rows, rejects) = ExcelReader.multiSheetUnionWithRejects(
+      spark, s"$fixtures/supplier_sheets.xlsx")
+    assert(rejects.isEmpty)
+    val got = rows.select("code", "amount", "note", "source_sheet")
       .orderBy("code").collect().map(r =>
         (r.getString(0), r.getString(1), Option(r.getString(2)), r.getString(3)))
     assert(got.toList == List(
@@ -69,8 +73,10 @@ class ExcelSpec extends SparkSpec {
 
   test("multiSheetUnion keys headers by (file, sheet): same-named sheets with " +
     "different column order never cross-contaminate") {
-    val got = ExcelReader.multiSheetUnion(spark, s"$fixtures/xlsx_many/*.xlsx")
-      .where(col("source_sheet") === "Sheet1")
+    val (rows, rejects) = ExcelReader.multiSheetUnionWithRejects(
+      spark, s"$fixtures/xlsx_many/*.xlsx")
+    assert(rejects.isEmpty)
+    val got = rows.where(col("source_sheet") === "Sheet1")
       .select("code", "amount")
       .orderBy("code").collect().map(r => (r.getString(0), r.getString(1)))
     // workbook B's Sheet1 is (amount, code) — values must still land by name
@@ -86,7 +92,7 @@ class ExcelSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      ExcelReader.multiSheetUnion(spark, s"$fixtures/xlsx_many/*.xlsx") // lazy result
+      ExcelReader.multiSheetUnionWithRejects(spark, s"$fixtures/xlsx_many/*.xlsx") // lazy result
       // the listener bus is async: poll until the count is stable rather
       // than trusting one fixed sleep
       var last = -1
@@ -120,6 +126,15 @@ class ExcelSpec extends SparkSpec {
     assert(rj.length == 1)
     assert(rj(0)._1.endsWith("ole2_fake.xlsx"))
     assert(rj(0)._2.startsWith("xls_parse_error"))
+    // a zero-byte workbook is a reject too, never a missing file
+    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_empty")
+    java.nio.file.Files.write(dir.resolve("empty.xlsx"), Array.emptyByteArray)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$fixtures/supplier_sheets.xlsx"),
+      dir.resolve("good.xlsx"))
+    val (good, emptyRj) = ExcelReader.multiSheetUnionWithRejects(spark, dir.toString)
+    assert(good.count() == 3)
+    assert(emptyRj.collect().map(r => (r.getString(0).split('/').last, r.getString(1))).toSeq ==
+      Seq(("empty.xlsx", "unknown_format: no zip (PK) signature")))
   }
 
   // ---- XlsReader (OLE2/BIFF8)
@@ -187,8 +202,10 @@ class ExcelSpec extends SparkSpec {
   }
 
   test("xls: mixed-engine glob unions .xls and .xlsx rows under one schema") {
-    val union = ExcelReader.multiSheetUnion(
-      spark, s"$fixtures/supplier_sheets.xlsx,$fixtures/supplier_sheets.xls")
+    // one path grammar: a brace glob names the set of files
+    val (union, rejects) = ExcelReader.multiSheetUnionWithRejects(
+      spark, s"$fixtures/supplier_sheets.{xlsx,xls}")
+    assert(rejects.isEmpty)
     val got = union
       .select(col("source_file"), col("source_sheet"), col("code"),
         col("amount").cast("double"), col("note"))

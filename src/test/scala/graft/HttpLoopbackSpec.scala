@@ -176,6 +176,12 @@ class HttpLoopbackSpec extends SparkSpec {
       assert(out.head.isNullAt(1))
       val reason = out.head.getString(2)
       assert(reason != null && reason.contains("500"), s"reject must carry the status: $reason")
+      // a zero-byte scan is posted too, and is one reject row naming it
+      java.nio.file.Files.write(dir.resolve("empty.pdf"), Array.emptyByteArray)
+      val withEmpty = OcrConnector.ocrFiles(spark, dir.toString, s"$base/ocr",
+          "k", "pdf_table", HttpTransport.postMultipart(retries = 0))
+        .collect().map(r => (r.getString(0).split('/').last, r.getString(2))).sorted.toSeq
+      assert(withEmpty == Seq(("bad.pdf", "ocr_http_500"), ("empty.pdf", "ocr_http_500")))
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.PdfReader
+import graft.sources.{Ingest, PdfReader}
 
 /** S5/S7 zero-dep PDF text-layer reader (fixtures generated by
   * dev/make_pdf_fixture.py; re-run that script if the contract changes). */
@@ -52,7 +52,9 @@ class PdfSpec extends SparkSpec {
         "16/09/2568 W123 IV CHO12346 IV68072 2,000.00\n" +
         "17/09/2568 FC02 IV CHO12347 IV68073 750.25\n" +
         "จำนวนเงินรวมทั้งสิ้น 2,750.25"))
-    val got = PdfReader.pagesText(spark, s"$fixtures/rm_pages.pdf")
+    val tagged = PdfReader.pagesTextTagged(spark, s"$fixtures/rm_pages.pdf")
+    assert(tagged.where(col("reject_reason").isNotNull).isEmpty)
+    val got = tagged
       .orderBy("page_number")
       .select("page_number", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -60,7 +62,9 @@ class PdfSpec extends SparkSpec {
   }
 
   test("invoice_table.pdf reconstructs the positioned table as a grid") {
-    val got = PdfReader.pagesGrid(spark, s"$fixtures/invoice_table.pdf")
+    val tagged = PdfReader.pagesGridTagged(spark, s"$fixtures/invoice_table.pdf")
+    assert(tagged.where(col("reject_reason").isNotNull).isEmpty)
+    val got = tagged
       .orderBy("page_number", "row_idx")
       .select("row_idx", "cells").collect()
       .map(r => (r.getLong(0), r.getSeq[String](1).toList)).toList
@@ -71,20 +75,39 @@ class PdfSpec extends SparkSpec {
       3L -> List("2", "IV-8002", "(250.75)"),
       4L -> List("3", "", "125.00"),
       5L -> List("รวมทั้งสิ้น", "", "1,374.25")))
+    // the grid pads to its widest row; a grid whose files were all
+    // rejected is empty, and pads to width 0 (or the given header)
+    val valid = tagged.where(col("reject_reason").isNull)
+    assert(Ingest.padTruncate(valid)._1 == Seq("col_1", "col_2", "col_3"))
+    val none = valid.where(lit(false))
+    val (noNames, noRows) = Ingest.padTruncate(none)
+    assert(noNames.isEmpty && noRows.isEmpty)
+    val (hdr, hdrRows) = Ingest.padTruncate(none, Some(Seq("seq", "invoice_no")))
+    assert(hdr == Seq("seq", "invoice_no") && hdrRows.isEmpty)
   }
 
   test("unparseable bytes land in the reject channel, one row per file") {
     val dir = java.nio.file.Files.createTempDirectory("pdfrej")
     val bad = dir.resolve("not_a.pdf")
+    val empty = dir.resolve("empty.pdf")
     java.nio.file.Files.write(bad, "this is not a pdf at all".getBytes)
+    java.nio.file.Files.write(empty, Array.emptyByteArray)
     try {
       val tagged = PdfReader.pagesTextTagged(spark, bad.toString)
       val rows = tagged.collect()
       assert(rows.length == 1)
       assert(rows.head.getString(3) != null &&
         rows.head.getString(3).startsWith("pdf_parse_error"))
+      // a zero-byte file is one reject row naming it, in both surfaces
+      for (df <- Seq(PdfReader.pagesTextTagged(spark, empty.toString),
+                     PdfReader.pagesGridTagged(spark, empty.toString))) {
+        val r = df.select("source_file", "reject_reason").collect()
+        assert(r.length == 1 && r.head.getString(0).endsWith("/empty.pdf"))
+        assert(r.head.getString(1).startsWith("pdf_parse_error"))
+      }
     } finally {
       java.nio.file.Files.deleteIfExists(bad)
+      java.nio.file.Files.deleteIfExists(empty)
       java.nio.file.Files.deleteIfExists(dir)
     }
   }

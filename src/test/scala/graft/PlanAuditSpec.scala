@@ -195,21 +195,23 @@ class PlanAuditSpec extends SparkSpec {
     // lost, and initial plans give that without executing 200 queries in
     // CI. Regenerate after deliberate plan changes with
     //   SPARK_GRAFT_WRITE_SCAN_BUDGET=1 sbt "testOnly graft.PlanAuditSpec"
-    // — a new query missing from the budget (or a deleted query's stale
-    // entry) also fails, so the file cannot silently rot.
+    // — regeneration only tightens: a query already in the file keeps
+    // min(budget, measured + 2), a new one gets measured + 2, and a deleted
+    // query's entry is dropped. A new query missing from the budget (or a
+    // deleted query's stale entry) also fails, so the file cannot silently rot.
     val budgetPath = java.nio.file.Paths.get("src/test/resources/scan_budget.json")
     val counts = plans.map { case (n, p) => n -> maxSamePath(p) }
+    val budget = scala.collection.mutable.Map.empty[String, Int]
+    if (java.nio.file.Files.exists(budgetPath))
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(budgetPath.toFile)
+        .properties().forEach(e => budget(e.getKey) = e.getValue.asInt())
     if (sys.env.get("SPARK_GRAFT_WRITE_SCAN_BUDGET").contains("1")) {
       val json = counts.toSeq.sortBy(_._1)
-        .map { case (n, c) => s"""  "$n": ${c + 2}""" }
+        .map { case (n, c) => s"""  "$n": ${budget.get(n).fold(c + 2)(math.min(_, c + 2))}""" }
         .mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.write(budgetPath, json.getBytes("UTF-8"))
       info(s"wrote ${counts.size} budget entries to $budgetPath")
     } else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(budgetPath.toFile)
-      val budget = scala.collection.mutable.Map.empty[String, Int]
-      node.properties().forEach(e => budget(e.getKey) = e.getValue.asInt())
       val missing = counts.keySet -- budget.keySet
       assert(missing.isEmpty,
         s"queries with no scan budget (regenerate — see comment): $missing")
